@@ -1,5 +1,6 @@
 """Measurement plumbing shared by every workload: sample statistics,
-op accounting (wall and process-tree CPU time), spans with per-span Spark
+op accounting (wall time and process-tree CPU time outside the JIT
+compiler), spans with per-span Spark
 stage metrics, process-tree RSS sampling and the host record.
 
 Nothing here imports pyspark or the engine, so the harness tests run
@@ -16,6 +17,7 @@ import statistics
 import threading
 import time
 import traceback
+from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -55,12 +57,17 @@ def tail_percentile(xs: list[float], p: float, min_beyond: int = 10) -> float | 
 @dataclass
 class OpLog:
     """Times every op by kind, in wall time and in CPU time of this process
-    tree (driver, Spark JVM, Python workers), and counts attempted and
-    failed ops. An op fails when it raises or when its output check returns
-    False; a failed op's time is not a sample."""
+    tree (driver, Spark JVM, Python workers) outside the JVM's JIT compiler
+    threads, whose CPU is kept apart in `jit`; counts attempted and failed
+    ops. An op fails when it raises or when its output check returns False;
+    a failed op's time is not a sample."""
 
     times: dict[str, list[float]] = field(default_factory=dict)
     cpu: dict[str, list[float]] = field(default_factory=dict)
+    jit: dict[str, list[float]] = field(default_factory=dict)
+    ref: dict[str, list[float]] = field(default_factory=dict)
+    # called before every op; its results are the op kind's `ref` samples
+    calibrate: Callable[[], float] | None = None
     records: list[tuple[str, float, float]] = field(default_factory=list)
     attempted: int = 0
     failed: int = 0
@@ -70,7 +77,8 @@ class OpLog:
         """Run fn() timed as one `kind` op, then check(result) untimed.
         Returns (ok, result)."""
         self.attempted += 1
-        c0 = tree_cpu_seconds(os.getpid())
+        r = self.calibrate() if self.calibrate else None
+        c0, j0 = tree_cpu_seconds(os.getpid()), jit_cpu_seconds(os.getpid())
         t0 = time.perf_counter()
         try:
             out = fn()
@@ -79,7 +87,8 @@ class OpLog:
             self.errors.append(f"{kind}: {traceback.format_exc(limit=4)}")
             return False, None
         dt = time.perf_counter() - t0
-        dc = tree_cpu_seconds(os.getpid()) - c0
+        dj = jit_cpu_seconds(os.getpid()) - j0
+        dc = tree_cpu_seconds(os.getpid()) - c0 - dj
         if check is not None:
             try:
                 ok = bool(check(out))
@@ -93,13 +102,36 @@ class OpLog:
                 return False, out
         self.times.setdefault(kind, []).append(dt)
         self.cpu.setdefault(kind, []).append(dc)
+        self.jit.setdefault(kind, []).append(dj)
+        if r is not None:
+            self.ref.setdefault(kind, []).append(r)
         self.records.append((kind, t0, t0 + dt))
         return True, out
 
     def clear_samples(self) -> None:
         self.times.clear()
         self.cpu.clear()
+        self.jit.clear()
+        self.ref.clear()
         self.records.clear()
+
+
+def reference_work(reps: int = 3) -> float:
+    """Thread CPU seconds of a fixed piece of work, the median of `reps`:
+    a sort of an array larger than a last-level cache and an interpreted
+    loop."""
+    import numpy as np
+
+    a = np.random.default_rng(0).random(3_000_000)
+    out = []
+    for _ in range(reps):
+        t0 = time.thread_time()
+        np.sort(a)
+        x = 0
+        for i in range(500_000):
+            x ^= i * 2654435761 & 0xFFFFFFFF
+        out.append(time.thread_time() - t0)
+    return median(out)
 
 
 # -- spans ---------------------------------------------------------------
@@ -258,9 +290,14 @@ def inclusive_stage(spans: list[Span]) -> list[dict[str, float]]:
 
 def _process_tree(root: int, cpu: bool = False) -> dict[int, int]:
     """RSS bytes (or with `cpu`, CPU clock ticks including reaped
-    children) of `root` and every descendant, by pid, from /proc."""
+    children) of `root` and every descendant, by pid, from /proc. A child
+    between vfork and exec (the JVM and Python start programs that way)
+    shares its parent's memory and shows the parent's RSS, give or take
+    the pages the parent touched between the two reads; it counts 0."""
     children: dict[int, list[int]] = {}
     rss: dict[int, int] = {}
+    ppid: dict[int, int] = {}
+    comm: dict[int, str] = {}
     for name in os.listdir("/proc"):
         if not name.isdigit():
             continue
@@ -272,7 +309,9 @@ def _process_tree(root: int, cpu: bool = False) -> dict[int, int]:
         # fields after the parenthesised command: state ppid ... rss is 24th
         rest = stat[stat.rindex(")") + 2 :].split()
         pid = int(name)
-        children.setdefault(int(rest[1]), []).append(pid)
+        ppid[pid] = int(rest[1])
+        comm[pid] = stat[stat.index("(") + 1 : stat.rindex(")")]
+        children.setdefault(ppid[pid], []).append(pid)
         if cpu:  # utime stime cutime cstime
             rss[pid] = sum(int(v) for v in rest[11:15])
         else:
@@ -282,16 +321,44 @@ def _process_tree(root: int, cpu: bool = False) -> dict[int, int]:
         pid = todo.pop()
         out[pid] = rss.get(pid, 0)
         todo.extend(children.get(pid, []))
+    if not cpu:
+        for pid in out:
+            p = ppid.get(pid)
+            if pid != root and p in out and comm[p] == comm[pid] \
+                    and abs(rss[p] - rss[pid]) <= rss[p] // 100:
+                out[pid] = 0
     return out
-
-
-def _tree_rss_bytes(root: int) -> int:
-    return sum(_process_tree(root).values())
 
 
 def tree_cpu_seconds(root: int) -> float:
     """CPU time of `root`, its descendants and their reaped children."""
     return sum(_process_tree(root, cpu=True).values()) / os.sysconf("SC_CLK_TCK")
+
+
+# HotSpot's compiler threads, as /proc shows their names (15 characters)
+JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
+
+
+def jit_cpu_seconds(root: int) -> float:
+    """CPU time of the JIT compiler threads of `root` and its descendants.
+    A thread's time leaves this sum when the thread exits, so the JVM must
+    keep its compiler threads (-XX:-UseDynamicNumberOfCompilerThreads)."""
+    ticks = 0
+    for pid in _process_tree(root):
+        try:
+            tids = os.listdir(f"/proc/{pid}/task")
+        except OSError:
+            continue
+        for tid in tids:
+            try:
+                with open(f"/proc/{pid}/task/{tid}/stat") as f:
+                    stat = f.read()
+            except OSError:
+                continue
+            if stat[stat.index("(") + 1 : stat.rindex(")")].startswith(JIT_THREADS):
+                rest = stat[stat.rindex(")") + 2 :].split()
+                ticks += int(rest[11]) + int(rest[12])  # utime stime
+    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 def descendants(root: int) -> list[int]:
@@ -316,13 +383,16 @@ class RssSampler:
     def __init__(self, interval_s: float = 0.2):
         self.interval_s = interval_s
         self.peak = 0
+        self.at_peak: dict[int, int] = {}
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
     def _loop(self) -> None:
         me = os.getpid()
         while not self._stop.is_set():
-            self.peak = max(self.peak, _tree_rss_bytes(me))
+            tree = _process_tree(me)
+            if sum(tree.values()) > self.peak:
+                self.peak, self.at_peak = sum(tree.values()), tree
             self._stop.wait(self.interval_s)
 
     def __enter__(self) -> "RssSampler":

@@ -14,6 +14,7 @@ import hashlib
 import json
 import shutil
 import zlib
+from collections import Counter
 from pathlib import Path
 
 import numpy as np
@@ -22,11 +23,13 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from equi7grid_spark import geodesy, zones
-from equi7grid_spark.tile import Tile
+from equi7grid_spark.tile import TILING_ID_TO_SIZE, Tile
 from equi7grid_spark.warp.codecs import encode
 
 CACHE = Path(__file__).resolve().parent / ".cache"
 KEEP_PER_KIND = 2
+# part of every cache key: bump it when a generator's output changes
+FORMAT = 3
 
 # Land-biased location mixture: points fall in one of these boxes
 # (lon_min, lat_min, lon_max, lat_max) with probability P_ANCHOR, else
@@ -68,7 +71,9 @@ def cached(kind: str, seed: int, sizes: dict, build) -> Path:
     fills a fresh one and may return facts about it, which are stored with
     the seed and sizes in its DONE file. Keeps the newest KEEP_PER_KIND
     sets per kind."""
-    key = hashlib.sha1(json.dumps(sizes, sort_keys=True).encode()).hexdigest()[:10]
+    key = hashlib.sha1(
+        json.dumps({**sizes, "format": FORMAT}, sort_keys=True).encode()
+    ).hexdigest()[:10]
     out = CACHE / f"{kind}-seed{seed}-{key}"
     if (out / "DONE").exists():
         out.touch()
@@ -113,60 +118,60 @@ def id_strings(ids: np.ndarray, prefix: str = "img") -> pa.Array:
 def golden_tilenames(lon: np.ndarray, lat: np.ndarray, tiling_id: str = "T6") -> list:
     """Tilename per point on the NumPy reference path, None outside every
     zone: tile.Tile.from_lonlat's steps (zones, then the geodesy AEQD
-    forward, then Tile.from_xy), vectorized per zone."""
+    forward, then the tile floor of Tile.from_xy), vectorized per zone."""
     sub = zones.assign_primary_zone(lon, lat)
-    out: list = [None] * len(lon)
+    ts = TILING_ID_TO_SIZE[tiling_id]
+    out = np.full(len(lon), None, dtype=object)
     for cc in np.unique(sub):
         if cc == "":
             continue
         idx = np.flatnonzero(sub == cc)
         x, y = geodesy.aeqd_forward(str(cc), lon[idx], lat[idx])
-        for i, xi, yi in zip(idx, x, y):
-            out[i] = Tile.from_xy(str(cc), float(xi), float(yi), tiling_id).name
-    return out
+        keys, inv = np.unique(
+            np.stack([np.floor(x / ts), np.floor(y / ts)], axis=1), axis=0, return_inverse=True
+        )
+        names = np.array([Tile(str(cc), tiling_id, kx * ts, ky * ts).name for kx, ky in keys])
+        out[idx] = names[inv.ravel()]
+    return out.tolist()
 
 
 # -- bulk_assign ---------------------------------------------------------
 
 
-def bulk_table(seed: int, rows: int, warm_rows: int, files: int) -> Path:
+def bulk_table(seed: int, rows: int, files: int) -> Path:
     """Metadata-only image table (empty `bytes`) of `rows` rows in `files`
-    parquet files, a `warm_rows` table of the same distribution for warm-up
-    passes, and the golden in-zone row count of each."""
+    parquet files, and its golden T6 per-tile row counts."""
 
     def build(d: Path) -> None:
         rng = np.random.default_rng([seed, 1])
-        counts = {}
-        for name, n, n_files in (("table", rows, files), ("warm", warm_rows, 1)):
-            lon, lat = lonlat(rng, n)
-            code = zones.assign_primary_zone_code(lon, lat)
-            ids = np.arange(n, dtype=np.int64)
-            tbl = pa.table(
-                {
-                    "image_id": id_strings(ids),
-                    "bytes": pa.array([b""] * n, pa.binary()),
-                    "w": rng.integers(16, 1025, n, dtype=np.int32),
-                    "h": rng.integers(16, 1025, n, dtype=np.int32),
-                    "fmt": pa.array(FMTS[ids % 3]),
-                    "caption": pa.compute.binary_join_element_wise(
-                        pa.array(WORDS[rng.integers(0, len(WORDS), n)]),
-                        pa.array(WORDS[rng.integers(0, len(WORDS), n)]),
-                        " ",
-                    ),
-                    "phash": rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64),
-                    "lon": lon,
-                    "lat": lat,
-                },
-                schema=BULK_SCHEMA,
-            )
-            (d / name).mkdir()
-            step = -(-n // n_files)
-            for i in range(n_files):
-                pq.write_table(tbl.slice(i * step, step), d / name / f"part-{i:03d}.parquet")
-            counts[name] = int((code >= 0).sum())
-        (d / "golden.json").write_text(json.dumps({"in_zone": counts}))
+        lon, lat = lonlat(rng, rows)
+        ids = np.arange(rows, dtype=np.int64)
+        tbl = pa.table(
+            {
+                "image_id": id_strings(ids),
+                "bytes": pa.array([b""] * rows, pa.binary()),
+                "w": rng.integers(16, 1025, rows, dtype=np.int32),
+                "h": rng.integers(16, 1025, rows, dtype=np.int32),
+                "fmt": pa.array(FMTS[ids % 3]),
+                "caption": pa.compute.binary_join_element_wise(
+                    pa.array(WORDS[rng.integers(0, len(WORDS), rows)]),
+                    pa.array(WORDS[rng.integers(0, len(WORDS), rows)]),
+                    " ",
+                ),
+                "phash": rng.integers(-(2**63), 2**63 - 1, rows, dtype=np.int64),
+                "lon": lon,
+                "lat": lat,
+            },
+            schema=BULK_SCHEMA,
+        )
+        (d / "table").mkdir()
+        step = -(-rows // files)
+        for i in range(files):
+            pq.write_table(tbl.slice(i * step, step), d / "table" / f"part-{i:03d}.parquet")
+        counts = Counter(n for n in golden_tilenames(lon, lat) if n is not None)
+        (d / "golden.json").write_text(json.dumps({"tile_counts": counts}))
 
-    return cached("bulk", seed, {"rows": rows, "warm_rows": warm_rows, "files": files}, build)
+    return cached("bulk", seed, {"rows": rows, "files": files}, build)
 
 
 # -- image_curation ------------------------------------------------------
@@ -192,13 +197,22 @@ def curation_corpus(seed: int, n_base: int, dup_share: float, emb_dim: int) -> P
     pixels, so all three dedup signals fire and the group must close into
     one cluster. Another share of bases gets a lossy q8 re-encode with a
     fresh caption and embedding, which only the phash signal may catch;
-    those pairs add shuffle and CC work but are not checked."""
+    those pairs add shuffle and CC work but are not checked. The seed
+    picks which bases play which role, not how many do, so every seed
+    has the same number of images and groups of each size."""
 
     def build(d: Path) -> None:
         rng = np.random.default_rng([seed, 2])
         rows, groups = [], []
         lon, lat = lonlat(rng, n_base)
         emb = rng.standard_normal((n_base, emb_dim))
+        n_dup, n_lossy = round(n_base * dup_share), round(n_base * dup_share / 2)
+        # role per base: 2 = two re-encodes, 1 = one, -1 = a lossy copy, 0 = alone
+        role = np.zeros(n_base, dtype=np.int64)
+        role[: round(n_dup * 0.4)] = 2
+        role[round(n_dup * 0.4) : n_dup] = 1
+        role[n_dup : n_dup + n_lossy] = -1
+        role = rng.permutation(role)
         for i in range(n_base):
             w, h = (int(v) for v in rng.integers(24, 65, 2))
             arr = _smooth_image(rng, w, h)
@@ -206,17 +220,16 @@ def curation_corpus(seed: int, n_base: int, dup_share: float, emb_dim: int) -> P
             base_id = f"c{i:07d}"
             cap = f"{WORDS[i % len(WORDS)]} scene {i} by {rng.integers(1 << 30)}"
             rows.append((base_id, encode(arr, fmt), w, h, fmt, cap, lon[i], lat[i], emb[i]))
-            u = rng.random()
-            if u < dup_share:
+            if role[i] > 0:
                 members = [base_id]
                 others = [f for f in ("raw", "png") if f != fmt]
-                for k in range(1 + int(rng.random() < 0.4)):
+                for k in range(role[i]):
                     vf = others[k % len(others)]
                     vid = f"{base_id}_r{k}"
                     rows.append((vid, encode(arr, vf), w, h, vf, cap, lon[i], lat[i], emb[i]))
                     members.append(vid)
                 groups.append(members)
-            elif u < dup_share * 1.5:
+            elif role[i] < 0:
                 rows.append(
                     (f"{base_id}_q", encode(arr, "q8"), w, h, "q8",
                      f"{cap} (lossy copy)", lon[i], lat[i],
@@ -299,12 +312,15 @@ def row_crc(image_id: str, version: int, caption: str) -> int:
     return zlib.crc32(f"{image_id}|{version}|{caption}".encode())
 
 
-def ingest_batches(seed: int, n_batches: int, batch_rows: int, update_share: float) -> Path:
-    """`n_batches` regional batches of `batch_rows` rows. Each batch draws
-    its new rows from one region; `update_share` of its rows re-send ids
-    from earlier batches of the same region with a bumped version and a new
-    caption (same location, so the update lands in the row's partition).
-    Stores, per batch, its region and the last-writer-wins row count and
+def ingest_batches(
+    seed: int, region: int, n_batches: int, batch_rows: int, update_share: float
+) -> Path:
+    """`n_batches` batches of `batch_rows` rows from REGIONS[region].
+    From the second batch on, `update_share` of a batch's rows re-send ids
+    of earlier batches with a bumped version and a new caption (same
+    location, so the update lands in the row's partition): every commit
+    after the first merges into the same existing partitions, whatever the
+    seed. Stores, per batch, its region and the last-writer-wins row count and
     content checksum of the table after it, and the golden tilename of every
     in-zone row of batch 0. Every point of every region lies inside an
     Equi7 zone, so assign_tiles_jvm keeps every row and the golden counts
@@ -316,20 +332,18 @@ def ingest_batches(seed: int, n_batches: int, batch_rows: int, update_share: flo
         version = np.zeros(n_max, dtype=np.int64)  # 0 = never written
         crc = np.zeros(n_max, dtype=np.int64)
         lon_all, lat_all = np.zeros(n_max), np.zeros(n_max)
-        region_of = np.full(n_max, -1)
         next_id = 0
         golden = []
         (d / "batches").mkdir()
+        r = region
         for b in range(n_batches):
-            r = int(rng.integers(len(REGIONS)))
-            pool = np.flatnonzero(region_of[:next_id] == r)
+            pool = np.arange(next_id)
             n_upd = min(int(batch_rows * update_share), len(pool))
             upd = rng.choice(pool, size=n_upd, replace=False) if n_upd else pool[:0]
             n_new = batch_rows - n_upd
             new = np.arange(next_id, next_id + n_new)
             next_id += n_new
             lon_all[new], lat_all[new] = lonlat(rng, n_new, [REGIONS[r]], 1.0)
-            region_of[new] = r
             ids = np.concatenate([new, upd])
             version[ids] += 1
             sid = [f"row{i:09d}" for i in ids]
@@ -359,7 +373,8 @@ def ingest_batches(seed: int, n_batches: int, batch_rows: int, update_share: flo
 
     return cached(
         "ingest", seed,
-        {"n_batches": n_batches, "batch_rows": batch_rows, "update_share": update_share},
+        {"region": region, "n_batches": n_batches, "batch_rows": batch_rows,
+         "update_share": update_share},
         build,
     )
 

@@ -4,7 +4,7 @@
 
 Runs one workload in a fresh process with one local[k] session (k = the
 CPUs in this process's affinity), runs closed-loop op cycles (at least
-one, and no new op after --seconds), checks every op's output, and prints
+two, and no new op after --seconds), checks every op's output, and prints
 as its last stdout line one JSON object: {"correct", "attempted",
 "failed", "metrics"}. With --trace 0 the metrics are the end-to-end ones;
 with --trace 1 the run records a span around every layer call and reports
@@ -25,7 +25,9 @@ from pathlib import Path
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 WORK = HERE / ".work"
-SETUPS = 3
+# thread CPU seconds of harness.reference_work on the reference VM when
+# quiet: time metrics are scaled to this speed
+REF_S = 0.1
 
 END_TO_END = {
     "setup_s": "s",
@@ -136,44 +138,48 @@ def main(argv: list[str] | None = None) -> int:
     )
     os.environ["SPARK_LOCAL_DIRS"] = str(local_dirs)
     os.environ["TMPDIR"] = str(tmp)
-    conf = {"spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}"}
+    # op CPU time leaves out the JIT compiler threads, which must then stay
+    # alive for their time to be read (harness.jit_cpu_seconds). The heap
+    # is committed and touched whole at start: left to grow, G1 reached
+    # 1.1-1.9 GB of RSS on the same work
+    conf = {"spark.driver.extraJavaOptions":
+            f"-Djava.io.tmpdir={tmp} -XX:-UseDynamicNumberOfCompilerThreads"
+            f" -Xms{os.environ['SPARK_DRIVER_MEMORY']} -XX:+AlwaysPreTouch"}
 
     wl = WORKLOADS[args.workload](args.seed, WORK)
-    log = harness.OpLog()
+    log = harness.OpLog(calibrate=harness.reference_work)
     tracer = harness.Tracer(False, None, slots)
     ctx = Ctx(None, log, tracer)
     wl.bind(ctx)
-    retired = []  # stopped sessions stay referenced: the engine caches per id(session)
-    setups = []
     steal0 = harness.cpu_steal_ticks()
     with harness.RssSampler() as rss:
-        # set-up = session start + input load, repeated SETUPS times (the
-        # first one also starts the JVM), then the warm-up ops once: a
-        # second warm-up in the same JVM would cost a run's worth of time
-        # and measure a warm one
-        for i in range(SETUPS):
-            if i:
-                spark.stop()
-                retired.append(spark)
-            t0 = time.perf_counter()
-            tracer.sc, tracer.enabled = None, bool(args.trace)
-            with tracer.span("session.get_spark"):
-                spark = get_spark(app_name="layerbench", master=master, extra_conf=conf)
-            ctx.spark, tracer.enabled = spark, False
-            wl.load()
-            setups.append(time.perf_counter() - t0)
-        t0 = time.perf_counter()
+        # set-up = the session start, which starts the JVM, the input load
+        # and the warm-up ops, in CPU time of the process tree: everything
+        # a user pays before the first warm op
+        ref0 = harness.reference_work()
+        c0, t0 = harness.tree_cpu_seconds(os.getpid()), time.perf_counter()
+        tracer.enabled = bool(args.trace)
+        with tracer.span("session.get_spark"):
+            spark = get_spark(app_name="layerbench", master=master, extra_conf=conf)
+        ctx.spark, tracer.enabled = spark, False
+        wl.load()
+        t1 = time.perf_counter()
         wl.warmup()
-        warmup_s = time.perf_counter() - t0
+        setup = {
+            "setup_cpu_s": harness.tree_cpu_seconds(os.getpid()) - c0,
+            "session_wall_s": t1 - t0,
+            "warmup_wall_s": time.perf_counter() - t1,
+        }
+        setup["ref"] = [ref0, harness.reference_work()]
         host = harness.host_record(spark)
         log.clear_samples()  # warm-up ops are checked but are not samples
         if args.trace:
             tracer.sc = spark.sparkContext
         deadline = time.perf_counter() + args.seconds
-        # the first cycle (in a traced run the first two: one traced, one
-        # not) always completes, so every op kind has a sample and the
-        # memory peak covers the same work in every run
-        min_cycles = 2 if args.trace else 1
+        # the first two cycles (in a traced run one traced, one not) always
+        # complete, so every op kind has two samples and the memory peak
+        # covers the same work in every run
+        min_cycles = 2
         n = 0
         while n < min_cycles or time.perf_counter() < deadline:
             # in a traced run every other cycle runs untraced, which gives
@@ -189,8 +195,9 @@ def main(argv: list[str] | None = None) -> int:
                 if n >= min_cycles and time.perf_counter() >= deadline:
                     break
                 op()
-            if n == 0:
+            if n == min_cycles - 1:
                 peak_rss = rss.peak
+                details_rss = sorted((round(v / 2**20) for v in rss.at_peak.values()), reverse=True)
             n += 1
         tracer.enabled = bool(args.trace)
         wl.finish(bool(args.trace))
@@ -213,24 +220,31 @@ def main(argv: list[str] | None = None) -> int:
         main_c, side_c = log.cpu.get("main", []), log.cpu.get("side", [])
         if not main_t or not side_t:
             raise RuntimeError(f"no successful ops in {args.seconds}s: {log.errors[:3]}")
+        # the host's speed over this run, relative to the reference VM
+        refs = setup["ref"] + [r for v in log.ref.values() for r in v]
+        scale = REF_S / harness.median(refs)
         values = {
-            "setup_s": harness.median(setups) + warmup_s,
+            "setup_s": setup["setup_cpu_s"] * scale,
             "peak_rss_mb": peak_rss / 2**20,
-            "main_items_per_cpu_s": wl.items_per_main / harness.median(main_c),
-            "side_op_cpu_s": harness.median(side_c),
+            "main_items_per_cpu_s": wl.items_per_main / (harness.median(main_c) * scale),
+            "side_op_cpu_s": harness.median(side_c) * scale,
         }
+        details["speed_scale"] = scale
         # wall-clock figures of the same ops: too noisy on a shared host
         # to gate on, kept in the run record
         details["main_items_per_s"] = wl.items_per_main / harness.median(main_t)
         details["side_op_p50_s"] = harness.median(side_t)
+        details["setup_wall_s"] = setup["session_wall_s"] + setup["warmup_wall_s"]
+        details["rss_mb_at_peak"] = details_rss
         metrics = {k: {"value": values[k], "unit": u} for k, u in END_TO_END.items()}
     for e in log.errors:
         print(f"layerbench: failed op: {e}", file=sys.stderr)
     samples = {k: [round(t, 3) for t in v] for k, v in log.times.items()}
     samples.update({f"{k}_cpu": [round(t, 3) for t in v] for k, v in log.cpu.items()})
+    samples.update({f"{k}_jit_cpu": [round(t, 3) for t in v] for k, v in log.jit.items()})
+    samples.update({f"{k}_ref": [round(t, 4) for t in v] for k, v in log.ref.items()})
     print(json.dumps({"host": host, "workload": args.workload, "seed": args.seed,
-                      "setups_s": setups, "warmup_s": warmup_s, "samples": samples,
-                      "details": details}))
+                      "setup": setup, "samples": samples, "details": details}))
     print(json.dumps({
         "correct": log.failed == 0,
         "attempted": log.attempted,
