@@ -18,7 +18,7 @@ Three jobs:
                      no-op. Use count() actions (driver methodology).
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0),
-     SPARK_GRAFT_CPUS (default 32), REPS (default 3; use >=8 for --ab),
+     SPARK_GRAFT_CPUS (default 32), REPS (default 3; use >=8 for --ab, which rounds it up to even),
      TAG (default "before"), AB_CONF (for --ab).
 """
 
@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -92,16 +93,23 @@ def main() -> None:
         if not conf:
             raise SystemExit("--ab needs AB_CONF='key=value;key=value'")
         on_conf = dict(kv.split("=", 1) for kv in conf.split(";") if kv)
-        off_conf = {k: spark.conf.get(k) for k in on_conf}
+        # None = unset on this session; OFF restores it with conf.unset
+        off_conf = {k: spark.conf.get(k, None) for k in on_conf}
         qs["tile_counts_t6"](spark, SF_DIR).count()
         qs["image_decode_stats"](spark, SF_DIR).count()
         res = {n: {False: [], True: []} for n in names}
-        for rep in range(max(REPS, 2)):
+        # even rep count: each variant runs first exactly as often as second
+        reps = max(REPS, 2)
+        reps += reps % 2
+        for rep in range(reps):
             order = (False, True) if rep % 2 == 0 else (True, False)
             for name in names:
                 for on in order:
                     for k, v in (on_conf if on else off_conf).items():
-                        spark.conf.set(k, v)
+                        if v is None:
+                            spark.conf.unset(k)
+                        else:
+                            spark.conf.set(k, v)
                     spark.sparkContext.setJobDescription(
                         f"ab:{name}:{'on' if on else 'off'}"
                     )
@@ -111,16 +119,16 @@ def main() -> None:
             print(f"# rep {rep} done", file=sys.stderr)
         out = {}
         for name in names:
-            a = sorted(res[name][False])
-            b = sorted(res[name][True])
+            a, b = res[name][False], res[name][True]
+            a_med, b_med = statistics.median(a), statistics.median(b)
             out[name] = {
-                "off_min": round(a[0], 3),
-                "off_med": round(a[len(a) // 2], 3),
-                "on_min": round(b[0], 3),
-                "on_med": round(b[len(b) // 2], 3),
+                "off_min": round(min(a), 3),
+                "off_med": round(a_med, 3),
+                "on_min": round(min(b), 3),
+                "on_med": round(b_med, 3),
             }
-            print(f"# {name}: OFF min {a[0]:.3f} med {a[len(a)//2]:.3f} | "
-                  f"ON min {b[0]:.3f} med {b[len(b)//2]:.3f}", file=sys.stderr)
+            print(f"# {name}: OFF min {min(a):.3f} med {a_med:.3f} | "
+                  f"ON min {min(b):.3f} med {b_med:.3f}", file=sys.stderr)
         print(json.dumps(out))
     else:
         raise SystemExit(f"unknown mode {mode}")

@@ -1,29 +1,34 @@
-"""JVM-only tile assignment: broadcast lookups + Column algebra.
+"""JVM-only tile assignment: one compiled kernel call per row.
 
 The scale path for the flagship job (north rule: 10^12-row image table,
 N→4N scaling ≥ 0.8). The round-1 flagship ran every row through a
 pandas UDF (exact PIP + NumPy Vincenty) — correct, but the Python
 worker fraction caps multi-core scaling (each task slot needs a JVM
-reader thread *and* a python worker). This path has NO Python at all:
+reader thread *and* a python worker). This path has NO Python at all.
 
-1. every row computes its 1-degree cell id (pure Columns) and
-   broadcast-joins the 64,800-row decided-cell map
-   (zones.decided_cell_codes): 95.8% of cells — 99.5% of land-biased
-   rows — resolve their primary zone right there;
-2. rows in prefilter-boundary cells resolve via the second broadcast
-   map (zones_pip.boundary_cands): exact even-odd parity from a
-   per-cell reference point + tiny local edge lists, evaluated with
-   F.aggregate — lazily, only on the when() branch for boundary rows;
-3. every in-zone row projects with the unrolled Column Vincenty
-   (functions/geodesy_cols.with_aeqd_forward);
-4. tile_counts_jvm reduces to compact int keys (zc, tx, ty) with
-   map-side partial aggregation — the groupBy is the plan's ONLY
-   data shuffle (pinned by tests/test_queries_scale.py).
+On every session that registers the checked-in jar (operators/kernel,
+plain sessions included), each primitive is ONE compiled call per row —
+zone resolve (the 1-degree cell map + exact boundary parity are baked
+into the jar), Vincenty AEQD forward, and keying:
 
-One scan, two broadcast hash joins (~2 MB total build side), zero
-Python workers, zero extra shuffles. Zone/tilename strings
+- tile_counts_jvm: equi7_zone_tile_key -> packed (zc, tx, ty) long,
+  reduced with map-side partial aggregation; the groupBy is the plan's
+  ONLY shuffle (pinned by tests/test_queries_scale.py);
+- assign_tiles_jvm: equi7_zone_xy -> [zc, x, y]; zero joins, zero
+  shuffles, and a null/NaN/infinite lon or lat is simply out of zone.
+
+Both sit behind an explode-of-one barrier so the not-null filter is
+not pushed down as a second UDF evaluation. Zone/tilename strings
 materialize post-agg on ~10^3 rows, exactly like
 operators/assign.tile_counts.
+
+Without the jar, or for a non-default system_order, the same functions
+run a pure Column fallback: a broadcast join of the 64,800-row
+decided-cell map (zones.decided_cell_codes) resolves 95.8% of cells;
+boundary cells join the 2,701-row candidate map (zones_pip
+.boundary_cands) and resolve by exact even-odd parity in F.aggregate
+(pip_resolve_col); rows project with the unrolled Column Vincenty
+(functions/geodesy_cols.with_aeqd_forward).
 
 Semantics parity is pinned by tests/test_assign_jvm.py: identical
 per-tile counts/assignments vs the pandas path on the sf tables and
@@ -342,45 +347,55 @@ def assign_tiles_jvm(
 
     Same added columns as operators/assign.assign_tiles(buffered=False):
     subgrid, x, y, ll_x, ll_y, tilename (+ row, col with `sampling`).
-    Single pass, zero Python, zero shuffles.
+    Single pass, zero Python, zero shuffles. With the kernel: one
+    compiled equi7_zone_xy call per row and no joins; null, NaN or
+    infinite lon/lat count as out of every zone.
     """
     ts = float(TILING_ID_TO_SIZE[tiling_id])
     order = tuple(system_order)
 
     from equi7grid_spark.operators import kernel
 
-    use_kernel = kernel.kernel_available(df.sparkSession) and order == DEFAULT_SYSTEM_ORDER
-
-    def project(frame: DataFrame) -> DataFrame:
-        if use_kernel:
-            k = frame.withColumn(
-                "_xy", kernel.xy_col(F.col("zc"), F.col(lon_col), F.col(lat_col))
-            )
-            return (
-                k.withColumn("x", F.element_at("_xy", 1))
-                .withColumn("y", F.element_at("_xy", 2))
-                .drop("_xy")
-            )
-        return with_aeqd_forward(
-            frame, "zc", lon_col, lat_col, "x", "y", system_order=order
-        )
-
-    out = with_zone_code_jvm(df, lon_col, lat_col, "zc", system_order=order)
-    if drop_out_of_zone:
-        out = project(out.filter(F.col("zc") >= 0))
-    else:
-        # Vincenty needs a valid zone index; out-of-zone rows (zc null,
-        # possible only for points exactly on zone edges) get NaN x/y
-        # like the pandas path yields.
+    if kernel.kernel_available(df.sparkSession) and order == DEFAULT_SYSTEM_ORDER:
+        # explode-of-one barrier (as in tile_counts_jvm): the isNotNull
+        # filter would otherwise be pushed down as a second evaluation
+        # of the (deterministic) UDF
+        zxy = F.explode(F.array(kernel.zone_xy_col(F.col(lon_col), F.col(lat_col))))
+        out = df.withColumn("__zxy", zxy)
+        if drop_out_of_zone:
+            out = out.filter(F.col("__zxy").isNotNull())
+        # out-of-zone rows (kept only when not dropping) get NaN x/y
+        # like the pandas path yields
         nan = F.lit(float("nan"))
-        proj = project(out.filter(F.col("zc") >= 0))
-        outside = (
-            out.filter(F.col("zc").isNull())
-            .withColumn("x", nan)
-            .withColumn("y", nan)
-            .select(*proj.columns)
+        out = (
+            out.withColumn("x", F.coalesce(F.col("__zxy")[1], nan))
+            .withColumn("y", F.coalesce(F.col("__zxy")[2], nan))
+            .withColumn("zc", F.col("__zxy")[0].cast("tinyint"))
+            .drop("__zxy")
         )
-        out = proj.unionAll(outside)
+    else:
+        out = with_zone_code_jvm(df, lon_col, lat_col, "zc", system_order=order)
+
+        def project(frame: DataFrame) -> DataFrame:
+            return with_aeqd_forward(
+                frame, "zc", lon_col, lat_col, "x", "y", system_order=order
+            )
+
+        if drop_out_of_zone:
+            out = project(out.filter(F.col("zc") >= 0))
+        else:
+            # Vincenty needs a valid zone index; out-of-zone rows (zc
+            # null, possible only for points exactly on zone edges) get
+            # NaN x/y like the pandas path yields.
+            nan = F.lit(float("nan"))
+            proj = project(out.filter(F.col("zc") >= 0))
+            outside = (
+                out.filter(F.col("zc").isNull())
+                .withColumn("x", nan)
+                .withColumn("y", nan)
+                .select(*proj.columns)
+            )
+            out = proj.unionAll(outside)
     out = out.withColumn("subgrid", subgrid_from_code(F.col("zc"), order)).drop("zc")
     out = out.withColumn("ll_x", tile_ll(F.col("x"), ts)).withColumn(
         "ll_y", tile_ll(F.col("y"), ts)

@@ -28,6 +28,10 @@ SQL functions registered:
       1-degree cell map + exact boundary parity live in the jar as a
       1.8 MB resource), so the flagship needs one scan, zero joins,
       one shuffle on a single long column.
+  equi7_zone_xy(lon, lat) -> array<double> [zc, x, y], null when out
+      of every zone or when lon/lat is null, NaN or infinite — the
+      row-level twin of equi7_zone_tile_key (same zone resolve + Vincenty
+      calls), so assign_tiles_jvm needs one call per row and no joins.
 """
 
 from __future__ import annotations
@@ -85,6 +89,9 @@ def kernel_available(spark: SparkSession) -> bool:
                 "equi7.RoundtripZoneTileKey",
                 T.LongType(),
             )
+            spark.udf.registerJavaFunction(
+                "equi7_zone_xy", "equi7.ZoneXY", T.ArrayType(T.DoubleType())
+            )
             # Probe through the SAME column-typed wrappers the queries
             # use, with the adversarial dtypes a plain (non-Arrow)
             # session produces (bigint zc, bigint lon/lat) — a literal
@@ -99,6 +106,7 @@ def kernel_available(spark: SparkSession) -> bool:
             row = probe.select(
                 tile_key_col(F.col("zc"), F.col("lon"), F.col("lat"), 600000.0),
                 zone_tile_key_col(F.col("lon"), F.col("lat"), 600000.0),
+                zone_xy_col(F.col("lon"), F.col("lat")),
                 xy_col(F.col("zc"), F.col("lon"), F.col("lat")),
                 lonlat_col(
                     F.col("zc"),
@@ -148,6 +156,12 @@ def roundtrip_zone_tile_key_col(
         lat.cast("double"),
         F.lit(float(tile_size)),
     )
+
+
+def zone_xy_col(lon: Column, lat: Column) -> Column:
+    """[zc, x, y] (array<double>) or null when out of every zone —
+    zone resolve + AEQD forward in one compiled call per row."""
+    return F.call_udf("equi7_zone_xy", lon.cast("double"), lat.cast("double"))
 
 
 def unpack_zc(ztkey: Column) -> Column:

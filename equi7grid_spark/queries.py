@@ -1926,19 +1926,24 @@ def q_lonlat_roundtrip_err_buckets(spark: SparkSession, sf_dir: str) -> DataFram
     from equi7grid_spark.operators.assign_jvm import with_zone_code_jvm
 
     pts = _derived_lonlat(spark, sf_dir, spread=_spread_unless_kernel(spark))
-    zoned = (
-        with_zone_code_jvm(pts)
-        .filter(F.col("zc").isNotNull())
-        .select("zc", F.col("lon").alias("olon"), F.col("lat").alias("olat"),
-                "lon", "lat")
-    )
     if kernel.kernel_available(spark):
-        fwd = zoned.withColumn(
-            "_xy", kernel.xy_col(F.col("zc"), F.col("lon"), F.col("lat"))
-        ).select(
-            "zc", "olon", "olat",
-            F.element_at("_xy", 1).alias("x"),
-            F.element_at("_xy", 2).alias("y"),
+        # zone resolve + forward in ONE compiled call per row — the same
+        # ZoneData.zoneCode + Vincenty.forward as the former
+        # with_zone_code_jvm → xy_col chain (bit-identical x/y), minus
+        # the two broadcast joins and the interpreted boundary parity.
+        # Explode-of-one barrier: the isNotNull filter must not push
+        # down as a second evaluation of the UDF.
+        zxy = F.explode(F.array(kernel.zone_xy_col(F.col("lon"), F.col("lat"))))
+        fwd = (
+            pts.select("lon", "lat", zxy.alias("_zxy"))
+            .filter(F.col("_zxy").isNotNull())
+            .select(
+                F.col("_zxy")[0].cast("tinyint").alias("zc"),
+                F.col("lon").alias("olon"),
+                F.col("lat").alias("olat"),
+                F.col("_zxy")[1].alias("x"),
+                F.col("_zxy")[2].alias("y"),
+            )
         )
         inv = fwd.withColumn(
             "_ll", kernel.lonlat_col(F.col("zc"), F.col("x"), F.col("y"))
@@ -1948,6 +1953,12 @@ def q_lonlat_roundtrip_err_buckets(spark: SparkSession, sf_dir: str) -> DataFram
             F.element_at("_ll", 2).alias("lat"),
         )
     else:
+        zoned = (
+            with_zone_code_jvm(pts)
+            .filter(F.col("zc").isNotNull())
+            .select("zc", F.col("lon").alias("olon"), F.col("lat").alias("olat"),
+                    "lon", "lat")
+        )
         fwd = with_aeqd_forward(
             zoned, "zc", "lon", "lat", "x", "y", carry=["zc", "olon", "olat"]
         )

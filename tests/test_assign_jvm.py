@@ -308,3 +308,66 @@ def test_assign_tiles_jvm_keeps_all_rows_when_not_dropping(spark):
     assert len(b) == 4
     assert [r.subgrid for r in a] == [r.subgrid for r in b]
     assert [r.tilename for r in a] == [r.tilename for r in b]
+
+
+def test_assign_tiles_jvm_hostile_lonlat(spark):
+    """Null, NaN and ±inf lon/lat are out of every zone on the kernel
+    path: dropped under drop_out_of_zone=True, kept with a null subgrid
+    and NaN x/y under False — and never fail the job."""
+    nan, inf = float("nan"), float("inf")
+    good = [(0, 5.0, 47.0), (1, -140.0, 0.0), (2, 170.0, -85.0)]
+    bad = [
+        (10, None, 10.0), (11, 10.0, None), (12, None, None),
+        (13, nan, 10.0), (14, 10.0, nan),
+        (15, inf, 10.0), (16, -inf, 10.0), (17, 10.0, inf), (18, 10.0, -inf),
+    ]
+    sdf = spark.createDataFrame(good + bad, "id int, lon double, lat double")
+    ref = {
+        r.id: r
+        for r in assign_tiles(
+            spark.createDataFrame(good, "id int, lon double, lat double")
+        ).collect()
+    }
+
+    kept = assign_tiles_jvm(sdf).collect()
+    assert sorted(r.id for r in kept) == sorted(ref)
+    for r in kept:
+        assert (r.subgrid, r.tilename) == (ref[r.id].subgrid, ref[r.id].tilename)
+
+    every = {r.id: r for r in assign_tiles_jvm(sdf, drop_out_of_zone=False).collect()}
+    assert sorted(every) == sorted(i for i, _, _ in good + bad)
+    for i, _, _ in bad:
+        r = every[i]
+        assert r.subgrid is None
+        assert np.isnan(r.x) and np.isnan(r.y)
+    for i in ref:
+        assert (every[i].subgrid, every[i].tilename) == (
+            ref[i].subgrid, ref[i].tilename
+        )
+
+
+def test_assign_tiles_jvm_column_fallback_equals_kernel(spark, monkeypatch):
+    """The no-jar Column fallback of assign_tiles_jvm must assign the
+    same zones and tiles as the kernel path, boundary cells included."""
+    from equi7grid_spark.operators import kernel
+
+    codes = cell_code_pdf()
+    und = codes[codes["zc"] == -2].head(200)
+    ix = (und["cell_id"] // 180).to_numpy()
+    iy = (und["cell_id"] % 180).to_numpy()
+    arr = np.concatenate(
+        [np.stack([ix - 180.0 + f, iy - 90.0 + f], axis=1) for f in (0.2, 0.7)]
+    )
+    sdf = spark.createDataFrame(
+        pd.DataFrame({"i": np.arange(len(arr)), "lon": arr[:, 0], "lat": arr[:, 1]})
+    )
+    cols = ["i", "subgrid", "tilename", "x", "y"]
+    with_kernel = assign_tiles_jvm(sdf).select(*cols).orderBy("i").toPandas()
+    monkeypatch.setattr(kernel, "kernel_available", lambda s: False)
+    columns_only = assign_tiles_jvm(sdf).select(*cols).orderBy("i").toPandas()
+    pd.testing.assert_frame_equal(
+        with_kernel[["i", "subgrid", "tilename"]],
+        columns_only[["i", "subgrid", "tilename"]],
+    )
+    np.testing.assert_allclose(with_kernel["x"], columns_only["x"], atol=1e-6)
+    np.testing.assert_allclose(with_kernel["y"], columns_only["y"], atol=1e-6)

@@ -85,6 +85,25 @@ def test_flagship_tile_counts_plan_is_jvm_only(spark):
         assert "BroadcastHashJoin" in plan
 
 
+def test_assign_tiles_jvm_plan_is_one_kernel_call(spark):
+    """Row-level assign on a kernel session: exactly one compiled
+    equi7_zone_xy call per row — no broadcast map joins and no
+    interpreted higher-order functions (the Column boundary parity)."""
+    from equi7grid_spark.operators import kernel
+    from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm
+    from equi7grid_spark.queries import _derived_lonlat
+
+    assert kernel.kernel_available(spark)
+    df = assign_tiles_jvm(_derived_lonlat(spark, SF, spread=False), tiling_id="T6")
+    df.collect()  # pin the executed plan, not just the initial one
+    plan = _physical(df).split("== Initial Plan ==")[0]
+    assert "BroadcastHashJoin" not in plan
+    assert "BroadcastExchange" not in plan
+    assert "aggregate(" not in plan and "filter(" not in plan
+    assert "lambdafunction" not in plan
+    assert plan.count("equi7_zone_xy(") == 1
+
+
 def test_corpus_curation_plan_shape(spark):
     """Filters must reach the documents scan stage (no Python nodes),
     and the duplicate removal must be an anti-join on doc_id — never a
