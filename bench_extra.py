@@ -18,7 +18,8 @@ Three jobs:
                      no-op. Use count() actions (driver methodology).
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0),
-     SPARK_GRAFT_CPUS (default 32), REPS (default 3; use >=8 for --ab, which rounds it up to even),
+     SPARK_GRAFT_CPUS (default: the CPUs in this process's affinity;
+     every mode refuses more than that), REPS (default 3; use >=8 for --ab, which rounds it up to even),
      TAG (default "before"), AB_CONF (for --ab).
 """
 
@@ -34,9 +35,20 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 REPS = int(os.environ.get("REPS", "3"))
 TAG = os.environ.get("TAG", "before")
+
+
+def _check_cpus() -> None:
+    """Refuse a local[k] wider than this process may run on: taskset
+    and container limits fail silently, and the numbers would lie."""
+    avail = len(os.sched_getaffinity(0))
+    if CPUS > avail:
+        raise SystemExit(
+            f"SPARK_GRAFT_CPUS={CPUS} exceeds the {avail} CPUs this "
+            f"process may run on; set SPARK_GRAFT_CPUS<={avail}"
+        )
 
 
 def _session():
@@ -55,6 +67,7 @@ def _session():
 def main() -> None:
     mode = sys.argv[1]
     names = sys.argv[2].split(",")
+    _check_cpus()
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()

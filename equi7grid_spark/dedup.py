@@ -16,8 +16,7 @@ candidate verification joins are restricted to same-bucket pairs.
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — resolves pandas_udf type hints (PEP 563)
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from equi7grid_spark.operators.partitioning import spread_small_input
@@ -685,14 +684,12 @@ def caption_dup_pairs(
 EMB_N_BANDS = 8
 EMB_N_PLANES = 16  # 65536-way buckets — occupancy << 1 at fixture scale
 
-_EMB_BUCKET_UDFS: dict = {}
-
-
 def emb_plane_value(band: int, plane: int, dim: int) -> float:
     """Deterministic hyperplane coefficient for (band, plane, dim
-    index) — shared verbatim by the Arrow banding pass and the SQL
-    literal arrays in the oracle (values ship as repr() literals, so
-    ANY deterministic choice stays value-exact cross-engine).
+    index) — the reference for the kernel's banding port
+    (EmbBuckets.planeValue) and the source of the SQL literal arrays
+    in the oracle (values ship as repr() literals, so ANY
+    deterministic choice stays value-exact cross-engine).
 
     Round 6: splitmix64-mixed instead of the former affine
     ((band*53 + plane*37 + dim*101) % 19) pattern — the affine planes
@@ -715,111 +712,42 @@ def emb_plane_value(band: int, plane: int, dim: int) -> float:
     return float((z >> 40) % 19 - 9)
 
 
-def _emb_buckets_udf(col: Column, n_bands: int, n_planes: int) -> Column:
-    """array<int> of per-band sign-LSH bucket ids, ONE vectorized Arrow
-    matmul pass per batch (V @ P.T, sign bits packed per band). Planes
-    are built lazily from the first batch's dimensionality."""
-    key = (n_bands, n_planes)
-    if key not in _EMB_BUCKET_UDFS:
-        import numpy as np
-        import pandas as pd
+def _emb_buckets_udf(
+    spark: SparkSession, col: Column, n_bands: int, n_planes: int
+) -> Column:
+    """array<int> of per-band sign-LSH bucket ids, one compiled call per
+    row (equi7_emb_buckets, jvm/src/equi7/EmbBuckets.java): its planes
+    are a Java port of emb_plane_value, and each sign bit comes from a
+    left-to-right dot product, the oracle's CASE WHEN
+    list_dot_product(v, plane) > 0. An all-zero or empty vector (every
+    dot 0) and one with a NaN or null element (every dot NaN; the
+    oracle's dot is NULL) get bucket 0 in every band; only a null
+    array gets null. `spark` is the session that owns the frame the
+    column is used on: the kernel is registered per session. No
+    fallback: raises when that session cannot load the kernel jar."""
+    from equi7grid_spark.operators.kernel import emb_buckets_col, require_kernel
 
-        # per-dim plane matrices cached across batches (guide §4.5 —
-        # heavyweight init once per task, not per batch: the 8*16*dim
-        # splitmix evaluations are pure-Python)
-        planes: dict = {}
-
-        @F.pandas_udf("array<int>")
-        def buckets(v: pd.Series) -> pd.Series:
-            if not len(v):
-                return pd.Series([], dtype=object)
-            V = np.array(v.tolist(), dtype=np.float64)
-            dim = V.shape[1]
-            P = planes.get(dim)
-            if P is None:
-                P = planes[dim] = np.array(
-                    [
-                        [emb_plane_value(b, p, d) for d in range(dim)]
-                        for b in range(n_bands)
-                        for p in range(n_planes)
-                    ],
-                    dtype=np.float64,
-                )
-            S = (V @ P.T) > 0  # (n, n_bands*n_planes)
-            w = (1 << np.arange(n_planes)).astype(np.int64)
-            out = np.einsum(
-                "nbp,p->nb", S.reshape(len(V), n_bands, n_planes), w
-            ).astype(np.int32)
-            return pd.Series(list(out))
-
-        _EMB_BUCKET_UDFS[key] = buckets
-    return _EMB_BUCKET_UDFS[key](col)
+    require_kernel(spark, "embedding LSH banding")
+    return emb_buckets_col(col, n_bands, n_planes)
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Sequential HOF dot product — summation order matches DuckDB's
-    list_dot_product for the round-9 cosine parity. Kept as the
-    single-Column reference implementation; hot verify paths use
-    cosine_seq (the vectorized twin with the SAME accumulation
-    order)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda p, s: p * s), F.lit(0.0), lambda acc, v: acc + v
-    )
+def cosine_seq(spark: SparkSession, va: Column, vb: Column) -> Column:
+    """Cosine similarity of two array<double> columns, one compiled call
+    per row (equi7_cosine_seq, jvm/src/equi7/CosineSeq.java). The
+    accumulators advance LEFT-TO-RIGHT over the dimension axis (acc =
+    acc + a_d*b_d, one IEEE add per dim), so every partial sum, and the
+    division result down to the last ulp, matches the HOF chain
+    try_divide(dot(a,b), sqrt(dot(a,a)) * sqrt(dot(b,b))) over
+    aggregate(zip_with(...)) and DuckDB's list_dot_product. NULL on a
+    null array or element, arrays of different lengths, or a zero
+    denominator (try_divide semantics); NaN propagates as NaN. `spark`
+    is the session that owns the frame the column is used on: the
+    kernel is registered per session. No fallback: raises when that
+    session cannot load the kernel jar."""
+    from equi7grid_spark.operators.kernel import cosine_seq_col, require_kernel
 
-
-_COS_SEQ_UDF = None
-
-
-def cosine_seq(va: Column, vb: Column) -> Column:
-    """Vectorized cosine similarity, BIT-IDENTICAL to the interpreted
-    HOF chain try_divide(_dot(a,b), sqrt(_dot(a,a)) * sqrt(_dot(b,b))):
-    the accumulators advance LEFT-TO-RIGHT over the dimension axis
-    (acc = acc + a_d*b_d, one IEEE add per dim in the same order the
-    sequential aggregate performs), so every partial sum — and hence
-    the division result down to the last ulp — matches the HOF and
-    DuckDB's list_dot_product. The HOF runs interpreted
-    (CodegenFallback) per row; this runs 3 numpy axis loops per Arrow
-    batch (guide §4.2) — A/B'd ~4x faster on the multimodal embed
-    verify's ~340k candidate pairs. NULL on null inputs or a zero
-    denominator (try_divide semantics); NaN propagates as NaN."""
-    global _COS_SEQ_UDF
-    if _COS_SEQ_UDF is None:
-        import numpy as np
-        import pandas as pd
-
-        @F.pandas_udf("double")
-        def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-            if not len(a):
-                return pd.Series([], dtype="float64")
-            mask = (a.notna() & b.notna()).to_numpy()
-            out = np.zeros(len(a))
-            good = np.zeros(len(a), dtype=bool)
-            if mask.any():
-                A = np.array(a[mask].tolist(), dtype=np.float64)
-                B = np.array(b[mask].tolist(), dtype=np.float64)
-                n = len(A)
-                ab = np.zeros(n)
-                aa = np.zeros(n)
-                bb = np.zeros(n)
-                for d in range(A.shape[1]):
-                    ad = A[:, d]
-                    bd = B[:, d]
-                    ab += ad * bd
-                    aa += ad * ad
-                    bb += bd * bd
-                den = np.sqrt(aa) * np.sqrt(bb)
-                ok = den != 0.0
-                vals = np.zeros(n)
-                np.divide(ab, den, out=vals, where=ok)
-                idx = np.flatnonzero(mask)
-                out[idx] = vals
-                good[idx] = ok
-            arr = pd.array(out, dtype="Float64")
-            arr[~good] = pd.NA
-            return pd.Series(arr)
-
-        _COS_SEQ_UDF = cos
-    return _COS_SEQ_UDF(va, vb)
+    require_kernel(spark, "cosine_seq")
+    return cosine_seq_col(va, vb)
 
 
 def embedding_near_dup_pairs(
@@ -852,7 +780,9 @@ def embedding_near_dup_pairs(
     )
     b = e.select(
         "id",
-        F.posexplode(_emb_buckets_udf(F.col("v"), n_bands, n_planes)).alias(
+        F.posexplode(
+            _emb_buckets_udf(e.sparkSession, F.col("v"), n_bands, n_planes)
+        ).alias(
             "band", "bucket"
         ),
     )
@@ -864,13 +794,13 @@ def embedding_near_dup_pairs(
     ea = e.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
     eb = e.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
     j = cand.join(ea, "id_a").join(eb, "id_b")
-    # vectorized sequential-order cosine (bit-identical to the HOF
+    # compiled sequential-order cosine (bit-identical to the HOF
     # chain — see cosine_seq); the Generate barrier keeps the >=
     # threshold filter from duplicating the evaluation (guide §4.4 —
     # PushDownPredicate would substitute the aliased expression into
     # the filter/join condition; measured 6.1s -> sub-second on the
     # fixture back when this was the interpreted HOF).
-    cos = cosine_seq(F.col("va"), F.col("vb"))
+    cos = cosine_seq(e.sparkSession, F.col("va"), F.col("vb"))
     return (
         j.withColumn("_cos", F.explode(F.array(cos)))
         .filter(F.col("_cos") >= threshold)
@@ -922,7 +852,20 @@ def multimodal_near_dup(
     Intermediates stay pair-sized — never an all-pairs product — and
     the r5 plan's three fixture scans + two extra windows + two
     full-outer merge shuffles collapse into one scan, one window, one
-    pair aggregation and one small verify join."""
+    pair aggregation and one small verify join.
+
+    The three-signal form reads its input once: the key scan and both
+    sides of the verify join consume one localCheckpoint of the input
+    projected to (id, phash, caption, embedding), so an upstream Python
+    stage such as a phash decode runs once per row, not three times.
+    That checkpoint is eager: calling the function runs a Spark job
+    that materializes the whole projected input, embedding arrays
+    included, in executor block storage for the session's lifetime.
+    It is not fault tolerant: losing an executor that holds its blocks
+    fails the queries built on the result. Its embedding buckets and
+    cosines are compiled kernel calls (_emb_buckets_udf, cosine_seq),
+    so the pass adds no Python worker of its own, and it raises when
+    the session cannot load the kernel jar."""
     key_t = "array<struct<sig:int,k1:int,k2l:bigint,k2s:string>>"
     empty = F.expr(f"CAST(array() AS {key_t})")
 
@@ -959,16 +902,25 @@ def multimodal_near_dup(
     if embedding_col is not None:
         v = F.col(embedding_col).cast("array<double>")
         # transform's 2-arg lambda binds the ARRAY INDEX as arg 2 —
-        # exactly the band id here
-        emb_arr = F.when(
-            v.isNotNull(),
+        # exactly the band id here. A null bucket array (null vector)
+        # adds no keys, but must not null the concat and so drop the
+        # row's phash and caption keys with it.
+        emb_arr = F.coalesce(
             F.transform(
-                _emb_buckets_udf(v, emb_n_bands, emb_n_planes),
+                _emb_buckets_udf(imgs.sparkSession, v, emb_n_bands, emb_n_planes),
                 lambda b, i: _key(2, i, b, F.lit("")),
             ),
-        ).otherwise(empty)
+            empty,
+        )
         arrs.append(emb_arr)
     src = imgs.filter(F.col(id_col).isNotNull())
+    if embedding_col is not None:
+        # the key scan and both sides of the vector verify join read
+        # src: project it to their columns and checkpoint it once, or
+        # the caller's plan (a phash decode, say) runs three times
+        src = src.select(
+            id_col, phash_col, caption_col, embedding_col
+        ).localCheckpoint()
     keyed = src.select(
         F.col(id_col).alias("id"), p.alias("ph"),
         F.explode(F.concat(*arrs)).alias("k"),
@@ -1010,11 +962,11 @@ def multimodal_near_dup(
     j = flags.filter(F.col("_embcand")).select("id_a", "id_b").join(
         ea, "id_a"
     ).join(eb, "id_b")
-    # vectorized sequential-order cosine (bit-identical to the HOF
+    # compiled sequential-order cosine (bit-identical to the HOF
     # chain — cosine_seq); Generate barrier as in
     # embedding_near_dup_pairs keeps the threshold filter from
     # duplicating the evaluation (guide §4.4)
-    cos = cosine_seq(F.col("va"), F.col("vb"))
+    cos = cosine_seq(imgs.sparkSession, F.col("va"), F.col("vb"))
     emb = (
         j.withColumn("_cos", F.explode(F.array(cos)))
         .filter(F.col("_cos") >= cos_threshold)

@@ -743,12 +743,13 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- dot-product strategy --------------------------------------------------
 # Two regimes, chosen deliberately (measured):
 # - VERIFY dots (exact cosine on candidates / the brute-force baseline)
-#   stay F.aggregate folds: they must match DuckDB's list_dot_product
-#   summation order exactly, candidate sets are small, and the fold's
-#   plan is tiny. (An unrolled element_at sum is value-identical and
-#   codegen-able, but 96 dots x 64 terms made a ~6k-node expression
-#   tree whose Catalyst planning + codegen took 40s — planning cost
-#   dwarfs interpreted execution at any per-query row count.)
+#   are one compiled kernel call per row (dedup.cosine_seq ->
+#   equi7_cosine_seq): they must match DuckDB's list_dot_product
+#   summation order exactly, and the kernel accumulates left to right
+#   like the sequential F.aggregate fold it replaced. (An unrolled
+#   element_at sum is value-identical and codegen-able, but 96 dots x
+#   64 terms made a ~6k-node expression tree whose Catalyst planning +
+#   codegen took 40s.)
 # - BUCKET/SIGNATURE dots (LSH banding) go through ONE vectorized
 #   Arrow pass (numpy matmul): only the SIGN is consumed, and the
 #   minimum |dot| over every (vector, plane) pair in the test sets is
@@ -758,16 +759,6 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DIVIDE_BY_ZERO under Spark 4 ANSI while DuckDB yields NULL; NULL
 # cosines sort NULLS LAST under DESC in both engines and fail every
 # >= threshold, so the semantics agree.
-
-
-def _hof_dot(a, b):
-    """Sequential HOF dot product — the single-Column reference twin of
-    the vectorized dedup.cosine_seq (same left-to-right summation
-    order as DuckDB's list_dot_product). The query paths use
-    cosine_seq; this stays as the documented scalar form."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda p, s: p * s), F.lit(0.0), lambda acc, v: acc + v
-    )
 
 
 @register(
@@ -798,8 +789,8 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from equi7grid_spark.operators.partitioning import spread_small_input
 
     e = _t(spark, sf_dir, "embeddings")
-    # spread the file-bound single-partition read: the interpreted-HOF
-    # cosine runs over every candidate row
+    # spread the file-bound single-partition read: the cosine runs
+    # over every candidate row
     base = spread_small_input(e.filter(F.col("embedding").isNotNull())).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -812,10 +803,10 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = F.broadcast(q).crossJoin(c).filter(F.col("qid") != F.col("cid"))
     from equi7grid_spark.dedup import cosine_seq
 
-    # vectorized sequential-order cosine (bit-identical to the former
+    # compiled sequential-order cosine (bit-identical to the former
     # interpreted HOF chain — dedup.cosine_seq): identical doubles,
     # hence identical rank order/ties
-    cosine = cosine_seq(F.col("qv"), F.col("cv"))
+    cosine = cosine_seq(spark, F.col("qv"), F.col("cv"))
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
     return (
         j.withColumn("cosine", cosine)
@@ -1267,10 +1258,10 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = cand.join(ea, "a").join(eb, "b")
     from equi7grid_spark.dedup import cosine_seq
 
-    # vectorized sequential-order cosine (bit-identical to the former
+    # compiled sequential-order cosine (bit-identical to the former
     # interpreted HOF chain — dedup.cosine_seq); Generate barrier keeps
     # the threshold filter from duplicating the evaluation (guide §4.4)
-    cosine = cosine_seq(F.col("va"), F.col("vb"))
+    cosine = cosine_seq(spark, F.col("va"), F.col("vb"))
     return (
         j.withColumn("cos_raw", F.explode(F.array(cosine)))
         .filter(F.col("cos_raw") >= 0.45)
@@ -1379,9 +1370,9 @@ def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = q.join(c, (F.col("bucket") == F.col("cbucket")) & (F.col("qid") != F.col("cid")))
     from equi7grid_spark.dedup import cosine_seq
 
-    # vectorized sequential-order cosine (bit-identical to the former
+    # compiled sequential-order cosine (bit-identical to the former
     # interpreted HOF chain — dedup.cosine_seq)
-    cos = cosine_seq(F.col("qv"), F.col("cv"))
+    cos = cosine_seq(spark, F.col("qv"), F.col("cv"))
     w = Window.partitionBy("qid").orderBy(F.col("_cos").desc(), F.col("cid").asc())
     return (
         j.withColumn("_cos", cos)
@@ -2235,9 +2226,9 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from equi7grid_spark.dedup import cosine_seq
 
-    # vectorized sequential-order cosine (bit-identical to the former
+    # compiled sequential-order cosine (bit-identical to the former
     # interpreted HOF chain — dedup.cosine_seq)
-    cos = cosine_seq(F.col("qv"), F.col("cv"))
+    cos = cosine_seq(spark, F.col("qv"), F.col("cv"))
     w = Window.partitionBy("qid").orderBy(F.col("_c").desc(), F.col("cid").asc())
     return (
         j.withColumn("_c", cos)

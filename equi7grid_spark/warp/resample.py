@@ -136,11 +136,8 @@ def _tile_ring_in_mask_coords(
     arr_shape: tuple[int, int],
     n_edge: int = 64,
 ) -> np.ndarray:
-    """The tile footprint boundary as a closed ring in coarse-mask cell
-    coordinates (col, row), densified so the polyline cannot skip
-    cells."""
-    from equi7grid_spark.geom import densify_ring
-
+    """The tile footprint boundary as a closed ring of 4 * n_edge
+    reprojected vertices in coarse-mask cell coordinates (col, row)."""
     ts = t.tile_size
     e = np.linspace(0.0, ts, n_edge)
     bx = np.concatenate([t.ll_x + e, np.full_like(e, t.ll_x + ts), t.ll_x + ts - e, np.full_like(e, t.ll_x)])
@@ -154,8 +151,7 @@ def _tile_ring_in_mask_coords(
     cx = (sx - x_min) / (res_x * factor)
     cy = (y_max - sy) / (res_y * factor)
     ring = np.column_stack([cx, cy])
-    ring = np.vstack([ring, ring[:1]])
-    return densify_ring(ring, 0.5)
+    return np.vstack([ring, ring[:1]])
 
 
 def _tile_intersects_mask(
@@ -175,11 +171,13 @@ def _tile_intersects_mask(
     (c) some true cell's center lies inside the tile (region inside
         the tile).
     (a) uses the engine's exact segment/grid-cell marking
-    (geom.boundary_cells) on the densified reprojected footprint;
+    (geom.boundary_cells) on the reprojected footprint densified to
+    half a cell, so the polyline cannot skip cells;
     (b)/(c) are point-in-cell / point-in-ring tests. No sampling."""
-    from equi7grid_spark.geom import boundary_cells, points_in_rings
+    from equi7grid_spark.geom import boundary_cells, densify_ring, points_in_rings
 
-    ring = _tile_ring_in_mask_coords(t, factor, src_crs, src_extent, arr_shape)
+    coarse = _tile_ring_in_mask_coords(t, factor, src_crs, src_extent, arr_shape)
+    ring = densify_ring(coarse, 0.5)
     nr, nc = mask.shape
     # (a) cells crossed by the footprint boundary
     bx, by = boundary_cells([ring], 1.0, (0.0, 0.0))
@@ -202,7 +200,10 @@ def _tile_intersects_mask(
         )
         if not m.any():
             return False
-        inside = points_in_rings(cc[m] + 0.5, rr[m] + 0.5, [ring])
+        # the un-densified ring is the same polygon with ~40x fewer
+        # edges; no center tested here lies on its boundary, because
+        # (a) found every true cell uncrossed
+        inside = points_in_rings(cc[m] + 0.5, rr[m] + 0.5, [coarse])
         return bool(inside.any())
     return False
 

@@ -5,8 +5,13 @@ stale bytecode."""
 
 from __future__ import annotations
 
+import math
 import zipfile
 from pathlib import Path
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
 
 PKG = Path(__file__).resolve().parents[1] / "equi7grid_spark" / "jvm"
 
@@ -26,6 +31,130 @@ def test_kernel_registers_zone_xy(spark):
     from equi7grid_spark.operators import kernel
 
     assert kernel.kernel_available(spark)
-    assert spark.catalog.functionExists("equi7_zone_xy")
+    assert kernel.vector_kernel_available(spark)
+    for name in ("equi7_zone_xy", "equi7_cosine_seq", "equi7_emb_buckets"):
+        assert spark.catalog.functionExists(name), name
     (row,) = spark.sql("SELECT equi7_zone_xy(15.0D, 48.0D) AS v").collect()
     assert len(row.v) == 3 and row.v[0] == 3.0  # EU
+    (row,) = spark.sql(
+        "SELECT equi7_cosine_seq(array(3.0D, 4.0D), array(3.0D, 4.0D)) AS c,"
+        " equi7_emb_buckets(array(1.0D, 2.0D), 8, 16) AS k"
+    ).collect()
+    assert row.c == 1.0 and len(row.k) == 8
+
+
+def _seq_dot(a, b) -> float:
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+@pytest.mark.parametrize("dim", [16, 512])
+def test_cosine_seq_equals_sequential_reference(spark, dim):
+    """equi7_cosine_seq is bit-identical (==, not approx) to the
+    left-to-right accumulation ab / (sqrt(aa) * sqrt(bb))."""
+    from equi7grid_spark.dedup import cosine_seq
+
+    rng = np.random.default_rng(dim)
+    A = rng.normal(size=(60, dim))
+    B = A + rng.normal(scale=0.3, size=A.shape) * rng.uniform(0, 1, (60, 1))
+    rows = [(i, a.tolist(), b.tolist()) for i, (a, b) in enumerate(zip(A, B))]
+    df = spark.createDataFrame(rows, "i int, a array<double>, b array<double>")
+    got = {
+        r.i: r.c
+        for r in df.select("i", cosine_seq(spark, F.col("a"), F.col("b")).alias("c")).collect()
+    }
+    for i, a, b in rows:
+        want = _seq_dot(a, b) / (math.sqrt(_seq_dot(a, a)) * math.sqrt(_seq_dot(b, b)))
+        assert got[i] == want, (i, got[i], want)
+
+
+@pytest.mark.parametrize("n_bands,n_planes,dim", [(8, 16, 16), (3, 5, 40)])
+def test_emb_buckets_equal_sequential_reference(spark, n_bands, n_planes, dim):
+    """equi7_emb_buckets equals sign bits of sequential dots against
+    the planes of dedup.emb_plane_value."""
+    from equi7grid_spark.dedup import _emb_buckets_udf, emb_plane_value
+
+    planes = [
+        [[emb_plane_value(b, p, d) for d in range(dim)] for p in range(n_planes)]
+        for b in range(n_bands)
+    ]
+    rng = np.random.default_rng(dim + n_bands)
+    V = rng.normal(size=(80, dim)).tolist()
+    df = spark.createDataFrame(list(enumerate(V)), "i int, v array<double>")
+    got = {
+        r.i: list(r.k)
+        for r in df.select(
+            "i", _emb_buckets_udf(spark, F.col("v"), n_bands, n_planes).alias("k")
+        ).collect()
+    }
+    for i, v in enumerate(V):
+        want = [
+            sum(1 << p for p in range(n_planes) if _seq_dot(v, planes[b][p]) > 0)
+            for b in range(n_bands)
+        ]
+        assert got[i] == want, i
+
+
+def test_vector_entries_hostile_input_never_throws(spark):
+    """Null array, null element, mismatched lengths and a zero vector
+    give a null cosine; NaN propagates as NaN. Buckets keep the
+    oracle's CASE WHEN dot > 0 sign bits for every non-null array (a
+    null element counts as NaN, so zero, empty, NaN and null-element
+    vectors land in bucket 0 of every band); only a null array gives
+    null. No row fails the job."""
+    from equi7grid_spark.dedup import _emb_buckets_udf, cosine_seq, emb_plane_value
+
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        ("null_array", None, [1.0, 2.0]),
+        ("null_element", [1.0, None], [1.0, 2.0]),
+        ("nan", [1.0, nan], [1.0, 2.0]),
+        ("inf", [inf, 1.0], [1.0, 2.0]),
+        ("zero", [0.0, 0.0], [1.0, 2.0]),
+        ("lengths", [1.0, 2.0, 3.0], [1.0, 2.0]),
+        ("empty", [], []),
+        ("ok", [3.0, 4.0], [6.0, 8.0]),
+    ]
+    df = spark.createDataFrame(rows, "case string, a array<double>, b array<double>")
+    out = {
+        r.case: (r.c, r.k)
+        for r in df.select(
+            "case",
+            cosine_seq(spark, F.col("a"), F.col("b")).alias("c"),
+            _emb_buckets_udf(spark, F.col("a"), 8, 16).alias("k"),
+        ).collect()
+    }
+    for case in ("null_array", "null_element", "zero", "lengths", "empty"):
+        assert out[case][0] is None, case
+    assert math.isnan(out["nan"][0]) and math.isnan(out["inf"][0])
+    assert out["ok"][0] == 1.0
+    assert out["null_array"][1] is None
+    for case in ("null_element", "nan", "zero", "empty"):
+        assert list(out[case][1]) == [0] * 8, case
+    for case, a, _ in rows[3:]:
+        a = [nan if x is None else x for x in a]
+        want = [
+            sum(
+                1 << p
+                for p in range(16)
+                if _seq_dot(a, [emb_plane_value(b, p, d) for d in range(len(a))]) > 0
+            )
+            for b in range(8)
+        ]
+        assert list(out[case][1]) == want, case
+
+
+def test_vector_entries_run_on_the_owning_session(spark):
+    """Java functions are registered per session: a frame of a session
+    other than the active one still gets its cosine and buckets."""
+    from equi7grid_spark.dedup import _emb_buckets_udf, cosine_seq
+
+    other = spark.newSession()
+    df = other.createDataFrame([([3.0, 4.0], [6.0, 8.0])], "a array<double>, b array<double>")
+    (row,) = df.select(
+        cosine_seq(other, F.col("a"), F.col("b")).alias("c"),
+        _emb_buckets_udf(other, F.col("a"), 8, 16).alias("k"),
+    ).collect()
+    assert row.c == 1.0 and len(row.k) == 8

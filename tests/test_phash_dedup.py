@@ -300,6 +300,85 @@ def test_multimodal_three_signal(spark):
     assert got2[("a", "f")] == "both"
 
 
+def test_multimodal_three_signal_degenerate_embedding_keeps_other_signals(spark):
+    """A zero, NaN, null-element or null embedding does not cost its
+    row the phash and caption pairs: the embedding keys are added to,
+    never replace, the row's other signal keys."""
+    from equi7grid_spark.dedup import multimodal_near_dup
+
+    nan = float("nan")
+    ph = 0x0123_4567_89AB_CDEF
+    v = [1.0, -2.0, 3.0, 0.5]
+    rows = [
+        ("z0", ph, "cap zero", [0.0, 0.0, 0.0, 0.0]),
+        ("z1", ph ^ 1, "unrelated a", v),
+        ("n0", ph ^ (0xFFFF << 32), "cap nan", [1.0, nan, 0.0, 2.0]),
+        ("n1", ph ^ (0x0F0F << 16), "cap nan", [-1.0, 2.0, 0.5, 3.0]),
+        ("e0", ph ^ (0xFF << 48), "cap null elem", [1.0, None, 3.0, 0.5]),
+        ("e1", ph ^ (0xFF << 48) ^ 2, "unrelated b", [-3.0, 1.0, -1.0, 2.0]),
+        ("m0", ph ^ (0xF0F0 << 8), "cap null", None),
+        ("m1", ph ^ (0xF0F0 << 8), "cap null", [2.0, 1.0, -1.0, 0.0]),
+    ]
+    df = spark.createDataFrame(
+        rows, "image_id string, phash long, caption string, embedding array<double>"
+    )
+    got = {
+        (r.id_a, r.id_b): r.signal
+        for r in multimodal_near_dup(df, embedding_col="embedding").collect()
+    }
+    assert got[("z0", "z1")] == "phash"
+    assert got[("n0", "n1")] == "caption"
+    assert got[("e0", "e1")] == "phash"
+    assert got[("m0", "m1")] == "phash+caption"
+
+
+def _sql_executions(spark) -> dict[int, str]:
+    """Execution id -> physical plan text of every SQL execution so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    out = {}
+    while it.hasNext():
+        e = it.next()
+        out[e.executionId()] = e.physicalPlanDescription()
+    return out
+
+
+def test_multimodal_three_signal_reads_input_once(spark):
+    """The three-signal form evaluates its input once per row (an
+    upstream Python stage such as a phash decode must not re-run for
+    the key scan and both verify-join sides), and none of its executed
+    plans holds a Python UDF evaluation."""
+    from equi7grid_spark.dedup import multimodal_near_dup
+
+    base = 0x0F0F_3C3C_5A5A_9669
+    rows = []
+    for i in range(48):
+        v = [float((i * 7 + d * 3) % 11 - 5) for d in range(8)]
+        rows.append((f"i{i:02d}", base ^ (i << 20), f"caption {i % 40}", v))
+        if i % 6 == 0:
+            rows.append((f"i{i:02d}_e", base ^ (0xFFFF << 40), f"other {i}", v))
+    df = spark.createDataFrame(
+        rows, "image_id string, phash long, caption string, embedding array<double>"
+    )
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    src = df.mapInPandas(counted, schema=df.schema)
+    before = _sql_executions(spark)
+    got = multimodal_near_dup(src, embedding_col="embedding").collect()
+    assert seen.value == len(rows)
+    embed = {(r.id_a, r.id_b) for r in got if "embed" in r.signal}
+    assert {(f"i{i:02d}", f"i{i:02d}_e") for i in range(0, 48, 6)} <= embed
+    plans = [p for i, p in _sql_executions(spark).items() if i not in before]
+    assert plans
+    for plan in plans:
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
 def test_embedding_near_dup_pairs_identical_and_chunked(spark):
     """Identical vectors are found with recall 1.0 (they share every
     band bucket) even under multi-chunk hot buckets; sub-threshold

@@ -295,3 +295,72 @@ def test_accurate_boundary_drops_nodata_tiles():
     naive = overlapping_tiles(crs, extent, "T6", arr=arr2, nodata=nodata,
                               accurate_boundary=False)
     assert len(naive) == 4
+
+
+def _step_c_cases() -> list:
+    """Random sparse-mask rasters over Europe at T6, T3 and T1, then one
+    raster strictly inside a single T6 tile."""
+    rng = np.random.default_rng(20)
+    nodata = -9999
+    cases = []
+    for i in range(24):
+        tiling = ("T6", "T3", "T1")[i % 3]
+        span = rng.uniform(0.3, 8.0)
+        x0, y0 = rng.uniform(-5.0, 25.0), rng.uniform(38.0, 60.0)
+        h, w = int(rng.integers(40, 160)), int(rng.integers(40, 160))
+        arr = np.full((h, w), nodata, dtype=np.int16)
+        k = int(rng.integers(1, 6))
+        arr[rng.integers(h, size=k), rng.integers(w, size=k)] = 1
+        cases.append((arr, (x0, y0, x0 + span, y0 + 0.7 * span), nodata, tiling))
+    arr = np.full((50, 50), nodata, dtype=np.int16)
+    arr[20:23, 30:32] = 5
+    cases.append((arr, (14.2, 47.2, 14.4, 47.4), nodata, "T6"))
+    return cases
+
+
+def test_region_inside_tile_step_uses_coarse_ring_same_answer():
+    """Step (c) of the exact tile-mask test runs point-in-polygon on the
+    un-densified footprint ring. On every true cell that the densified
+    ring does not cross it must agree with the densified-ring PIP, and
+    the whole test must equal (a) or (b) or densified-ring (c)."""
+    from equi7grid_spark.geom import boundary_cells, densify_ring, points_in_rings
+    from equi7grid_spark.warp.resample import (
+        _coarse_valid_mask,
+        _tile_intersects_mask,
+        _tile_ring_in_mask_coords,
+    )
+
+    crs = "EPSG:4326"
+    cases = _step_c_cases()
+    n_tiles = decided_by_c = 0
+    for arr, extent, nodata, tiling in cases:
+        mask, f = _coarse_valid_mask(arr, nodata)
+        nr, nc = mask.shape
+        rr, cc = np.nonzero(mask)
+        for t in overlapping_tiles(crs, extent, tiling, arr=arr, nodata=nodata):
+            coarse = _tile_ring_in_mask_coords(t, f, crs, extent, arr.shape)
+            dense = densify_ring(coarse, 0.5)
+            bx, by = boundary_cells([dense], 1.0, (0.0, 0.0))
+            inb = (by >= 0) & (by < nr) & (bx >= 0) & (bx < nc)
+            crossed = np.zeros_like(mask)
+            crossed[by[inb], bx[inb]] = True
+            free = ~crossed[rr, cc]
+            px, py = cc[free] + 0.5, rr[free] + 0.5
+            np.testing.assert_array_equal(
+                points_in_rings(px, py, [coarse]), points_in_rings(px, py, [dense])
+            )
+            ci, ri = np.floor(dense[:-1].mean(axis=0)).astype(int)
+            a = bool((crossed & mask).any())
+            b = 0 <= ri < nr and 0 <= ci < nc and bool(mask[ri, ci])
+            c = bool(points_in_rings(cc + 0.5, rr + 0.5, [dense]).any())
+            assert _tile_intersects_mask(t, mask, f, crs, extent, arr.shape) == (
+                a or b or c
+            )
+            n_tiles += 1
+            decided_by_c += c and not (a or b)
+    assert n_tiles >= 40 and decided_by_c >= 1
+    # the raster strictly inside one tile is selected through step (c)
+    arr, extent, nodata, tiling = cases[-1]
+    tiles = overlapping_tiles(crs, extent, tiling, arr=arr, nodata=nodata,
+                              accurate_boundary=True)
+    assert len(tiles) == 1
