@@ -28,16 +28,6 @@ def ensure_ccw(ring: np.ndarray) -> np.ndarray:
     return r
 
 
-def is_convex(ring: np.ndarray) -> bool:
-    r = ensure_ccw(ring)[:-1]
-    n = len(r)
-    if n < 3:
-        return False
-    d = np.roll(r, -1, axis=0) - r
-    cross = d[:, 0] * np.roll(d, -1, axis=0)[:, 1] - d[:, 1] * np.roll(d, -1, axis=0)[:, 0]
-    return bool((cross >= -1e-12).all())
-
-
 def clip_ring_convex(subject: np.ndarray, clip_ring: np.ndarray) -> np.ndarray | None:
     """Clip a subject ring by a convex CCW window. Returns the clipped
     closed ring (possibly with zero-area bridges) or None if empty."""
@@ -77,13 +67,3 @@ def clip_ring_convex(subject: np.ndarray, clip_ring: np.ndarray) -> np.ndarray |
     if abs(_signed_area(ring)) < 1e-30:
         return None
     return ring
-
-
-def clip_bbox(
-    subject: np.ndarray, x_min: float, y_min: float, x_max: float, y_max: float
-) -> np.ndarray | None:
-    window = np.array(
-        [[x_min, y_min], [x_max, y_min], [x_max, y_max], [x_min, y_max], [x_min, y_min]],
-        dtype=np.float64,
-    )
-    return clip_ring_convex(subject, window)

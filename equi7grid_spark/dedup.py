@@ -387,13 +387,6 @@ def simhash_from_hexes(hexes: Column) -> Column:
     return out.cast("int")
 
 
-def simhash16(text: Column) -> Column:
-    """16-bit SimHash over whitespace tokens (single-Column form; for
-    hot paths prefer the materialized two-step in simhash_near_dups —
-    see simhash_from_hexes on why)."""
-    return simhash_from_hexes(token_md5s(text))
-
-
 def simhash_near_dups(docs: DataFrame) -> DataFrame:
     """Docs sharing an identical 16-bit SimHash (hamming-0 buckets)."""
     hx = spread_small_input(docs).select(

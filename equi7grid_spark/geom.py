@@ -248,11 +248,6 @@ def cells_intersecting_polys(
     return cx[sel], cy[sel], b_or
 
 
-def ring_bbox(rings: list[np.ndarray]) -> tuple[float, float, float, float]:
-    ext = np.asarray(rings[0], dtype=np.float64)
-    return float(ext[:, 0].min()), float(ext[:, 1].min()), float(ext[:, 0].max()), float(ext[:, 1].max())
-
-
 def bbox_ring(x_min: float, y_min: float, x_max: float, y_max: float) -> np.ndarray:
     """Closed CCW rectangle ring."""
     return np.array(

@@ -4,17 +4,19 @@ Ships as ``spark-submit --py-files equi7grid_spark.zip
 equi7grid_spark/jobs/assign_and_join.py --input <images parquet>``
 (north rule: packaged job, resumable, lineage-checkpointed).
 
-Pipeline: images table → zone PIP + AEQD forward (one Arrow pass,
-int8 zone codes) → T6/T3/T1 tile keys (pure Columns) → broadcast join
-against the tile catalog (covers_land) → per-tile counts on int keys →
-optional iceberg-lite partitioned sink with per-partition lineage +
-resume.
+Pipeline: images table → one compiled call per row
+(`equi7_zone_tile_key`: zone resolve + AEQD forward + tile key, see
+operators/kernel) → per-tile counts on the packed long key → broadcast
+join against the tile catalog (covers_land) → optional iceberg-lite
+partitioned sink with per-partition lineage + resume.
 
-Skew handling: the output shuffle keys on (zc, tx, ty) — ~10^3-10^5
-distinct tiles; hot continental zones are split by tile, and AQE skew
-join/coalesce is on (session.py). For per-tile grouped-map work (warp)
-the salt column `salt = pmod(hash(image_id), n_salt)` subdivides hot
-tiles; see warp/resample.py.
+Skew handling: the output shuffle keys on the packed (zc, tx, ty) key —
+~10^3-10^5 distinct tiles, partially aggregated map-side — so hot
+continental zones are split by tile (run() turns AQE off for this
+fixed two-stage layout). Per-(image, tile) work is spread differently: the warp
+repartitions its planned (image, tile) rows over the session's
+parallelism (warp/resample.py), and `operators/partitioning.mosaic_tiles`
+salts hot tiles for the per-tile merge.
 """
 
 from __future__ import annotations
@@ -52,10 +54,10 @@ def run(
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     images = spark.read.parquet(input_path)
-    # engine="jvm": broadcast cell map + Column Vincenty for 99.5% of
-    # rows, exact pandas PIP only for 1-degree boundary cells
-    # (operators/assign_jvm; parity pinned by tests/test_assign_jvm.py).
-    # engine="pandas": the round-1 all-rows Arrow-UDF path.
+    # engine="jvm": one compiled kernel call per row on a session that
+    # loads the jar (the Column cell-map chain of operators/assign_jvm
+    # only without it); engine="pandas": the all-rows Arrow-UDF path
+    # (operators/assign). Parity pinned by tests/test_assign_jvm.py.
     counter = tile_counts_jvm if engine == "jvm" else tile_counts
     counts = counter(images, tiling_id=tiling_id)
     joined = join_tile_catalog(counts, spark, tiling_id, how="left")

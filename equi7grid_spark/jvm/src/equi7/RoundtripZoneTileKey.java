@@ -16,8 +16,9 @@ import org.apache.spark.sql.api.java.UDF3;
  * equi7_lonlat / equi7_xy chain makes, in the same order on the same
  * doubles (bit-identical results), but with ONE UDF invocation per
  * row instead of four (zone resolve + 3 projections) -- no per-call
- * boxed-arg + ArrayData result traffic between them. Registered as
- * `equi7_roundtrip_zone_tile_key`.
+ * boxed-arg + ArrayData result traffic between them. Null for a null
+ * argument or a NaN/infinite coordinate or tile size; never throws.
+ * Registered as `equi7_roundtrip_zone_tile_key`.
  */
 public class RoundtripZoneTileKey implements UDF3<Double, Double, Double, Long>, Serializable {
     private static final ThreadLocal<double[]> SCRATCH =
@@ -25,6 +26,7 @@ public class RoundtripZoneTileKey implements UDF3<Double, Double, Double, Long>,
 
     @Override
     public Long call(Double lon, Double lat, Double ts) {
+        if (!Vincenty.finite(lon) || !Vincenty.finite(lat) || !Vincenty.finite(ts)) return null;
         int zc = ZoneData.zoneCode(lon, lat);
         if (zc < 0) return null;
         double[] out = SCRATCH.get();

@@ -9,7 +9,9 @@ import org.apache.spark.sql.api.java.UDF4;
  * One boxed long out instead of an ArrayData allocation + two
  * element_at gathers -- this is the flagship aggregation key.
  * |tx|,|ty| < 8192 holds for every standard tiling (|x|,|y| < 2.1e7 m,
- * smallest ts = 1e5 m -> |t| <= 210). Registered as `equi7_tile_key`.
+ * smallest ts = 1e5 m -> |t| <= 210). Null for a null argument, a zone
+ * code outside 0..6 or a NaN/infinite coordinate or tile size; never
+ * throws. Registered as `equi7_tile_key`.
  */
 public class TileKey implements UDF4<Byte, Double, Double, Double, Long>, Serializable {
     private static final ThreadLocal<double[]> SCRATCH =
@@ -17,6 +19,10 @@ public class TileKey implements UDF4<Byte, Double, Double, Double, Long>, Serial
 
     @Override
     public Long call(Byte zc, Double lon, Double lat, Double ts) {
+        if (!Vincenty.zone(zc) || !Vincenty.finite(lon) || !Vincenty.finite(lat)
+                || !Vincenty.finite(ts)) {
+            return null;
+        }
         double[] out = SCRATCH.get();
         Vincenty.forward(zc.intValue(), lon, lat, out);
         long tx = (long) Math.floor(out[0] / ts);

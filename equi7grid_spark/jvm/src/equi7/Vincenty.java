@@ -44,6 +44,18 @@ final class Vincenty {
 
     private Vincenty() {}
 
+    /** The UDF entries' hostile-input guard: they return null unless
+     *  every coordinate and tile size passes this, so one bad row never
+     *  fails a job (NaN would otherwise land in a garbage tile). */
+    static boolean finite(Double v) {
+        return v != null && Double.isFinite(v);
+    }
+
+    /** A non-null code of one of the 7 zones. */
+    static boolean zone(Byte zc) {
+        return zc != null && zc >= 0 && zc < LAT0.length;
+    }
+
     /** AEQD forward for zone code zc; writes {x, y} into out. */
     static void forward(int zc, double lon, double lat, double[] out) {
         double phi1 = Math.toRadians(LAT0[zc]);

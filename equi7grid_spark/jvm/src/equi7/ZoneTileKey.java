@@ -12,7 +12,8 @@ import org.apache.spark.sql.api.java.UDF3;
  * The flagship one-call kernel: zone resolve (baked-in cell map +
  * exact parity for boundary cells, ZoneData) + Vincenty forward +
  * floor keying -- one scan, zero joins, one shuffle on a single long.
- * Registered as `equi7_zone_tile_key`.
+ * Null for a null argument or a NaN/infinite coordinate or tile size;
+ * never throws. Registered as `equi7_zone_tile_key`.
  */
 public class ZoneTileKey implements UDF3<Double, Double, Double, Long>, Serializable {
     // reused per-thread scratch: the flagship calls this once per row,
@@ -22,6 +23,7 @@ public class ZoneTileKey implements UDF3<Double, Double, Double, Long>, Serializ
 
     @Override
     public Long call(Double lon, Double lat, Double ts) {
+        if (!Vincenty.finite(lon) || !Vincenty.finite(lat) || !Vincenty.finite(ts)) return null;
         int zc = ZoneData.zoneCode(lon, lat);
         if (zc < 0) return null;
         double[] out = SCRATCH.get();

@@ -22,9 +22,7 @@ public class ZoneXY implements UDF2<Double, Double, double[]>, Serializable {
 
     @Override
     public double[] call(Double lon, Double lat) {
-        if (lon == null || lat == null || !Double.isFinite(lon) || !Double.isFinite(lat)) {
-            return null;
-        }
+        if (!Vincenty.finite(lon) || !Vincenty.finite(lat)) return null;
         int zc = ZoneData.zoneCode(lon, lat);
         if (zc < 0) return null;
         double[] xy = SCRATCH.get();

@@ -38,16 +38,6 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     return df
 
 
-def salted_repartition(
-    df: DataFrame, keys: list[str], id_col: str, n_salt: int = 8
-) -> DataFrame:
-    """Repartition on (keys..., salt) so hot key groups spread over
-    `n_salt` tasks. Callers running grouped maps must merge per-key
-    afterwards (see mosaic_tiles)."""
-    out = with_salt(df, id_col, n_salt)
-    return out.repartition(*[F.col(k) for k in keys], F.col("salt"))
-
-
 def _composite(arrays: list[np.ndarray], nodata: float, reducer: str) -> np.ndarray:
     acc = arrays[0].astype(np.float64)
     acc_mask = acc != nodata

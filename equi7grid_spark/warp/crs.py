@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from equi7grid_spark.constants import SYSTEMS
 from equi7grid_spark.geodesy import aeqd_forward, aeqd_inverse
 
 _WM_R = 6378137.0  # web mercator sphere radius
@@ -57,7 +56,3 @@ def crs_inverse(crs: str | int, x: np.ndarray, y: np.ndarray):
     if code in _EPSG_TO_SUBGRID:
         return aeqd_inverse(_EPSG_TO_SUBGRID[code], x, y)
     raise ValueError(f"unsupported CRS {crs!r}")
-
-
-def subgrid_epsg(subgrid: str) -> int:
-    return SYSTEMS[subgrid].epsg

@@ -7,9 +7,11 @@ tile grid from the tile geotransform and inverse-warp — every target
 pixel center maps tile-xy → lon/lat (geodesic direct) → source CRS →
 source pixel, gathered with a nearest or nodata-aware bilinear kernel.
 The reference's `mp.Pool` over tiles (warp.py:568-576) becomes Spark
-tasks: each (image, tile) output row is independent, so the job is a
-pure flatMap (`mapInPandas`) — no shuffle at all unless the caller
-repartitions for sink layout.
+tasks: each (image, tile) output row is independent. A plan
+`mapInPandas` emits one row per overlapping (image, tile) pair, one
+repartition spreads the pairs over the session's parallelism (so a
+large raster does not warp in a single task), and a warp `mapInPandas`
+resamples each pair.
 
 Raster rows carry explicit georeferencing columns (the engine's
 equivalent of the GeoTIFF header): crs, x_min, y_min, x_max, y_max,

@@ -68,6 +68,23 @@ def main() -> int:
             print(f"{name:40s} FAIL  {time.time()-t0:.1f}s")
             traceback.print_exc()
 
+    # No Python worker that has imported the engine re-reads a zip
+    # directory in importlib.invalidate_caches(), which pyspark calls
+    # before every task (equi7grid_spark/_zipimport.py).
+    import python_task_cost
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(python_task_cost)
+    n = spark.sparkContext.defaultParallelism * 2
+    rep = spark.range(n, numPartitions=n).mapInPandas(
+        python_task_cost.zip_reads_per_invalidation, "pid long, zip_reads long"
+    ).collect()
+    if len(rep) == n and all(r.zip_reads == 0 for r in rep):
+        print(f"{'lazy zip invalidation':40s} OK    workers={len({r.pid for r in rep})}")
+    else:
+        failed.append("lazy_zip_invalidation")
+        print(f"{'lazy zip invalidation':40s} FAIL  {rep}")
+
     # Smoke the driver's entry() too.
     try:
         n = entrymod.entry(spark).count()

@@ -346,6 +346,23 @@ def test_assign_tiles_jvm_hostile_lonlat(spark):
         )
 
 
+def test_tile_counts_jvm_hostile_lonlat(spark):
+    """The bulk kernel path (equi7_zone_tile_key) drops null, NaN and
+    ±inf lon/lat rows instead of failing the job or counting them in a
+    garbage tile: the counts equal those of the good rows alone."""
+    nan, inf = float("nan"), float("inf")
+    good = [(5.0, 47.0), (-140.0, 0.0), (170.0, -85.0), (5.0, 47.0)]
+    bad = [(None, 10.0), (10.0, None), (nan, 10.0), (10.0, nan), (inf, 10.0), (10.0, -inf)]
+    schema = "lon double, lat double"
+
+    def counts(rows):
+        df = tile_counts_jvm(spark.createDataFrame(rows, schema))
+        return sorted((r.tilename, r.n) for r in df.collect())
+
+    assert counts(good + bad) == counts(good)
+    assert sum(n for _, n in counts(good)) == len(good)
+
+
 def test_assign_tiles_jvm_column_fallback_equals_kernel(spark, monkeypatch):
     """The no-jar Column fallback of assign_tiles_jvm must assign the
     same zones and tiles as the kernel path, boundary cells included."""

@@ -43,6 +43,50 @@ def test_kernel_registers_zone_xy(spark):
     assert row.c == 1.0 and len(row.k) == 8
 
 
+# every geodesic entry and the arguments it takes, in call order
+GEODESIC_ENTRIES = {
+    "equi7_zone_xy": ("lon", "lat"),
+    "equi7_zone_tile_key": ("lon", "lat", "ts"),
+    "equi7_roundtrip_zone_tile_key": ("lon", "lat", "ts"),
+    "equi7_tile_key": ("zc", "lon", "lat", "ts"),
+    "equi7_xy": ("zc", "lon", "lat"),
+    "equi7_lonlat": ("zc", "x", "y"),
+}
+
+
+def test_geodesic_entries_hostile_input_is_null_never_throws(spark):
+    """Each geodesic entry returns null for a null argument, a NaN or
+    +-inf coordinate or tile size, or a zone code outside 0..6, and the
+    job does not fail; the same row with only good arguments is not null."""
+    from equi7grid_spark.operators import kernel
+
+    assert kernel.kernel_available(spark)
+    nan, inf = float("nan"), float("inf")
+    cols = ("zc", "lon", "lat", "x", "y", "ts")
+    good = dict(zc=3, lon=15.0, lat=48.0, x=5837287.8, y=2121415.7, ts=600000.0)
+    hostile = {"zc": [None, -1, 7]}
+    hostile.update({c: [None, nan, inf, -inf] for c in cols[1:]})
+    rows = [("ok", *good.values())]
+    for col, values in hostile.items():
+        for v in values:
+            rows.append((f"{col}={v}", *dict(good, **{col: v}).values()))
+    df = spark.createDataFrame(
+        rows, "case string, zc tinyint, lon double, lat double, x double, y double, ts double"
+    )
+    out = df.select(
+        "case",
+        *[
+            F.call_udf(name, *[F.col(a) for a in args]).alias(name)
+            for name, args in GEODESIC_ENTRIES.items()
+        ],
+    ).collect()
+    assert len(out) == len(rows)
+    for r in out:
+        broken = r.case.split("=")[0]
+        for name, args in GEODESIC_ENTRIES.items():
+            assert (r[name] is None) == (broken in args), (r.case, name, r[name])
+
+
 def _seq_dot(a, b) -> float:
     acc = 0.0
     for x, y in zip(a, b):

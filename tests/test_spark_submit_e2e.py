@@ -33,6 +33,28 @@ from equi7grid_spark.operators.assign_jvm import tile_counts_jvm
 from equi7grid_spark.images import synthetic_images
 
 print("KERNEL_AVAILABLE", kernel.kernel_available(spark))
+
+# a worker that imported the engine from the --py-files zip re-reads no
+# zip directory in importlib.invalidate_caches(), which pyspark calls
+# before every task
+def zip_reads(batches):
+    import importlib, os, zipimport
+    import pandas as pd
+    import equi7grid_spark
+    for _ in batches:
+        pass
+    read, reads = zipimport._read_directory, []
+    zipimport._read_directory = lambda a: reads.append(a) or read(a)
+    try:
+        importlib.invalidate_caches()
+    finally:
+        zipimport._read_directory = read
+    yield pd.DataFrame({"pid": [os.getpid()], "zip_reads": [len(reads)]})
+
+rep = spark.range(4, numPartitions=4).mapInPandas(
+    zip_reads, "pid long, zip_reads long").collect()
+print("LAZY_ZIP", len(rep), all(r.zip_reads == 0 for r in rep))
+
 imgs = synthetic_images(spark, 5000, with_bytes=False)
 out = tile_counts_jvm(imgs, tiling_id="T6")
 rows = out.count()
@@ -74,6 +96,7 @@ def test_spark_submit_packaged_flagship(tmp_path):
     tail = "\n".join((proc.stdout + proc.stderr).splitlines()[-30:])
     assert proc.returncode == 0, f"spark-submit failed:\n{tail}"
     assert "KERNEL_AVAILABLE True" in proc.stdout, tail
+    assert "LAZY_ZIP 4 True" in proc.stdout, tail
     result = [ln for ln in proc.stdout.splitlines() if ln.startswith("E2E_RESULT")]
     assert result, tail
     _, rows, total = result[0].split()
