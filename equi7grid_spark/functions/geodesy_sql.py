@@ -1,41 +1,100 @@
-"""DuckDB-SQL mirror of the unrolled Column Vincenty (geodesy_cols).
+"""DuckDB-SQL Vincenty: the AEQD forward and inverse as plain SQL.
 
 Purpose: value-exact DuckDB oracles for the geodesic tile-assignment
 queries (driver contract). The AEQD forward projection is iterative,
-so round 1 left those queries rows-only; but the engine's JVM path
-(functions/geodesy_cols.with_aeqd_forward) unrolls the Vincenty
-fixed-point to ITERS=6 rounds of plain arithmetic — which IS
-ANSI-SQL-expressible. This module emits that exact arithmetic as SQL
-text, term for term in the same evaluation order:
+so round 1 left those queries rows-only; but the Vincenty fixed-point
+unrolled to ITERS=6 rounds of plain arithmetic IS ANSI-SQL-expressible
+(the measured convergence floor for in-zone points: max |dx, dy| vs
+the converged NumPy kernel 6.2e-7 m at 6 rounds, identical at 8 — the
+iteration contracts ~1e-3/round and every zone point is far from the
+antipode). This module emits that arithmetic as SQL text, in
+geodesy.geodesic_inverse / geodesic_direct's evaluation order:
 
 - every folded Python-float constant is emitted with repr() (shortest
   round-trip — DuckDB parses it back to the identical double);
 - java.lang.Math.toRadians is `x / 180.0 * pi` (that operation order),
   not `x * (pi/180)`;
 - Spark's double pmod(a, b) is `fmod(fmod(a, b) + b, b)`;
-- F.hypot(a, b) becomes `sqrt(a*a + b*b)` — the one knowingly
+- hypot(a, b) becomes `sqrt(a*a + b*b)` — the one knowingly
   non-identical term (Math.hypot is correctly rounded, sqrt-of-sum is
-  ~1 ulp off). Residual cross-engine error is bounded by the
-  convergence floor itself (<1e-6 m, tests/test_assign_jvm.py), so
-  oracled outputs must be floor-robust: tile indices / counts /
-  names, never raw projected doubles (the driver compares floats
-  rounded to 9 decimals — 1e-6 m would flap).
+  ~1 ulp off). Residual cross-engine error against the engine's
+  compiled kernel (operators/kernel, converged to tol=1e-13) is
+  bounded by the convergence floor itself (<1e-6 m), so oracled
+  outputs must be floor-robust: tile indices / counts / names, never
+  raw projected doubles (the driver compares floats rounded to 9
+  decimals — 1e-6 m would flap).
 
-Zone constants are list literals indexed by the int zone code, exactly
-like geodesy_cols.zone_const's folded 7-literal arrays.
+Zone constants are list literals indexed by the int zone code.
 """
 
 from __future__ import annotations
 
 import math
 
-from equi7grid_spark.constants import DEFAULT_SYSTEM_ORDER, WGS84_A, WGS84_B, WGS84_F
-from equi7grid_spark.functions.geodesy_cols import ITERS, _system_consts
+from equi7grid_spark.constants import (
+    DEFAULT_SYSTEM_ORDER,
+    SYSTEMS,
+    WGS84_A,
+    WGS84_B,
+    WGS84_F,
+)
+
+ITERS = 6
 
 _PI = repr(math.pi)
 _A = WGS84_A
 _B = WGS84_B
 _F = WGS84_F
+
+
+def _system_consts(system_order: tuple[str, ...]) -> dict[str, list[float]]:
+    """Per-zone constants for the INVERSE problem (the AEQD forward):
+    sinU1/cosU1 through atan + sin/cos, as geodesy.geodesic_inverse."""
+    sinU1, cosU1, phi1, lon0, x0, y0 = [], [], [], [], [], []
+    for cc in system_order:
+        s = SYSTEMS[cc]
+        p1 = math.radians(s.lat_0)
+        u1 = math.atan((1.0 - _F) * math.tan(p1))
+        sinU1.append(math.sin(u1))
+        cosU1.append(math.cos(u1))
+        phi1.append(p1)
+        lon0.append(s.lon_0)
+        x0.append(s.x_0)
+        y0.append(s.y_0)
+    return {
+        "sinU1": sinU1,
+        "cosU1": cosU1,
+        "phi1": phi1,
+        "lon0": lon0,
+        "x0": x0,
+        "y0": y0,
+    }
+
+
+def _system_consts_direct(system_order: tuple[str, ...]) -> dict[str, list[float]]:
+    """Per-zone constants for the DIRECT problem, computed in
+    geodesy.geodesic_direct's exact formula order (tanU1 -> cosU1 via
+    1/sqrt -> sinU1 via product), NOT reused from _system_consts (which
+    derives sinU1/cosU1 through atan+sin/cos — last-ulp different)."""
+    tanU1, cosU1, sinU1, lon0, x0, y0 = [], [], [], [], [], []
+    for cc in system_order:
+        s = SYSTEMS[cc]
+        t = (1.0 - _F) * math.tan(math.radians(s.lat_0))
+        cu = 1.0 / math.sqrt(1.0 + t * t)
+        tanU1.append(t)
+        cosU1.append(cu)
+        sinU1.append(t * cu)
+        lon0.append(s.lon_0)
+        x0.append(s.x_0)
+        y0.append(s.y_0)
+    return {
+        "tanU1": tanU1,
+        "cosU1": cosU1,
+        "sinU1": sinU1,
+        "lon0": lon0,
+        "x0": x0,
+        "y0": y0,
+    }
 
 
 def _zc_list(values: list[float]) -> str:
@@ -51,7 +110,8 @@ def aeqd_forward_sql(
     carry: tuple[str, ...] = ("zc",),
 ) -> str:
     """SELECT producing (carry..., x, y) from a relation `src` that has
-    columns (zc, lon, lat). Mirrors with_aeqd_forward(iters=iters)."""
+    columns (zc, lon, lat): the Vincenty INVERSE problem from the zone
+    center, `iters` unrolled rounds of geodesy.geodesic_inverse."""
     c = _system_consts(tuple(system_order))
     keep = ", ".join(dict.fromkeys(("zc",) + tuple(carry)))
 
@@ -159,12 +219,10 @@ def aeqd_inverse_sql(
     carry: tuple[str, ...] = ("zc",),
 ) -> str:
     """SELECT producing (carry..., lon, lat) from a relation `src` with
-    columns (zc, x, y) — the Vincenty DIRECT problem, mirroring
-    geodesy_cols.with_aeqd_inverse term for term (same caveats as the
-    forward mirror: hypot -> sqrt-of-squares is the one ~1-ulp
-    divergence; consuming oracles must stay floor-robust)."""
-    from equi7grid_spark.functions.geodesy_cols import _system_consts_direct
-
+    columns (zc, x, y) — the Vincenty DIRECT problem, `iters` unrolled
+    rounds of geodesy.geodesic_direct (same caveats as the forward:
+    hypot -> sqrt-of-squares is the one ~1-ulp divergence; consuming
+    oracles must stay floor-robust)."""
     c = _system_consts_direct(tuple(system_order))
     keep = ", ".join(dict.fromkeys(("zc",) + tuple(carry)))
 
@@ -189,7 +247,7 @@ def aeqd_inverse_sql(
              sin(az1) AS sina1, cos(az1) AS cosa1
       FROM ({q})
     """
-    # cheap arithmetic recomputed inline, like the Column version
+    # cheap arithmetic recomputed inline
     sin_alpha = "(k_cosU1 * sina1)"
     csa = f"(1.0 - {sin_alpha}*{sin_alpha})"
     u2 = f"({csa} * {repr((_A * _A - _B * _B) / (_B * _B))})"

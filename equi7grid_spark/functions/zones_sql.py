@@ -11,9 +11,9 @@ the per-cell candidate/edge structure as inline VALUES tables and the
 parity test becomes a join + COUNT(*) FILTER ... % 2.
 
 This module emits that SQL, term for term in the same double
-arithmetic as zones_pip._numpy_parity / operators.assign_jvm
-.pip_resolve_col / jvm ZoneData.parity (all three pinned equal by
-tests/test_assign_jvm.py):
+arithmetic as zones_pip._numpy_parity and the compiled resolver
+jvm ZoneData.parity (pinned equal by tests/test_assign_jvm.py and
+tests/test_zones_sql.py):
 
 - edge endpoints and reference points are emitted with repr()
   (shortest round-trip — DuckDB parses back the identical double), so
@@ -77,8 +77,8 @@ def resolve_zone_sql(src: str, id_col: str) -> str:
     assign_tiles_jvm(drop_out_of_zone=True).
 
     lon/lat must already lie in [-180, 180) x [-90, 90] (true for
-    every synthesis in queries.py); the engine's Column path feeds raw
-    lon/lat into the parity test under the same precondition. Supports
+    every synthesis in queries.py); the compiled resolver normalizes
+    lon/lat itself, so the two agree on that domain. Supports
     DEFAULT_SYSTEM_ORDER only (the cached VALUES body is built for it;
     every oracled query uses the default order).
     """
@@ -90,7 +90,7 @@ def resolve_zone_sql(src: str, id_col: str) -> str:
     digits = decided_digit_string()
     cands, edges = _boundary_values()
     i = id_col
-    # x_int / y_int reproduce pip_resolve_col's guarded-division order:
+    # x_int / y_int reproduce zones_pip._numpy_parity's guarded-division order:
     # x1 + (lat - y1) * dx / (dy == 0 ? 1 : dy)
     x_int = (
         "e.x1 + (p.lat - e.y1) * (e.x2 - e.x1)"

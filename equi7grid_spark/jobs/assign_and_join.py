@@ -31,7 +31,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[2]))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from equi7grid_spark.operators.assign import tile_counts  # noqa: E402
 from equi7grid_spark.operators.assign_jvm import tile_counts_jvm  # noqa: E402
 from equi7grid_spark.operators.join import join_tile_catalog  # noqa: E402
 from equi7grid_spark.session import get_spark  # noqa: E402
@@ -45,7 +44,6 @@ def run(
     output_root: str | None = None,
     *,
     resume: bool = True,
-    engine: str = "jvm",
     incremental_commit: bool = False,
 ) -> dict:
     t0 = time.time()
@@ -54,12 +52,7 @@ def run(
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     images = spark.read.parquet(input_path)
-    # engine="jvm": one compiled kernel call per row on a session that
-    # loads the jar (the Column cell-map chain of operators/assign_jvm
-    # only without it); engine="pandas": the all-rows Arrow-UDF path
-    # (operators/assign). Parity pinned by tests/test_assign_jvm.py.
-    counter = tile_counts_jvm if engine == "jvm" else tile_counts
-    counts = counter(images, tiling_id=tiling_id)
+    counts = tile_counts_jvm(images, tiling_id=tiling_id)
     joined = join_tile_catalog(counts, spark, tiling_id, how="left")
 
     if output_root:

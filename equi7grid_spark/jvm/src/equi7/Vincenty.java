@@ -104,8 +104,8 @@ final class Vincenty {
      *  the zone center along azimuth atan2(dx, dy) for distance
      *  hypot(dx, dy)); writes {lon, lat} into out. Exact
      *  transliteration of geodesy.geodesic_direct (same tol=1e-13
-     *  sigma fixed-point, same closing formulae) -- the compiled twin
-     *  of functions/geodesy_cols.with_aeqd_inverse. */
+     *  sigma fixed-point, same closing formulae); registered as
+     *  `equi7_lonlat`. */
     static void inverse(int zc, double x, double y, double[] out) {
         double dx = x - X0[zc], dy = y - Y0[zc];
         double s = Math.hypot(dx, dy);

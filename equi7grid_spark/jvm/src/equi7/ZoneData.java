@@ -12,9 +12,9 @@ import java.nio.ByteOrder;
  * plus per-boundary-cell candidate zones with reference parity and
  * local edge lists. Mirrors zones.decided_cell_codes and
  * zones_pip.boundary_cands exactly -- including the even-odd parity
- * arithmetic (zones_pip._numpy_parity), so the compiled resolver and
- * the Python/Column paths agree bit-for-bit away from measure-zero
- * edge ties.
+ * arithmetic (zones_pip._numpy_parity), so the compiled resolver, the
+ * NumPy reference and the DuckDB SQL mirror agree bit-for-bit away
+ * from measure-zero edge ties.
  */
 final class ZoneData {
     static final int NX = 360, NY = 180;

@@ -212,11 +212,12 @@ def assign_tiles(
     `sampling` is given). With ``buffered=True`` points in overlap areas
     produce one output row per containing zone (reference lonlat_to_xy
     returning a per-continent dict, tests/test_equi7grid.py:412-418).
+    Rows out of every zone, kept under ``drop_out_of_zone=False``, get
+    null in every added column (the UDF's NaN x/y cross Arrow as null).
 
     Projection is one Arrow pass carrying primitives only; the zone
     string and all tile math are JVM-side Columns.
     """
-    ts = float(TILING_ID_TO_SIZE[tiling_id])
     order = tuple(system_order)
     if buffered:
         zs = zones_all_udf(buffered=True, system_order=order)
@@ -247,9 +248,27 @@ def assign_tiles(
         )
         if drop_out_of_zone:
             df = df.filter(F.col("subgrid").isNotNull())
-    df = df.withColumn("ll_x", tile_ll(F.col("x"), ts)).withColumn("ll_y", tile_ll(F.col("y"), ts))
-    df = df.withColumn("tilename", tilename(F.col("subgrid"), F.col("ll_x"), F.col("ll_y"), tiling_id))
+    return with_tile_columns(df, tiling_id, sampling)
+
+
+def with_tile_columns(
+    df: DataFrame, tiling_id: str, sampling: float | None = None
+) -> DataFrame:
+    """Adds ll_x, ll_y, tilename (+ row, col with `sampling`) from the
+    subgrid, x and y columns. A row out of every zone (null subgrid;
+    kept only under drop_out_of_zone=False) gets null for all of them,
+    never a tile at the origin."""
+    ts = float(TILING_ID_TO_SIZE[tiling_id])
+    inzone = F.col("subgrid").isNotNull()
+    df = df.withColumn("ll_x", F.when(inzone, tile_ll(F.col("x"), ts))).withColumn(
+        "ll_y", F.when(inzone, tile_ll(F.col("y"), ts))
+    )
+    df = df.withColumn(
+        "tilename",
+        F.when(inzone, tilename(F.col("subgrid"), F.col("ll_x"), F.col("ll_y"), tiling_id)),
+    )
     if sampling is not None:
+        # null ll_x/ll_y give null row/col
         r, c = xy2rc(F.col("x"), F.col("y"), F.col("ll_x"), F.col("ll_y"), ts, sampling)
         df = df.withColumn("row", r).withColumn("col", c)
     return df

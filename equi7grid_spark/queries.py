@@ -73,9 +73,9 @@ def _derived_xy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no Vincenty, no HOFs, no pandas), so the few-partition scan
     # out-runs the repartition exchange 2-4x at bench scale (A/B
     # measured r3: tile_counts 1.9s->0.45s, knn 1.6s->0.77s). The
-    # geodesic derivation (_derived_lonlat) keeps the spread — its
-    # consumers run the unrolled Vincenty chain per row. At real scale
-    # inputs carry many partitions and both choices converge.
+    # geodesic derivation (_derived_lonlat) spreads by default for its
+    # Python-UDF consumers. At real scale inputs carry many partitions
+    # and both choices converge.
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
     key = (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("long")
     x = ((key * 1664525 + 1013904223) % 8400000).cast("double")
@@ -95,25 +95,15 @@ _SQL_DERIVED_XY = """
 """
 
 
-def _spread_unless_kernel(spark: SparkSession) -> bool:
-    """The spread decision must follow the RUNTIME projection path: on
-    a kernel-less session (jar absent/unloadable) the decided queries
-    fall back to the unrolled Column Vincenty — exactly the expensive
-    per-row work spread_small_input exists for."""
-    from equi7grid_spark.operators import kernel
-
-    return not kernel.kernel_available(spark)
-
-
 def _derived_lonlat(
     spark: SparkSession, sf_dir: str, *, spread: bool = True
 ) -> DataFrame:
     """spread=True parallelizes the small customer scan before
-    EXPENSIVE per-row work (Python-UDF PIP, the unrolled Column
-    Vincenty fallback, the inverse-projection UDF). Kernel-path
-    consumers pass spread=False: one compiled call per row is cheaper
-    than the repartition exchange (A/B r3: flagship 1.6s -> 0.55s).
-    At real scale inputs carry many partitions and both converge."""
+    EXPENSIVE per-row work (Python-UDF PIP, the inverse-projection
+    UDF). Kernel-path consumers pass spread=False: one compiled call
+    per row is cheaper than the repartition exchange (A/B r3: flagship
+    1.6s -> 0.55s). At real scale inputs carry many partitions and
+    both converge."""
     from equi7grid_spark.operators.partitioning import spread_small_input
 
     c = _t(spark, sf_dir, "customer").select("c_custkey")
@@ -1576,14 +1566,15 @@ def _oracle_tile_assign_full() -> str:
 
 @register("tile_assign_t6_counts", _oracle_tile_assign_full)
 def q_tile_assign_t6_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship operator on the JVM-only path (broadcast cell map +
-    Column Vincenty; operators/assign_jvm) — value-parity with the
-    pandas path is pinned by tests/test_assign_jvm.py. Round 4: now
-    value-oracled over the FULL domain (boundary cells included) via
-    the parity-resolve SQL mirror."""
+    """The flagship operator on the JVM-only path (one compiled
+    equi7_zone_tile_key call per row; operators/assign_jvm) —
+    value-parity with the pandas path is pinned by
+    tests/test_assign_jvm.py. Round 4: now value-oracled over the FULL
+    domain (boundary cells included) via the parity-resolve SQL
+    mirror."""
     from equi7grid_spark.operators.assign_jvm import tile_counts_jvm
 
-    pts = _derived_lonlat(spark, sf_dir, spread=_spread_unless_kernel(spark))
+    pts = _derived_lonlat(spark, sf_dir, spread=False)
     return tile_counts_jvm(pts, tiling_id="T6").select("subgrid", "tilename", "n")
 
 
@@ -1621,7 +1612,7 @@ def _spark_decided_pts(spark: SparkSession, sf_dir: str) -> DataFrame:
     only prefilter-decided rows (zc 0..6). Zero Python, zero shuffles."""
     from equi7grid_spark.operators.assign_jvm import cell_id_col, cell_map_df
 
-    pts = _derived_lonlat(spark, sf_dir, spread=_spread_unless_kernel(spark))
+    pts = _derived_lonlat(spark, sf_dir, spread=False)
     d = pts.withColumn("__cell", cell_id_col(F.col("lon"), F.col("lat")))
     cells = cell_map_df(spark).withColumnRenamed("cell_id", "__cell")
     return (
@@ -1700,51 +1691,29 @@ def _oracle_tile_assign_decided() -> str:
 def q_tile_assign_decided_t6_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship's geodesic core under a value-exact DuckDB oracle:
     the oracle re-derives the AEQD forward (Vincenty inverse problem)
-    as the SAME 6-round unrolled arithmetic in pure SQL
-    (functions/geodesy_sql mirrors functions/geodesy_cols term for
-    term). Outputs are tile indices/counts — floor-robust against the
-    <1e-6 m cross-engine convergence slack — on the decided-cell
+    as 6 unrolled rounds of plain arithmetic in pure SQL
+    (functions/geodesy_sql), the engine runs the compiled kernel
+    (equi7_xy). Outputs are tile indices/counts — floor-robust against
+    the <1e-6 m cross-engine convergence slack — on the decided-cell
     subset (boundary-cell PIP stays rows-only in tile_assign_t6_counts)."""
     d = _spark_decided_pts(spark, sf_dir).select("zc", "lon", "lat")
     return _t6_counts_from_proj(_aeqd_proj(d))
 
 
 def _aeqd_proj(d: DataFrame) -> DataFrame:
-    """(zc, lon, lat) -> (zc, x, y). Compiled Vincenty kernel when
-    available (one call/row, tiny plan — agrees with the Column chain
-    < 1e-6 m, far inside the tile-floor margin), else the unrolled
-    Column-Vincenty fallback. Both branches emit the same column order."""
-    from equi7grid_spark.functions.geodesy_cols import with_aeqd_forward
+    """(zc, lon, lat) -> (zc, x, y) with the compiled Vincenty kernel
+    (one call/row, tiny plan — within 1e-6 m of the SQL mirror's 6
+    unrolled rounds, far inside the tile-floor margin)."""
     from equi7grid_spark.operators import kernel
 
-    if kernel.kernel_available(d.sparkSession):
-        return d.withColumn(
-            "_xy", kernel.xy_col(F.col("zc"), F.col("lon"), F.col("lat"))
-        ).select(
-            "zc",
-            F.element_at("_xy", 1).alias("x"),
-            F.element_at("_xy", 2).alias("y"),
-        )
-    return with_aeqd_forward(d, "zc", "lon", "lat", "x", "y", carry=["zc"])
-
-
-def _aeqd_inv(d: DataFrame) -> DataFrame:
-    """(zc, x, y) -> (zc, lon, lat). Compiled direct-problem kernel
-    when available (one call/row, tol=1e-13 — agrees with the Column
-    chain < 1e-11 deg ≈ 1e-6 m, vanishing vs the 600 km tile floor),
-    else the unrolled Column inverse."""
-    from equi7grid_spark.functions.geodesy_cols import with_aeqd_inverse
-    from equi7grid_spark.operators import kernel
-
-    if kernel.kernel_available(d.sparkSession):
-        return d.withColumn(
-            "_ll", kernel.lonlat_col(F.col("zc"), F.col("x"), F.col("y"))
-        ).select(
-            "zc",
-            F.element_at("_ll", 1).alias("lon"),
-            F.element_at("_ll", 2).alias("lat"),
-        )
-    return with_aeqd_inverse(d, carry=["zc"])
+    kernel.require_kernel(d.sparkSession, "the AEQD forward projection")
+    return d.withColumn(
+        "_xy", kernel.xy_col(F.col("zc"), F.col("lon"), F.col("lat"))
+    ).select(
+        "zc",
+        F.element_at("_xy", 1).alias("x"),
+        F.element_at("_xy", 2).alias("y"),
+    )
 
 
 def _t6_counts_from_keys(agg: DataFrame) -> DataFrame:
@@ -1801,61 +1770,42 @@ def _oracle_tile_roundtrip() -> str:
 @register("tile_roundtrip_t6_counts", _oracle_tile_roundtrip)
 def q_tile_roundtrip_t6_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Projection roundtrip closure at table scale, value-oracled over
-    the FULL domain: zone resolve -> AEQD forward -> JVM-side inverse
-    (compiled equi7_lonlat kernel when available, else the unrolled
-    Column chain geodesy_cols.with_aeqd_inverse; the pandas UDF remains
-    only for API parity) -> forward again -> per-T6-tile counts. A drift in EITHER direction would land
-    the second projection in different tiles than tile_assign_t6_counts
-    computes; the measured closure is < 1e-11 deg ≈ 1e-6 m against the
-    600 km tile floor (reference xy_to_lonlat roundtrip semantics,
-    tests/test_equi7grid.py:50-99)."""
+    the FULL domain: zone resolve -> AEQD forward -> inverse -> forward
+    again -> per-T6-tile counts, all in the compiled kernel. A drift in
+    EITHER direction would land the second projection in different
+    tiles than tile_assign_t6_counts computes; the measured closure is
+    < 1e-11 deg ≈ 1e-6 m against the 600 km tile floor (reference
+    xy_to_lonlat roundtrip semantics, tests/test_equi7grid.py:50-99)."""
     from equi7grid_spark.operators import kernel
-    from equi7grid_spark.operators.assign_jvm import with_zone_code_jvm
 
-    # spread unless BOTH directions compile: with the jar, the chain is
-    # one fused kernel call/row (cheap — the exchange costs more);
-    # without it, the ~30-project Column inverse is exactly the
-    # expensive per-row work spread_small_input exists for, and
-    # spreading also de-risks partial-core steal epochs (A/B r4: 3.3x
-    # under steal).
-    pts = _derived_lonlat(spark, sf_dir, spread=_spread_unless_kernel(spark))
-    if kernel.kernel_available(spark):
-        # fused roundtrip kernel (round 7): zone resolve + fwd → inv →
-        # fwd + floor keying in ONE compiled call per row — the same
-        # Vincenty invocations as the former with_zone_code_jvm +
-        # xy_col → lonlat_col → xy_col chain (bit-identical doubles),
-        # minus two broadcast joins, the interpreted boundary-parity
-        # HOF and three per-row boxed-array UDF round-trips. Same
-        # one-scan/one-shuffle shape as the flagship (guide §2.4).
-        # Explode-of-one barrier: the isNotNull filter must not push
-        # down as a second evaluation of the (deterministic) UDF.
-        ts = 600000.0
-        keyed = pts.select(
-            F.explode(
-                F.array(
-                    kernel.roundtrip_zone_tile_key_col(
-                        F.col("lon"), F.col("lat"), ts
-                    )
-                )
-            ).alias("ztkey")
-        ).filter(F.col("ztkey").isNotNull())
-        agg = (
-            keyed.groupBy("ztkey")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                kernel.unpack_zc(F.col("ztkey")).alias("zc"),
-                kernel.unpack_tx(F.col("ztkey")).alias("tx"),
-                kernel.unpack_ty(F.col("ztkey")).alias("ty"),
-                "n",
+    kernel.require_kernel(spark, "tile_roundtrip_t6_counts")
+    pts = _derived_lonlat(spark, sf_dir, spread=False)
+    # fused roundtrip kernel (round 7): zone resolve + fwd → inv → fwd
+    # + floor keying in ONE compiled call per row — the same Vincenty
+    # invocations as an xy_col → lonlat_col → xy_col chain
+    # (bit-identical doubles), minus three per-row boxed-array UDF
+    # round-trips. Same one-scan/one-shuffle shape as the flagship
+    # (guide §2.4). Explode-of-one barrier: the isNotNull filter must
+    # not push down as a second evaluation of the (deterministic) UDF.
+    ts = 600000.0
+    keyed = pts.select(
+        F.explode(
+            F.array(
+                kernel.roundtrip_zone_tile_key_col(F.col("lon"), F.col("lat"), ts)
             )
+        ).alias("ztkey")
+    ).filter(F.col("ztkey").isNotNull())
+    agg = (
+        keyed.groupBy("ztkey")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            kernel.unpack_zc(F.col("ztkey")).alias("zc"),
+            kernel.unpack_tx(F.col("ztkey")).alias("tx"),
+            kernel.unpack_ty(F.col("ztkey")).alias("ty"),
+            "n",
         )
-        return _t6_counts_from_keys(agg)
-    zoned = (
-        with_zone_code_jvm(pts)
-        .filter(F.col("zc").isNotNull())
-        .select("zc", "lon", "lat")
     )
-    return _t6_counts_from_proj(_aeqd_proj(_aeqd_inv(_aeqd_proj(zoned))))
+    return _t6_counts_from_keys(agg)
 
 
 def _oracle_lonlat_roundtrip_buckets() -> str:
@@ -1865,8 +1815,8 @@ def _oracle_lonlat_roundtrip_buckets() -> str:
     whose forward->inverse closure error falls under 1e-9 deg / under
     1e-7 / at-or-above 1e-7. Integer-valued, hence hashable. Boundary
     robustness: BOTH engines' chains close to < 1e-11 deg (measured
-    decade histogram: worst decade -12 on the kernel path; the SQL
-    mirror shares the Column chain's arithmetic to ~1 ulp), so every
+    decade histogram: worst decade -12 on the kernel path and on the
+    6-round unrolled arithmetic the SQL mirror emits), so every
     point sits >= 2 decades from the 1e-9 edge — the buckets are a
     regression tripwire, not a knife-edge comparison."""
     from equi7grid_spark.functions.geodesy_sql import (
@@ -1904,56 +1854,35 @@ def q_lonlat_roundtrip_err_buckets(spark: SparkSession, sf_dir: str) -> DataFram
     lonlat_roundtrip_maxerr scalar was rows-only because the max error
     (~1e-12 deg) vanishes under the 9-decimal rounding floor; integer
     bucket counts at 1e-9 / 1e-7 survive hashing and still trip on any
-    closure regression. Uses the compiled kernel both ways when
-    available (closure < 1e-11 deg vs the Column chain — 2+ decades
-    inside the first bucket edge), else the unrolled Column chain the
-    SQL mirrors term for term."""
-    from equi7grid_spark.functions.geodesy_cols import (
-        with_aeqd_forward,
-        with_aeqd_inverse,
-    )
+    closure regression. Uses the compiled kernel both ways (closure
+    < 1e-11 deg — 2+ decades inside the first bucket edge)."""
     from equi7grid_spark.operators import kernel
     from equi7grid_spark.operators.assign import subgrid_from_code
-    from equi7grid_spark.operators.assign_jvm import with_zone_code_jvm
 
-    pts = _derived_lonlat(spark, sf_dir, spread=_spread_unless_kernel(spark))
-    if kernel.kernel_available(spark):
-        # zone resolve + forward in ONE compiled call per row — the same
-        # ZoneData.zoneCode + Vincenty.forward as the former
-        # with_zone_code_jvm → xy_col chain (bit-identical x/y), minus
-        # the two broadcast joins and the interpreted boundary parity.
-        # Explode-of-one barrier: the isNotNull filter must not push
-        # down as a second evaluation of the UDF.
-        zxy = F.explode(F.array(kernel.zone_xy_col(F.col("lon"), F.col("lat"))))
-        fwd = (
-            pts.select("lon", "lat", zxy.alias("_zxy"))
-            .filter(F.col("_zxy").isNotNull())
-            .select(
-                F.col("_zxy")[0].cast("tinyint").alias("zc"),
-                F.col("lon").alias("olon"),
-                F.col("lat").alias("olat"),
-                F.col("_zxy")[1].alias("x"),
-                F.col("_zxy")[2].alias("y"),
-            )
+    kernel.require_kernel(spark, "lonlat_roundtrip_err_buckets")
+    pts = _derived_lonlat(spark, sf_dir, spread=False)
+    # zone resolve + forward in ONE compiled call per row (equi7_zone_xy),
+    # then the compiled inverse. Explode-of-one barrier: the isNotNull
+    # filter must not push down as a second evaluation of the UDF.
+    zxy = F.explode(F.array(kernel.zone_xy_col(F.col("lon"), F.col("lat"))))
+    fwd = (
+        pts.select("lon", "lat", zxy.alias("_zxy"))
+        .filter(F.col("_zxy").isNotNull())
+        .select(
+            F.col("_zxy")[0].cast("tinyint").alias("zc"),
+            F.col("lon").alias("olon"),
+            F.col("lat").alias("olat"),
+            F.col("_zxy")[1].alias("x"),
+            F.col("_zxy")[2].alias("y"),
         )
-        inv = fwd.withColumn(
-            "_ll", kernel.lonlat_col(F.col("zc"), F.col("x"), F.col("y"))
-        ).select(
-            "zc", "olon", "olat",
-            F.element_at("_ll", 1).alias("lon"),
-            F.element_at("_ll", 2).alias("lat"),
-        )
-    else:
-        zoned = (
-            with_zone_code_jvm(pts)
-            .filter(F.col("zc").isNotNull())
-            .select("zc", F.col("lon").alias("olon"), F.col("lat").alias("olat"),
-                    "lon", "lat")
-        )
-        fwd = with_aeqd_forward(
-            zoned, "zc", "lon", "lat", "x", "y", carry=["zc", "olon", "olat"]
-        )
-        inv = with_aeqd_inverse(fwd, carry=["zc", "olon", "olat"])
+    )
+    inv = fwd.withColumn(
+        "_ll", kernel.lonlat_col(F.col("zc"), F.col("x"), F.col("y"))
+    ).select(
+        "zc", "olon", "olat",
+        F.element_at("_ll", 1).alias("lon"),
+        F.element_at("_ll", 2).alias("lat"),
+    )
     err = F.greatest(
         F.abs(F.col("lat") - F.col("olat")),
         F.abs((F.col("lon") - F.col("olon") + 540.0) % 360.0 - 180.0)

@@ -30,10 +30,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Chains of ~30 narrow Projects (the unrolled Column Vincenty,
-        # functions/geodesy_cols.py) fuse into one whole-stage method far
-        # beyond HotSpot's 8 KB JIT ceiling; such stages run ~5x slower
-        # interpreted. Falling back to per-operator codegen at that
+        # Long chains of narrow Projects fuse into one whole-stage
+        # method beyond HotSpot's 8 KB JIT ceiling; such stages run ~5x
+        # slower interpreted (measured on a ~30-Project unrolled
+        # Vincenty chain). Falling back to per-operator codegen at that
         # boundary keeps every generated method JIT-compilable.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -4,9 +4,9 @@ watermarked event aggregation.
 The reference is a batch library (SURVEY.md §2.6) and the north rule's
 core contract is batch-with-resume, but a continuously landing image
 table is the realistic ingest shape at 10^12 scale, so the engine's
-hot-path operators are streaming-clean: the zone/projection pandas UDF
-and the tile Columns run unchanged on streaming DataFrames; aggregation
-uses watermarks for late data.
+hot-path operators are streaming-clean: the compiled zone/projection
+kernel call and the tile Columns run unchanged on streaming
+DataFrames; aggregation uses watermarks for late data.
 """
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from equi7grid_spark.operators.assign import assign_tiles
+from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm
 
 
 def stream_images(spark: SparkSession, input_dir: str, schema: str) -> DataFrame:
@@ -26,27 +26,18 @@ def streaming_tile_assignment(
     input_dir: str,
     schema: str,
     tiling_id: str = "T6",
-    engine: str = "jvm",
 ) -> DataFrame:
     """Streaming flagship: landing images → zone resolve → AEQD forward
     → tile Columns. Returns the transformed streaming DataFrame; attach
     a sink with writeStream (append mode — row-wise transform, no
     state).
 
-    engine="jvm" (default) is the same zero-Python path as the batch
-    flagship: the decided-cell map and boundary candidate structures
-    join as STATIC broadcast sides of a stream-static join, and the
-    projection is the Column Vincenty — per-microbatch cost is pure JVM
-    compute, no Python workers spun up per trigger. engine="pandas"
-    keeps the round-1 Arrow-UDF path."""
-    if engine not in ("jvm", "pandas"):
-        raise ValueError(f"engine must be 'jvm' or 'pandas', got {engine!r}")
-    stream = stream_images(spark, input_dir, schema)
-    if engine == "jvm":
-        from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm
-
-        return assign_tiles_jvm(stream, tiling_id=tiling_id)
-    return assign_tiles(stream, tiling_id=tiling_id)
+    The same zero-Python path as the batch flagship
+    (operators/assign_jvm.assign_tiles_jvm): zone resolve and AEQD
+    forward are one compiled equi7_zone_xy call per row, with no join
+    and no Python worker per trigger — per-microbatch cost is pure JVM
+    compute."""
+    return assign_tiles_jvm(stream_images(spark, input_dir, schema), tiling_id=tiling_id)
 
 
 def streaming_roi_select(
@@ -55,7 +46,6 @@ def streaming_roi_select(
     schema: str,
     bbox: tuple[float, float, float, float],
     tiling_id: str = "T6",
-    engine: str = "jvm",
 ) -> DataFrame:
     """Continuous ROI-filtered image selection: streaming tile
     assignment -> broadcast stream-static LEFT SEMI join against the
@@ -66,9 +56,7 @@ def streaming_roi_select(
     broadcast on every microbatch."""
     from equi7grid_spark.roi import get_tiles_in_geog_bbox
 
-    assigned = streaming_tile_assignment(
-        spark, input_dir, schema, tiling_id, engine
-    )
+    assigned = streaming_tile_assignment(spark, input_dir, schema, tiling_id)
     roi_tiles = get_tiles_in_geog_bbox(bbox, tiling_id)
     tiles_df = spark.createDataFrame(
         [(t.subgrid, t.tilename) for t in roi_tiles],

@@ -229,8 +229,10 @@ def decided_cell_codes(
     - -1    : all zones OUT → out of every zone;
     - -2    : the first non-OUT zone is BOUNDARY → needs exact PIP.
 
-    This is the JVM fast path's broadcast lookup (operators/assign_jvm):
-    95.8% of cells (99.5% of the land-biased bench rows) decide here.
+    The compiled kernel bakes this map into the jar
+    (scripts/build_zonedata.py) and the decided-subset queries join it
+    (operators/assign_jvm.cell_map_df): 95.8% of cells (99.5% of the
+    land-biased bench rows) decide here.
     Non-buffered zones only — buffered zones overlap, so a single
     primary code is not the right shape there.
     """

@@ -1,14 +1,15 @@
-"""Broadcastable exact point-in-zone structure for the JVM fast path.
+"""Exact point-in-zone structure for the JVM fast path.
 
 Resolves the primary zone of points in prefilter-BOUNDARY 1-degree
-cells with pure Column algebra (operators/assign_jvm), removing the
-last Python stage from the flagship job. The idea: even-odd parity of
+cells without a general PIP, so the compiled kernel (baked into the
+jar by scripts/build_zonedata.py as ZoneData) and the DuckDB oracle
+(functions/zones_sql) can run it. The idea: even-odd parity of
 a point P relative to a zone polygon equals the (precomputed) parity
 of a per-cell reference point R, XOR the number of polygon edges
 crossed by the two-leg axis-parallel path R -> (R.x, P.y) -> P. Both
 legs stay inside the cell, so only edges near the cell can cross —
 the per-cell candidate edge lists are tiny (vs ~6k edges/zone for the
-infinite-ray test) and ship as one broadcast map.
+infinite-ray test).
 
 Per boundary cell, candidates are the zones in system_order up to and
 including the first prefilter-IN zone; an IN candidate carries no
@@ -23,7 +24,7 @@ exactly on a polygon edge) remain measure-zero as in every even-odd
 test in this engine.
 
 Validated two ways (tests/test_assign_jvm.py): a NumPy twin of the
-Column formulas (`_numpy_parity`, used to certify the structure
+kernel's parity test (`_numpy_parity`, used to certify the structure
 against zones.zone_membership on every boundary cell) and Spark-level
 parity of the full assignment against the pandas path.
 """
@@ -201,7 +202,7 @@ def membership_numpy(
 
 
 def _numpy_parity(cand: dict, X: np.ndarray, Y: np.ndarray) -> np.ndarray:
-    """NumPy twin of the Column parity test (for validation/tests)."""
+    """NumPy twin of the kernel's parity test (ZoneData.parity)."""
     e = cand["edges"]
     refx, refy = cand["refx"], cand["refy"]
     par = np.full(X.shape, cand["ref_par"], dtype=bool)
@@ -225,7 +226,7 @@ def _numpy_parity(cand: dict, X: np.ndarray, Y: np.ndarray) -> np.ndarray:
 
 def resolve_numpy(lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
     """Primary zone code for boundary-cell points via the cand
-    structure (validation twin of the Column resolve)."""
+    structure (validation twin of the kernel's ZoneData.zoneCode)."""
     idx = {c["cell_id"]: c["cands"] for c in boundary_cands()}
     ix = np.clip(np.floor(lon + 180.0).astype(np.int64), 0, 359)
     iy = np.clip(np.floor(lat + 90.0).astype(np.int64), 0, 179)

@@ -149,9 +149,9 @@ def spark_flows() -> None:
     kept = hashed.join(noncanon, "image_id", "left_anti")
     print(f"canonical images kept: {kept.count()} of {both.count()}")
 
-    # -- inverse projection at table scale (round 4): xy -> lonlat as
-    #    JVM Columns; the forward-inverse roundtrip closes
-    from equi7grid_spark.functions.geodesy_cols import with_aeqd_inverse
+    # -- inverse projection at table scale (round 4): xy -> lonlat in
+    #    the compiled kernel; the forward-inverse roundtrip closes
+    from equi7grid_spark.operators import kernel
 
     order = ("AF", "AN", "AS", "EU", "OC", "NA", "SA")
     pts = assigned.select(
@@ -165,7 +165,8 @@ def spark_flows() -> None:
         F.col("lon").alias("lon0"),
         F.col("lat").alias("lat0"),
     ).limit(1000)
-    inv = with_aeqd_inverse(pts, carry=["lon0", "lat0"])
+    ll = kernel.lonlat_col(F.col("zc"), F.col("x"), F.col("y"))
+    inv = pts.select("lon0", "lat0", ll[0].alias("lon"), ll[1].alias("lat"))
     dlon_raw = F.abs(F.col("lon") - F.col("lon0"))
     row = inv.agg(
         F.max(F.least(dlon_raw, 360.0 - dlon_raw)).alias("dlon"),

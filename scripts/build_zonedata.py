@@ -11,9 +11,9 @@ Contents (little-endian):
     per cand:    [int8 zc][uint8 ref_par][f64 refx][f64 refy]
                  [int32 n_edges][n_edges x 4 f64: x1 y1 x2 y2]
 
-The data is the same structure the Column fast path broadcasts
-(zones.decided_cell_codes + zones_pip.boundary_cands) — baked into the
-jar so the compiled kernel can resolve zones with zero joins. Rebuild
+The data is zones.decided_cell_codes + zones_pip.boundary_cands (the
+structure the DuckDB oracle inlines, functions/zones_sql) — baked into
+the jar so the compiled kernel can resolve zones with zero joins. Rebuild
 (then scripts/build_jvm_kernel.sh) whenever zone geometry changes:
     python scripts/build_zonedata.py
 """

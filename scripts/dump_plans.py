@@ -69,8 +69,8 @@ def main() -> None:
     sections.append((
         "Flagship round 2: tile_counts_jvm (zero Python workers)",
         "One pruned scan (lon/lat), zone resolve + Vincenty + tile "
-        "keying JVM-side (compiled kernel call, or broadcast cell-map "
-        "join + unrolled Column Vincenty fallback), partial+final agg "
+        "keying JVM-side in one compiled equi7_zone_tile_key call per "
+        "row, zero joins, partial+final agg "
         "on a packed key — no ArrowEvalPython/BatchEvalPython node "
         "anywhere in this plan.",
         plan_of(counts_jvm),
@@ -93,9 +93,8 @@ def main() -> None:
     sections.append((
         "Decided-cell tile assignment (the DuckDB-oracled geodesic core)",
         "Broadcast 64,800-row cell map join decides the zone; the AEQD "
-        "forward is the unrolled Column Vincenty — a linear chain of "
-        "narrow Projects, no Python, one aggregation shuffle on "
-        "(zc, tx, ty) ints.",
+        "forward is one compiled equi7_xy call per row, no Python, one "
+        "aggregation shuffle on (zc, tx, ty) ints.",
         plan_of(dec),
     ))
 
@@ -174,13 +173,11 @@ def main() -> None:
     rt = queries()["tile_roundtrip_t6_counts"](spark, "/root/testdata/sf0.001")
     sections.append((
         "Projection roundtrip (forward -> inverse -> forward, r4)",
-        "The xy->lonlat direction JVM-side: with the kernel jar the "
-        "chain is three compiled calls per row (equi7_xy / equi7_lonlat"
-        " / equi7_xy) over the broadcast zone maps; on kernel-less "
-        "sessions both directions fall back to linear runs of narrow "
-        "Column Projects (with_aeqd_forward / with_aeqd_inverse). No "
-        "Python anywhere, one aggregation shuffle on (zc, tx, ty) ints "
-        "at the end.",
+        "The xy->lonlat direction JVM-side: zone resolve, forward, "
+        "inverse, forward and tile keying run as one fused compiled "
+        "call per row (equi7_roundtrip_zone_tile_key), zero joins. No "
+        "Python anywhere, one aggregation shuffle on the packed key at "
+        "the end.",
         plan_of(rt),
     ))
 

@@ -1,6 +1,7 @@
-"""JVM fast-path parity: Column Vincenty + cell-map assignment must
-reproduce the round-1 pandas/NumPy path exactly (same per-tile counts)
-and the NumPy AEQD forward to sub-micrometer."""
+"""JVM fast-path parity: the compiled kernel's zone resolve + Vincenty
+must reproduce the round-1 pandas/NumPy path exactly (same per-tile
+counts and assignments) and the NumPy AEQD forward/inverse to
+float64 round-off."""
 
 from __future__ import annotations
 
@@ -10,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from equi7grid_spark.constants import DEFAULT_SYSTEM_ORDER
-from equi7grid_spark.functions.geodesy_cols import with_aeqd_forward
 from equi7grid_spark.geodesy import aeqd_forward
 from equi7grid_spark.operators.assign import assign_tiles, tile_counts
 from equi7grid_spark.operators.assign_jvm import (
@@ -30,66 +30,6 @@ def _inzone_grid(step=1.5):
     zc = assign_primary_zone_code(lo, la)
     m = zc >= 0
     return lo[m], la[m], zc[m]
-
-
-def test_column_vincenty_matches_numpy(spark):
-    lo, la, zc = _inzone_grid(step=1.5)
-    pdf = pd.DataFrame({"lon": lo, "lat": la, "zc": zc.astype("int8")})
-    sdf = spark.createDataFrame(pdf)
-    out = (
-        with_aeqd_forward(sdf, "zc", "lon", "lat", "x", "y")
-        .orderBy("lon", "lat")
-        .toPandas()
-    )
-    ref = pdf.sort_values(["lon", "lat"]).reset_index(drop=True)
-    xs = np.empty(len(ref))
-    ys = np.empty(len(ref))
-    for code in np.unique(ref["zc"]):
-        m = (ref["zc"] == code).to_numpy()
-        cc = DEFAULT_SYSTEM_ORDER[code]
-        xs[m], ys[m] = aeqd_forward(cc, ref["lon"].to_numpy()[m], ref["lat"].to_numpy()[m])
-    dx = np.abs(out["x"].to_numpy() - xs)
-    dy = np.abs(out["y"].to_numpy() - ys)
-    assert dx.max() < 1e-6 and dy.max() < 1e-6, (dx.max(), dy.max())
-
-
-def test_column_inverse_matches_numpy_and_closes_roundtrip(spark):
-    """Round-4 JVM-side inverse projection (with_aeqd_inverse): must
-    agree with the converged NumPy direct kernel and close the
-    forward-inverse roundtrip on a dense in-zone grid."""
-    from equi7grid_spark.functions.geodesy_cols import with_aeqd_inverse
-    from equi7grid_spark.geodesy import aeqd_inverse
-
-    lo, la, zc = _inzone_grid(step=2.5)
-    xs = np.empty(lo.size)
-    ys = np.empty(lo.size)
-    for code in np.unique(zc):
-        m = zc == code
-        xs[m], ys[m] = aeqd_forward(DEFAULT_SYSTEM_ORDER[code], lo[m], la[m])
-    pdf = pd.DataFrame(
-        {"zc": zc.astype("int8"), "x": xs, "y": ys, "lon0": lo, "lat0": la}
-    )
-    out = (
-        with_aeqd_inverse(spark.createDataFrame(pdf))
-        .orderBy("lon0", "lat0")
-        .toPandas()
-    )
-    ref = pdf.sort_values(["lon0", "lat0"]).reset_index(drop=True)
-    eln = np.empty(len(ref))
-    elt = np.empty(len(ref))
-    for code in np.unique(ref["zc"]):
-        m = (ref["zc"] == code).to_numpy()
-        eln[m], elt[m] = aeqd_inverse(
-            DEFAULT_SYSTEM_ORDER[code],
-            ref["x"].to_numpy()[m],
-            ref["y"].to_numpy()[m],
-        )
-    dlon = np.abs(out["lon"].to_numpy() - eln)
-    assert np.minimum(dlon, 360.0 - dlon).max() < 1e-9
-    assert np.abs(out["lat"].to_numpy() - elt).max() < 1e-9
-    rlon = np.abs(out["lon"].to_numpy() - ref["lon0"].to_numpy())
-    assert np.minimum(rlon, 360.0 - rlon).max() < 1e-9
-    assert np.abs(out["lat"].to_numpy() - ref["lat0"].to_numpy()).max() < 1e-9
 
 
 def test_cell_map_decided_agrees_with_exact(spark):
@@ -121,8 +61,8 @@ def test_tile_counts_jvm_equals_pandas_path(spark, sf_dir, tiling_id):
 
 
 def test_tile_counts_jvm_boundary_heavy(spark):
-    """Grid that oversamples prefilter-boundary cells (the pandas
-    fallback branch) — counts must still match the exact path."""
+    """Grid that oversamples prefilter-boundary cells (the kernel's
+    exact parity resolve) — counts must still match the exact path."""
     codes = cell_code_pdf()
     und = codes[codes["zc"] == -2].head(400)
     ix = (und["cell_id"] // 180).to_numpy()
@@ -162,25 +102,10 @@ def test_assign_tiles_jvm_equals_pandas_path(spark, sf_dir):
     np.testing.assert_allclose(a["y"], b["y"], atol=1e-6)
 
 
-def test_tile_counts_column_fallback_equals_kernel(spark, sf_dir, monkeypatch):
-    """Both execution paths — compiled kernel and pure Column
-    Vincenty — must agree with the pandas path (and hence each other)."""
-    from equi7grid_spark.operators import kernel
-
-    df = _points(spark, sf_dir).select("lon", "lat")
-    ref = tile_counts(df).orderBy("tilename").toPandas()
-    with_kernel = tile_counts_jvm(df).orderBy("tilename").toPandas()
-    monkeypatch.setattr(kernel, "kernel_available", lambda s: False)
-    columns_only = tile_counts_jvm(df).orderBy("tilename").toPandas()
-    pd.testing.assert_frame_equal(ref, with_kernel)
-    pd.testing.assert_frame_equal(ref, columns_only)
-
-
 def test_kernel_xy_matches_numpy(spark):
     from equi7grid_spark.operators import kernel
 
-    if not kernel.kernel_available(spark):
-        pytest.skip("kernel jar not available")
+    kernel.require_kernel(spark, "this test")
     lo, la, zc = _inzone_grid(step=3.5)
     pdf = pd.DataFrame({"lon": lo, "lat": la, "zc": zc.astype("int8")})
     out = (
@@ -205,8 +130,7 @@ def test_kernel_lonlat_matches_numpy(spark):
     from equi7grid_spark.geodesy import aeqd_inverse
     from equi7grid_spark.operators import kernel
 
-    if not kernel.kernel_available(spark):
-        pytest.skip("kernel jar not available")
+    kernel.require_kernel(spark, "this test")
     lo, la, zc = _inzone_grid(step=3.5)
     xs = np.empty(lo.size)
     ys = np.empty(lo.size)
@@ -257,8 +181,7 @@ def test_kernel_boundary_resolve_matches_numpy_every_cell(spark):
     from equi7grid_spark.operators import kernel
     from equi7grid_spark.zones_pip import boundary_cands, resolve_numpy
 
-    if not kernel.kernel_available(spark):
-        pytest.skip("kernel jar not available")
+    kernel.require_kernel(spark, "this test")
     cells = np.repeat(
         np.array([c["cell_id"] for c in boundary_cands()]), 4
     )
@@ -310,10 +233,11 @@ def test_assign_tiles_jvm_keeps_all_rows_when_not_dropping(spark):
     assert [r.tilename for r in a] == [r.tilename for r in b]
 
 
-def test_assign_tiles_jvm_hostile_lonlat(spark):
-    """Null, NaN and ±inf lon/lat are out of every zone on the kernel
-    path: dropped under drop_out_of_zone=True, kept with a null subgrid
-    and NaN x/y under False — and never fail the job."""
+def _check_hostile_lonlat(spark, assign):
+    """Null, NaN and ±inf lon/lat are out of every zone: dropped under
+    drop_out_of_zone=True, kept under False with null subgrid, x, y,
+    tilename, ll_x, ll_y, row and col — never a tile at the origin,
+    and never a failed job."""
     nan, inf = float("nan"), float("inf")
     good = [(0, 5.0, 47.0), (1, -140.0, 0.0), (2, 170.0, -85.0)]
     bad = [
@@ -325,25 +249,38 @@ def test_assign_tiles_jvm_hostile_lonlat(spark):
     ref = {
         r.id: r
         for r in assign_tiles(
-            spark.createDataFrame(good, "id int, lon double, lat double")
+            spark.createDataFrame(good, "id int, lon double, lat double"),
+            sampling=500.0,
         ).collect()
     }
+    cols = ("subgrid", "x", "y", "tilename", "ll_x", "ll_y", "row", "col")
 
-    kept = assign_tiles_jvm(sdf).collect()
+    kept = assign(sdf).collect()
     assert sorted(r.id for r in kept) == sorted(ref)
     for r in kept:
         assert (r.subgrid, r.tilename) == (ref[r.id].subgrid, ref[r.id].tilename)
 
-    every = {r.id: r for r in assign_tiles_jvm(sdf, drop_out_of_zone=False).collect()}
+    every = {
+        r.id: r
+        for r in assign(sdf, sampling=500.0, drop_out_of_zone=False).collect()
+    }
     assert sorted(every) == sorted(i for i, _, _ in good + bad)
     for i, _, _ in bad:
         r = every[i]
-        assert r.subgrid is None
-        assert np.isnan(r.x) and np.isnan(r.y)
+        assert all(r[c] is None for c in cols), r
+    tile_cols = [c for c in cols if c not in ("x", "y")]
     for i in ref:
-        assert (every[i].subgrid, every[i].tilename) == (
-            ref[i].subgrid, ref[i].tilename
-        )
+        assert [every[i][c] for c in tile_cols] == [ref[i][c] for c in tile_cols]
+        np.testing.assert_allclose([every[i].x, every[i].y], [ref[i].x, ref[i].y], atol=1e-6)
+
+
+def test_assign_tiles_jvm_hostile_lonlat(spark):
+    _check_hostile_lonlat(spark, assign_tiles_jvm)
+
+
+def test_assign_tiles_hostile_lonlat(spark):
+    """The pandas path keeps out-of-zone rows exactly like the kernel path."""
+    _check_hostile_lonlat(spark, assign_tiles)
 
 
 def test_tile_counts_jvm_hostile_lonlat(spark):
@@ -361,30 +298,3 @@ def test_tile_counts_jvm_hostile_lonlat(spark):
 
     assert counts(good + bad) == counts(good)
     assert sum(n for _, n in counts(good)) == len(good)
-
-
-def test_assign_tiles_jvm_column_fallback_equals_kernel(spark, monkeypatch):
-    """The no-jar Column fallback of assign_tiles_jvm must assign the
-    same zones and tiles as the kernel path, boundary cells included."""
-    from equi7grid_spark.operators import kernel
-
-    codes = cell_code_pdf()
-    und = codes[codes["zc"] == -2].head(200)
-    ix = (und["cell_id"] // 180).to_numpy()
-    iy = (und["cell_id"] % 180).to_numpy()
-    arr = np.concatenate(
-        [np.stack([ix - 180.0 + f, iy - 90.0 + f], axis=1) for f in (0.2, 0.7)]
-    )
-    sdf = spark.createDataFrame(
-        pd.DataFrame({"i": np.arange(len(arr)), "lon": arr[:, 0], "lat": arr[:, 1]})
-    )
-    cols = ["i", "subgrid", "tilename", "x", "y"]
-    with_kernel = assign_tiles_jvm(sdf).select(*cols).orderBy("i").toPandas()
-    monkeypatch.setattr(kernel, "kernel_available", lambda s: False)
-    columns_only = assign_tiles_jvm(sdf).select(*cols).orderBy("i").toPandas()
-    pd.testing.assert_frame_equal(
-        with_kernel[["i", "subgrid", "tilename"]],
-        columns_only[["i", "subgrid", "tilename"]],
-    )
-    np.testing.assert_allclose(with_kernel["x"], columns_only["x"], atol=1e-6)
-    np.testing.assert_allclose(with_kernel["y"], columns_only["y"], atol=1e-6)

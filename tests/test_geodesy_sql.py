@@ -50,7 +50,7 @@ def test_sql_vincenty_matches_numpy_kernel(cc):
 
     order = np.argsort(lon)
     ex, ey = aeqd_forward(cc, lon[order], lat[order])
-    # 6-round unroll convergence floor is <1e-6 m (geodesy_cols
+    # 6-round unroll convergence floor is <1e-6 m (geodesy_sql
     # docstring); allow the same here, cross-engine libm included
     assert np.abs(got["x"] - ex).max() < 1e-6
     assert np.abs(got["y"] - ey).max() < 1e-6

@@ -1,11 +1,14 @@
 """The checked-in kernel jar must match its Java sources: a source
 edit or a new kernel class without a rebuild
 (scripts/build_jvm_kernel.sh) fails here instead of silently running
-stale bytecode."""
+stale bytecode. The jar is the only implementation of its entries, so
+a session that cannot load it must fail loudly, and every entry must
+have a caller."""
 
 from __future__ import annotations
 
 import math
+import re
 import zipfile
 from pathlib import Path
 
@@ -13,7 +16,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-PKG = Path(__file__).resolve().parents[1] / "equi7grid_spark" / "jvm"
+ROOT = Path(__file__).resolve().parents[1] / "equi7grid_spark"
+PKG = ROOT / "jvm"
 
 
 def test_every_java_source_has_its_class_in_the_jar():
@@ -27,11 +31,80 @@ def test_every_java_source_has_its_class_in_the_jar():
     assert not missing, f"rebuild equi7-kernel.jar: no class for {missing}"
 
 
+def test_every_entry_wrapper_has_a_caller():
+    """Each registered entry equi7_<name> has its Column wrapper
+    kernel.<name>_col, and the engine calls that wrapper outside
+    operators/kernel.py: an entry nothing calls is dead jar code."""
+    from equi7grid_spark.operators import kernel
+
+    kernel_py = ROOT / "operators" / "kernel.py"
+    entries = re.findall(r'\("equi7_(\w+)", "equi7\.', kernel_py.read_text())
+    assert entries
+    engine = "\n".join(
+        p.read_text() for p in sorted(ROOT.rglob("*.py")) if p != kernel_py
+    )
+    unused = []
+    for name in entries:
+        wrapper = f"{name}_col"
+        assert callable(getattr(kernel, wrapper, None)), wrapper
+        if not re.search(rf"\b{wrapper}\b", engine):
+            unused.append(wrapper)
+    assert not unused, f"kernel entries without a caller: {unused}"
+
+
+def _frame(spark):
+    return spark.createDataFrame(
+        [(5.0, 47.0, [1.0, 2.0])], "lon double, lat double, v array<double>"
+    )
+
+
+def test_missing_jar_fails_loudly(spark, sf_dir, monkeypatch):
+    """Without the jar every kernel user raises a RuntimeError naming
+    it, instead of running some other implementation."""
+    from equi7grid_spark.dedup import cosine_seq
+    from equi7grid_spark.operators import kernel
+    from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm, tile_counts_jvm
+    from equi7grid_spark.queries import q_tile_roundtrip_t6_counts
+
+    df = _frame(spark)
+    monkeypatch.setattr(kernel, "_STATE", {})
+    monkeypatch.setattr(kernel, "_kernel_jar", lambda: None)
+    calls = {
+        "tile_counts_jvm": lambda: tile_counts_jvm(df),
+        "assign_tiles_jvm": lambda: assign_tiles_jvm(df),
+        "tile_roundtrip_t6_counts": lambda: q_tile_roundtrip_t6_counts(spark, sf_dir),
+        "cosine_seq": lambda: cosine_seq(spark, F.col("v"), F.col("v")),
+    }
+    for what, call in calls.items():
+        with pytest.raises(RuntimeError, match="equi7-kernel.jar") as err:
+            call()
+        assert what in str(err.value)
+        assert isinstance(err.value.__cause__, FileNotFoundError), what
+
+
+def test_unloadable_kernel_raises_with_its_cause(spark, monkeypatch):
+    """A jar that is present but cannot register an entry raises with
+    the registration error chained, not swallowed."""
+    from pyspark.sql import types as T
+
+    from equi7grid_spark.operators import kernel
+    from equi7grid_spark.operators.assign_jvm import tile_counts_jvm
+
+    monkeypatch.setattr(kernel, "_STATE", {})
+    monkeypatch.setattr(
+        kernel,
+        "_ENTRIES",
+        kernel._ENTRIES + (("equi7_missing", "equi7.NoSuchClass", T.LongType()),),
+    )
+    with pytest.raises(RuntimeError, match="equi7-kernel.jar") as err:
+        tile_counts_jvm(_frame(spark))
+    assert "NoSuchClass" in str(err.value.__cause__)
+
+
 def test_kernel_registers_zone_xy(spark):
     from equi7grid_spark.operators import kernel
 
-    assert kernel.kernel_available(spark)
-    assert kernel.vector_kernel_available(spark)
+    kernel.require_kernel(spark, "this test")
     for name in ("equi7_zone_xy", "equi7_cosine_seq", "equi7_emb_buckets"):
         assert spark.catalog.functionExists(name), name
     (row,) = spark.sql("SELECT equi7_zone_xy(15.0D, 48.0D) AS v").collect()
@@ -48,7 +121,6 @@ GEODESIC_ENTRIES = {
     "equi7_zone_xy": ("lon", "lat"),
     "equi7_zone_tile_key": ("lon", "lat", "ts"),
     "equi7_roundtrip_zone_tile_key": ("lon", "lat", "ts"),
-    "equi7_tile_key": ("zc", "lon", "lat", "ts"),
     "equi7_xy": ("zc", "lon", "lat"),
     "equi7_lonlat": ("zc", "x", "y"),
 }
@@ -60,7 +132,7 @@ def test_geodesic_entries_hostile_input_is_null_never_throws(spark):
     job does not fail; the same row with only good arguments is not null."""
     from equi7grid_spark.operators import kernel
 
-    assert kernel.kernel_available(spark)
+    kernel.require_kernel(spark, "this test")
     nan, inf = float("nan"), float("inf")
     cols = ("zc", "lon", "lat", "x", "y", "ts")
     good = dict(zc=3, lon=15.0, lat=48.0, x=5837287.8, y=2121415.7, ts=600000.0)

@@ -16,19 +16,19 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 
 # The kernel-path queries whose round-2 regression only fired on a
-# plain session, plus one representative per fallback family. The
+# plain session, plus one representative per pandas-UDF family. The
 # full-surface sweep is `python scripts/check_plain_session.py` (a
 # pre-commit gate, ~90 s); this subset keeps pytest under ~1 min while
 # still exercising every environment-sensitive code path (JVM kernel
-# feature-detect + registration, cell-map createDataFrame dtypes,
-# pandas-UDF warp without Arrow configs, PIP boundary resolve).
+# registration + probe, cell-map createDataFrame dtypes, pandas-UDF
+# warp without Arrow configs, PIP boundary resolve).
 CRITICAL = (
     "tile_assign_t6_counts,tile_assign_decided_t6_counts,"
     "images_in_roi,images_tile_assign,zone_assign_counts,"
     "warp_raster_to_tiles,embedding_near_dup,"
-    # round 4: the compiled-inverse path (equi7_lonlat registration +
-    # Column fallback) is exactly the kernel-boundary surface the
-    # plain-session gate exists for
+    # round 4: the compiled roundtrip path (equi7_lonlat and
+    # equi7_roundtrip_zone_tile_key registration) is exactly the
+    # kernel-boundary surface the plain-session gate exists for
     "tile_roundtrip_t6_counts"
 )
 

@@ -141,18 +141,10 @@ def test_duplicate_clusters_max_iter_semantics(spark):
     assert labs == {i: 0 for i in range(8)}
 
 
-def test_roundtrip_err_buckets_fallback_equals_kernel(spark, monkeypatch):
-    """lonlat_roundtrip_err_buckets must produce identical bucket
-    counts on the compiled-kernel path and the Column-chain fallback —
-    both chains close < 1e-11 deg, two decades inside the first
-    bucket edge, so the integer counts cannot differ."""
-    from equi7grid_spark.operators import kernel
-
-    rows = lambda: sorted(
-        map(tuple, QUERIES["lonlat_roundtrip_err_buckets"](spark, SF).collect())
-    )
-    with_kernel = rows()
-    monkeypatch.setattr(kernel, "kernel_available", lambda s: False)
-    assert rows() == with_kernel
-    # every point must close under 1e-9 deg — the tripwire is armed
-    assert all(b == "lt_1e9" for (_, b, _n) in with_kernel)
+def test_roundtrip_err_buckets_all_close_under_1e9(spark):
+    """Every point of lonlat_roundtrip_err_buckets closes under 1e-9
+    deg on the compiled kernel (< 1e-11 measured): the bucket oracle's
+    tripwire is armed, two decades from its first edge."""
+    rows = QUERIES["lonlat_roundtrip_err_buckets"](spark, SF).collect()
+    assert rows
+    assert all(r.err_bucket == "lt_1e9" for r in rows), rows

@@ -72,17 +72,14 @@ def test_flagship_tile_counts_plan_is_jvm_only(spark):
 
     from equi7grid_spark.operators import kernel
 
+    kernel.require_kernel(spark, "this test")
     df = _derived_lonlat(spark, SF)
     plan = _physical(tile_counts_jvm(df))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     # exactly one data shuffle (the partial-aggregated groupBy)
     assert plan.count("Exchange hashpartitioning") == 1
-    if kernel.kernel_available(spark):
-        # one-call compiled kernel: no joins at all
-        assert "Join" not in plan
-    else:
-        # Column fallback: broadcast lookup joins only
-        assert "BroadcastHashJoin" in plan
+    # one-call compiled kernel: no joins at all
+    assert "Join" not in plan
 
 
 def test_assign_tiles_jvm_plan_is_one_kernel_call(spark):
@@ -93,7 +90,7 @@ def test_assign_tiles_jvm_plan_is_one_kernel_call(spark):
     from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm
     from equi7grid_spark.queries import _derived_lonlat
 
-    assert kernel.kernel_available(spark)
+    kernel.require_kernel(spark, "this test")
     df = assign_tiles_jvm(_derived_lonlat(spark, SF, spread=False), tiling_id="T6")
     df.collect()  # pin the executed plan, not just the initial one
     plan = _physical(df).split("== Initial Plan ==")[0]

@@ -32,7 +32,9 @@ from equi7grid_spark.operators import kernel
 from equi7grid_spark.operators.assign_jvm import tile_counts_jvm
 from equi7grid_spark.images import synthetic_images
 
-print("KERNEL_AVAILABLE", kernel.kernel_available(spark))
+# raises, naming the jar, when the packaged session cannot load it
+kernel.require_kernel(spark, "the packaged flagship")
+print("KERNEL_LOADED")
 
 # a worker that imported the engine from the --py-files zip re-reads no
 # zip directory in importlib.invalidate_caches(), which pyspark calls
@@ -95,7 +97,7 @@ def test_spark_submit_packaged_flagship(tmp_path):
     )
     tail = "\n".join((proc.stdout + proc.stderr).splitlines()[-30:])
     assert proc.returncode == 0, f"spark-submit failed:\n{tail}"
-    assert "KERNEL_AVAILABLE True" in proc.stdout, tail
+    assert "KERNEL_LOADED" in proc.stdout, tail
     assert "LAZY_ZIP 4 True" in proc.stdout, tail
     result = [ln for ln in proc.stdout.splitlines() if ln.startswith("E2E_RESULT")]
     assert result, tail
