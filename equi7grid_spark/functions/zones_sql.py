@@ -190,13 +190,19 @@ def _membership_values() -> tuple[str, str, str]:
 def membership_zone_sql(src: str, id_col: str) -> str:
     """CTE chain from relation `src` ({id_col}, lon, lat) to relation
     `members` ({id_col}, zc): one row per (point, containing BUFFERED
-    zone) — the engine's zone_membership(buffered=True) semantics
-    (operators/assign.zones_all_udf; buffered zones overlap, so a
-    point can emit up to 2 rows; reference tests/test_equi7grid.py:
-    412-418). Same two-leg parity arithmetic as resolve_zone_sql, but
-    per (cell, ZONE) with no ordering/truncation — every boundary-pair
-    candidate tests independently. Certified against the engine's
+    zone) — zones.zone_membership(buffered=True) semantics, which the
+    engine runs as the jar entry equi7_zone_members (buffered zones
+    overlap, so a point can emit up to 2 rows; reference
+    tests/test_equi7grid.py:412-418). Same two-leg parity arithmetic
+    as resolve_zone_sql, but per (cell, ZONE) with no
+    ordering/truncation — every boundary-pair candidate tests
+    independently, as ZoneMembers does. Certified against the NumPy
     ray-crossing membership by tests (zones_pip.membership_numpy twin).
+
+    lon/lat must already lie in [-180, 180) x [-90, 90], as for
+    resolve_zone_sql: the parity legs use the raw lon/lat, while
+    ZoneMembers normalizes them first (lon 411.12 here misses the EU
+    membership that 51.12 has).
     """
     from equi7grid_spark.functions.geodesy_sql import cell_id_sql
 

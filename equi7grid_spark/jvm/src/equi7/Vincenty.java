@@ -6,8 +6,8 @@ package equi7;
  * Exact transliteration of the engine's NumPy kernel
  * (equi7grid_spark/geodesy.py geodesic_inverse/aeqd_forward): same
  * formulae, same tol=1e-13 lambda fixed-point, same coincident-point
- * guard -- so the compiled kernel and the pandas path agree to float64
- * round-off (pinned < 1e-8 m by tests/test_assign_jvm.py).
+ * guard -- so the compiled kernel and the NumPy reference agree to
+ * float64 round-off (pinned < 1e-8 m by tests/test_assign_jvm.py).
  *
  * Zone constants reproduce the published Equi7Grid definitions
  * (reference _create_grids.py:44-91), order AF AN AS EU OC NA SA.

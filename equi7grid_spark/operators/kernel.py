@@ -1,10 +1,10 @@
 """Compiled JVM kernel: loading + registration.
 
-The engine's row-level primitives (zone resolve, iterative Vincenty
-AEQD forward and inverse, tile keying, and the two vector primitives
-of the dedup family) run in compiled Java (equi7grid_spark/jvm/src,
-built to equi7-kernel.jar by scripts/build_jvm_kernel.sh and checked
-in). One JIT-hot method per row has no Python workers and no Arrow
+The engine's row-level primitives (zone resolve, buffered zone
+membership, iterative Vincenty AEQD forward and inverse, tile keying,
+and the two vector primitives of the dedup family) run in compiled
+Java (equi7grid_spark/jvm/src, built to equi7-kernel.jar by
+scripts/build_jvm_kernel.sh and checked in). One JIT-hot method per row has no Python workers and no Arrow
 boundary, and it converges the Vincenty fixed-points to the same
 tol=1e-13 as the NumPy reference (geodesy.py), so values agree to
 float64 round-off.
@@ -35,6 +35,11 @@ SQL functions registered:
       of every zone — the row-level twin of equi7_zone_tile_key (same
       zone resolve + Vincenty calls), so assign_tiles_jvm needs one
       call per row and no joins.
+  equi7_zone_members(lon, lat) -> array<int> of every BUFFERED zone
+      containing the point, ascending zone code (buffered zones
+      overlap, so up to 2) — a per-cell IN mask plus the two-leg
+      parity of each boundary (cell, zone) candidate, baked into the
+      jar like the primary-zone map.
   equi7_cosine_seq(a array<double>, b array<double>) -> double cosine,
       dot products accumulated left to right (bit-identical to the
       sequential HOF fold and DuckDB's list_dot_product); null on a
@@ -70,6 +75,7 @@ _ENTRIES = (
     ("equi7_lonlat", "equi7.VincentyLonLat", T.ArrayType(T.DoubleType())),
     ("equi7_roundtrip_zone_tile_key", "equi7.RoundtripZoneTileKey", T.LongType()),
     ("equi7_zone_xy", "equi7.ZoneXY", T.ArrayType(T.DoubleType())),
+    ("equi7_zone_members", "equi7.ZoneMembers", T.ArrayType(T.IntegerType())),
     ("equi7_cosine_seq", "equi7.CosineSeq", T.DoubleType()),
     ("equi7_emb_buckets", "equi7.EmbBuckets", T.ArrayType(T.IntegerType())),
 )
@@ -104,6 +110,7 @@ def _probe(spark: SparkSession) -> tuple:
             zone_tile_key_col(lon, lat, 600000.0),
             roundtrip_zone_tile_key_col(lon, lat, 600000.0),
             zone_xy_col(lon, lat),
+            zone_members_col(lon, lat),
             xy_col(zc, lon, lat),
             lonlat_col(
                 zc,
@@ -184,6 +191,12 @@ def zone_xy_col(lon: Column, lat: Column) -> Column:
     """[zc, x, y] (array<double>) or null when out of every zone —
     zone resolve + AEQD forward in one compiled call per row."""
     return F.call_udf("equi7_zone_xy", lon.cast("double"), lat.cast("double"))
+
+
+def zone_members_col(lon: Column, lat: Column) -> Column:
+    """array<int> of the buffered zones containing (lon, lat), ascending
+    zone code; null for a null, NaN or infinite lon/lat."""
+    return F.call_udf("equi7_zone_members", lon.cast("double"), lat.cast("double"))
 
 
 def xy_col(zc: Column, lon: Column, lat: Column) -> Column:

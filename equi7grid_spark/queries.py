@@ -73,9 +73,9 @@ def _derived_xy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no Vincenty, no HOFs, no pandas), so the few-partition scan
     # out-runs the repartition exchange 2-4x at bench scale (A/B
     # measured r3: tile_counts 1.9s->0.45s, knn 1.6s->0.77s). The
-    # geodesic derivation (_derived_lonlat) spreads by default for its
-    # Python-UDF consumers. At real scale inputs carry many partitions
-    # and both choices converge.
+    # geodesic derivation (_derived_lonlat) is not spread either: its
+    # consumers make one compiled kernel call per row. At real scale
+    # inputs carry many partitions and both choices converge.
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
     key = (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("long")
     x = ((key * 1664525 + 1013904223) % 8400000).cast("double")
@@ -95,20 +95,12 @@ _SQL_DERIVED_XY = """
 """
 
 
-def _derived_lonlat(
-    spark: SparkSession, sf_dir: str, *, spread: bool = True
-) -> DataFrame:
-    """spread=True parallelizes the small customer scan before
-    EXPENSIVE per-row work (Python-UDF PIP, the inverse-projection
-    UDF). Kernel-path consumers pass spread=False: one compiled call
-    per row is cheaper than the repartition exchange (A/B r3: flagship
-    1.6s -> 0.55s). At real scale inputs carry many partitions and
-    both converge."""
-    from equi7grid_spark.operators.partitioning import spread_small_input
-
+def _derived_lonlat(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(pt_id, lon, lat) points from the customer scan, unspread: one
+    compiled kernel call per row is cheaper than a repartition
+    exchange (A/B r3: flagship 1.6s -> 0.55s). At real scale inputs
+    carry many partitions and both converge."""
     c = _t(spark, sf_dir, "customer").select("c_custkey")
-    if spread:
-        c = spread_small_input(c)
     lon = ((F.col("c_custkey") * 9973) % 36000) / 100.0 - 180.0
     lat = ((F.col("c_custkey") * 7919) % 17800) / 100.0 - 89.0
     return c.select(
@@ -1435,8 +1427,7 @@ def q_top_customers_by_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
     zone_assign_counts; this one stays SQL-pure.)"""
     from pyspark.sql import Window
 
-    # pts contributes only pt_id here (no per-row geo work) — no spread
-    pts = _derived_lonlat(spark, sf_dir, spread=False)
+    pts = _derived_lonlat(spark, sf_dir)
     orders = _t(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(F.round(F.sum("o_totalprice"), 2).alias("total"))
     j = pts.join(spend, pts["pt_id"] == spend["o_custkey"]).select("pt_id", "total")
@@ -1489,7 +1480,7 @@ def q_zone_assign_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_zone_assign_full_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm
 
-    pts = _derived_lonlat(spark, sf_dir, spread=False)
+    pts = _derived_lonlat(spark, sf_dir)
     out = assign_tiles_jvm(pts, tiling_id="T6")
     return out.groupBy("subgrid").agg(F.count(F.lit(1)).alias("n")).orderBy("subgrid")
 
@@ -1523,19 +1514,25 @@ def q_zone_assign_buffered_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     zones overlap ~100 km past the continental divides, so a point can
     belong to up to 2 zones (reference search_tiles_in_roi over
     buffered grids, tests/test_equi7grid.py:412-418). The engine path
-    is the vectorized pandas-UDF membership (operators/assign
-    .zones_all_udf — the exact ray-crossing PIP against the bfrd
-    polygons); n_zones derives from the array size BEFORE the explode,
+    is one compiled equi7_zone_members call per row (the per-cell IN
+    mask + two-leg parity of zones_pip.membership_cands, baked into
+    the jar); n_zones derives from the array size BEFORE the explode,
     so the plan has no per-point window or extra shuffle. The DuckDB
-    mirror tests every (cell, zone) candidate independently with the
-    two-leg parity export — certified equal to the engine's ray test
-    on every boundary cell by tests/test_zones_pip_membership.py."""
-    from equi7grid_spark.operators.assign import subgrid_from_code, zones_all_udf
+    mirror runs the same per-(cell, zone) parity export; both are
+    certified against the NumPy ray test (zones.zone_membership) by
+    tests/test_zones_pip_membership.py and tests/test_kernel_jar.py."""
+    from equi7grid_spark.operators import kernel
+    from equi7grid_spark.operators.assign_jvm import subgrid_from_code
 
-    pts = _derived_lonlat(spark, sf_dir, spread=True)
-    udf = zones_all_udf(buffered=True)
-    z = pts.select(udf(F.col("lon"), F.col("lat")).alias("arr"))
-    z = z.select(F.size("arr").alias("n_zones"), F.explode("arr").alias("zc"))
+    kernel.require_kernel(spark, "zone_assign_buffered_counts")
+    pts = _derived_lonlat(spark, sf_dir)
+    z = pts.select(kernel.zone_members_col(F.col("lon"), F.col("lat")).alias("arr"))
+    # explode_outer + the zc filter, not explode: Spark infers
+    # size(arr) > 0 AND isnotnull(arr) under a plain explode of an
+    # attribute and pushes it down as two more calls of the kernel
+    z = z.select(
+        F.size("arr").alias("n_zones"), F.explode_outer("arr").alias("zc")
+    ).filter(F.col("zc").isNotNull())
     return (
         z.groupBy("zc")
         .agg(
@@ -1568,13 +1565,13 @@ def _oracle_tile_assign_full() -> str:
 def q_tile_assign_t6_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship operator on the JVM-only path (one compiled
     equi7_zone_tile_key call per row; operators/assign_jvm) —
-    value-parity with the pandas path is pinned by
+    value-parity with the NumPy golden is pinned by
     tests/test_assign_jvm.py. Round 4: now value-oracled over the FULL
     domain (boundary cells included) via the parity-resolve SQL
     mirror."""
     from equi7grid_spark.operators.assign_jvm import tile_counts_jvm
 
-    pts = _derived_lonlat(spark, sf_dir, spread=False)
+    pts = _derived_lonlat(spark, sf_dir)
     return tile_counts_jvm(pts, tiling_id="T6").select("subgrid", "tilename", "n")
 
 
@@ -1612,7 +1609,7 @@ def _spark_decided_pts(spark: SparkSession, sf_dir: str) -> DataFrame:
     only prefilter-decided rows (zc 0..6). Zero Python, zero shuffles."""
     from equi7grid_spark.operators.assign_jvm import cell_id_col, cell_map_df
 
-    pts = _derived_lonlat(spark, sf_dir, spread=False)
+    pts = _derived_lonlat(spark, sf_dir)
     d = pts.withColumn("__cell", cell_id_col(F.col("lon"), F.col("lat")))
     cells = cell_map_df(spark).withColumnRenamed("cell_id", "__cell")
     return (
@@ -1628,7 +1625,7 @@ def q_zone_assign_decided_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the full rows-only zone_assign_counts + the golden test suite).
     The oracle embeds the engine's 64,800-digit cell map as a substr
     lookup, so the Spark broadcast join and the SQL agree cell by cell."""
-    from equi7grid_spark.operators.assign import subgrid_from_code
+    from equi7grid_spark.operators.assign_jvm import subgrid_from_code
 
     d = _spark_decided_pts(spark, sf_dir)
     return (
@@ -1720,7 +1717,7 @@ def _t6_counts_from_keys(agg: DataFrame) -> DataFrame:
     """(zc, tx, ty, n) -> (tilename, subgrid, n): post-agg tilename
     formatting on the ~10^3 aggregate rows, never per input row."""
     from equi7grid_spark.functions.tiling import tilename
-    from equi7grid_spark.operators.assign import subgrid_from_code
+    from equi7grid_spark.operators.assign_jvm import subgrid_from_code
 
     ts = 600000.0
     sub = subgrid_from_code(F.col("zc"))
@@ -1779,7 +1776,7 @@ def q_tile_roundtrip_t6_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from equi7grid_spark.operators import kernel
 
     kernel.require_kernel(spark, "tile_roundtrip_t6_counts")
-    pts = _derived_lonlat(spark, sf_dir, spread=False)
+    pts = _derived_lonlat(spark, sf_dir)
     # fused roundtrip kernel (round 7): zone resolve + fwd → inv → fwd
     # + floor keying in ONE compiled call per row — the same Vincenty
     # invocations as an xy_col → lonlat_col → xy_col chain
@@ -1857,10 +1854,10 @@ def q_lonlat_roundtrip_err_buckets(spark: SparkSession, sf_dir: str) -> DataFram
     closure regression. Uses the compiled kernel both ways (closure
     < 1e-11 deg — 2+ decades inside the first bucket edge)."""
     from equi7grid_spark.operators import kernel
-    from equi7grid_spark.operators.assign import subgrid_from_code
+    from equi7grid_spark.operators.assign_jvm import subgrid_from_code
 
     kernel.require_kernel(spark, "lonlat_roundtrip_err_buckets")
-    pts = _derived_lonlat(spark, sf_dir, spread=False)
+    pts = _derived_lonlat(spark, sf_dir)
     # zone resolve + forward in ONE compiled call per row (equi7_zone_xy),
     # then the compiled inverse. Explode-of-one barrier: the isNotNull
     # filter must not push down as a second evaluation of the UDF.
@@ -2449,7 +2446,7 @@ def q_images_in_roi_decided(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decided-domain branch of q_images_in_roi: the broadcast
     semi-join against the ROI tile list on the decided-cell subset."""
     from equi7grid_spark.functions.tiling import tilename
-    from equi7grid_spark.operators.assign import subgrid_from_code
+    from equi7grid_spark.operators.assign_jvm import subgrid_from_code
     from equi7grid_spark.roi import get_tiles_in_geog_bbox
 
     ts = 600000.0

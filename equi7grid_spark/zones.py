@@ -258,8 +258,9 @@ def assign_primary_zone_code(
 ) -> np.ndarray:
     """Index into system_order of the first matching zone (-1 if none).
 
-    Integer codes keep the Arrow boundary and the per-batch grouping
-    cheap; strings materialize JVM-side (see operators/assign.py).
+    The golden the compiled kernel's zone resolve is pinned to
+    (tests/test_assign_jvm.py); on Spark, zone codes become strings
+    JVM-side (operators/assign_jvm.subgrid_from_code).
     """
     member = zone_membership(lon, lat, buffered=buffered, system_order=system_order)
     first = np.argmax(member, axis=1).astype(np.int8)

@@ -1,9 +1,10 @@
-"""Exact point-in-zone structure for the JVM fast path.
+"""Exact point-in-zone structures for the compiled kernel.
 
-Resolves the primary zone of points in prefilter-BOUNDARY 1-degree
+Resolves the primary zone (boundary_cands) and the buffered zone
+membership (membership_cands) of points in prefilter-BOUNDARY 1-degree
 cells without a general PIP, so the compiled kernel (baked into the
-jar by scripts/build_zonedata.py as ZoneData) and the DuckDB oracle
-(functions/zones_sql) can run it. The idea: even-odd parity of
+jar by scripts/build_zonedata.py, read by ZoneData and ZoneMembers)
+and the DuckDB oracle (functions/zones_sql) can run it. The idea: even-odd parity of
 a point P relative to a zone polygon equals the (precomputed) parity
 of a per-cell reference point R, XOR the number of polygon edges
 crossed by the two-leg axis-parallel path R -> (R.x, P.y) -> P. Both
@@ -23,10 +24,12 @@ computed once, exactly, with geom.points_in_polys. Ties (a data point
 exactly on a polygon edge) remain measure-zero as in every even-odd
 test in this engine.
 
-Validated two ways (tests/test_assign_jvm.py): a NumPy twin of the
-kernel's parity test (`_numpy_parity`, used to certify the structure
-against zones.zone_membership on every boundary cell) and Spark-level
-parity of the full assignment against the pandas path.
+Validated two ways: a NumPy twin of the kernel's parity test
+(`_numpy_parity`; resolve_numpy and membership_numpy certify the
+structures against zones.zone_membership on every boundary cell,
+tests/test_zones_pip_membership.py) and the kernel's own answers
+against the same NumPy golden (tests/test_assign_jvm.py,
+tests/test_kernel_jar.py).
 """
 
 from __future__ import annotations

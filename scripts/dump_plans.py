@@ -1,12 +1,18 @@
 """Dump the physical plans of the engine's key pipelines to
 docs/PLANS.md — the scale-design evidence trail (.explain output:
-pruned scans, single Arrow pass, broadcast joins, int-keyed shuffles).
+pruned scans, compiled kernel calls, broadcast joins, int-keyed
+shuffles). Inputs go to a temporary directory; the sf dir, the repo
+checkout and the temp dirs print as <sf_dir>, <repo> and <tmp>, so
+the file does not depend on the host that wrote it.
+
+    python scripts/dump_plans.py sf_dir    # e.g. a generated sf0.001 dir
 """
 
 from __future__ import annotations
 
 import io
 import sys
+import tempfile
 from contextlib import redirect_stdout
 from pathlib import Path
 
@@ -15,37 +21,52 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import functions as F  # noqa: E402
 
 from equi7grid_spark.images import synthetic_images  # noqa: E402
-from equi7grid_spark.operators.assign import assign_tiles, tile_counts  # noqa: E402
+from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm, tile_counts_jvm  # noqa: E402
 from equi7grid_spark.operators.join import join_tile_catalog, knn_tiles  # noqa: E402
 from equi7grid_spark.session import get_spark  # noqa: E402
 
-OUT = Path(__file__).resolve().parents[1] / "docs" / "PLANS.md"
-
-
-def plan_of(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+REPO = Path(__file__).resolve().parents[1]
+OUT = REPO / "docs" / "PLANS.md"
 
 
 def main() -> None:
+    sf_dir = sys.argv[1].rstrip("/")
+    with tempfile.TemporaryDirectory() as tmp:
+        sections = dump(sf_dir, tmp)
+    OUT.parent.mkdir(exist_ok=True)
+    body = ["# Physical plans (scale evidence)\n",
+            "Generated by scripts/dump_plans.py; regenerate after operator changes.\n"]
+    for title, note, plan in sections:
+        body.append(f"\n## {title}\n\n{note}\n\n```\n{plan}```\n")
+    OUT.write_text("".join(body))
+    print(f"wrote {OUT}")
+
+
+def dump(sf_dir: str, tmp: str) -> list[tuple[str, str, str]]:
+    def plan_of(df) -> str:
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        # longest first: tmp sits inside the system temp dir (where the
+        # engine's fixtures land), and either may sit inside the repo
+        subs = sorted(
+            [(sf_dir, "<sf_dir>"), (tmp, "<tmp>"),
+             (tempfile.gettempdir(), "<tmp>"), (str(REPO), "<repo>")],
+            key=lambda kv: -len(kv[0]),
+        )
+        text = buf.getvalue()
+        for path, tag in subs:
+            text = text.replace(path, tag)
+        return text
+
     spark = get_spark(master="local[4]", shuffle_partitions=8)
-    tmp = "/tmp/plans_images.parquet"
-    synthetic_images(spark, 1000, with_bytes=False).write.mode("overwrite").parquet(tmp)
-    images = spark.read.parquet(tmp)
+    images_path = f"{tmp}/plans_images.parquet"
+    synthetic_images(spark, 1000, with_bytes=False).write.mode("overwrite").parquet(images_path)
+    images = spark.read.parquet(images_path)
 
     sections = []
 
-    counts = tile_counts(images)
-    sections.append((
-        "Flagship: tile_counts (zone UDF → int-keyed agg → post-agg naming)",
-        "One pruned scan (lon/lat only), ONE ArrowEvalPython, partial+final "
-        "hash aggregate on (zc, tx, ty) ints; tilename formatted on the "
-        "~10^3-row aggregate.",
-        plan_of(counts),
-    ))
-
+    counts = tile_counts_jvm(images)
     joined = join_tile_catalog(counts, spark, "T6")
     sections.append((
         "Catalog join (broadcast)",
@@ -53,7 +74,7 @@ def main() -> None:
         plan_of(joined),
     ))
 
-    assigned = assign_tiles(images, tiling_id="T6")
+    assigned = assign_tiles_jvm(images, tiling_id="T6")
     pts = assigned.select(F.col("image_id").alias("pt_id"), "subgrid", "x", "y")
     kn = knn_tiles(pts, spark, "T6", k=3)
     sections.append((
@@ -63,22 +84,19 @@ def main() -> None:
         plan_of(kn),
     ))
 
-    from equi7grid_spark.operators.assign_jvm import tile_counts_jvm
-
-    counts_jvm = tile_counts_jvm(images)
-    sections.append((
-        "Flagship round 2: tile_counts_jvm (zero Python workers)",
+    sections.insert(0, (
+        "Flagship: tile_counts_jvm (zero Python workers)",
         "One pruned scan (lon/lat), zone resolve + Vincenty + tile "
         "keying JVM-side in one compiled equi7_zone_tile_key call per "
         "row, zero joins, partial+final agg "
         "on a packed key — no ArrowEvalPython/BatchEvalPython node "
         "anywhere in this plan.",
-        plan_of(counts_jvm),
+        plan_of(counts),
     ))
 
     from equi7grid_spark.queries import queries
 
-    cur = queries()["corpus_curation"](spark, "/root/testdata/sf0.001")
+    cur = queries()["corpus_curation"](spark, sf_dir)
     sections.append((
         "Corpus curation (filters + canonical-dedup anti-join)",
         "Language/length/quality predicates evaluate in the scan stage "
@@ -89,7 +107,7 @@ def main() -> None:
         plan_of(cur),
     ))
 
-    dec = queries()["tile_assign_decided_t6_counts"](spark, "/root/testdata/sf0.001")
+    dec = queries()["tile_assign_decided_t6_counts"](spark, sf_dir)
     sections.append((
         "Decided-cell tile assignment (the DuckDB-oracled geodesic core)",
         "Broadcast 64,800-row cell map join decides the zone; the AEQD "
@@ -98,7 +116,7 @@ def main() -> None:
         plan_of(dec),
     ))
 
-    ph = queries()["image_phash_near_dup"](spark, "/root/testdata/sf0.001")
+    ph = queries()["image_phash_near_dup"](spark, sf_dir)
     sections.append((
         "Image phash near-dup (banded hamming multi-index, chunked r4)",
         "4x16-bit bands posexplode to (band_idx, band_val) keys; a "
@@ -134,19 +152,20 @@ def main() -> None:
     ))
 
     buf = queries()["zone_assign_buffered_counts"](
-        spark, "/root/testdata/sf0.001"
+        spark, sf_dir
     )
     sections.append((
         "Buffered multi-zone membership counts (r6)",
-        "The pandas-UDF membership (exact ray-crossing PIP against the "
-        "bfrd polygons) returns an array of zone codes; n_zones is "
-        "taken from the ARRAY SIZE before the explode, so the plan has "
-        "no per-point window — one Arrow stage, one Generate, one "
-        "aggregation exchange on the 7-value zone code.",
+        "One compiled equi7_zone_members call per row (the per-cell IN "
+        "mask + two-leg parity against the bfrd polygons, baked into "
+        "the jar) returns an array of zone codes; n_zones is taken from "
+        "the ARRAY SIZE before the explode, so the plan has no "
+        "per-point window — no Python, one Generate, one aggregation "
+        "exchange on the 7-value zone code.",
         plan_of(buf),
     ))
 
-    mm = queries()["image_multimodal_near_dup"](spark, "/root/testdata/sf0.001")
+    mm = queries()["image_multimodal_near_dup"](spark, sf_dir)
     sections.append((
         "Cross-signal multimodal dedup (one-pass signal keying, r6)",
         "ONE scan emits every signal key (phash bands + caption-md5 "
@@ -158,7 +177,7 @@ def main() -> None:
         plan_of(mm),
     ))
 
-    kq = queries()["knn_tiles"](spark, "/root/testdata/sf0.001")
+    kq = queries()["knn_tiles"](spark, sf_dir)
     sections.append((
         "knn_tiles query (map-side top-k, r5)",
         "The tile list is a driver constant, so the 3 nearest tiles "
@@ -170,7 +189,7 @@ def main() -> None:
         plan_of(kq),
     ))
 
-    rt = queries()["tile_roundtrip_t6_counts"](spark, "/root/testdata/sf0.001")
+    rt = queries()["tile_roundtrip_t6_counts"](spark, sf_dir)
     sections.append((
         "Projection roundtrip (forward -> inverse -> forward, r4)",
         "The xy->lonlat direction JVM-side: zone resolve, forward, "
@@ -183,7 +202,7 @@ def main() -> None:
 
     from equi7grid_spark.queries import q_images_in_roi_decided
 
-    roi_dec = q_images_in_roi_decided(spark, "/root/testdata/sf0.001")
+    roi_dec = q_images_in_roi_decided(spark, sf_dir)
     sections.append((
         "Image ROI selection, decided subset (round-3 oracled pipeline)",
         "Synthesis (mapInPandas) → broadcast cell-map zone resolve → "
@@ -194,7 +213,7 @@ def main() -> None:
         plan_of(roi_dec),
     ))
 
-    mme = queries()["image_multimodal_embed_near_dup"](spark, "/root/testdata/sf0.001")
+    mme = queries()["image_multimodal_embed_near_dup"](spark, sf_dir)
     sections.append((
         "Three-signal multimodal dedup (phash OR caption OR embedding, r5)",
         "The embedding signal adds a hyperplane-LSH banding pass (one "
@@ -206,7 +225,7 @@ def main() -> None:
         plan_of(mme),
     ))
 
-    ivf = queries()["ann_ivf_kmeans"](spark, "/root/testdata/sf0.001")
+    ivf = queries()["ann_ivf_kmeans"](spark, sf_dir)
     sections.append((
         "IVF ANN with quantized Lloyd's coarse quantizer (r5)",
         "The final plan shows only the cell assignment (per-row argmin "
@@ -218,7 +237,7 @@ def main() -> None:
         plan_of(ivf),
     ))
 
-    ru = queries()["tile_rollup_counts"](spark, "/root/testdata/sf0.001")
+    ru = queries()["tile_rollup_counts"](spark, sf_dir)
     sections.append((
         "Multi-resolution tile rollup T1 -> T3 -> T6 (r5)",
         "One scan, one fine-grained T1 aggregation shuffle; the T3 and "
@@ -228,7 +247,7 @@ def main() -> None:
         plan_of(ru),
     ))
 
-    cc = queries()["image_phash_dup_clusters"](spark, "/root/testdata/sf0.001")
+    cc = queries()["image_phash_dup_clusters"](spark, sf_dir)
     sections.append((
         "Transitive phash clustering (pointer-jumping CC, r5)",
         "The pair graph comes from the banded multi-index above, "
@@ -247,7 +266,7 @@ def main() -> None:
     # partition pruning on the iceberg-lite sink layout
     from equi7grid_spark.table.manifest import IcebergLiteTable
 
-    table = IcebergLiteTable("/tmp/plans_sink")
+    table = IcebergLiteTable(f"{tmp}/plans_sink")
     table.write_partitioned(joined, "subgrid", resume=False)
     pruned = table.read(spark).filter(F.col("subgrid") == "EU")
     sections.append((
@@ -286,15 +305,8 @@ def main() -> None:
         "set.",
         plan_of(fg),
     ))
-
-    OUT.parent.mkdir(exist_ok=True)
-    body = ["# Physical plans (scale evidence)\n",
-            "Generated by scripts/dump_plans.py; regenerate after operator changes.\n"]
-    for title, note, plan in sections:
-        body.append(f"\n## {title}\n\n{note}\n\n```\n{plan}```\n")
-    OUT.write_text("".join(body))
-    print(f"wrote {OUT}")
     spark.stop()
+    return sections
 
 
 if __name__ == "__main__":

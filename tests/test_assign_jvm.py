@@ -1,6 +1,7 @@
-"""JVM fast-path parity: the compiled kernel's zone resolve + Vincenty
-must reproduce the round-1 pandas/NumPy path exactly (same per-tile
-counts and assignments) and the NumPy AEQD forward/inverse to
+"""Kernel assign vs the NumPy golden: the compiled zone resolve +
+Vincenty + keying must reproduce zones.assign_primary_zone_code +
+geodesy.aeqd_forward + floor keying exactly (same zones, tiles, rows
+and cols; x/y to 1e-6 m), and the NumPy AEQD forward/inverse to
 float64 round-off."""
 
 from __future__ import annotations
@@ -10,15 +11,75 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from equi7grid_spark.constants import DEFAULT_SYSTEM_ORDER
+from equi7grid_spark.constants import DEFAULT_SYSTEM_ORDER, TILING_ID_TO_SIZE
 from equi7grid_spark.geodesy import aeqd_forward
-from equi7grid_spark.operators.assign import assign_tiles, tile_counts
 from equi7grid_spark.operators.assign_jvm import (
     assign_tiles_jvm,
     cell_code_pdf,
     tile_counts_jvm,
 )
+from equi7grid_spark.tile import Tile
 from equi7grid_spark.zones import assign_primary_zone_code
+
+
+def _golden(lon, lat, tiling_id="T6", sampling=500.0) -> pd.DataFrame:
+    """Driver-side NumPy assign of the in-zone points (index = position
+    in lon/lat): zones.assign_primary_zone_code, geodesy.aeqd_forward,
+    then the floor keying of Tile.from_xy and Tile.xy2rc's pixel
+    formula -- the reference path layerbench/inputs.py benchmarks
+    against."""
+    lon = np.asarray(lon, dtype=np.float64)
+    lat = np.asarray(lat, dtype=np.float64)
+    zc = assign_primary_zone_code(lon, lat)
+    idx = np.flatnonzero(zc >= 0)
+    zc, lon, lat = zc[idx], lon[idx], lat[idx]
+    x = np.empty(idx.size)
+    y = np.empty(idx.size)
+    for code in np.unique(zc):
+        m = zc == code
+        x[m], y[m] = aeqd_forward(DEFAULT_SYSTEM_ORDER[code], lon[m], lat[m])
+    ts = float(TILING_ID_TO_SIZE[tiling_id])
+    ll_x = np.floor(x / ts) * ts
+    ll_y = np.floor(y / ts) * ts
+    sub = np.array(DEFAULT_SYSTEM_ORDER, dtype=object)[zc]
+    return pd.DataFrame(
+        {
+            "subgrid": sub,
+            "tilename": [
+                Tile(s, tiling_id, a, b).name for s, a, b in zip(sub, ll_x, ll_y)
+            ],
+            "x": x,
+            "y": y,
+            "ll_x": ll_x,
+            "ll_y": ll_y,
+            "row": np.floor((ll_y + ts - y) / sampling).astype("int32"),
+            "col": np.floor((x - ll_x) / sampling).astype("int32"),
+        },
+        index=idx,
+    )
+
+
+def _golden_counts(lon, lat, tiling_id) -> pd.DataFrame:
+    g = _golden(lon, lat, tiling_id)
+    return (
+        g.groupby(["subgrid", "tilename", "ll_x", "ll_y"])
+        .size()
+        .rename("n")
+        .reset_index()
+        .sort_values("tilename", ignore_index=True)
+    )
+
+
+def _check_counts(sdf, tiling_id="T6"):
+    pdf = sdf.select("lon", "lat").toPandas()
+    got = (
+        tile_counts_jvm(sdf, tiling_id=tiling_id)
+        .orderBy("tilename")
+        .toPandas()
+    )
+    want = _golden_counts(pdf["lon"], pdf["lat"], tiling_id)
+    assert got["n"].sum() == len(pdf)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
 def _inzone_grid(step=1.5):
@@ -54,15 +115,13 @@ def _points(spark, sf_dir):
 
 @pytest.mark.parametrize("tiling_id", ["T6", "T3"])
 def test_tile_counts_jvm_equals_pandas_path(spark, sf_dir, tiling_id):
-    df = _points(spark, sf_dir).select("lon", "lat")
-    a = tile_counts(df, tiling_id=tiling_id).orderBy("tilename").toPandas()
-    b = tile_counts_jvm(df, tiling_id=tiling_id).orderBy("tilename").toPandas()
-    pd.testing.assert_frame_equal(a, b)
+    """Per-tile counts equal the NumPy golden's on the sf points."""
+    _check_counts(_points(spark, sf_dir), tiling_id)
 
 
 def test_tile_counts_jvm_boundary_heavy(spark):
     """Grid that oversamples prefilter-boundary cells (the kernel's
-    exact parity resolve) — counts must still match the exact path."""
+    exact parity resolve) — counts must still match the NumPy golden."""
     codes = cell_code_pdf()
     und = codes[codes["zc"] == -2].head(400)
     ix = (und["cell_id"] // 180).to_numpy()
@@ -73,33 +132,34 @@ def test_tile_counts_jvm_boundary_heavy(spark):
             pts.append(np.stack([ix - 180.0 + fx, iy - 90.0 + fy], axis=1))
     arr = np.concatenate(pts)
     pdf = pd.DataFrame({"lon": arr[:, 0], "lat": arr[:, 1]})
-    sdf = spark.createDataFrame(pdf)
-    a = tile_counts(sdf).orderBy("tilename").toPandas()
-    b = tile_counts_jvm(sdf).orderBy("tilename").toPandas()
-    pd.testing.assert_frame_equal(a, b)
+    _check_counts(spark.createDataFrame(pdf))
+
+
+def _check_rows(got: pd.DataFrame, want: pd.DataFrame):
+    """Kernel rows vs golden rows, aligned on the index: exact zone,
+    tile, row and col; x/y within 1e-6 m."""
+    exact = ["subgrid", "tilename", "row", "col"]
+    pd.testing.assert_frame_equal(
+        got[exact], want[exact],
+        check_dtype=False, check_index_type=False, check_names=False,
+    )
+    np.testing.assert_allclose(got["x"], want["x"], rtol=0, atol=1e-6)
+    np.testing.assert_allclose(got["y"], want["y"], rtol=0, atol=1e-6)
 
 
 def test_assign_tiles_jvm_equals_pandas_path(spark, sf_dir):
-    df = _points(spark, sf_dir).withColumnRenamed("pt_id", "event_id")
-    cols = ["event_id", "subgrid", "tilename", "x", "y"]
-    a = (
-        assign_tiles(df, sampling=500.0)
-        .select(*cols, "row", "col")
-        .orderBy("event_id")
-        .toPandas()
-    )
-    b = (
+    """Row-level assign equals the NumPy golden on every sf point."""
+    df = _points(spark, sf_dir)
+    got = (
         assign_tiles_jvm(df, sampling=500.0)
-        .select(*cols, "row", "col")
-        .orderBy("event_id")
+        .orderBy("pt_id")
         .toPandas()
+        .set_index("pt_id")
     )
-    pd.testing.assert_frame_equal(
-        a[["event_id", "subgrid", "tilename", "row", "col"]],
-        b[["event_id", "subgrid", "tilename", "row", "col"]],
-    )
-    np.testing.assert_allclose(a["x"], b["x"], atol=1e-6)
-    np.testing.assert_allclose(a["y"], b["y"], atol=1e-6)
+    pts = df.orderBy("pt_id").toPandas()
+    want = _golden(pts["lon"], pts["lat"]).set_axis(pts["pt_id"].to_numpy())
+    assert len(got) == len(want) == len(pts)
+    _check_rows(got, want.loc[got.index])
 
 
 def test_kernel_xy_matches_numpy(spark):
@@ -221,19 +281,24 @@ def test_kernel_boundary_resolve_matches_numpy_every_cell(spark):
 def test_assign_tiles_jvm_keeps_all_rows_when_not_dropping(spark):
     """The std zones partition the globe (decided_cell_codes has no -1
     cells), so drop_out_of_zone=False must simply preserve row count and
-    agree with the pandas path on every subgrid."""
+    agree with the NumPy golden on every row."""
     pdf = pd.DataFrame(
         {"lon": [5.0, -140.0, 170.0, -30.0], "lat": [47.0, 0.0, -85.0, 65.0]}
     )
-    sdf = spark.createDataFrame(pdf)
-    a = assign_tiles(sdf, drop_out_of_zone=False).orderBy("lon").collect()
-    b = assign_tiles_jvm(sdf, drop_out_of_zone=False).orderBy("lon").collect()
-    assert len(b) == 4
-    assert [r.subgrid for r in a] == [r.subgrid for r in b]
-    assert [r.tilename for r in a] == [r.tilename for r in b]
+    got = (
+        assign_tiles_jvm(
+            spark.createDataFrame(pdf.reset_index()), sampling=500.0, drop_out_of_zone=False
+        )
+        .toPandas()
+        .set_index("index")
+        .sort_index()
+    )
+    want = _golden(pdf["lon"], pdf["lat"])
+    assert len(got) == len(want) == 4
+    _check_rows(got, want)
 
 
-def _check_hostile_lonlat(spark, assign):
+def test_assign_tiles_jvm_hostile_lonlat(spark):
     """Null, NaN and ±inf lon/lat are out of every zone: dropped under
     drop_out_of_zone=True, kept under False with null subgrid, x, y,
     tilename, ll_x, ll_y, row and col — never a tile at the origin,
@@ -246,41 +311,20 @@ def _check_hostile_lonlat(spark, assign):
         (15, inf, 10.0), (16, -inf, 10.0), (17, 10.0, inf), (18, 10.0, -inf),
     ]
     sdf = spark.createDataFrame(good + bad, "id int, lon double, lat double")
-    ref = {
-        r.id: r
-        for r in assign_tiles(
-            spark.createDataFrame(good, "id int, lon double, lat double"),
-            sampling=500.0,
-        ).collect()
-    }
+    ids, lon, lat = zip(*good)
+    ref = _golden(lon, lat).set_axis(list(ids))
     cols = ("subgrid", "x", "y", "tilename", "ll_x", "ll_y", "row", "col")
 
-    kept = assign(sdf).collect()
-    assert sorted(r.id for r in kept) == sorted(ref)
+    kept = assign_tiles_jvm(sdf).collect()
+    assert sorted(r.id for r in kept) == sorted(ref.index)
     for r in kept:
-        assert (r.subgrid, r.tilename) == (ref[r.id].subgrid, ref[r.id].tilename)
+        assert (r.subgrid, r.tilename) == (ref.subgrid[r.id], ref.tilename[r.id])
 
-    every = {
-        r.id: r
-        for r in assign(sdf, sampling=500.0, drop_out_of_zone=False).collect()
-    }
-    assert sorted(every) == sorted(i for i, _, _ in good + bad)
+    every = assign_tiles_jvm(sdf, sampling=500.0, drop_out_of_zone=False).toPandas().set_index("id")
+    assert sorted(every.index) == sorted(i for i, _, _ in good + bad)
     for i, _, _ in bad:
-        r = every[i]
-        assert all(r[c] is None for c in cols), r
-    tile_cols = [c for c in cols if c not in ("x", "y")]
-    for i in ref:
-        assert [every[i][c] for c in tile_cols] == [ref[i][c] for c in tile_cols]
-        np.testing.assert_allclose([every[i].x, every[i].y], [ref[i].x, ref[i].y], atol=1e-6)
-
-
-def test_assign_tiles_jvm_hostile_lonlat(spark):
-    _check_hostile_lonlat(spark, assign_tiles_jvm)
-
-
-def test_assign_tiles_hostile_lonlat(spark):
-    """The pandas path keeps out-of-zone rows exactly like the kernel path."""
-    _check_hostile_lonlat(spark, assign_tiles)
+        assert every.loc[i, list(cols)].isna().all(), every.loc[i]
+    _check_rows(every.loc[ref.index], ref)
 
 
 def test_tile_counts_jvm_hostile_lonlat(spark):

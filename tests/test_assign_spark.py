@@ -1,14 +1,10 @@
-"""End-to-end Spark tile assignment (the flagship operator)."""
+"""End-to-end Spark tile assignment (the flagship operator) against the
+reference goldens."""
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from equi7grid_spark.operators.assign import (
-    assign_tiles,
-    distortion_ellipsoid_udf,
-    inverse_lonlat_udf,
-)
+from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm
 
 
 @pytest.fixture(scope="module")
@@ -24,7 +20,7 @@ def points(spark):
 
 
 def test_assign_tiles_goldens(points):
-    out = assign_tiles(points, tiling_id="T6", sampling=500.0).orderBy("id").collect()
+    out = assign_tiles_jvm(points, tiling_id="T6", sampling=500.0).orderBy("id").collect()
     # reference tests/test_equi7grid.py:59-99 projected coords
     assert out[0].subgrid == "EU"
     assert out[0].x == pytest.approx(5138743.127891, abs=1.0)
@@ -39,37 +35,26 @@ def test_assign_tiles_goldens(points):
     assert out[5].subgrid == "AS"
 
 
-def test_assign_tiles_buffered_multizone(points):
-    out = (
-        assign_tiles(points, tiling_id="T6", buffered=True)
-        .filter(F.col("id") == 5)
-        .orderBy("subgrid")
-        .collect()
-    )
-    # reference :412-418 — buffered zones overlap: AS and EU
+
+def test_buffered_assign_recipe(points):
+    """The documented buffered recipe (operators/assign_jvm docstring,
+    docs/MIGRATION.md): one row per containing buffered zone, each
+    projected into its own zone (reference :412-418 — AS and EU)."""
+    from pyspark.sql import functions as F
+
+    from equi7grid_spark.geodesy import aeqd_forward
+    from equi7grid_spark.operators import kernel
+    from equi7grid_spark.operators.assign_jvm import subgrid_from_code, with_tile_columns
+
+    df = points.filter(F.col("id") == 5)
+    lon, lat = F.col("lon"), F.col("lat")
+    z = df.withColumn("zc", F.explode(kernel.zone_members_col(lon, lat)))
+    xy = kernel.xy_col(F.col("zc"), lon, lat)
+    z = z.select("*", xy[0].alias("x"), xy[1].alias("y"),
+                 subgrid_from_code(F.col("zc")).alias("subgrid"))
+    out = with_tile_columns(z, "T6").orderBy("subgrid").collect()
     assert [r.subgrid for r in out] == ["AS", "EU"]
-
-
-def test_inverse_roundtrip_spark(points):
-    df = assign_tiles(points, tiling_id="T6")
-    inv = df.withColumn("ll", inverse_lonlat_udf(F.col("subgrid"), F.col("x"), F.col("y")))
-    rows = inv.select("lon", "lat", "ll.lon", "ll.lat").collect()
-    for lon, lat, lon2, lat2 in rows:
-        assert lon2 == pytest.approx(lon, abs=1e-6)
-        assert lat2 == pytest.approx(lat, abs=1e-6)
-
-
-def test_distortion_udf(spark):
-    df = spark.createDataFrame([{"sub": "AF", "lon": -29.1, "lat": 24.0}])
-    k = df.select(distortion_ellipsoid_udf(F.col("sub"), F.col("lon"), F.col("lat")).alias("k"))
-    assert k.collect()[0].k == pytest.approx(1.1432971727108836, abs=1e-6)
-
-
-def test_out_of_zone_filtered(spark):
-    # no point is outside every zone (partition), but nulls propagate:
-    # synthesize by restricting system order
-    df = spark.createDataFrame([{"lon": 51.12, "lat": 61.71}])
-    out = assign_tiles(df, system_order=("EU",))
-    assert out.count() == 0  # reference GeomOutOfZoneError (:421-428)
-    out = assign_tiles(df, system_order=("EU",), drop_out_of_zone=False)
-    assert out.collect()[0].subgrid is None
+    for r in out:
+        x, y = aeqd_forward(r.subgrid, 51.12, 61.71)
+        assert (r.x, r.y) == pytest.approx((float(x), float(y)), abs=1e-6)
+        assert r.tilename.startswith(r.subgrid + "_") and r.tilename.endswith("T6")

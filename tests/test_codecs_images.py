@@ -47,18 +47,18 @@ def test_synthetic_images_spark(spark):
     assert df.count() == 2000
     assert df.select("image_id").distinct().count() == 2000
     # land-biased: most points in anchor boxes → zones uneven but all present
-    from equi7grid_spark.operators.assign import assign_tiles
+    from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm
 
-    z = assign_tiles(df).groupBy("subgrid").count().collect()
+    z = assign_tiles_jvm(df).groupBy("subgrid").count().collect()
     assert len(z) == 7
 
 
 def test_join_tile_catalog_and_neighbors(spark):
-    from equi7grid_spark.operators.assign import assign_tiles
+    from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm
     from equi7grid_spark.operators.join import join_tile_catalog, knn_tiles, tile_neighbors
 
     df = synthetic_images(spark, 500, with_bytes=False)
-    assigned = assign_tiles(df, tiling_id="T6")
+    assigned = assign_tiles_jvm(df, tiling_id="T6")
     joined = join_tile_catalog(assigned, spark, "T6", how="inner")
     # every assigned tile must exist in the catalog (zones partition globe)
     assert joined.count() == assigned.count()

@@ -1,18 +1,21 @@
-"""The checked-in kernel jar must match its Java sources: a source
-edit or a new kernel class without a rebuild
-(scripts/build_jvm_kernel.sh) fails here instead of silently running
-stale bytecode. The jar is the only implementation of its entries, so
+"""The checked-in kernel jar must match its Java sources and its baked
+zone data: a source edit, a new kernel class or a zone-structure
+change without a rebuild (scripts/build_zonedata.py, then
+scripts/build_jvm_kernel.sh) fails here instead of silently running
+stale bytecode or stale zones. The jar is the only implementation of its entries, so
 a session that cannot load it must fail loudly, and every entry must
 have a caller."""
 
 from __future__ import annotations
 
+import importlib.util
 import math
 import re
 import zipfile
 from pathlib import Path
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -29,6 +32,19 @@ def test_every_java_source_has_its_class_in_the_jar():
         s.name for s in sources if f"equi7/{s.stem}.class" not in classes
     ]
     assert not missing, f"rebuild equi7-kernel.jar: no class for {missing}"
+
+
+def test_jar_zone_resources_equal_a_fresh_build():
+    """Both baked zone structures in the jar are byte-identical to what
+    scripts/build_zonedata.py writes from the current NumPy zones."""
+    path = ROOT.parent / "scripts" / "build_zonedata.py"
+    spec = importlib.util.spec_from_file_location("build_zonedata", path)
+    build = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(build)
+    assert set(build.RESOURCES) == {"zonedata.bin", "members.bin"}
+    with zipfile.ZipFile(PKG / "equi7-kernel.jar") as jar:
+        for name, make in build.RESOURCES.items():
+            assert jar.read(f"equi7/{name}") == make(), f"rebuild {name} and the jar"
 
 
 def test_every_entry_wrapper_has_a_caller():
@@ -105,7 +121,7 @@ def test_kernel_registers_zone_xy(spark):
     from equi7grid_spark.operators import kernel
 
     kernel.require_kernel(spark, "this test")
-    for name in ("equi7_zone_xy", "equi7_cosine_seq", "equi7_emb_buckets"):
+    for name in ("equi7_zone_xy", "equi7_zone_members", "equi7_cosine_seq", "equi7_emb_buckets"):
         assert spark.catalog.functionExists(name), name
     (row,) = spark.sql("SELECT equi7_zone_xy(15.0D, 48.0D) AS v").collect()
     assert len(row.v) == 3 and row.v[0] == 3.0  # EU
@@ -119,6 +135,7 @@ def test_kernel_registers_zone_xy(spark):
 # every geodesic entry and the arguments it takes, in call order
 GEODESIC_ENTRIES = {
     "equi7_zone_xy": ("lon", "lat"),
+    "equi7_zone_members": ("lon", "lat"),
     "equi7_zone_tile_key": ("lon", "lat", "ts"),
     "equi7_roundtrip_zone_tile_key": ("lon", "lat", "ts"),
     "equi7_xy": ("zc", "lon", "lat"),
@@ -157,6 +174,73 @@ def test_geodesic_entries_hostile_input_is_null_never_throws(spark):
         broken = r.case.split("=")[0]
         for name, args in GEODESIC_ENTRIES.items():
             assert (r[name] is None) == (broken in args), (r.case, name, r[name])
+
+
+def _members(spark, lon, lat) -> np.ndarray:
+    """equi7_zone_members as a [n_points, 7] boolean matrix."""
+    from equi7grid_spark.operators import kernel
+
+    kernel.require_kernel(spark, "this test")
+    pdf = pd.DataFrame({"i": np.arange(len(lon)), "lon": lon, "lat": lat})
+    out = (
+        spark.createDataFrame(pdf)
+        .select("i", kernel.zone_members_col(F.col("lon"), F.col("lat")).alias("m"))
+        .orderBy("i")
+        .toPandas()
+    )
+    member = np.zeros((len(lon), 7), dtype=bool)
+    for k, m in enumerate(out["m"]):
+        assert list(m) == sorted(m), m
+        member[k, list(m)] = True
+    return member
+
+
+def test_zone_members_match_numpy_membership(spark):
+    """equi7_zone_members equals zones.zone_membership(buffered=True)
+    for a seeded point in every bfrd boundary cell plus global points
+    (the sample of tests/test_zones_pip_membership.py)."""
+    from equi7grid_spark.zones import zone_membership
+    from equi7grid_spark.zones_pip import membership_cands
+
+    rng = np.random.default_rng(7)
+    _, cands = membership_cands("bfrd")
+    cells = np.array(sorted({c["cell_id"] for c in cands}))
+    lon = (cells // 180 - 180) + rng.random(cells.size)
+    lat = (cells % 180 - 90) + rng.random(cells.size)
+    lon = np.concatenate([lon, rng.random(3000) * 360.0 - 180.0])
+    lat = np.concatenate([lat, rng.random(3000) * 180.0 - 90.0])
+    want = zone_membership(lon, lat, buffered=True)
+    np.testing.assert_array_equal(_members(spark, lon, lat), want)
+    assert int((want.sum(axis=1) >= 2).sum()) > 0
+
+
+def test_zone_members_buffered_overlap_and_wrap(spark):
+    """Reference tests/test_equi7grid.py:412-418: (51.12, 61.71) lies in
+    the buffered AS and EU zones; lon 200 is lon -160, and a lat beyond
+    a pole clamps to it, as in the primary-zone resolve and NumPy."""
+    from equi7grid_spark.constants import DEFAULT_SYSTEM_ORDER
+    from equi7grid_spark.zones import zone_membership
+
+    lon = np.array([51.12, 200.0, -160.0, 15.0, 15.0, -100.0, -100.0])
+    lat = np.array([61.71, 10.0, 10.0, 95.0, 90.0, -91.0, -90.0])
+    m = _members(spark, lon, lat)
+    assert [DEFAULT_SYSTEM_ORDER[j] for j in np.flatnonzero(m[0])] == ["AS", "EU"]
+    assert m[1].any() and (m[1] == m[2]).all()
+    assert (m[3] == m[4]).all() and (m[5] == m[6]).all()
+    np.testing.assert_array_equal(m, zone_membership(lon, lat, buffered=True))
+
+
+def test_zone_assign_buffered_counts_plan_is_one_kernel_call(spark, sf_dir):
+    """The buffered query runs no Python: its executed plan has no
+    Arrow/Batch eval node and exactly one equi7_zone_members call."""
+    from equi7grid_spark.queries import q_zone_assign_buffered_counts
+
+    df = q_zone_assign_buffered_counts(spark, sf_dir)
+    df.collect()  # pin the executed plan, not just the initial one
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert plan.count("equi7_zone_members(") == 1
 
 
 def _seq_dot(a, b) -> float:

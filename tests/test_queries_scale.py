@@ -91,7 +91,7 @@ def test_assign_tiles_jvm_plan_is_one_kernel_call(spark):
     from equi7grid_spark.queries import _derived_lonlat
 
     kernel.require_kernel(spark, "this test")
-    df = assign_tiles_jvm(_derived_lonlat(spark, SF, spread=False), tiling_id="T6")
+    df = assign_tiles_jvm(_derived_lonlat(spark, SF), tiling_id="T6")
     df.collect()  # pin the executed plan, not just the initial one
     plan = _physical(df).split("== Initial Plan ==")[0]
     assert "BroadcastHashJoin" not in plan

@@ -24,10 +24,10 @@ def test_streaming_tile_assignment(spark, tmp_path):
     res = spark.sql("select * from stream_assign")
     assert res.count() == 500
     # streaming result == batch result
-    batch = (
-        __import__("equi7grid_spark.operators.assign", fromlist=["assign_tiles"])
-        .assign_tiles(synthetic_images(spark, 500, with_bytes=False))
-        .select("image_id", "subgrid", "tilename")
+    from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm
+
+    batch = assign_tiles_jvm(synthetic_images(spark, 500, with_bytes=False)).select(
+        "image_id", "subgrid", "tilename"
     )
     assert res.exceptAll(batch).count() == 0
     assert batch.exceptAll(res).count() == 0

@@ -96,19 +96,19 @@ def test_t2_grid_def_roundtrip(t2_grid, tmp_path):
 
 
 def test_t2_spark_assignment(spark, sf_dir):
-    """assign_tiles with the registered T2 id: tilenames end in T2 and
+    """assign_tiles_jvm with the registered T2 id: tilenames end in T2 and
     the T6 parent relation holds row-wise."""
     from pyspark.sql import functions as F
 
-    from equi7grid_spark.operators.assign import assign_tiles
+    from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm
     from equi7grid_spark.queries import _derived_lonlat
 
     get_user_equi7grid(500, {1: RegularTilingDefinition(name="T2", tile_shape=200_000)})
     pts = _derived_lonlat(spark, sf_dir).limit(2000)
-    both = assign_tiles(pts, tiling_id="T2").withColumnRenamed(
+    both = assign_tiles_jvm(pts, tiling_id="T2").withColumnRenamed(
         "tilename", "t2name"
     ).select("pt_id", "t2name", "x", "y")
-    t6 = assign_tiles(pts, tiling_id="T6").select("pt_id", "tilename")
+    t6 = assign_tiles_jvm(pts, tiling_id="T6").select("pt_id", "tilename")
     j = both.join(t6, "pt_id")
     rows = j.collect()
     assert rows and all(r.t2name.endswith("T2") for r in rows)
