@@ -1,11 +1,12 @@
 """Deduplication & similarity operators for the documents/embeddings
 tables (training-data-pipeline ops; SURVEY.md graft additions).
 
-Every operator here is expressed with built-in Spark SQL functions
-(shingling via array lambdas, MinHash via md5-keyed minima, SimHash via
-hex-digit parities, LSH bands via ordered aggregation) so that DuckDB
-can reproduce values exactly — these all carry full value oracles in
-queries.py. The md5-as-uniform-hash trick keeps the hash function
+Each operator keeps the arithmetic of its DuckDB value oracle in
+queries.py. Most are built-in Spark SQL (shingling via array lambdas,
+SimHash via hex-digit parities, LSH bands via ordered aggregation);
+minhash_wide is one mapInPandas pass (md5-keyed minima), and the
+embedding banding and cosine verify are compiled kernel calls
+(operators/kernel). The md5-as-uniform-hash trick keeps the hash function
 engine-independent (both engines implement RFC 1321), unlike
 Spark's murmur `hash()` vs DuckDB's internal `hash()`.
 

@@ -311,22 +311,21 @@ def aeqd_inverse_sql(
     """
 
 
-def decided_digit_string(
-    system_order: tuple[str, ...] = DEFAULT_SYSTEM_ORDER,
-) -> str:
-    """64,800-char digit string indexed by 1-degree cell_id (+1 for SQL
-    substr): '0'..'6' = decided primary zone code, '7' = out of every
-    zone, '8' = prefilter-boundary (needs exact PIP — excluded from the
-    decided-only oracled queries on BOTH sides)."""
-    from equi7grid_spark.operators.assign_jvm import cell_code_pdf
+def decided_digit_string() -> str:
+    """64,800-char digit string of zones.decided_cell_codes indexed by
+    1-degree cell_id (+1 for SQL substr): '0'..'6' = decided primary
+    zone code, '7' = out of every zone, '8' = prefilter-boundary
+    (needs exact PIP — excluded from the decided-only oracled queries
+    on BOTH sides; the engine's equi7_decided_zone is null there)."""
+    from equi7grid_spark.zones import decided_cell_codes
 
-    zc = cell_code_pdf(tuple(system_order))["zc"].to_numpy()
     lut = {-1: "7", -2: "8"}
-    return "".join(lut.get(int(v), str(int(v))) for v in zc)
+    return "".join(lut.get(int(v), str(int(v))) for v in decided_cell_codes().ravel())
 
 
 def cell_id_sql(lon: str = "lon", lat: str = "lat") -> str:
-    """SQL mirror of operators/assign_jvm.cell_id_col (1-degree cell)."""
+    """1-degree cell id, the cell arithmetic of the jar's ZoneData.cell
+    (lon normalized to [-180, 180), lat clamped, floor + clip)."""
     lon_n = f"(fmod(fmod({lon} + 180.0, 360.0) + 360.0, 360.0) - 180.0)"
     lat_c = f"greatest(least({lat}, 90.0), -90.0)"
     ix = f"greatest(least(floor({lon_n} + 180.0), 359), 0)"

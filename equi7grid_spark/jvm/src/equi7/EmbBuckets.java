@@ -58,13 +58,25 @@ public class EmbBuckets implements UDF3<Seq<Double>, Integer, Integer, int[]>, S
     public int[] call(Seq<Double> v, Integer nBands, Integer nPlanes) {
         if (v == null || nBands == null || nPlanes == null) return null;
         if (nBands < 1 || nBands > 256 || nPlanes < 1 || nPlanes > 31) return null;
+        double[] x = values(v);
+        return signBuckets(x, planes(nBands, nPlanes, x.length), nBands, nPlanes);
+    }
+
+    /** The vector as doubles, a null element as NaN. */
+    static double[] values(Seq<Double> v) {
         int dim = v.length();
         double[] x = new double[dim];
         for (int d = 0; d < dim; d++) {
             Double e = v.apply(d);
             x[d] = e == null ? Double.NaN : e;
         }
-        double[] p = planes(nBands, nPlanes, dim);
+        return x;
+    }
+
+    /** The sign loop of both banding entries: bit q of band b is set when
+     *  the left-to-right dot of x with row b * nPlanes + q of p is > 0. */
+    static int[] signBuckets(double[] x, double[] p, int nBands, int nPlanes) {
+        int dim = x.length;
         int[] out = new int[nBands];
         for (int b = 0; b < nBands; b++) {
             int bucket = 0;

@@ -32,22 +32,16 @@ Semantics are pinned by tests/test_assign_jvm.py: identical per-tile
 counts/assignments to the NumPy golden (zones.assign_primary_zone_code
 + geodesy.aeqd_forward + floor keying) on the sf tables and on grids
 that oversample boundary cells.
-
-cell_code_pdf / cell_map_df / cell_id_col expose the decided-cell map
-(zones.decided_cell_codes) to the decided-subset queries and their
-SQL oracle (functions/geodesy_sql.decided_digit_string).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from equi7grid_spark.constants import DEFAULT_SYSTEM_ORDER, TILING_ID_TO_SIZE
 from equi7grid_spark.functions.tiling import tile_ll, tilename, xy2rc
 from equi7grid_spark.operators import kernel
-from equi7grid_spark.zones import PF_NX, PF_NY, decided_cell_codes
 
 
 def subgrid_from_code(zc: Column) -> Column:
@@ -77,58 +71,6 @@ def with_tile_columns(
         r, c = xy2rc(F.col("x"), F.col("y"), F.col("ll_x"), F.col("ll_y"), ts, sampling)
         df = df.withColumn("row", r).withColumn("col", c)
     return df
-
-
-_CELL_MAPS: dict[tuple, pd.DataFrame] = {}
-
-
-def cell_code_pdf(system_order: tuple[str, ...] = DEFAULT_SYSTEM_ORDER) -> pd.DataFrame:
-    """64,800-row (cell_id:int32, zc:int8) lookup table as pandas."""
-    key = tuple(system_order)
-    if key not in _CELL_MAPS:
-        import numpy as np
-
-        codes = decided_cell_codes(key)  # [PF_NX, PF_NY]
-        ix, iy = np.meshgrid(np.arange(PF_NX), np.arange(PF_NY), indexing="ij")
-        _CELL_MAPS[key] = pd.DataFrame(
-            {
-                "cell_id": (ix * PF_NY + iy).ravel().astype("int32"),
-                "zc": codes.ravel().astype("int8"),
-            }
-        )
-    return _CELL_MAPS[key]
-
-
-_CELL_DFS: dict[tuple, DataFrame] = {}
-
-
-def cell_map_df(
-    spark: SparkSession, system_order: tuple[str, ...] = DEFAULT_SYSTEM_ORDER
-) -> DataFrame:
-    key = (id(spark), tuple(system_order))
-    if key not in _CELL_DFS:
-        # Explicit schema: schema-less createDataFrame(pandas) maps int8
-        # to tinyint only when Arrow conversion is on; a plain driver
-        # session (no Arrow) infers bigint, which downstream crashed the
-        # Java UDF (UDF3<Byte,...>) with Long->Byte ClassCastException.
-        _CELL_DFS[key] = spark.createDataFrame(
-            cell_code_pdf(tuple(system_order)), schema="cell_id int, zc tinyint"
-        )
-    return _CELL_DFS[key]
-
-
-def cell_id_col(lon: Column, lat: Column) -> Column:
-    """1-degree cell id, mirroring zones.zone_membership's gather:
-    lon normalized to [-180, 180), lat clamped, floor + clip."""
-    lon_n = F.pmod(lon + F.lit(180.0), F.lit(360.0)) - F.lit(180.0)
-    lat_c = F.greatest(F.least(lat, F.lit(90.0)), F.lit(-90.0))
-    ix = F.greatest(
-        F.least(F.floor(lon_n + F.lit(180.0)), F.lit(PF_NX - 1)), F.lit(0)
-    )
-    iy = F.greatest(
-        F.least(F.floor(lat_c + F.lit(90.0)), F.lit(PF_NY - 1)), F.lit(0)
-    )
-    return (ix * PF_NY + iy).cast("int")
 
 
 def tile_counts_jvm(

@@ -1,8 +1,9 @@
 """Compiled JVM kernel: loading + registration.
 
-The engine's row-level primitives (zone resolve, buffered zone
-membership, iterative Vincenty AEQD forward and inverse, tile keying,
-and the two vector primitives of the dedup family) run in compiled
+The engine's row-level primitives (zone resolve, the decided-cell
+zone lookup, buffered zone membership, iterative Vincenty AEQD
+forward and inverse, tile keying, the cosine verify and sign-LSH
+banding) run in compiled
 Java (equi7grid_spark/jvm/src, built to equi7-kernel.jar by
 scripts/build_jvm_kernel.sh and checked in). One JIT-hot method per row has no Python workers and no Arrow
 boundary, and it converges the Vincenty fixed-points to the same
@@ -35,6 +36,8 @@ SQL functions registered:
       of every zone — the row-level twin of equi7_zone_tile_key (same
       zone resolve + Vincenty calls), so assign_tiles_jvm needs one
       call per row and no joins.
+  equi7_decided_zone(lon, lat) -> tinyint zone code of the point's
+      1-degree cell if zones.decided_cell_codes decides it, else null.
   equi7_zone_members(lon, lat) -> array<int> of every BUFFERED zone
       containing the point, ascending zone code (buffered zones
       overlap, so up to 2) — a per-cell IN mask plus the two-leg
@@ -50,6 +53,9 @@ SQL functions registered:
       dedup.emb_plane_value, bit p set when the sequential dot > 0, so
       an all-zero or empty vector, or one with a NaN or null element,
       gets bucket 0 in every band); null only for a null array.
+  equi7_sign_buckets(v array<double>, planes binary, n_planes int) ->
+      array<int> the same sign loop against the caller's planes, a
+      little-endian float64 (band * n_planes + plane, dim) matrix.
 
 Every geodesic entry returns null, never throws, for a null argument,
 a NaN/±inf coordinate or tile size, or a zone code outside 0..6.
@@ -57,17 +63,19 @@ a NaN/±inf coordinate or tile size, or a zone code outside 0..6.
 
 from __future__ import annotations
 
+import weakref
 from pathlib import Path
 
+import numpy as np
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _JAR = "equi7grid_spark/jvm/equi7-kernel.jar"
 
-# id(session) -> None once its entries are registered and probed, or
-# the exception that stopped them
-_STATE: dict[int, Exception | None] = {}
+# session -> None once its entries are registered and probed, or the
+# exception that stopped them; weak keys, as an id() is reused
+_STATE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 _ENTRIES = (
     ("equi7_xy", "equi7.VincentyXY", T.ArrayType(T.DoubleType())),
@@ -75,9 +83,11 @@ _ENTRIES = (
     ("equi7_lonlat", "equi7.VincentyLonLat", T.ArrayType(T.DoubleType())),
     ("equi7_roundtrip_zone_tile_key", "equi7.RoundtripZoneTileKey", T.LongType()),
     ("equi7_zone_xy", "equi7.ZoneXY", T.ArrayType(T.DoubleType())),
+    ("equi7_decided_zone", "equi7.DecidedZone", T.ByteType()),
     ("equi7_zone_members", "equi7.ZoneMembers", T.ArrayType(T.IntegerType())),
     ("equi7_cosine_seq", "equi7.CosineSeq", T.DoubleType()),
     ("equi7_emb_buckets", "equi7.EmbBuckets", T.ArrayType(T.IntegerType())),
+    ("equi7_sign_buckets", "equi7.SignBuckets", T.ArrayType(T.IntegerType())),
 )
 
 
@@ -110,6 +120,7 @@ def _probe(spark: SparkSession) -> tuple:
             zone_tile_key_col(lon, lat, 600000.0),
             roundtrip_zone_tile_key_col(lon, lat, 600000.0),
             zone_xy_col(lon, lat),
+            decided_zone_col(lon, lat),
             zone_members_col(lon, lat),
             xy_col(zc, lon, lat),
             lonlat_col(
@@ -119,6 +130,7 @@ def _probe(spark: SparkSession) -> tuple:
             ),
             cosine_seq_col(v, v),
             emb_buckets_col(v, 8, 16),
+            sign_buckets_col(v, [[[1.0, 1.0]]]),
         )
         .collect()[0]
     )
@@ -127,9 +139,8 @@ def _probe(spark: SparkSession) -> tuple:
 def _load(spark: SparkSession) -> Exception | None:
     """ADD JAR, register every entry on this session and probe them,
     once per session; the exception that stopped it, else None."""
-    key = id(spark)
-    if key in _STATE:
-        return _STATE[key]
+    if spark in _STATE:
+        return _STATE[spark]
     err = None
     try:
         jar = _kernel_jar()
@@ -143,7 +154,7 @@ def _load(spark: SparkSession) -> Exception | None:
             raise RuntimeError(f"kernel probe columns {nulls} returned null")
     except Exception as e:
         err = e
-    _STATE[key] = err
+    _STATE[spark] = err
     return err
 
 
@@ -193,6 +204,12 @@ def zone_xy_col(lon: Column, lat: Column) -> Column:
     return F.call_udf("equi7_zone_xy", lon.cast("double"), lat.cast("double"))
 
 
+def decided_zone_col(lon: Column, lat: Column) -> Column:
+    """Zone code (tinyint) of the prefilter-decided 1-degree cell of
+    (lon, lat), null when the cell is undecided or out of every zone."""
+    return F.call_udf("equi7_decided_zone", lon.cast("double"), lat.cast("double"))
+
+
 def zone_members_col(lon: Column, lat: Column) -> Column:
     """array<int> of the buffered zones containing (lon, lat), ascending
     zone code; null for a null, NaN or infinite lon/lat."""
@@ -225,6 +242,19 @@ def emb_buckets_col(v: Column, n_bands: int, n_planes: int) -> Column:
         v.cast("array<double>"),
         F.lit(int(n_bands)),
         F.lit(int(n_planes)),
+    )
+
+
+def sign_buckets_col(v: Column, planes) -> Column:
+    """array<int> of sign-LSH bucket ids of v against `planes`, shaped
+    [n_bands][n_planes][dim]: bit q of band b is set when the
+    sequential dot with planes[b][q] is > 0; see SignBuckets."""
+    p = np.asarray(planes, dtype="<f8")
+    return F.call_udf(
+        "equi7_sign_buckets",
+        v.cast("array<double>"),
+        F.lit(p.tobytes()),
+        F.lit(int(p.shape[1])),
     )
 
 

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd  # noqa: F401 — resolves pandas_udf type hints (PEP 563)
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -723,20 +722,15 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- dot-product strategy --------------------------------------------------
-# Two regimes, chosen deliberately (measured):
-# - VERIFY dots (exact cosine on candidates / the brute-force baseline)
-#   are one compiled kernel call per row (dedup.cosine_seq ->
-#   equi7_cosine_seq): they must match DuckDB's list_dot_product
-#   summation order exactly, and the kernel accumulates left to right
-#   like the sequential F.aggregate fold it replaced. (An unrolled
-#   element_at sum is value-identical and codegen-able, but 96 dots x
-#   64 terms made a ~6k-node expression tree whose Catalyst planning +
-#   codegen took 40s.)
-# - BUCKET/SIGNATURE dots (LSH banding) go through ONE vectorized
-#   Arrow pass (numpy matmul): only the SIGN is consumed, and the
-#   minimum |dot| over every (vector, plane) pair in the test sets is
-#   >= 5e-6 — ten orders of magnitude above summation-order noise — so
-#   cross-engine sign parity is unconditional.
+# Every dot product is a compiled kernel call accumulating left to
+# right, the order of DuckDB's list_dot_product: the cosine verify
+# (dedup.cosine_seq -> equi7_cosine_seq) and every LSH bucket sign
+# (equi7_sign_buckets, equi7_emb_buckets). (An unrolled element_at sum
+# is value-identical and codegen-able, but 96 dots x 64 terms made a
+# ~6k-node expression tree whose Catalyst planning + codegen took 40s.)
+# Bucket ids consume only the SIGN, and the minimum |dot| over every
+# (vector, plane) pair in the test sets is >= 5e-6, so their
+# cross-engine parity does not even need the shared order.
 # Cosine normalizations use try_divide: a zero-norm vector throws
 # DIVIDE_BY_ZERO under Spark 4 ANSI while DuckDB yields NULL; NULL
 # cosines sort NULLS LAST under DESC in both engines and fail every
@@ -1127,45 +1121,6 @@ def _nd_sql_planes() -> str:
     )
 
 
-_BUCKET_UDFS: dict[str, object] = {}
-
-
-def _nd_buckets_udf(col):
-    """All 24 band buckets per vector in ONE vectorized Arrow pass
-    (numpy matmul) — only the dot SIGNS are consumed, and min |dot|
-    over the test sets is >= 5e-6 (see the dot-product strategy note),
-    so the bucket ids are summation-order-independent and match the
-    DuckDB oracle's list_dot_product CASE arithmetic unconditionally."""
-    if "nd" not in _BUCKET_UDFS:
-        import numpy as np
-        import pandas as pd
-
-        P = np.array(_nd_planes(), dtype=np.float64)  # 2*bands x dim
-
-        @F.pandas_udf("array<int>")
-        def buckets(v: pd.Series) -> pd.Series:
-            if not len(v):
-                return pd.Series([], dtype=object)
-            # NULL embedding -> every band bucket 0, matching both the
-            # fold semantics (when(NULL > 0) falls to otherwise(0)) and
-            # the oracle's CASE over list_dot_product(NULL)
-            ok = v.notna().to_numpy()
-            out = np.empty(len(v), dtype=object)
-            zero = np.zeros(P.shape[0] // 2, dtype=np.int32)
-            for i in np.flatnonzero(~ok):
-                out[i] = zero
-            if ok.any():
-                V = np.array(v[ok].tolist(), dtype=np.float64)
-                S = (V @ P.T) > 0  # n x 2*bands
-                B = S[:, 0::2].astype(np.int32) * 2 + S[:, 1::2].astype(np.int32)
-                for i, row in zip(np.flatnonzero(ok), B):
-                    out[i] = row
-            return pd.Series(out)
-
-        _BUCKET_UDFS["nd"] = buckets
-    return _BUCKET_UDFS["nd"](col)
-
-
 @register(
     "embedding_near_dup",
     f"""
@@ -1197,8 +1152,9 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-banded near-duplicate pairs: candidates come from a
     24-band x 2-plane hyperplane LSH (the bucket id is the join key —
     the shuffle moves (band, bucket, vec) tuples, never all pairs),
-    then ONLY candidates get the exact cosine verify. Banding runs as
-    ONE vectorized Arrow matmul pass (_nd_buckets_udf).
+    then ONLY candidates get the exact cosine verify. Banding and the
+    verify are compiled kernel calls (equi7_sign_buckets,
+    equi7_cosine_seq): the plan has no Python stage.
 
     Band granularity is threshold-driven: this query's 0.45 threshold
     (the test data's near-dup pairs sit at cos 0.45-0.65) forces
@@ -1210,15 +1166,21 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-linear in n; the bucket width is a parameter of the
     threshold, not of the engine design. The DuckDB oracle mirrors
     the banding literally, so the gate stays value-exact."""
+    import numpy as np
+
+    from equi7grid_spark.operators import kernel
     from equi7grid_spark.operators.partitioning import spread_small_input
 
+    kernel.require_kernel(spark, "embedding_near_dup banding")
     e = _t(spark, sf_dir, "embeddings")
     ev = spread_small_input(e.filter(F.col("embedding").isNotNull())).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    bands = ev.select(
-        "vec_id", F.posexplode(_nd_buckets_udf(F.col("v"))).alias("band", "bucket")
-    )
+    # the oracle's band value is 2 * (p1 dot > 0) + (p2 dot > 0): bit 0
+    # of band b is plane 2b+1, bit 1 is plane 2b
+    planes = np.array(_nd_planes()).reshape(_ND_BANDS, 2, -1)[:, ::-1]
+    buckets = kernel.sign_buckets_col(F.col("v"), planes)
+    bands = ev.select("vec_id", F.posexplode(buckets).alias("band", "bucket"))
     x = bands.select(
         F.col("vec_id").alias("a"), F.col("band").alias("band_a"), F.col("bucket").alias("bucket_a")
     )
@@ -1264,34 +1226,6 @@ def _sql_plane(j: int) -> str:
     return "[" + ",".join(repr(v) for v in _lsh_plane(j)) + "]::DOUBLE[]"
 
 
-def _lsh_bucket_udf(col):
-    """Single hyperplane-LSH bucket id per vector, one Arrow pass
-    (sign-only consumption — see _nd_buckets_udf on why this is
-    summation-order-safe vs the DuckDB oracle)."""
-    if "lsh" not in _BUCKET_UDFS:
-        import numpy as np
-        import pandas as pd
-
-        P = np.array([_lsh_plane(j) for j in range(_N_PLANES)], dtype=np.float64)
-        w = 1 << np.arange(_N_PLANES)
-
-        @F.pandas_udf("int")
-        def bucket(v: pd.Series) -> pd.Series:
-            if not len(v):
-                return pd.Series([], dtype="int32")
-            # NULL embedding -> bucket 0 (see _nd_buckets_udf)
-            ok = v.notna().to_numpy()
-            out = np.zeros(len(v), dtype=np.int32)
-            if ok.any():
-                V = np.array(v[ok].tolist(), dtype=np.float64)
-                S = (V @ P.T) > 0
-                out[ok] = (S * w).sum(axis=1).astype("int32")
-            return pd.Series(out)
-
-        _BUCKET_UDFS["lsh"] = bucket
-    return _BUCKET_UDFS["lsh"](col)
-
-
 @register(
     "ann_lsh_bucketed",
     f"""
@@ -1330,6 +1264,7 @@ def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     10^12 rows the bucket id becomes the shuffle/partition key."""
     from pyspark.sql import Window
 
+    from equi7grid_spark.operators import kernel
     from equi7grid_spark.operators.partitioning import spread_small_input
 
     e = _t(spark, sf_dir, "embeddings")
@@ -1337,13 +1272,15 @@ def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     # eager checkpoint: the query and candidate branches are two plan
-    # consumers of `ev` — without it the scan + Arrow banding UDF run
-    # TWICE (one per join side). Interleaved A/B at sf1: min 2.54s →
-    # 1.13s noop. Eager per the r5 lazy-cache race lesson; the frame is
-    # O(n) vector rows, the same bytes the join must materialize anyway.
-    ev = base.select(
-        "vec_id", "v", _lsh_bucket_udf(F.col("v")).alias("bucket")
-    ).localCheckpoint()
+    # consumers of `ev` — without it the scan + banding run TWICE (one
+    # per join side; interleaved A/B at sf1 when the banding was an
+    # Arrow UDF: min 2.54s → 1.13s noop). Eager per the r5 lazy-cache
+    # race lesson; the frame is O(n) vector rows, the same bytes the
+    # join must materialize anyway.
+    kernel.require_kernel(spark, "ann_lsh_bucketed banding")
+    planes = [[_lsh_plane(j) for j in range(_N_PLANES)]]  # one band
+    bucket = kernel.sign_buckets_col(F.col("v"), planes)[0]
+    ev = base.select("vec_id", "v", bucket.alias("bucket")).localCheckpoint()
     q = ev.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv"), "bucket"
     )
@@ -1468,8 +1405,9 @@ def q_zone_assign_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone assignment counts, value-exact over BOTH domains: 'full'
     (every row, boundary cells resolved by the exact parity PIP —
     oracle mirrors it via the inline edge tables, functions/zones_sql)
-    and 'decided' (the 95.8% prefilter-decided subset via the
-    64,800-digit cell map, exercising the broadcast-join-only plan)."""
+    and 'decided' (the 95.8% prefilter-decided subset: one compiled
+    equi7_decided_zone filter in Spark, the 64,800-digit cell map in
+    the oracle)."""
     full = q_zone_assign_full_counts(spark, sf_dir)
     dec = q_zone_assign_decided_counts(spark, sf_dir)
     return full.withColumn("domain", F.lit("full")).unionByName(
@@ -1575,22 +1513,28 @@ def q_tile_assign_t6_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tile_counts_jvm(pts, tiling_id="T6").select("subgrid", "tilename", "n")
 
 
-def _decided_pts_sql() -> str:
-    """CTE body `dec`: derived lonlat points restricted to 1-degree
-    cells whose primary zone the prefilter alone decides (digit 0..6 of
-    the engine's decided-cell map — functions/geodesy_sql)."""
+def _sql_decided(id_col: str, src: str) -> str:
+    """CTEs `coded` and `dec` (id_col, lon, lat, zc): the rows of `src`
+    in 1-degree cells whose primary zone the prefilter alone decides
+    (digit 0..6 of the engine's decided-cell map —
+    functions/geodesy_sql). SQL twin of _decided."""
     from equi7grid_spark.functions.geodesy_sql import cell_id_sql, decided_digit_string
 
     digits = decided_digit_string()
-    return f"""
-    pts AS ({_SQL_DERIVED_LONLAT}),
-    coded AS (
-      SELECT pt_id, lon, lat,
+    return f"""coded AS (
+      SELECT {id_col}, lon, lat,
              CAST(substr('{digits}', {cell_id_sql()} + 1, 1) AS TINYINT) AS zc
-      FROM pts
+      FROM {src}
     ),
     dec AS (SELECT * FROM coded WHERE zc <= 6)
     """
+
+
+def _decided_pts_sql() -> str:
+    """CTE body `dec`: derived lonlat points in decided cells."""
+    return f"""
+    pts AS ({_SQL_DERIVED_LONLAT}),
+    {_sql_decided("pt_id", "pts")}"""
 
 
 _SQL_SUBGRID = "list_extract(['AF','AN','AS','EU','OC','NA','SA'], zc + 1)"
@@ -1604,19 +1548,17 @@ def _oracle_zone_assign_decided() -> str:
     """
 
 
-def _spark_decided_pts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark twin of _decided_pts_sql: broadcast cell-map join, keep
-    only prefilter-decided rows (zc 0..6). Zero Python, zero shuffles."""
-    from equi7grid_spark.operators.assign_jvm import cell_id_col, cell_map_df
+def _decided(df: DataFrame) -> DataFrame:
+    """Rows of df (lon, lat) whose 1-degree cell the prefilter alone
+    decides, with that zone code as zc (tinyint 0..6): one compiled
+    equi7_decided_zone call per row, no join, no Python. The
+    explode-of-one barrier keeps the not-null filter from being pushed
+    down as a second evaluation of the call."""
+    from equi7grid_spark.operators import kernel
 
-    pts = _derived_lonlat(spark, sf_dir)
-    d = pts.withColumn("__cell", cell_id_col(F.col("lon"), F.col("lat")))
-    cells = cell_map_df(spark).withColumnRenamed("cell_id", "__cell")
-    return (
-        d.join(F.broadcast(cells), "__cell")
-        .filter(F.col("zc") >= 0)
-        .drop("__cell")
-    )
+    kernel.require_kernel(df.sparkSession, "the decided-cell zone lookup")
+    zc = F.explode(F.array(kernel.decided_zone_col(F.col("lon"), F.col("lat"))))
+    return df.withColumn("zc", zc).filter(F.col("zc").isNotNull())
 
 
 def q_zone_assign_decided_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1624,10 +1566,11 @@ def q_zone_assign_decided_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset (95.8% of cells; the boundary-cell PIP remainder is covered
     by the full rows-only zone_assign_counts + the golden test suite).
     The oracle embeds the engine's 64,800-digit cell map as a substr
-    lookup, so the Spark broadcast join and the SQL agree cell by cell."""
+    lookup and the jar bakes the same map (equi7_decided_zone), so the
+    two agree cell by cell."""
     from equi7grid_spark.operators.assign_jvm import subgrid_from_code
 
-    d = _spark_decided_pts(spark, sf_dir)
+    d = _decided(_derived_lonlat(spark, sf_dir))
     return (
         d.groupBy("zc")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1693,7 +1636,7 @@ def q_tile_assign_decided_t6_counts(spark: SparkSession, sf_dir: str) -> DataFra
     (equi7_xy). Outputs are tile indices/counts — floor-robust against
     the <1e-6 m cross-engine convergence slack — on the decided-cell
     subset (boundary-cell PIP stays rows-only in tile_assign_t6_counts)."""
-    d = _spark_decided_pts(spark, sf_dir).select("zc", "lon", "lat")
+    d = _decided(_derived_lonlat(spark, sf_dir)).select("zc", "lon", "lat")
     return _t6_counts_from_proj(_aeqd_proj(d))
 
 
@@ -2379,42 +2322,22 @@ def _host_cached_fixture(
 
 
 def _spark_decided_images(spark: SparkSession) -> DataFrame:
-    """Decided-cell subset of the synthetic images table (zc 0..6
-    resolved by the broadcast cell map alone; boundary cells dropped)."""
+    """Decided-cell subset of the synthetic images table (zc 0..6 from
+    the prefilter alone, _decided; boundary cells dropped)."""
     from equi7grid_spark.images import synthetic_images
-    from equi7grid_spark.operators.assign_jvm import cell_id_col, cell_map_df
 
-    imgs = synthetic_images(spark, _N_IMG_ORACLE, with_bytes=False).select(
-        "image_id", "lon", "lat"
-    )
-    d = imgs.withColumn("__cell", cell_id_col(F.col("lon"), F.col("lat")))
-    cells = cell_map_df(spark).withColumnRenamed("cell_id", "__cell")
-    return (
-        d.join(F.broadcast(cells), "__cell")
-        .filter(F.col("zc") >= 0)
-        .drop("__cell")
-    )
+    imgs = synthetic_images(spark, _N_IMG_ORACLE, with_bytes=False)
+    return _decided(imgs.select("image_id", "lon", "lat"))
 
 
 def _sql_decided_images() -> str:
     """CTE chain ending in `dec` (img_id, lon, lat, zc): SQL twin of
     _spark_decided_images."""
-    from equi7grid_spark.functions.geodesy_sql import (
-        cell_id_sql,
-        decided_digit_string,
-    )
     from equi7grid_spark.functions.images_sql import synthetic_lonlat_sql
 
-    digits = decided_digit_string()
     return f"""
     {synthetic_lonlat_sql(_N_IMG_ORACLE)},
-    coded AS (
-      SELECT img_id, lon, lat,
-             CAST(substr('{digits}', {cell_id_sql()} + 1, 1) AS TINYINT) AS zc
-      FROM img
-    ),
-    dec AS (SELECT * FROM coded WHERE zc <= 6)
-    """
+    {_sql_decided("img_id", "img")}"""
 
 
 _IMG_ROI_BBOX = (0.0, 40.0, 30.0, 55.0)

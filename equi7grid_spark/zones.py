@@ -229,10 +229,12 @@ def decided_cell_codes(
     - -1    : all zones OUT → out of every zone;
     - -2    : the first non-OUT zone is BOUNDARY → needs exact PIP.
 
-    The compiled kernel bakes this map into the jar
-    (scripts/build_zonedata.py) and the decided-subset queries join it
-    (operators/assign_jvm.cell_map_df): 95.8% of cells (99.5% of the
-    land-biased bench rows) decide here.
+    The compiled kernel bakes the default-order map into the jar
+    (scripts/build_zonedata.py): the zone resolve reads it first, the
+    decided-subset queries filter on it (equi7_decided_zone) and their
+    oracles splice it as a digit string
+    (functions/geodesy_sql.decided_digit_string). 95.8% of cells
+    (99.5% of the land-biased bench rows) decide here.
     Non-buffered zones only — buffered zones overlap, so a single
     primary code is not the right shape there.
     """

@@ -110,9 +110,12 @@ def dump(sf_dir: str, tmp: str) -> list[tuple[str, str, str]]:
     dec = queries()["tile_assign_decided_t6_counts"](spark, sf_dir)
     sections.append((
         "Decided-cell tile assignment (the DuckDB-oracled geodesic core)",
-        "Broadcast 64,800-row cell map join decides the zone; the AEQD "
-        "forward is one compiled equi7_xy call per row, no Python, one "
-        "aggregation shuffle on (zc, tx, ty) ints.",
+        "One compiled equi7_decided_zone call per row reads the jar's "
+        "64,800-cell map and keeps the prefilter-decided rows (behind an "
+        "explode-of-one barrier, so the not-null filter is not a second "
+        "call); the AEQD forward is one compiled equi7_xy call per row. "
+        "No join, no Python, one aggregation shuffle on (zc, tx, ty) "
+        "ints.",
         plan_of(dec),
     ))
 
@@ -205,7 +208,7 @@ def dump(sf_dir: str, tmp: str) -> list[tuple[str, str, str]]:
     roi_dec = q_images_in_roi_decided(spark, sf_dir)
     sections.append((
         "Image ROI selection, decided subset (round-3 oracled pipeline)",
-        "Synthesis (mapInPandas) → broadcast cell-map zone resolve → "
+        "Synthesis (mapInPandas) → compiled equi7_decided_zone filter → "
         "compiled-kernel AEQD → broadcast semi-join against the ROI "
         "tile list → agg: the ROI list is catalog-sized so the "
         "semi-join is BroadcastHashJoin(LeftSemi); one aggregation "
@@ -216,11 +219,14 @@ def dump(sf_dir: str, tmp: str) -> list[tuple[str, str, str]]:
     mme = queries()["image_multimodal_embed_near_dup"](spark, sf_dir)
     sections.append((
         "Three-signal multimodal dedup (phash OR caption OR embedding, r5)",
-        "The embedding signal adds a hyperplane-LSH banding pass (one "
-        "Arrow matmul per batch -> (band, bucket) keys), the shared "
-        "skew-chunked pair join, and an exact-cosine verify on "
-        "candidates only; the three signal pair sets merge through two "
-        "TRUE-PAIR-sized full outer joins. Still no cartesian: every "
+        "The embedding signal adds hyperplane-LSH (band, bucket) keys "
+        "from one compiled equi7_emb_buckets call per row to the one "
+        "keyed pair enumeration of the phash and caption signals; "
+        "candidates flagged by the embedding signal get an exact "
+        "cosine verify (one compiled equi7_cosine_seq call per pair). "
+        "The plan below is that verify and the broadcast provenance "
+        "merge, over localCheckpoints of the input and of the pair "
+        "aggregation. Still no cartesian: every "
         "shuffle keys on band values, caption md5s, or LSH buckets.",
         plan_of(mme),
     ))

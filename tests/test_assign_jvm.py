@@ -13,13 +13,9 @@ from pyspark.sql import functions as F
 
 from equi7grid_spark.constants import DEFAULT_SYSTEM_ORDER, TILING_ID_TO_SIZE
 from equi7grid_spark.geodesy import aeqd_forward
-from equi7grid_spark.operators.assign_jvm import (
-    assign_tiles_jvm,
-    cell_code_pdf,
-    tile_counts_jvm,
-)
+from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm, tile_counts_jvm
 from equi7grid_spark.tile import Tile
-from equi7grid_spark.zones import assign_primary_zone_code
+from equi7grid_spark.zones import assign_primary_zone_code, decided_cell_codes
 
 
 def _golden(lon, lat, tiling_id="T6", sampling=500.0) -> pd.DataFrame:
@@ -96,15 +92,13 @@ def _inzone_grid(step=1.5):
 def test_cell_map_decided_agrees_with_exact(spark):
     """Every decided cell's code must equal the exact kernel's answer
     for points sampled inside the cell (4 interior samples/cell)."""
-    codes = cell_code_pdf()
-    dec = codes[codes["zc"] >= 0]
-    ix = (dec["cell_id"] // 180).to_numpy()
-    iy = (dec["cell_id"] % 180).to_numpy()
+    codes = decided_cell_codes()  # [360, 180]
+    ix, iy = np.nonzero(codes >= 0)
     for fx, fy in [(0.25, 0.25), (0.75, 0.25), (0.25, 0.75), (0.75, 0.75)]:
         lo = ix - 180.0 + fx
         la = iy - 90.0 + fy
         exact = assign_primary_zone_code(lo, la)
-        assert (exact == dec["zc"].to_numpy()).all()
+        assert (exact == codes[ix, iy]).all()
 
 
 def _points(spark, sf_dir):
@@ -122,10 +116,7 @@ def test_tile_counts_jvm_equals_pandas_path(spark, sf_dir, tiling_id):
 def test_tile_counts_jvm_boundary_heavy(spark):
     """Grid that oversamples prefilter-boundary cells (the kernel's
     exact parity resolve) — counts must still match the NumPy golden."""
-    codes = cell_code_pdf()
-    und = codes[codes["zc"] == -2].head(400)
-    ix = (und["cell_id"] // 180).to_numpy()
-    iy = (und["cell_id"] % 180).to_numpy()
+    ix, iy = (a[:400] for a in np.nonzero(decided_cell_codes() == -2))
     pts = []
     for fx in (0.1, 0.5, 0.9):
         for fy in (0.1, 0.5, 0.9):

@@ -121,7 +121,7 @@ def test_kernel_registers_zone_xy(spark):
     from equi7grid_spark.operators import kernel
 
     kernel.require_kernel(spark, "this test")
-    for name in ("equi7_zone_xy", "equi7_zone_members", "equi7_cosine_seq", "equi7_emb_buckets"):
+    for name, _, _ in kernel._ENTRIES:
         assert spark.catalog.functionExists(name), name
     (row,) = spark.sql("SELECT equi7_zone_xy(15.0D, 48.0D) AS v").collect()
     assert len(row.v) == 3 and row.v[0] == 3.0  # EU
@@ -135,6 +135,7 @@ def test_kernel_registers_zone_xy(spark):
 # every geodesic entry and the arguments it takes, in call order
 GEODESIC_ENTRIES = {
     "equi7_zone_xy": ("lon", "lat"),
+    "equi7_decided_zone": ("lon", "lat"),
     "equi7_zone_members": ("lon", "lat"),
     "equi7_zone_tile_key": ("lon", "lat", "ts"),
     "equi7_roundtrip_zone_tile_key": ("lon", "lat", "ts"),
@@ -303,8 +304,12 @@ def test_vector_entries_hostile_input_never_throws(spark):
     oracle's CASE WHEN dot > 0 sign bits for every non-null array (a
     null element counts as NaN, so zero, empty, NaN and null-element
     vectors land in bucket 0 of every band); only a null array gives
-    null. No row fails the job."""
+    null. equi7_sign_buckets given EmbBuckets' own 2-dim planes runs
+    the same sign loop, so it equals equi7_emb_buckets on every 2-dim
+    row; it is null for the 3-dim and empty rows, whose length the
+    plane blob does not fit. No row fails the job."""
     from equi7grid_spark.dedup import _emb_buckets_udf, cosine_seq, emb_plane_value
+    from equi7grid_spark.operators.kernel import sign_buckets_col
 
     nan, inf = float("nan"), float("inf")
     rows = [
@@ -318,12 +323,14 @@ def test_vector_entries_hostile_input_never_throws(spark):
         ("ok", [3.0, 4.0], [6.0, 8.0]),
     ]
     df = spark.createDataFrame(rows, "case string, a array<double>, b array<double>")
+    planes = [[[emb_plane_value(b, p, d) for d in range(2)] for p in range(16)] for b in range(8)]
     out = {
-        r.case: (r.c, r.k)
+        r.case: (r.c, r.k, r.s)
         for r in df.select(
             "case",
             cosine_seq(spark, F.col("a"), F.col("b")).alias("c"),
             _emb_buckets_udf(spark, F.col("a"), 8, 16).alias("k"),
+            sign_buckets_col(F.col("a"), planes).alias("s"),
         ).collect()
     }
     for case in ("null_array", "null_element", "zero", "lengths", "empty"):
@@ -344,6 +351,127 @@ def test_vector_entries_hostile_input_never_throws(spark):
             for b in range(8)
         ]
         assert list(out[case][1]) == want, case
+    for case, (_, k, s) in out.items():
+        if case in ("null_array", "lengths", "empty"):
+            assert s is None, case
+        else:
+            assert list(s) == list(k), case
+
+
+def _sign_buckets(spark, V, planes) -> list:
+    from equi7grid_spark.operators import kernel
+
+    kernel.require_kernel(spark, "this test")
+    df = spark.createDataFrame(list(enumerate(V)), "i int, v array<double>")
+    rows = df.select("i", kernel.sign_buckets_col(F.col("v"), planes).alias("k"))
+    return [r.k for r in sorted(rows.collect())]
+
+
+def test_sign_buckets_equal_numpy_sign_bits(spark):
+    """equi7_sign_buckets with the fixed planes of embedding_near_dup
+    (24 bands x 2 planes, fed as plane 2b+1 then 2b) and
+    ann_lsh_bucketed (1 band x 3 planes) gives the bucket ids of the
+    oracles' CASE arithmetic, from NumPy sign bits; zero, NaN and
+    null-element vectors get bucket 0 in every band."""
+    from equi7grid_spark.queries import _ND_BANDS, _N_PLANES, _lsh_plane, _nd_planes
+
+    rng = np.random.default_rng(11)
+    V = rng.normal(size=(200, 64)).tolist()
+    V += [[0.0] * 64, [1.0] * 63 + [float("nan")], [1.0] * 63 + [None]]
+    X = np.array([[np.nan if x is None else x for x in v] for v in V])
+
+    nd = np.array(_nd_planes())
+    S = (X @ nd.T) > 0
+    want = S[:, 0::2] * 2 + S[:, 1::2]
+    got = _sign_buckets(spark, V, nd.reshape(_ND_BANDS, 2, 64)[:, ::-1])
+    np.testing.assert_array_equal(np.array(got), want)
+
+    lsh = np.array([_lsh_plane(j) for j in range(_N_PLANES)])
+    want = ((X @ lsh.T) > 0) @ (1 << np.arange(_N_PLANES))
+    got = _sign_buckets(spark, V, lsh[None])
+    np.testing.assert_array_equal(np.array(got)[:, 0], want)
+    assert (want[-3:] == 0).all() and len(set(want)) == 8
+
+
+def test_sign_buckets_bad_arguments_are_null(spark):
+    """A null array, an empty array, n_planes outside 1..31 or a plane
+    blob that is not a positive multiple of 8 * n_planes * dim bytes
+    gives null; the well-formed row of each case does not."""
+    from equi7grid_spark.operators import kernel
+
+    kernel.require_kernel(spark, "this test")
+    blob = np.ones(2 * 3 * 4, dtype="<f8").tobytes()  # 2 bands x 3 planes x dim 4
+    cases = {
+        "ok": ([1.0] * 4, blob, 3),
+        "null_array": (None, blob, 3),
+        "empty": ([], blob, 3),
+        "null_blob": ([1.0] * 4, None, 3),
+        "blob_not_multiple": ([1.0] * 4, blob[:-8], 3),
+        "blob_empty": ([1.0] * 4, b"", 3),
+        "dim_mismatch": ([1.0] * 5, blob, 3),
+        "n_planes_0": ([1.0] * 4, blob, 0),
+        "n_planes_32": ([1.0] * 4, blob, 32),
+        "n_planes_null": ([1.0] * 4, blob, None),
+    }
+    df = spark.createDataFrame(
+        [(k, *v) for k, v in cases.items()], "case string, v array<double>, p binary, n int"
+    )
+    out = {
+        r.case: r.k
+        for r in df.select(
+            "case", F.call_udf("equi7_sign_buckets", "v", "p", "n").alias("k")
+        ).collect()
+    }
+    assert out.pop("ok") == [7, 7]
+    assert out == {k: None for k in out}
+
+
+def test_decided_zone_equals_decided_cell_codes(spark):
+    """equi7_decided_zone at every 1-degree cell centre is the cell's
+    zones.decided_cell_codes entry, null where that is negative (-2:
+    needs the exact boundary parity; -1: out of every zone)."""
+    from equi7grid_spark.operators import kernel
+    from equi7grid_spark.zones import PF_NX, PF_NY, decided_cell_codes
+
+    kernel.require_kernel(spark, "this test")
+    codes = decided_cell_codes().ravel()  # cell_id = ix * PF_NY + iy
+    cell = np.arange(PF_NX * PF_NY)
+    pdf = pd.DataFrame(
+        {"cell": cell, "lon": cell // PF_NY - 179.5, "lat": cell % PF_NY - 89.5}
+    )
+    got = (
+        spark.createDataFrame(pdf)
+        .select("cell", kernel.decided_zone_col(F.col("lon"), F.col("lat")).alias("zc"))
+        .orderBy("cell")
+        .toPandas()["zc"]
+    )
+    want = pd.Series(np.where(codes >= 0, codes, np.nan))
+    np.testing.assert_array_equal(got.to_numpy(dtype=float), want.to_numpy())
+    assert (codes == -2).any()  # the std zones leave no -1 cell
+
+
+def test_kernel_registers_on_every_new_session(spark):
+    """Kernel state is keyed on the session object, not on id(session):
+    a dropped session is collected and forgotten, and a new session
+    that happens to get the id of a collected one still registers the
+    kernel (it once skipped registration and failed with
+    UNRESOLVED_ROUTINE)."""
+    import gc
+    import weakref
+
+    from equi7grid_spark.operators import kernel
+
+    dropped = []
+    for _ in range(30):
+        s = spark.newSession()
+        kernel.require_kernel(s, "this test")
+        (row,) = s.sql("SELECT equi7_zone_xy(15.0D, 48.0D) AS v").collect()
+        assert row.v[0] == 3.0
+        dropped.append(weakref.ref(s))
+        del s, row
+        gc.collect()
+    # pyspark's RDD.toDF patch holds the newest session until the next
+    assert all(ref() is None for ref in dropped[:-1])
 
 
 def test_vector_entries_run_on_the_owning_session(spark):

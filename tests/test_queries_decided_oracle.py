@@ -37,21 +37,12 @@ def test_decided_plus_boundary_partitions_full_zone_counts(spark):
     full = {r["subgrid"]: r["n"] for r in both if r["domain"] == "full"}
     decided = {r["subgrid"]: r["n"] for r in both if r["domain"] == "decided"}
     # remainder = full engine assignment restricted to non-decided cells
-    from equi7grid_spark.operators.assign_jvm import (
-        assign_tiles_jvm,
-        cell_id_col,
-        cell_map_df,
-    )
+    from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm
+    from equi7grid_spark.operators.kernel import decided_zone_col
     from equi7grid_spark.queries import _derived_lonlat
 
     pts = _derived_lonlat(spark, SF)
-    cells = cell_map_df(spark).withColumnRenamed("cell_id", "__cell")
-    rem_pts = (
-        pts.withColumn("__cell", cell_id_col(F.col("lon"), F.col("lat")))
-        .join(F.broadcast(cells), "__cell")
-        .filter(F.col("zc") < 0)
-        .drop("__cell", "zc")
-    )
+    rem_pts = pts.filter(decided_zone_col(F.col("lon"), F.col("lat")).isNull())
     remainder = {
         r["subgrid"]: r["n"]
         for r in assign_tiles_jvm(rem_pts, tiling_id="T6")

@@ -113,12 +113,30 @@ def test_corpus_curation_plan_shape(spark):
 
 
 def test_decided_tile_assign_plan_is_jvm_only(spark):
-    """The oracled geodesic query: broadcast cell-map join + Column
-    Vincenty, zero Python, a single aggregation shuffle."""
+    """The oracled geodesic query: one equi7_decided_zone filter and the
+    compiled Vincenty, no join, zero Python, a single aggregation
+    shuffle."""
     plan = _physical(QUERIES["tile_assign_decided_t6_counts"](spark, SF))
-    assert "BroadcastHashJoin" in plan
+    assert "Join" not in plan
+    assert plan.count("equi7_decided_zone(") == 1
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
+
+
+@pytest.mark.parametrize("name", ["embedding_near_dup", "ann_lsh_bucketed"])
+def test_lsh_banding_runs_no_python(spark, name):
+    """Sign-LSH banding is one compiled equi7_sign_buckets call: no SQL
+    execution the query runs (ann_lsh_bucketed's eager checkpoint
+    included) has an Arrow or Batch Python eval node."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n0 = store.executionsCount()
+    QUERIES[name](spark, SF).collect()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = store.executionsList(n0, 1000)
+    plans = [execs.apply(i).physicalPlanDescription() for i in range(execs.size())]
+    assert any("equi7_sign_buckets(" in p for p in plans)
+    for p in plans:
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
 def test_multimodal_near_dup_plan_shape(spark):

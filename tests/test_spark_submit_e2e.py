@@ -76,6 +76,9 @@ def test_spark_submit_packaged_flagship(tmp_path):
     with zipfile.ZipFile(zip_path) as zf:
         names = zf.namelist()
         assert "equi7grid_spark/jvm/equi7-kernel.jar" in names
+        # the jar holds the classes and zone resources; no build input ships
+        jvm = [n for n in names if n.startswith("equi7grid_spark/jvm/")]
+        assert not [n for n in jvm if n.endswith((".java", ".bin"))], jvm
         assert any(n.startswith("equi7grid_spark/data/") for n in names)
 
     script = tmp_path / "driver.py"
