@@ -649,27 +649,6 @@ def phash_dup_clusters(
     )
 
 
-def caption_dup_pairs(
-    imgs: DataFrame,
-    id_col: str = "image_id",
-    caption_col: str = "caption",
-    chunk_size: int = 2048,
-) -> DataFrame:
-    """Exact caption-duplicate pairs (id_a, id_b), id_a < id_b — the
-    pair-level view of exact text dedup, for the cross-signal merge
-    (multimodal_near_dup). Buckets on md5(caption) (engine-independent
-    hash) and enumerates within-bucket pairs through the same id-range
-    chunking as phash_near_dup, so a caption shared by millions of
-    rows (boilerplate alt-text is the textual twin of the flat-image
-    phash collapse) is bounded per task. Each qualifying pair is
-    emitted exactly once by construction (single bucket per pair), so
-    no distinct shuffle is needed."""
-    e = imgs.filter(
-        F.col(caption_col).isNotNull() & F.col(id_col).isNotNull()
-    ).select(F.col(id_col).alias("id"), F.md5(caption_col).alias("ch"))
-    return _chunked_pair_join(e, ["ch"], [], chunk_size).select("id_a", "id_b")
-
-
 # hyperplane-LSH banding for the embedding signal: deterministic
 # integer-valued planes so the DuckDB oracle can ship them as literal
 # arrays (sign-of-dot consumption is summation-order-safe per the
@@ -742,64 +721,6 @@ def cosine_seq(spark: SparkSession, va: Column, vb: Column) -> Column:
 
     require_kernel(spark, "cosine_seq")
     return cosine_seq_col(va, vb)
-
-
-def embedding_near_dup_pairs(
-    imgs: DataFrame,
-    id_col: str = "image_id",
-    embedding_col: str = "embedding",
-    threshold: float = 0.98,
-    n_bands: int = EMB_N_BANDS,
-    n_planes: int = EMB_N_PLANES,
-    chunk_size: int = 2048,
-) -> DataFrame:
-    """Embedding near-duplicate pairs (id_a, id_b, cosine) with
-    id_a < id_b and cosine >= threshold, via hyperplane-LSH banding:
-    n_bands independent n_planes-bit sign signatures; rows sharing a
-    (band, bucket) are candidates; ONLY candidates get the exact
-    cosine verify. Identical vectors collide in every band, so
-    exact-duplicate recall is 1.0 by construction; near-but-not-equal
-    recall is a (n_bands, n_planes) trade chosen by the caller's
-    threshold (see q_embedding_near_dup for the banding-width
-    discussion). Candidate enumeration goes through the shared
-    skew-chunked pair join — a degenerate corpus collapsing onto one
-    embedding (the vector twin of the flat-image phash collapse)
-    bounds every task at chunk_size^2 pairs. The shuffle keys on
-    (band, bucket) ints; no all-pairs product anywhere."""
-    e = imgs.filter(
-        F.col(embedding_col).isNotNull() & F.col(id_col).isNotNull()
-    ).select(
-        F.col(id_col).alias("id"),
-        F.col(embedding_col).cast("array<double>").alias("v"),
-    )
-    b = e.select(
-        "id",
-        F.posexplode(
-            _emb_buckets_udf(e.sparkSession, F.col("v"), n_bands, n_planes)
-        ).alias(
-            "band", "bucket"
-        ),
-    )
-    cand = (
-        _chunked_pair_join(b, ["band", "bucket"], [], chunk_size)
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    ea = e.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
-    eb = e.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
-    j = cand.join(ea, "id_a").join(eb, "id_b")
-    # compiled sequential-order cosine (bit-identical to the HOF
-    # chain — see cosine_seq); the Generate barrier keeps the >=
-    # threshold filter from duplicating the evaluation (guide §4.4 —
-    # PushDownPredicate would substitute the aliased expression into
-    # the filter/join condition; measured 6.1s -> sub-second on the
-    # fixture back when this was the interpreted HOF).
-    cos = cosine_seq(e.sparkSession, F.col("va"), F.col("vb"))
-    return (
-        j.withColumn("_cos", F.explode(F.array(cos)))
-        .filter(F.col("_cos") >= threshold)
-        .select("id_a", "id_b", F.round("_cos", 9).alias("cosine"))
-    )
 
 
 def multimodal_near_dup(
@@ -957,9 +878,11 @@ def multimodal_near_dup(
         ea, "id_a"
     ).join(eb, "id_b")
     # compiled sequential-order cosine (bit-identical to the HOF
-    # chain — cosine_seq); Generate barrier as in
-    # embedding_near_dup_pairs keeps the threshold filter from
-    # duplicating the evaluation (guide §4.4)
+    # chain — cosine_seq); the Generate barrier keeps the >= threshold
+    # filter from duplicating the evaluation (guide §4.4 —
+    # PushDownPredicate would substitute the aliased expression into
+    # the filter; measured 6.1s -> sub-second on the fixture back when
+    # this was the interpreted HOF)
     cos = cosine_seq(imgs.sparkSession, F.col("va"), F.col("vb"))
     emb = (
         j.withColumn("_cos", F.explode(F.array(cos)))

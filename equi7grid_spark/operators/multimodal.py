@@ -1,24 +1,35 @@
 """Multimodal column operators: decode / resize / feature-extract /
 frame-sample over opaque binary payload columns.
 
-Image ops are fully real (engine codecs, warp/codecs.py). Audio/video
-decode is STUBBED per SURVEY.md §7.4 — no audio/video libraries exist
-in this environment — but the Spark-side plumbing (schema, batching,
-UDF signatures) is real and tested: a deterministic fake decoder
-(`fake-pcm` / `fake-frames` formats, raw little-endian payloads)
-exercises the identical path; any real container format raises
-NotImplementedError.
+Image ops are fully real (engine codecs, warp/codecs.py) and share one
+decode path: every image operator decodes its Arrow batches with
+codecs.decode_batch. The four per-image operators (image_stats,
+resize_images, image_histogram_features, transcode_images) run through
+one mapInPandas driver, _map_images, and keep only their per-image
+arithmetic; compute_phash decodes the same way and runs its DCT
+batch-wide. A row that cannot be decoded (null bytes or fmt, or a
+truncated, empty or garbage payload, or an unknown fmt) gets null
+outputs instead of failing the job: null px_* in image_stats, null
+bytes in resize_images and transcode_images, null features and null
+phash.
+
+Audio/video decode is STUBBED per SURVEY.md §7.4 — no audio/video
+libraries exist in this environment — but the Spark-side plumbing
+(schema, batching, UDF signatures) is real and tested: a deterministic
+fake decoder (`fake-pcm` / `fake-frames` formats, raw little-endian
+payloads) exercises the identical path; any real container format
+raises NotImplementedError.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from equi7grid_spark.warp.codecs import decode, encode
+from equi7grid_spark.warp.codecs import decode_batch, encode
 
 IMAGE_STATS_SCHEMA = (
     "image_id string, fmt string, w int, h int, "
@@ -26,105 +37,93 @@ IMAGE_STATS_SCHEMA = (
 )
 
 
+def _nearest(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
+    """Nearest-neighbour resample of a 2-D image to (out_h, out_w)."""
+    h2, w2 = arr.shape
+    ri = np.minimum((np.arange(out_h) * h2) // out_h, h2 - 1)
+    ci = np.minimum((np.arange(out_w) * w2) // out_w, w2 - 1)
+    return arr[ri[:, None], ci[None, :]]
+
+
+def _map_images(
+    images: DataFrame,
+    schema: str,
+    per_image: Callable[[np.ndarray], tuple],
+    computed: dict[str, str],
+    constants: dict[str, object] | None = None,
+) -> DataFrame:
+    """The one mapInPandas driver of the per-image operators. Each
+    Arrow batch is decoded once (codecs.decode_batch); `per_image` maps
+    every decoded image to a tuple of values, one per `computed`
+    column (name -> pandas dtype, in tuple order). The columns of
+    `schema` come out in its order: computed, a constant from
+    `constants`, or the input column of that name passed through. An
+    undecodable row gets null in every computed column."""
+    names = [field.split()[0] for field in schema.split(",")]
+    slot = {name: j for j, name in enumerate(computed)}
+    constants = constants or {}
+
+    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            res = [None if a is None else per_image(a) for a in decode_batch(pdf)]
+            out = {}
+            for name in names:
+                if name in slot:
+                    vals = [None if r is None else r[slot[name]] for r in res]
+                    out[name] = pd.array(vals, dtype=computed[name])
+                elif name in constants:
+                    out[name] = [constants[name]] * len(pdf)
+                else:
+                    out[name] = pdf[name].to_numpy()
+            yield pd.DataFrame(out)
+
+    return images.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
+        go, schema=schema
+    )
+
+
 def image_stats(images: DataFrame) -> DataFrame:
     """Decode every image and emit per-image pixel statistics."""
 
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # decode of variable-size binaries is inherently per-row; the
-        # iteration is zip over .values (iterrows costs ~10x more)
-        for pdf in batches:
-            n = len(pdf)
-            mean = np.empty(n)
-            std = np.empty(n)
-            lo = np.empty(n, dtype=np.int32)
-            hi = np.empty(n, dtype=np.int32)
-            it = zip(
-                pdf["bytes"].to_numpy(object),
-                pdf["fmt"].to_numpy(object),
-                pdf["w"].to_numpy(),
-                pdf["h"].to_numpy(),
-            )
-            for i, (b, f, w, h) in enumerate(it):
-                arr = decode(b, f, int(w), int(h))
-                mean[i] = arr.mean()
-                std[i] = arr.std()
-                lo[i] = arr.min()
-                hi[i] = arr.max()
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"].to_numpy(object),
-                    "fmt": pdf["fmt"].to_numpy(object),
-                    "w": pdf["w"].to_numpy(np.int32),
-                    "h": pdf["h"].to_numpy(np.int32),
-                    "px_mean": mean,
-                    "px_std": std,
-                    "px_min": lo,
-                    "px_max": hi,
-                }
-            )
+    def stats(arr: np.ndarray) -> tuple:
+        return arr.mean(), arr.std(), arr.min(), arr.max()
 
-    return images.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
-        go, schema=IMAGE_STATS_SCHEMA
+    return _map_images(
+        images,
+        IMAGE_STATS_SCHEMA,
+        stats,
+        {"px_mean": "float64", "px_std": "float64", "px_min": "Int32", "px_max": "Int32"},
     )
 
 
 def resize_images(images: DataFrame, out_w: int, out_h: int, out_fmt: str = "raw") -> DataFrame:
     """Nearest-neighbor resize of every image to (out_w, out_h)."""
-    schema = "image_id string, bytes binary, w int, h int, fmt string"
 
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = np.empty(len(pdf), dtype=object)
-            it = zip(
-                pdf["bytes"].to_numpy(object),
-                pdf["fmt"].to_numpy(object),
-                pdf["w"].to_numpy(),
-                pdf["h"].to_numpy(),
-            )
-            for i, (b, f, w, h) in enumerate(it):
-                arr = decode(b, f, int(w), int(h))
-                h2, w2 = arr.shape
-                ri = np.minimum((np.arange(out_h) * h2) // out_h, h2 - 1)
-                ci = np.minimum((np.arange(out_w) * w2) // out_w, w2 - 1)
-                out[i] = encode(arr[ri[:, None], ci[None, :]], out_fmt)
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"].to_numpy(object),
-                    "bytes": out,
-                    "w": np.full(len(pdf), out_w, dtype=np.int32),
-                    "h": np.full(len(pdf), out_h, dtype=np.int32),
-                    "fmt": np.full(len(pdf), out_fmt, dtype=object),
-                }
-            )
+    def resize(arr: np.ndarray) -> tuple:
+        return (encode(_nearest(arr, out_w, out_h), out_fmt),)
 
-    return images.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(go, schema=schema)
+    return _map_images(
+        images,
+        "image_id string, bytes binary, w int, h int, fmt string",
+        resize,
+        {"bytes": "object"},
+        {"w": out_w, "h": out_h, "fmt": out_fmt},
+    )
 
 
 def image_histogram_features(images: DataFrame, n_bins: int = 16) -> DataFrame:
     """Per-image normalized intensity histogram as array<double> — a
     deterministic stand-in embedding for similarity search."""
-    schema = "image_id string, features array<double>"
 
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = np.empty(len(pdf), dtype=object)
-            it = zip(
-                pdf["bytes"].to_numpy(object),
-                pdf["fmt"].to_numpy(object),
-                pdf["w"].to_numpy(),
-                pdf["h"].to_numpy(),
-            )
-            for i, (b, f, w, h) in enumerate(it):
-                arr = decode(b, f, int(w), int(h))
-                # bincount on the uint8 ravel beats np.histogram ~5x here
-                counts = np.bincount(arr.ravel(), minlength=256)
-                hist = counts.reshape(n_bins, 256 // n_bins).sum(axis=1)
-                feats[i] = (hist / max(1, arr.size)).astype(np.float64).tolist()
-            yield pd.DataFrame(
-                {"image_id": pdf["image_id"].to_numpy(object), "features": feats}
-            )
+    def histogram(arr: np.ndarray) -> tuple:
+        # bincount on the uint8 ravel beats np.histogram ~5x here
+        counts = np.bincount(arr.ravel(), minlength=256)
+        hist = counts.reshape(n_bins, 256 // n_bins).sum(axis=1)
+        return ((hist / max(1, arr.size)).astype(np.float64).tolist(),)
 
-    return images.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(go, schema=schema)
+    return _map_images(
+        images, "image_id string, features array<double>", histogram, {"features": "object"}
+    )
 
 
 def decode_audio_pcm(data: bytes, fmt: str) -> np.ndarray:
@@ -270,46 +269,38 @@ def compute_phash(images: DataFrame) -> DataFrame:
     dedup.phash_near_dup, completing the bytes -> phash -> banded
     near-dup image-dedup pipeline.
 
-    Decode is per-row (variable-size binaries); the DCT runs as ONE
-    batched tensor contraction over the whole Arrow batch (the
-    per-image 32x32 resamples stack into (K,32,32) and both DCT
-    matmuls apply batch-wide) — same vectorize-the-kernel shape as the
-    LSH banding pass (queries.py embedding_near_dup)."""
+    Decode is per-row (codecs.decode_batch, variable-size binaries);
+    the DCT runs as ONE batched tensor contraction over the decoded
+    rows of the Arrow batch (the per-image 32x32 resamples stack into
+    (K,32,32) and both DCT matmuls apply batch-wide) — the same
+    vectorize-the-kernel shape as phash64 applied K times at once. An
+    undecodable row gets a null phash, which phash_near_dup and
+    multimodal_near_dup drop."""
     schema = "image_id string, phash long"
 
     def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c = _dct32()
-        grid = np.arange(32)
+        weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
         for pdf in batches:
-            k = len(pdf)
-            stack = np.empty((k, 32, 32), dtype=np.float64)
-            it = zip(
-                pdf["bytes"].to_numpy(object),
-                pdf["fmt"].to_numpy(object),
-                pdf["w"].to_numpy(),
-                pdf["h"].to_numpy(),
-            )
-            for i, (b, f, w, h) in enumerate(it):
-                arr = decode(b, f, int(w), int(h))
-                h2, w2 = arr.shape
-                ri = np.minimum((grid * h2) // 32, h2 - 1)
-                ci = np.minimum((grid * w2) // 32, w2 - 1)
-                stack[i] = arr[ri[:, None], ci[None, :]]
+            arrs = decode_batch(pdf)
+            ok = np.array([a is not None for a in arrs], dtype=bool)
+            stack = np.empty((int(ok.sum()), 32, 32), dtype=np.float64)
+            for i, arr in enumerate(a for a in arrs if a is not None):
+                stack[i] = _nearest(arr, 32, 32)
             # batched 2D DCT: (K,32,32) -> (K,8,8) low-frequency blocks.
             # Same contraction ORDER as the scalar phash64 (c @ a @ c.T)
             # so both paths agree bit-for-bit even on knife-edge
             # median comparisons.
             d = np.matmul(np.matmul(c[None, :, :], stack), c.T[None, :, :])
-            blocks = d[:, :8, :8].reshape(k, 64)
+            blocks = d[:, :8, :8].reshape(len(stack), 64)
             med = np.median(blocks[:, 1:], axis=1)
             bits = blocks > med[:, None]
-            weights = (np.uint64(1) << np.arange(64, dtype=np.uint64))
-            ph = (bits.astype(np.uint64) * weights[None, :]).sum(axis=1)
+            ph = np.zeros(len(pdf), dtype=np.uint64)
+            ph[ok] = (bits.astype(np.uint64) * weights[None, :]).sum(axis=1)
+            phash = pd.array(ph.astype(np.int64), dtype="Int64")
+            phash[~ok] = pd.NA
             yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"].to_numpy(object),
-                    "phash": ph.astype(np.int64),
-                }
+                {"image_id": pdf["image_id"].to_numpy(object), "phash": phash}
             )
 
     return images.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
@@ -320,29 +311,14 @@ def compute_phash(images: DataFrame) -> DataFrame:
 def transcode_images(images: DataFrame, out_fmt: str) -> DataFrame:
     """Re-encode every image to `out_fmt` at its native size (decode ->
     encode; q8 is the lossy path, ~2 LSB). Pixel dims pass through."""
-    schema = "image_id string, bytes binary, w int, h int, fmt string"
 
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = np.empty(len(pdf), dtype=object)
-            it = zip(
-                pdf["bytes"].to_numpy(object),
-                pdf["fmt"].to_numpy(object),
-                pdf["w"].to_numpy(),
-                pdf["h"].to_numpy(),
-            )
-            for i, (b, f, w, h) in enumerate(it):
-                out[i] = encode(decode(b, f, int(w), int(h)), out_fmt)
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"].to_numpy(object),
-                    "bytes": out,
-                    "w": pdf["w"].to_numpy(np.int32),
-                    "h": pdf["h"].to_numpy(np.int32),
-                    "fmt": np.full(len(pdf), out_fmt, dtype=object),
-                }
-            )
+    def transcode(arr: np.ndarray) -> tuple:
+        return (encode(arr, out_fmt),)
 
-    return images.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
-        go, schema=schema
+    return _map_images(
+        images,
+        "image_id string, bytes binary, w int, h int, fmt string",
+        transcode,
+        {"bytes": "object"},
+        {"fmt": out_fmt},
     )

@@ -16,6 +16,9 @@ resamples each pair.
 Raster rows carry explicit georeferencing columns (the engine's
 equivalent of the GeoTIFF header): crs, x_min, y_min, x_max, y_max,
 nodata, dtype; pixels in `bytes` (fmt raw/png/q8, warp/codecs.py).
+Both passes decode with codecs.decode_batch; a raster it cannot
+decode (null bytes or fmt, a corrupt payload) plans no tiles and so
+emits no rows.
 """
 
 from __future__ import annotations
@@ -31,7 +34,7 @@ from pyspark.sql import DataFrame
 from equi7grid_spark.constants import GridConfig, TILING_ID_TO_SIZE
 from equi7grid_spark.geodesy import aeqd_inverse
 from equi7grid_spark.roi import TileRecord, get_tiles_in_geog_bbox
-from equi7grid_spark.warp.codecs import decode, encode
+from equi7grid_spark.warp.codecs import decode_batch, encode
 from equi7grid_spark.warp.crs import crs_forward, crs_inverse
 
 OUTPUT_SCHEMA = (
@@ -322,14 +325,6 @@ def warp_image_to_tile(
     return out.reshape(n_rows, n_cols).astype(arr.dtype)
 
 
-def _decode_raster(row) -> np.ndarray:
-    dtype = np.dtype(row["dtype"])
-    if row["fmt"] == "raw":
-        return np.frombuffer(row["bytes"], dtype=dtype).reshape(row["h"], row["w"])
-    arr = decode(row["bytes"], row["fmt"], row["w"], row["h"])
-    return arr.astype(dtype)
-
-
 def resample_to_equi7_tiles(
     rasters: DataFrame,
     tiling_id: str = "T6",
@@ -390,8 +385,9 @@ def resample_to_equi7_tiles(
     def plan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out_rows = []
-            for row in pdf.to_dict("records"):
-                arr = _decode_raster(row)
+            for row, arr in zip(pdf.to_dict("records"), decode_batch(pdf)):
+                if arr is None:
+                    continue  # undecodable raster: no tiles, no rows
                 extent = (row["x_min"], row["y_min"], row["x_max"], row["y_max"])
                 tiles = overlapping_tiles(
                     row["crs"], extent, tiling_id,
@@ -414,8 +410,8 @@ def resample_to_equi7_tiles(
     def warp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out_rows = []
-            for row in pdf.to_dict("records"):
-                arr = _decode_raster(row)
+            # every planned row decoded in the plan pass, so arr is set
+            for row, arr in zip(pdf.to_dict("records"), decode_batch(pdf)):
                 extent = (row["x_min"], row["y_min"], row["x_max"], row["y_max"])
                 warped = warp_image_to_tile(
                     arr, row["crs"], extent, row["nodata"],

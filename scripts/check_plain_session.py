@@ -15,7 +15,9 @@ Builds ``SparkSession.builder.master(local[2]).getOrCreate()`` with NO
 engine configs (no Arrow, no AQE tweaks, default shuffle partitions —
 mirroring the driver's harness), then runs every
 ``__spark_entry__.queries()`` entry at sf0.001 and asserts each returns
-without raising and yields >= 0 rows with a non-empty schema.
+without raising and yields >= 0 rows with a non-empty schema. It also
+runs compute_phash and image_stats over 100 images with one truncated
+payload, which must come out as one null row.
 
 Run it in a FRESH process (the builder's configured session must not
 already own the JVM): ``python scripts/check_plain_session.py [sf_dir]``.
@@ -30,6 +32,26 @@ import traceback
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+
+def _corrupt_row_outputs(spark):
+    """compute_phash and image_stats over 100 synthetic images whose
+    row 2 (a q8 image) is cut in half: (image_id -> phash, image_id ->
+    px_min)."""
+    import numpy as np
+
+    from equi7grid_spark.images import make_batch
+    from equi7grid_spark.operators.multimodal import compute_phash, image_stats
+
+    pdf = make_batch(np.arange(100))[["image_id", "bytes", "fmt", "w", "h"]]
+    assert pdf.at[2, "fmt"] == "q8"
+    pdf.at[2, "bytes"] = pdf.at[2, "bytes"][: len(pdf.at[2, "bytes"]) // 2]
+    imgs = spark.createDataFrame(
+        pdf, "image_id string, bytes binary, fmt string, w int, h int"
+    )
+    ph = {r.image_id: r.phash for r in compute_phash(imgs).collect()}
+    st = {r.image_id: r.px_min for r in image_stats(imgs).collect()}
+    return ph, st
 
 
 def main() -> int:
@@ -84,6 +106,21 @@ def main() -> int:
     else:
         failed.append("lazy_zip_invalidation")
         print(f"{'lazy zip invalidation':40s} FAIL  {rep}")
+
+    # One truncated q8 image among 100 gives null outputs, not a failed
+    # job, and the nullable phash / px_min columns cross Arrow as nulls
+    # next to integer values (not a cast error, not floats).
+    try:
+        ph, st = _corrupt_row_outputs(spark)
+        assert ph.pop("img000000000002") is None, "corrupt row phash"
+        assert st.pop("img000000000002") is None, "corrupt row px_min"
+        assert len(ph) == len(st) == 99
+        assert all(type(v) is int for v in [*ph.values(), *st.values()])
+        print(f"{'corrupt image rows (phash, stats)':40s} OK    nulls=1 of 100")
+    except Exception:
+        failed.append("corrupt_image_rows")
+        print(f"{'corrupt image rows (phash, stats)':40s} FAIL")
+        traceback.print_exc()
 
     # Smoke the driver's entry() too.
     try:

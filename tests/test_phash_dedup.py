@@ -243,18 +243,18 @@ def test_multimodal_near_dup_signals(spark):
 
 
 def test_caption_dup_pairs_chunked_closed_form(spark):
-    """90 rows sharing 3 captions with chunk_size=8 (multi-chunk
-    buckets): exactly 3 * C(30,2) pairs, each emitted once."""
-    from equi7grid_spark.dedup import caption_dup_pairs
+    """The caption signal of multimodal_near_dup: 90 rows sharing 3
+    captions (null phash) with chunk_size=8 (multi-chunk buckets):
+    exactly 3 * C(30,2) pairs, each emitted once."""
+    from equi7grid_spark.dedup import multimodal_near_dup
 
-    rows = [(f"r{i:03d}", 1, f"caption {i % 3}") for i in range(90)]
+    rows = [(f"r{i:03d}", None, f"caption {i % 3}") for i in range(90)]
     df = spark.createDataFrame(rows, "image_id string, phash long, caption string")
-    got = [
-        (r.id_a, r.id_b)
-        for r in caption_dup_pairs(df, chunk_size=8).collect()
-    ]
+    out = multimodal_near_dup(df, chunk_size=8).collect()
+    got = [(r.id_a, r.id_b) for r in out]
     assert len(got) == len(set(got)) == 3 * 30 * 29 // 2
     assert all(a < b for a, b in got)
+    assert {(r.signal, r.hamming) for r in out} == {("caption", None)}
 
 
 def test_phash_near_dup_null_rows_dropped(spark):
@@ -380,21 +380,24 @@ def test_multimodal_three_signal_reads_input_once(spark):
 
 
 def test_embedding_near_dup_pairs_identical_and_chunked(spark):
-    """Identical vectors are found with recall 1.0 (they share every
-    band bucket) even under multi-chunk hot buckets; sub-threshold
-    candidates are verified away."""
-    from equi7grid_spark.dedup import embedding_near_dup_pairs
+    """The embedding signal of multimodal_near_dup (null phash and
+    caption): identical vectors are found with recall 1.0 (they share
+    every band bucket) even under multi-chunk hot buckets;
+    sub-threshold candidates are verified away."""
+    from equi7grid_spark.dedup import multimodal_near_dup
 
     shared = [float(d % 3 + 1) for d in range(8)]
-    rows = [(f"r{i:03d}", shared) for i in range(40)] + [
-        ("x1", [1.0, -1.0] * 4),
-        ("x2", [-1.0, 1.0] * 4),   # cosine(x1,x2) = -1: never a pair
+    rows = [(f"r{i:03d}", None, None, shared) for i in range(40)] + [
+        ("x1", None, None, [1.0, -1.0] * 4),
+        ("x2", None, None, [-1.0, 1.0] * 4),   # cosine(x1,x2) = -1: never a pair
     ]
-    df = spark.createDataFrame(rows, "image_id string, embedding array<double>")
-    got = [
-        (r.id_a, r.id_b, r.cosine)
-        for r in embedding_near_dup_pairs(df, chunk_size=8).collect()
-    ]
+    df = spark.createDataFrame(
+        rows,
+        "image_id string, phash long, caption string, embedding array<double>",
+    )
+    out = multimodal_near_dup(df, chunk_size=8, embedding_col="embedding").collect()
+    assert {r.signal for r in out} == {"embed"}
+    got = [(r.id_a, r.id_b, r.cosine) for r in out]
     pairs = {(a, b) for a, b, _ in got}
     assert len(got) == len(pairs) == 40 * 39 // 2
     assert all(c == 1.0 for _, _, c in got)
