@@ -1,8 +1,8 @@
-"""Round-7 optimization harness (NOT the driver's frozen bench.py).
+"""Optimization harness (NOT the driver's frozen bench.py).
 
 Three jobs:
   --plans q1,q2,...  dump .explain("formatted") for each query to
-                     plans/r07/<query>_<tag>.txt   (guide §7.2)
+                     plans/r08/<query>_<tag>.txt   (guide §7.2)
   --time q1,q2,...   per-query noop-sink wall times, min-of-N
                      (guide §1.4: noop computes every column, no sink
                      cost, no count()-style column pruning)
@@ -73,7 +73,7 @@ def main() -> None:
     qs = entrymod.queries()
     spark = _session()
     if mode == "--plans":
-        outdir = Path(__file__).resolve().parent / "plans" / "r07"
+        outdir = Path(__file__).resolve().parent / "plans" / "r08"
         outdir.mkdir(parents=True, exist_ok=True)
         for name in names:
             df = qs[name](spark, SF_DIR)

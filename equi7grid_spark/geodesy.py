@@ -174,7 +174,8 @@ def geodesic_direct(
         )
         sigma_prev = sigma
         sigma = s / (_B * A_big) + delta_sigma
-        if np.max(np.abs(sigma - sigma_prev)) < tol:
+        # initial=0.0: an empty batch converges at once
+        if np.max(np.abs(sigma - sigma_prev), initial=0.0) < tol:
             break
     cos_2sigma_m = np.cos(2.0 * sigma1 + sigma)
     sin_sigma = np.sin(sigma)

@@ -76,6 +76,14 @@ def points_in_polys(px: np.ndarray, py: np.ndarray, polys: list[list[np.ndarray]
     return res
 
 
+def _ragged_fraction(n_sub: np.ndarray, reps: np.ndarray) -> np.ndarray:
+    """k / n_sub[i] for k in 0..n_sub[i]-1, segment after segment
+    (`reps` is np.repeat(arange, n_sub)): each element's index minus
+    its segment's start offset, so no Python loop over segments."""
+    starts = np.repeat(np.cumsum(n_sub) - n_sub, n_sub)
+    return (np.arange(reps.size) - starts) / n_sub[reps]
+
+
 def densify_ring(ring: np.ndarray, max_seg: float) -> np.ndarray:
     """Insert vertices so no segment exceeds `max_seg` (in ring units).
 
@@ -92,15 +100,13 @@ def densify_ring(ring: np.ndarray, max_seg: float) -> np.ndarray:
         return r
     total = int(n_sub.sum()) + 1
     out = np.empty((total, 2), dtype=np.float64)
-    pos = 0
     # Vectorized ragged interpolation.
     starts = r[:-1]
     deltas = r[1:] - r[:-1]
     reps = np.repeat(np.arange(len(n_sub)), n_sub)
-    within = np.concatenate([np.arange(k) for k in n_sub]) / n_sub[reps]
+    within = _ragged_fraction(n_sub, reps)
     out[:-1] = starts[reps] + deltas[reps] * within[:, None]
     out[-1] = r[-1]
-    pos = total
     return out
 
 
@@ -174,7 +180,7 @@ def boundary_cells(
         span = np.maximum(np.abs(b[:, 0] - a[:, 0]), np.abs(b[:, 1] - a[:, 1]))
         n_sub = np.maximum(1, np.ceil(span + 1e-12).astype(np.int64))
         reps = np.repeat(np.arange(len(n_sub)), n_sub)
-        frac0 = np.concatenate([np.arange(k) for k in n_sub]) / n_sub[reps]
+        frac0 = _ragged_fraction(n_sub, reps)
         frac1 = frac0 + 1.0 / n_sub[reps]
         ax = a[reps, 0] + (b[reps, 0] - a[reps, 0]) * frac0
         ay = a[reps, 1] + (b[reps, 1] - a[reps, 1]) * frac0

@@ -138,27 +138,28 @@ def decode_audio_pcm(data: bytes, fmt: str) -> np.ndarray:
 
 
 def audio_stats(audio: DataFrame) -> DataFrame:
-    """Per-clip RMS/peak over the (stub-)decoded waveform."""
+    """Per-clip RMS/peak over the (stub-)decoded waveform; a clip whose
+    bytes or fmt is null gets null outputs."""
     schema = "clip_id string, n_samples long, rms double, peak int"
 
     def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = len(pdf)
-            n_samples = np.empty(n, dtype=np.int64)
-            rms = np.empty(n)
-            peak = np.empty(n, dtype=np.int32)
+            n_samples, rms, peak = [None] * n, [None] * n, [None] * n
             it = zip(pdf["bytes"].to_numpy(object), pdf["fmt"].to_numpy(object))
             for i, (b, f) in enumerate(it):
+                if b is None or f is None:
+                    continue  # null clip: null outputs
                 wav = decode_audio_pcm(b, f).astype(np.float64)
                 n_samples[i] = wav.size
                 rms[i] = np.sqrt(np.mean(wav**2)) if wav.size else 0.0
-                peak[i] = np.abs(wav).max() if wav.size else 0
+                peak[i] = int(np.abs(wav).max()) if wav.size else 0
             yield pd.DataFrame(
                 {
                     "clip_id": pdf["clip_id"].to_numpy(object),
-                    "n_samples": n_samples,
-                    "rms": rms,
-                    "peak": peak,
+                    "n_samples": pd.array(n_samples, dtype="Int64"),
+                    "rms": pd.array(rms, dtype="Float64"),
+                    "peak": pd.array(peak, dtype="Int32"),
                 }
             )
 
@@ -168,7 +169,8 @@ def audio_stats(audio: DataFrame) -> DataFrame:
 def sample_video_frames(video: DataFrame, every_n: int = 2) -> DataFrame:
     """STUB frame sampler: `fake-frames` payloads are concatenated raw
     uint8 w*h frames; real containers raise NotImplementedError. Emits
-    one row per sampled frame (the UDTF-shaped explode)."""
+    one row per sampled frame (the UDTF-shaped explode); a video whose
+    bytes or fmt is null has no frames, so it emits no rows."""
     schema = "video_id string, frame_idx int, bytes binary, w int, h int"
 
     def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -182,6 +184,8 @@ def sample_video_frames(video: DataFrame, every_n: int = 2) -> DataFrame:
                 pdf["h"].to_numpy(),
             )
             for vid, b, f, w, h in it:
+                if b is None or f is None:
+                    continue  # null video: no frames
                 if f != "fake-frames":
                     raise NotImplementedError(
                         f"video format {f!r}: no video codecs in this "

@@ -10,12 +10,12 @@ tile group for the expensive stage; a cheap merge unsalts.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from equi7grid_spark.warp.codecs import decode_batch
 
 
 def with_salt(df: DataFrame, id_col: str, n_salt: int = 8) -> DataFrame:
@@ -77,9 +77,15 @@ def mosaic_tiles(
     make the two-stage merge exact (ADVICE round-1). They run as a
     single deterministic grouped-map per tile, sorted by image_id —
     correct, at the cost of one task per hot tile.
+
+    Tiles are read with codecs.decode_batch in their `fmt` (raw, png or
+    q8, as resample_to_equi7_tiles writes them; a frame without `fmt`
+    holds raw tiles) and `dtype`. A tile that cannot be decoded adds
+    nothing and is not counted in n_images; a tile with no decodable
+    input gives no row. The mosaic is written raw.
     """
     schema = (
-        "subgrid string, tilename string, bytes binary, w int, h int, "
+        "subgrid string, tilename string, bytes binary, fmt string, w int, h int, "
         "dtype string, nodata double, n_images long"
     )
 
@@ -87,19 +93,20 @@ def mosaic_tiles(
         def go(key, pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values("image_id" if "image_id" in pdf else "n_images")
             pdf = pdf.reset_index(drop=True)
-            arrays = [
-                np.frombuffer(b, dtype=np.dtype(dt)).reshape(h, w)
-                for b, dt, w, h in zip(pdf["bytes"], pdf["dtype"], pdf["w"], pdf["h"])
-            ]
+            arrays = decode_batch(pdf)
+            ok = [i for i, a in enumerate(arrays) if a is not None]
+            if not ok:
+                return pd.DataFrame(columns=[f.split()[0] for f in schema.split(", ")])
             nodata = float(pdf["nodata"].iloc[0])
-            out = _composite(arrays, nodata, reducer)
+            out = _composite([arrays[i] for i in ok], nodata, reducer)
             dtype = np.dtype(pdf["dtype"].iloc[0])
-            n_img = int(pdf["n_images"].sum()) if "n_images" in pdf else len(pdf)
+            n_img = int(pdf["n_images"].iloc[ok].sum()) if "n_images" in pdf else len(ok)
             return pd.DataFrame([
                 {
                     "subgrid": pdf["subgrid"].iloc[0],
                     "tilename": pdf["tilename"].iloc[0],
                     "bytes": out.astype(dtype).tobytes(),
+                    "fmt": "raw",
                     "w": int(pdf["w"].iloc[0]),
                     "h": int(pdf["h"].iloc[0]),
                     "dtype": str(dtype),
@@ -110,6 +117,8 @@ def mosaic_tiles(
 
         return go
 
+    if "fmt" not in warped.columns:
+        warped = warped.withColumn("fmt", F.lit("raw"))
     if reducer in ("first", "last"):
         return warped.groupBy("subgrid", "tilename").applyInPandas(
             stage(False), schema=schema

@@ -7,20 +7,22 @@ NumPy (vectorized, no per-pixel Python):
 
 - ``raw``: uncompressed uint8, C-order, single band (w*h bytes).
 - ``png``: real, spec-conformant 8-bit grayscale PNG (zlib stdlib) —
-  readable by any PNG decoder; our reader supports filters 0-4.
+  readable by any PNG decoder; our reader takes non-interlaced
+  streams with row filters 0-4 and checks every chunk CRC.
 - ``q8``: engine-defined lossy 6-bit quantizer + zlib. Max abs error
   ~2 LSB → PSNR ≈ 46 dB on uniform images, comfortably above the
   40 dB gate (BASELINE.json input_hint).
 
 One decode path: every engine operator that reads pixels (the image
-operators in operators/multimodal.py and both warp passes in
-warp/resample.py) gets its arrays from ``decode_batch``, the only
-caller of ``decode``. That is where the decode-failure policy lives:
-a row whose ``bytes`` or ``fmt`` is null, or whose payload ``decode``
-rejects with one of ``DECODE_ERRORS`` (truncated, empty or garbage
-payloads, a size that disagrees with w x h, an unknown ``fmt``),
-decodes to None, and each operator turns None into null outputs (or
-no rows). Any other exception still fails the job.
+operators in operators/multimodal.py, both warp passes in
+warp/resample.py and the tile mosaic in operators/partitioning.py)
+gets its arrays from ``decode_batch``, the only caller of ``decode``.
+That is where the decode-failure policy lives: a row whose ``bytes``,
+``fmt`` or ``dtype`` is null, or whose payload ``decode`` rejects with
+one of ``DECODE_ERRORS`` (truncated, empty or garbage payloads, a
+corrupt PNG chunk, a size that disagrees with w x h, an unknown
+``fmt``), decodes to None, and each operator turns None into null
+outputs (or no rows). Any other exception still fails the job.
 """
 
 from __future__ import annotations
@@ -59,21 +61,36 @@ def encode_png(arr: np.ndarray) -> bytes:
 
 
 def decode_png(data: bytes) -> np.ndarray:
+    """An 8-bit grayscale, non-interlaced PNG. Raises ValueError on a
+    chunk whose CRC does not match or that runs past the end, a header
+    this reader does not support, a stream without IEND, or a row
+    filter type above 4."""
     if data[:8] != _PNG_SIG:
         raise ValueError("not a PNG")
     off = 8
     w = h = None
     idat = b""
-    while off < len(data):
+    while True:
+        if off + 12 > len(data):
+            raise ValueError("PNG without IEND")
         (length,) = struct.unpack_from(">I", data, off)
+        end = off + 12 + length
+        if end > len(data):
+            raise ValueError("truncated PNG chunk")
         tag = data[off + 4 : off + 8]
-        payload = data[off + 8 : off + 8 + length]
-        off += 12 + length
+        payload = data[off + 8 : end - 4]
+        (crc,) = struct.unpack_from(">I", data, end - 4)
+        if zlib.crc32(tag + payload) & 0xFFFFFFFF != crc:
+            raise ValueError(f"PNG chunk {tag!r} fails its CRC")
+        off = end
         if tag == b"IHDR":
-            w, hh, bit_depth, color_type = struct.unpack_from(">IIBB", payload)
-            h = hh
+            w, h, bit_depth, color_type, compression, filter_method, interlace = (
+                struct.unpack(">IIBBBBB", payload)
+            )
             if bit_depth != 8 or color_type != 0:
                 raise ValueError("only 8-bit grayscale supported")
+            if compression or filter_method or interlace:
+                raise ValueError("only deflate, filter method 0, non-interlaced")
         elif tag == b"IDAT":
             idat += payload
         elif tag == b"IEND":
@@ -82,6 +99,8 @@ def decode_png(data: bytes) -> np.ndarray:
         raise ValueError("missing IHDR")
     raw = np.frombuffer(zlib.decompress(idat), dtype=np.uint8).reshape(h, w + 1)
     filters = raw[:, 0]
+    if (filters > 4).any():
+        raise ValueError("PNG row filter type above 4")
     img = raw[:, 1:].astype(np.int32)
     if (filters == 0).all():
         return img.astype(np.uint8)
@@ -172,8 +191,8 @@ def decode(data: bytes, fmt: str, w: int, h: int, dtype="uint8") -> np.ndarray:
 def decode_batch(pdf) -> list[np.ndarray | None]:
     """One decoded array per row of an Arrow batch (a pandas frame with
     ``bytes, fmt, w, h`` and, for rasters, ``dtype``; uint8 without
-    it), None where the row cannot be decoded: its bytes or fmt is
-    null, or decode raises one of DECODE_ERRORS. Decoding
+    it), None where the row cannot be decoded: its bytes, fmt or dtype
+    is null, or decode raises one of DECODE_ERRORS. Decoding
     variable-size binaries is per row; the loop zips the columns'
     .values (iterrows costs ~10x more)."""
     n = len(pdf)
@@ -187,7 +206,7 @@ def decode_batch(pdf) -> list[np.ndarray | None]:
         dtypes,
     )
     for i, (b, f, w, h, dt) in enumerate(it):
-        if b is None or f is None:
+        if b is None or f is None or dt is None:
             continue
         try:
             out[i] = decode(b, f, int(w), int(h), dt)

@@ -3,7 +3,7 @@
 Semantics follow reference resample_to_equi7_tiles / resample_tile
 (reference warp.py:205-330,424-578): select the tiles overlapping the
 raster footprint, then for each (tile, image) pair build the target
-tile grid from the tile geotransform and inverse-warp — every target
+tile grid from the tile geotransform and inverse-warp — a target
 pixel center maps tile-xy → lon/lat (geodesic direct) → source CRS →
 source pixel, gathered with a nearest or nodata-aware bilinear kernel.
 The reference's `mp.Pool` over tiles (warp.py:568-576) becomes Spark
@@ -12,6 +12,16 @@ tasks: each (image, tile) output row is independent. A plan
 repartition spreads the pairs over the session's parallelism (so a
 large raster does not warp in a single task), and a warp `mapInPandas`
 resamples each pair.
+
+Only the pixels a raster can reach are projected. The plan pass gives
+each pair a target pixel window (target_window, four int columns of
+the plan row) outside which no pixel passes the warp's in-bounds test
+(_in_bounds, the one predicate of the window search and the gather);
+the warp pass projects and gathers the window and fills the rest of
+the tile with nodata, computing each pixel center from its absolute
+row and col as a whole-tile warp does. A pair whose window is empty
+still emits its all-nodata tile (n_valid 0), so the output tile set
+does not depend on the windows.
 
 Raster rows carry explicit georeferencing columns (the engine's
 equivalent of the GeoTIFF header): crs, x_min, y_min, x_max, y_max,
@@ -23,16 +33,15 @@ emits no rows.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
-from dataclasses import dataclass
+from functools import lru_cache
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from equi7grid_spark.constants import GridConfig, TILING_ID_TO_SIZE
-from equi7grid_spark.geodesy import aeqd_inverse
+from equi7grid_spark.geodesy import aeqd_forward, aeqd_inverse
 from equi7grid_spark.roi import TileRecord, get_tiles_in_geog_bbox
 from equi7grid_spark.warp.codecs import decode_batch, encode
 from equi7grid_spark.warp.crs import crs_forward, crs_inverse
@@ -88,6 +97,16 @@ def raster_geog_bbox(
             x_min, x_max = x_min + c0 * sx, x_min + c1 * sx
             y_min, y_max = y_max - r1 * sy, y_max - r0 * sy
     # densified boundary ring → lon/lat → bbox
+    lon, lat = crs_inverse(crs, *_footprint_ring((x_min, y_min, x_max, y_max), densify_n))
+    return float(lon.min()), float(lat.min()), float(lon.max()), float(lat.max())
+
+
+def _footprint_ring(
+    extent: tuple[float, float, float, float], densify_n: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The boundary of an extent as 4 * densify_n points (x, y),
+    counter-clockwise from (x_min, y_min)."""
+    x_min, y_min, x_max, y_max = extent
     t = np.linspace(0.0, 1.0, densify_n)
     bx = np.concatenate([
         x_min + t * (x_max - x_min), np.full_like(t, x_max),
@@ -97,8 +116,7 @@ def raster_geog_bbox(
         np.full_like(t, y_min), y_min + t * (y_max - y_min),
         np.full_like(t, y_max), y_max - t * (y_max - y_min),
     ])
-    lon, lat = crs_inverse(crs, bx, by)
-    return float(lon.min()), float(lat.min()), float(lon.max()), float(lat.max())
+    return bx, by
 
 
 def _dilate8(mask: np.ndarray, iterations: int = 3) -> np.ndarray:
@@ -276,6 +294,149 @@ def _bilinear(arr: np.ndarray, row_f: np.ndarray, col_f: np.ndarray, nodata: flo
     return res
 
 
+def _tile_to_source(
+    shape: tuple[int, int],
+    src_crs: str | int,
+    src_extent: tuple[float, float, float, float],
+    subgrid: str,
+    ll_x: float,
+    ll_y: float,
+    tile_size: float,
+    sampling: float,
+):
+    """The map from target pixels of one tile, given as absolute float
+    row and col indices, to continuous source pixel coordinates
+    (row_f, col_f) of one raster: pixel center (geotrans = (x_min, s,
+    0, y_max, 0, -s), reference warp.py:291) -> lon/lat (geodesic
+    direct) -> source CRS -> source pixel, where source pixel centers
+    sit at integer values."""
+    x_min, y_min, x_max, y_max = src_extent
+    h, w = shape
+    res_x = (x_max - x_min) / w
+    res_y = (y_max - y_min) / h
+
+    def to_source(rows: np.ndarray, cols: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        x = ll_x + (cols + 0.5) * sampling
+        y = (ll_y + tile_size) - (rows + 0.5) * sampling
+        lon, lat = aeqd_inverse(subgrid, x, y)
+        sx, sy = crs_forward(src_crs, lon, lat)
+        return (y_max - sy) / res_y - 0.5, (sx - x_min) / res_x - 0.5
+
+    return to_source
+
+
+def _in_bounds(
+    row_f: np.ndarray, col_f: np.ndarray, shape: tuple[int, int], resampling: str
+) -> np.ndarray:
+    """The warp's in-bounds test, shared by the gather and the window
+    search: the rounded source pixel lies in the raster (nearest), or
+    the point lies within half a pixel of the outer pixel centers
+    (bilinear)."""
+    h, w = shape
+    if resampling == "nearest":
+        ri, ci = np.round(row_f), np.round(col_f)
+        return (ri >= 0) & (ri < h) & (ci >= 0) & (ci < w)
+    if resampling == "bilinear":
+        return (row_f >= -0.5) & (row_f <= h - 0.5) & (col_f >= -0.5) & (col_f <= w - 0.5)
+    raise ValueError(f"unknown resampling {resampling!r}")
+
+
+@lru_cache(maxsize=64)
+def _footprint_in_subgrid(
+    src_crs: str | int,
+    src_extent: tuple[float, float, float, float],
+    subgrid: str,
+    densify_n: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The densified footprint ring of a raster in a subgrid's AEQD
+    coordinates; shared by every tile of that subgrid the raster
+    overlaps (read-only arrays)."""
+    lon, lat = crs_inverse(src_crs, *_footprint_ring(src_extent, densify_n))
+    tx, ty = aeqd_forward(subgrid, lon, lat)
+    tx.setflags(write=False)
+    ty.setflags(write=False)
+    return tx, ty
+
+
+# Largest pixel stride of the lattice of seed pixels tested in every
+# window search (a tile gets at least 4 x 4 seeds): a footprint whose
+# boundary image does not bound its interior (a raster around the
+# antipode of the tile's projection center, or a global lon/lat raster
+# whose boundary is the antimeridian) still seeds the window wherever
+# it covers a lattice pixel.
+_SEED_STRIDE = 16
+
+
+def target_window(
+    shape: tuple[int, int],
+    src_crs: str | int,
+    src_extent: tuple[float, float, float, float],
+    subgrid: str,
+    ll_x: float,
+    ll_y: float,
+    tile_size: float,
+    sampling: float,
+    resampling: str = "nearest",
+    densify_n: int = 64,
+) -> tuple[int, int, int, int]:
+    """The target pixel window (r0, r1, c0, c1), half-open, outside
+    which no pixel of the tile passes the warp's in-bounds test for this
+    raster; (0, 0, 0, 0) when no pixel can.
+
+    The densified source footprint is forward-projected into the tile's
+    pixel grid; its bbox, joined with the bbox of the passing seed
+    lattice pixels, plus one pixel and clamped to the tile, is the
+    first window. Then every side grows while any pixel on its border
+    passes, by 1, 2, 4, ... pixels on successive rounds (a larger
+    window costs warp time, never correctness). A footprint image that
+    is not finite gives the whole tile."""
+    n = int(round(tile_size / sampling))
+    to_source = _tile_to_source(
+        shape, src_crs, src_extent, subgrid, ll_x, ll_y, tile_size, sampling
+    )
+
+    def passes(rows: np.ndarray, cols: np.ndarray) -> np.ndarray:
+        return _in_bounds(*to_source(rows, cols), shape, resampling)
+
+    tx, ty = _footprint_in_subgrid(src_crs, tuple(src_extent), subgrid, densify_n)
+    rows = (ll_y + tile_size - ty) / sampling - 0.5
+    cols = (tx - ll_x) / sampling - 0.5
+    if not (np.isfinite(rows).all() and np.isfinite(cols).all()):
+        return (0, n, 0, n)
+    stride = max(1, min(_SEED_STRIDE, n // 4))
+    seed = np.arange(stride // 2, n, stride, dtype=np.float64)
+    sr, sc = np.meshgrid(seed, seed, indexing="ij")
+    sr, sc = sr.ravel(), sc.ravel()
+    hit = passes(sr, sc)
+    rows = np.concatenate([rows, sr[hit]])
+    cols = np.concatenate([cols, sc[hit]])
+    r0 = max(0, int(np.floor(rows.min())) - 1)
+    r1 = min(n, int(np.floor(rows.max())) + 2)
+    c0 = max(0, int(np.floor(cols.min())) - 1)
+    c1 = min(n, int(np.floor(cols.max())) + 2)
+    if r0 >= r1 or c0 >= c1:
+        return (0, 0, 0, 0)
+    step = 1
+    while (r0, r1, c0, c1) != (0, n, 0, n):
+        # one projection tests the four border lines: top, bottom, left, right
+        rr = np.arange(r0, r1, dtype=np.float64)
+        cc = np.arange(c0, c1, dtype=np.float64)
+        hit = passes(
+            np.concatenate([np.full_like(cc, r0), np.full_like(cc, r1 - 1), rr, rr]),
+            np.concatenate([cc, cc, np.full_like(rr, c0), np.full_like(rr, c1 - 1)]),
+        )
+        top, bottom, left, right = (
+            part.any() for part in np.split(hit, np.cumsum([cc.size, cc.size, rr.size]))
+        )
+        grow = (top and r0 > 0, bottom and r1 < n, left and c0 > 0, right and c1 < n)
+        if not any(grow):
+            break
+        r0, r1 = max(0, r0 - step * grow[0]), min(n, r1 + step * grow[1])
+        c0, c1 = max(0, c0 - step * grow[2]), min(n, c1 + step * grow[3])
+        step *= 2
+    return (r0, r1, c0, c1)
+
+
 def warp_image_to_tile(
     arr: np.ndarray,
     src_crs: str | int,
@@ -287,42 +448,34 @@ def warp_image_to_tile(
     tile_size: float,
     sampling: float,
     resampling: str = "nearest",
+    window: tuple[int, int, int, int] | None = None,
 ) -> np.ndarray:
     """Inverse-warp one image into one tile grid (reference
     resample_tile, warp.py:205-330). Returns the tile array in the
-    source dtype with nodata fill."""
-    n_cols = int(round(tile_size / sampling))
-    n_rows = n_cols
-    c = np.arange(n_cols, dtype=np.float64)
-    r = np.arange(n_rows, dtype=np.float64)
-    # target pixel centers (geotrans = (x_min, s, 0, y_max, 0, -s),
-    # reference warp.py:291)
-    x = ll_x + (c + 0.5) * sampling
-    y = (ll_y + tile_size) - (r + 0.5) * sampling
-    X, Y = np.meshgrid(x, y)  # [n_rows, n_cols]
-    lon, lat = aeqd_inverse(subgrid, X.ravel(), Y.ravel())
-    sx, sy = crs_forward(src_crs, lon, lat)
+    source dtype with nodata fill.
 
-    x_min, y_min, x_max, y_max = src_extent
-    h, w = arr.shape
-    res_x = (x_max - x_min) / w
-    res_y = (y_max - y_min) / h
-    col_f = (sx - x_min) / res_x - 0.5
-    row_f = (y_max - sy) / res_y - 0.5
-
+    Only the pixels of `window` (r0, r1, c0, c1; target_window's
+    result) are projected and gathered, the rest of the tile is
+    nodata; the default window is the whole tile."""
+    n = int(round(tile_size / sampling))
+    r0, r1, c0, c1 = window or (0, n, 0, n)
+    to_source = _tile_to_source(
+        arr.shape, src_crs, src_extent, subgrid, ll_x, ll_y, tile_size, sampling
+    )
+    rows, cols = np.meshgrid(
+        np.arange(r0, r1, dtype=np.float64), np.arange(c0, c1, dtype=np.float64),
+        indexing="ij",
+    )
+    row_f, col_f = to_source(rows.ravel(), cols.ravel())
+    inb = _in_bounds(row_f, col_f, arr.shape, resampling)
+    row_f, col_f = row_f[inb], col_f[inb]
     if resampling == "nearest":
-        ri = np.round(row_f).astype(np.int64)
-        ci = np.round(col_f).astype(np.int64)
-        inb = (ri >= 0) & (ri < h) & (ci >= 0) & (ci < w)
-        out = np.full(ri.shape, nodata, dtype=np.float64)
-        out[inb] = arr[ri[inb], ci[inb]].astype(np.float64)
-    elif resampling == "bilinear":
-        inb = (row_f >= -0.5) & (row_f <= h - 0.5) & (col_f >= -0.5) & (col_f <= w - 0.5)
-        out = _bilinear(arr, row_f, col_f, nodata)
-        out[~inb] = nodata
+        vals = arr[np.round(row_f).astype(np.int64), np.round(col_f).astype(np.int64)]
     else:
-        raise ValueError(f"unknown resampling {resampling!r}")
-    return out.reshape(n_rows, n_cols).astype(arr.dtype)
+        vals = _bilinear(arr, row_f, col_f, nodata)
+    out = np.full((n, n), nodata, dtype=np.float64)
+    out[r0:r1, c0:c1][inb.reshape(r1 - r0, c1 - c0)] = vals
+    return out.astype(arr.dtype)
 
 
 def resample_to_equi7_tiles(
@@ -354,32 +507,35 @@ def resample_to_equi7_tiles(
     n_px = int(round(ts / s))
     name_fn = naming_fn or default_naming
 
-    # Two-stage shape (round 7): a PLAN pass finds each raster's
-    # overlapping tiles (decode + bbox + coarse-mask check — cheap),
-    # the (raster, tile) fan-out is exploded into ROWS and hash-
-    # repartitioned, and the WARP pass (the expensive part: one
-    # ~(ts/s)^2-point inverse projection per tile) runs one task per
-    # (raster, tile). The former single-pass shape warped every tile
-    # of a raster sequentially inside that raster's scan task — a
-    # one-raster input (the bench fixture, and any skewed real batch
-    # where one giant raster spans many tiles) serialized the whole
-    # job onto one core (guide §2.5/§2.6 stragglers). The exchange
-    # duplicates the raster payload once per overlapping tile; tile
-    # overlap degree is small (a raster spans ~(w_m/ts+1)(h_m/ts+1)
-    # tiles) and the alternative was zero parallelism across a
-    # raster's tiles. The raster is re-decoded in the warp task —
-    # decode is a single vectorized pass, orders of magnitude under
-    # the per-tile inverse projection.
+    # Two-stage shape: a PLAN pass finds each raster's overlapping
+    # tiles (decode + bbox + coarse-mask check) and, per (raster,
+    # tile), the target pixel window the raster can reach
+    # (target_window: a footprint projection plus a few border lines,
+    # cheap); the (raster, tile) fan-out is exploded into ROWS and
+    # hash-repartitioned, and the WARP pass (the expensive part: one
+    # inverse projection per window pixel, up to (ts/s)^2 per tile)
+    # runs one task per (raster, tile). A single-pass shape would warp
+    # every tile of a raster sequentially inside that raster's scan
+    # task: a one-raster input (the bench fixture, and any skewed real
+    # batch where one giant raster spans many tiles) would serialize
+    # the whole job onto one core. The exchange duplicates the raster
+    # payload once per overlapping tile; tile overlap degree is small
+    # (a raster spans ~(w_m/ts+1)(h_m/ts+1) tiles) and the alternative
+    # is zero parallelism across a raster's tiles. The raster is
+    # re-decoded in the warp task: decode is a single vectorized pass,
+    # well under the window's inverse projection.
     plan_cols = [
         "image_id", "bytes", "fmt", "dtype", "w", "h", "crs",
         "x_min", "y_min", "x_max", "y_max", "nodata",
         "subgrid", "tilename", "ll_x", "ll_y",
+        "win_r0", "win_r1", "win_c0", "win_c1",
     ]
     plan_schema = (
         "image_id string, bytes binary, fmt string, dtype string,"
         " w int, h int, crs string, x_min double, y_min double,"
         " x_max double, y_max double, nodata double,"
-        " subgrid string, tilename string, ll_x double, ll_y double"
+        " subgrid string, tilename string, ll_x double, ll_y double,"
+        " win_r0 int, win_r1 int, win_c0 int, win_c1 int"
     )
 
     def plan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -396,14 +552,13 @@ def resample_to_equi7_tiles(
                     accurate_boundary=accurate_boundary,
                 )
                 for t in tiles:
+                    window = target_window(
+                        arr.shape, row["crs"], extent, t.subgrid,
+                        t.ll_x, t.ll_y, ts, s, resampling,
+                    )
                     out_rows.append(
-                        {
-                            **{k: row[k] for k in plan_cols[:12]},
-                            "subgrid": t.subgrid,
-                            "tilename": t.tilename,
-                            "ll_x": t.ll_x,
-                            "ll_y": t.ll_y,
-                        }
+                        (*(row[k] for k in plan_cols[:12]),
+                         t.subgrid, t.tilename, t.ll_x, t.ll_y, *window)
                     )
             yield pd.DataFrame(out_rows, columns=plan_cols)
 
@@ -417,6 +572,7 @@ def resample_to_equi7_tiles(
                     arr, row["crs"], extent, row["nodata"],
                     row["subgrid"], row["ll_x"], row["ll_y"], ts, s,
                     resampling,
+                    (row["win_r0"], row["win_r1"], row["win_c0"], row["win_c1"]),
                 )
                 n_valid = int((warped != row["nodata"]).sum())
                 if out_fmt == "raw":
@@ -454,7 +610,8 @@ def resample_to_equi7_tiles(
     # AQE-coalescible, and the (raster, tile) rows are KB-sized — AQE
     # folds them back into ONE post-shuffle partition and re-serializes
     # the warps it exists to spread. Partition BYTES say nothing about
-    # warp COST here (each row expands to a (ts/s)^2-point projection),
+    # warp COST here (each row expands to a projection of its window,
+    # up to (ts/s)^2 points),
     # so pin the fan-out to the session's parallelism (scale-adaptive,
     # not a local constant).
     n_out = rasters.sparkSession.sparkContext.defaultParallelism

@@ -81,3 +81,17 @@ def test_clip_matches_membership(seed):
             np.abs(bad[:, 1] - y0), np.abs(bad[:, 1] - y1),
         ])
         assert d_edge.max() < 1e-6, f"clip mismatch away from boundary: {bad[:3]}"
+
+
+def test_ragged_fraction_equals_per_segment_loop():
+    """The loop-free ragged fractions of densify_ring and boundary_cells
+    are bit-identical to the per-segment arange loop they replace."""
+    from equi7grid_spark.geom import _ragged_fraction
+
+    rng = np.random.default_rng(5)
+    for _ in range(2000):
+        n_sub = rng.integers(1, 60, size=int(rng.integers(1, 40)))
+        reps = np.repeat(np.arange(n_sub.size), n_sub)
+        want = np.concatenate([np.arange(k) for k in n_sub]) / n_sub[reps]
+        got = _ragged_fraction(n_sub, reps)
+        assert got.dtype == want.dtype and got.tobytes() == want.tobytes()

@@ -107,6 +107,33 @@ def test_audio_video_stubs(spark):
         audio_stats(bad).collect()
 
 
+def test_audio_video_null_bytes_give_null_outputs(spark):
+    """A null clip or video among good ones gets null outputs (audio)
+    or no frames (video) instead of failing the job; the good rows keep
+    their values."""
+    from equi7grid_spark.operators.multimodal import audio_stats, sample_video_frames
+
+    wav = (np.arange(-50, 50) * 300).astype("<i2")
+    adf = spark.createDataFrame(
+        [("ok", wav.tobytes(), "fake-pcm"), ("no_bytes", None, "fake-pcm"),
+         ("no_fmt", wav.tobytes(), None)],
+        "clip_id string, bytes binary, fmt string",
+    )
+    got = {r.clip_id: r for r in audio_stats(adf).collect()}
+    assert (got["ok"].n_samples, got["ok"].peak) == (100, 15000)
+    assert got["ok"].rms == np.sqrt(np.mean(wav.astype(np.float64) ** 2))
+    for cid in ("no_bytes", "no_fmt"):
+        assert (got[cid].n_samples, got[cid].rms, got[cid].peak) == (None, None, None)
+
+    frames = np.arange(4 * 6 * 3, dtype=np.uint8).tobytes()  # 3 frames of 4x6
+    vdf = spark.createDataFrame(
+        [("v_ok", frames, "fake-frames", 4, 6), ("v_null", None, "fake-frames", 4, 6)],
+        "video_id string, bytes binary, fmt string, w int, h int",
+    )
+    out = sample_video_frames(vdf, every_n=1).collect()
+    assert sorted((r.video_id, r.frame_idx) for r in out) == [("v_ok", k) for k in range(3)]
+
+
 def test_geoparquet_export(tmp_path):
     import json
 

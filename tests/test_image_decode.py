@@ -123,6 +123,46 @@ def test_decoder_raises_only_decode_errors(fmt):
         decode(good, "jpeg", 5, 7)
     with pytest.raises(ValueError, match="empty image"):
         decode(b"", "raw", 0, 7)
+    if fmt == "png":
+        # a CRC makes every single-byte corruption of a PNG detectable
+        assert n_raised >= 2 * 3 * len(good)
+        for data, why in _png_gaps(good):
+            with pytest.raises(ValueError, match=why):
+                decode(data, "png", 5, 7)
+
+
+def _png_gaps(good: bytes) -> list[tuple[bytes, str]]:
+    """PNGs with consistent chunk CRCs that the reader must still
+    reject, plus one whose CRC is wrong: (payload, error pattern)."""
+    import struct
+    import zlib
+
+    from equi7grid_spark.warp.codecs import _PNG_SIG, _chunk
+
+    chunks, off = [], 8
+    while off < len(good):
+        (n,) = struct.unpack_from(">I", good, off)
+        chunks.append((good[off + 4 : off + 8], good[off + 8 : off + 8 + n]))
+        off += 12 + n
+    tags = [t for t, _ in chunks]
+    assert tags == [b"IHDR", b"IDAT", b"IEND"]
+    ihdr, idat = chunks[0][1], chunks[1][1]
+    rows = bytearray(zlib.decompress(idat))
+    rows[0] = 9  # row filter type 9
+    interlaced = ihdr[:12] + b"\x01"
+
+    def png(*parts: tuple[bytes, bytes]) -> bytes:
+        return _PNG_SIG + b"".join(_chunk(t, p) for t, p in parts)
+
+    bad_crc = bytearray(good)
+    bad_crc[8 + 8 + 13] ^= 0x01  # first byte of the IHDR CRC
+    return [
+        (png((b"IHDR", ihdr), (b"IDAT", zlib.compress(bytes(rows))), (b"IEND", b"")),
+         "filter type"),
+        (png((b"IHDR", interlaced), (b"IDAT", idat), (b"IEND", b"")), "interlaced"),
+        (png((b"IHDR", ihdr), (b"IDAT", idat)), "without IEND"),
+        (bytes(bad_crc), "CRC"),
+    ]
 
 
 def test_decode_batch_nulls_only_undecodable_rows():
@@ -146,6 +186,10 @@ def test_decode_batch_nulls_only_undecodable_rows():
     assert got[1:] == [None, None, None, None]
     with_dtype = decode_batch(pdf.assign(dtype="float64").iloc[:1])
     assert with_dtype[0].dtype == np.float64
+    # a raster whose dtype is null has no pixel type: no array
+    null_dtype = pdf.iloc[[0, 0]].assign(dtype=["uint8", None])
+    got = decode_batch(null_dtype)
+    assert np.array_equal(got[0], a) and got[1] is None
     # a payload of the wrong Python type is a caller bug, not a corrupt
     # image: the TypeError fails the batch
     with pytest.raises(TypeError):

@@ -364,3 +364,134 @@ def test_region_inside_tile_step_uses_coarse_ring_same_answer():
     tiles = overlapping_tiles(crs, extent, tiling, arr=arr, nodata=nodata,
                               accurate_boundary=True)
     assert len(tiles) == 1
+
+
+def test_mosaic_reads_every_warp_fmt(spark):
+    """mosaic_tiles decodes tiles in the fmt the warp wrote them: the
+    raw, png and q8 outputs of one warp each mosaic to the per-pixel
+    max of their decoded tiles (png, lossless, equal to raw)."""
+    from pyspark.sql import functions as F
+
+    from equi7grid_spark.operators.partitioning import mosaic_tiles
+    from equi7grid_spark.warp.codecs import decode
+
+    grid = make_grid_config({"T6": 10_000}, continent_order=["EU"])
+    pdfs = []
+    for i, (x0, y0) in enumerate(((14.0, 47.0), (14.5, 47.3))):
+        yy, xx = np.mgrid[0:40, 0:40]
+        arr = ((xx * 3 + yy * 5 + 40 * i) % 250).astype(np.uint8)
+        arr[5:9, 5:9] = 255
+        pdfs.append(to_df(spark, arr, (x0, y0, x0 + 1.0, y0 + 1.0), 255, "EPSG:4326", f"m{i}"))
+    df = pdfs[0].unionByName(pdfs[1])
+    mosaics = {}
+    for fmt in ("raw", "png", "q8"):
+        warped = resample_to_equi7_tiles(df, "T6", 10_000.0, grid=grid, out_fmt=fmt)
+        by_tile: dict[str, list] = {}
+        for r in warped.collect():
+            assert r.fmt == fmt
+            by_tile.setdefault(r.tilename, []).append(
+                decode(bytes(r.bytes), r.fmt, r.w, r.h, r.dtype)
+            )
+        assert max(len(v) for v in by_tile.values()) == 2
+        got = {r.tilename: r for r in mosaic_tiles(warped, reducer="max", n_salt=2).collect()}
+        assert set(got) == set(by_tile)
+        for name, arrays in by_tile.items():
+            m = got[name]
+            assert (m.fmt, m.dtype, m.n_images) == ("raw", "uint8", len(arrays))
+            stack = np.stack(arrays).astype(np.float64)
+            valid = stack != 255
+            want = np.where(valid.any(0), np.where(valid, stack, -1.0).max(0), 255.0)
+            np.testing.assert_array_equal(
+                np.frombuffer(m.bytes, np.uint8).reshape(m.h, m.w), want.astype(np.uint8)
+            )
+        mosaics[fmt] = {name: bytes(r.bytes) for name, r in got.items()}
+        if fmt == "raw":
+            # a truncated tile adds nothing and is not counted
+            bad = warped.limit(1).withColumn("bytes", F.substring("bytes", 1, 7))
+            again = mosaic_tiles(warped.unionByName(bad), reducer="max", n_salt=2)
+            assert {r.tilename: (bytes(r.bytes), r.n_images) for r in again.collect()} == {
+                name: (b, got[name].n_images) for name, b in mosaics[fmt].items()
+            }
+    assert mosaics["png"] == mosaics["raw"]
+    assert mosaics["q8"] != mosaics["raw"]
+
+
+def _window_cases() -> list:
+    """Fixed-seed rasters for the windowed-warp check: (name, arr,
+    extent, nodata, crs, sampling, tiling). Lon/lat, web mercator and
+    Equi7 AEQD sources; across the antimeridian; touching each pole;
+    larger than a tile; global; with nodata holes."""
+    rng = np.random.default_rng(2024)
+
+    def img(h, w, holes, dtype=np.int16, nodata=-9999):
+        yy, xx = np.mgrid[0:h, 0:w]
+        arr = ((xx * 7 + yy * 13) % 250).astype(dtype)
+        if holes:
+            arr[rng.random((h, w)) < 0.1] = nodata
+            arr[h // 3 : h // 2, w // 4 : w // 2] = nodata
+        return arr
+
+    cases = []
+    for i in range(4):
+        lon, lat = rng.uniform(-170.0, 160.0), rng.uniform(-70.0, 70.0)
+        span = rng.uniform(0.3, 4.0)
+        h, w = (int(v) for v in rng.integers(15, 90, 2))
+        cases.append((f"lonlat{i}", img(h, w, i % 2 == 0),
+                      (lon, lat, lon + span, lat + 0.6 * span), -9999, "EPSG:4326", 5000.0, "T6"))
+    for i in range(2):
+        x0, y0 = rng.uniform(-1.5e7, 1.4e7), rng.uniform(-7e6, 7e6)
+        span = rng.uniform(1e5, 6e5)
+        cases.append((f"webmerc{i}", img(40, 60, i == 1, np.uint8, 255),
+                      (x0, y0, x0 + 1.5 * span, y0 + span), 255, "EPSG:3857", 5000.0, "T6"))
+    for epsg, cx, cy in ((27704, 4.3e6, 3.0e6), (27702, 3.0e6, 3.0e6)):
+        cases.append((f"aeqd{epsg}", img(45, 45, True),
+                      (cx - 4e5, cy - 4e5, cx + 4e5, cy + 4e5), -9999, f"EPSG:{epsg}", 5000.0, "T6"))
+    ll = (-9999, "EPSG:4326")
+    cases += [
+        ("antimeridian", img(30, 60, True), (176.0, -20.0, 184.0, -16.0), *ll, 5000.0, "T6"),
+        ("north_pole", img(20, 180, True), (-180.0, 84.0, 180.0, 90.0), *ll, 10000.0, "T6"),
+        ("south_pole", img(25, 25, False), (10.0, -90.0, 40.0, -85.0), *ll, 10000.0, "T6"),
+        ("larger_than_tile", img(150, 200, True), (5.0, 40.0, 25.0, 55.0), *ll, 10000.0, "T6"),
+        ("global", img(45, 90, True), (-180.0, -90.0, 180.0, 90.0), *ll, 50000.0, "T6"),
+    ]
+    return cases
+
+
+def test_windowed_warp_equals_full_tile_warp():
+    """The plan pass's target window loses no pixel: on every (raster,
+    tile) pair the windowed warp equals the whole-tile warp (window
+    (0, n, 0, n)) byte for byte, under nearest and bilinear. A coarse
+    footprint ring (4 points a side) cuts curved edges by many pixels,
+    so there the border growth must find what the first bbox misses."""
+    from equi7grid_spark.warp.resample import target_window
+
+    n_pairs = n_smaller = 0
+    for name, arr, extent, nodata, crs, s, tiling in _window_cases():
+        tiles = overlapping_tiles(crs, extent, tiling, arr=arr, nodata=nodata,
+                                  accurate_boundary=True)
+        assert tiles, name
+        for t in tiles[:: max(1, len(tiles) // 12)]:
+            n = int(round(t.tile_size / s))
+            for resampling in ("nearest", "bilinear"):
+                args = (arr, crs, extent, nodata, t.subgrid, t.ll_x, t.ll_y,
+                        t.tile_size, s, resampling)
+                full = warp_image_to_tile(*args, window=(0, n, 0, n))
+                for densify_n in (64, 4):
+                    win = target_window(arr.shape, crs, extent, t.subgrid, t.ll_x,
+                                        t.ll_y, t.tile_size, s, resampling, densify_n)
+                    got = warp_image_to_tile(*args, window=win)
+                    assert got.dtype == full.dtype, (name, t.tilename)
+                    assert got.tobytes() == full.tobytes(), (
+                        name, t.tilename, resampling, densify_n, win
+                    )
+                r0, r1, c0, c1 = win
+                n_pairs += 1
+                n_smaller += (r1 - r0) * (c1 - c0) < n * n
+    assert n_pairs >= 80 and n_smaller >= n_pairs // 2
+    # a tile the raster cannot reach: empty window, all-nodata tile
+    arr, extent, nodata, crs = lonlat_img_continuous()
+    args = (arr, crs, extent, nodata, "EU", 4_200_000.0, 1_800_000.0, 600_000.0, 10_000.0)
+    assert target_window(arr.shape, crs, extent, *args[4:]) == (0, 0, 0, 0)
+    for window in ((0, 0, 0, 0), (0, 60, 0, 60)):
+        out = warp_image_to_tile(*args, window=window)
+        assert out.shape == (60, 60) and (out == nodata).all()
