@@ -97,18 +97,21 @@ def mosaic_tiles(
             ok = [i for i, a in enumerate(arrays) if a is not None]
             if not ok:
                 return pd.DataFrame(columns=[f.split()[0] for f in schema.split(", ")])
-            nodata = float(pdf["nodata"].iloc[0])
+            # the tile's metadata comes from a decoded row: an undecodable
+            # one may hold a null dtype, w or h
+            first = pdf.iloc[ok[0]]
+            nodata = float(first["nodata"])
             out = _composite([arrays[i] for i in ok], nodata, reducer)
-            dtype = np.dtype(pdf["dtype"].iloc[0])
+            dtype = np.dtype(first["dtype"])
             n_img = int(pdf["n_images"].iloc[ok].sum()) if "n_images" in pdf else len(ok)
             return pd.DataFrame([
                 {
-                    "subgrid": pdf["subgrid"].iloc[0],
-                    "tilename": pdf["tilename"].iloc[0],
+                    "subgrid": first["subgrid"],
+                    "tilename": first["tilename"],
                     "bytes": out.astype(dtype).tobytes(),
                     "fmt": "raw",
-                    "w": int(pdf["w"].iloc[0]),
-                    "h": int(pdf["h"].iloc[0]),
+                    "w": int(first["w"]),
+                    "h": int(first["h"]),
                     "dtype": str(dtype),
                     "nodata": nodata,
                     "n_images": n_img,

@@ -21,7 +21,12 @@ the warp pass projects and gathers the window and fills the rest of
 the tile with nodata, computing each pixel center from its absolute
 row and col as a whole-tile warp does. A pair whose window is empty
 still emits its all-nodata tile (n_valid 0), so the output tile set
-does not depend on the windows.
+does not depend on the windows. That a windowed tile equals the
+whole-tile warp byte for byte is measured, not built in:
+geodesy.geodesic_direct iterates a batch until its slowest point
+converges, so a pixel's lon/lat can differ in the last bits between a
+window and the whole tile, and a value within an ULP of a rounding or
+in-bounds threshold could then land differently.
 
 Raster rows carry explicit georeferencing columns (the engine's
 equivalent of the GeoTIFF header): crs, x_min, y_min, x_max, y_max,
@@ -34,7 +39,6 @@ emits no rows.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from functools import lru_cache
 
 import numpy as np
 import pandas as pd
@@ -341,23 +345,6 @@ def _in_bounds(
     raise ValueError(f"unknown resampling {resampling!r}")
 
 
-@lru_cache(maxsize=64)
-def _footprint_in_subgrid(
-    src_crs: str | int,
-    src_extent: tuple[float, float, float, float],
-    subgrid: str,
-    densify_n: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """The densified footprint ring of a raster in a subgrid's AEQD
-    coordinates; shared by every tile of that subgrid the raster
-    overlaps (read-only arrays)."""
-    lon, lat = crs_inverse(src_crs, *_footprint_ring(src_extent, densify_n))
-    tx, ty = aeqd_forward(subgrid, lon, lat)
-    tx.setflags(write=False)
-    ty.setflags(write=False)
-    return tx, ty
-
-
 # Largest pixel stride of the lattice of seed pixels tested in every
 # window search (a tile gets at least 4 x 4 seeds): a footprint whose
 # boundary image does not bound its interior (a raster around the
@@ -398,7 +385,8 @@ def target_window(
     def passes(rows: np.ndarray, cols: np.ndarray) -> np.ndarray:
         return _in_bounds(*to_source(rows, cols), shape, resampling)
 
-    tx, ty = _footprint_in_subgrid(src_crs, tuple(src_extent), subgrid, densify_n)
+    lon, lat = crs_inverse(src_crs, *_footprint_ring(src_extent, densify_n))
+    tx, ty = aeqd_forward(subgrid, lon, lat)
     rows = (ll_y + tile_size - ty) / sampling - 0.5
     cols = (tx - ll_x) / sampling - 0.5
     if not (np.isfinite(rows).all() and np.isfinite(cols).all()):

@@ -412,6 +412,19 @@ def test_mosaic_reads_every_warp_fmt(spark):
             assert {r.tilename: (bytes(r.bytes), r.n_images) for r in again.collect()} == {
                 name: (b, got[name].n_images) for name, b in mosaics[fmt].items()
             }
+            # so do tiles with a null dtype or a null w that sort first in
+            # their group: the mosaic's metadata comes from a decoded tile
+            first = warped.withColumn("image_id", F.concat(F.lit("!"), "image_id"))
+            for col, typ in (("dtype", "string"), ("w", "int")):
+                nulls = first.withColumn(col, F.lit(None).cast(typ))
+                again = mosaic_tiles(warped.unionByName(nulls), reducer="max", n_salt=1)
+                assert {
+                    r.tilename: (bytes(r.bytes), r.dtype, r.w, r.n_images)
+                    for r in again.collect()
+                } == {
+                    name: (b, "uint8", got[name].w, got[name].n_images)
+                    for name, b in mosaics[fmt].items()
+                }
     assert mosaics["png"] == mosaics["raw"]
     assert mosaics["q8"] != mosaics["raw"]
 
