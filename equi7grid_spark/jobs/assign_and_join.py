@@ -61,7 +61,8 @@ def run(
         # manifest stats on the tile lower-left coords: a reader with a
         # projected-bbox predicate prunes whole (snapshot, subgrid)
         # pairs from metadata (read(prune={"ll_x": ..., "ll_y": ...}))
-        # before any file listing — the same lineage agg pays for them
+        # before any file listing — folded from the written files'
+        # parquet footers, so they cost no pass over the data
         stat_cols = ["ll_x", "ll_y"]
         if incremental_commit:
             # one manifest flip per subgrid: a kill mid-job resumes

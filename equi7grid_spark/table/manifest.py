@@ -2,10 +2,18 @@
 
 Real Iceberg jars are unavailable offline (SURVEY.md §7.0), so the
 engine ships a thin snapshot/manifest layer over parquet with the same
-operational contract the north rule demands: every run appends
-per-partition lineage (partition key, row count, duration, input) to a
-metrics table, commits are atomic, and a restarted job anti-joins away
+operational contract the north rule demands: every run records
+per-partition lineage (partition key, row count, duration, input) in
+its manifest, commits are atomic, and a restarted job anti-joins away
 already-committed partitions.
+
+Manifest entries come from the files a write produced: after the
+partitionBy write, each ``<col>=<value>`` directory becomes one entry
+whose file records, row count and optional min/max stats are read from
+the parquet footers — the write is the only pass over the data, and the
+range metadata the pruner uses lives with the stored files (as in
+DGFIndex). Every manifest records ``partition_col``, ``schema`` and
+``column_defaults``, and every entry lists at least one file.
 
 Atomicity model (Iceberg's, in miniature): each write lands its data
 files in a NEW per-snapshot directory ``data/snap-<id>/``; the manifest
@@ -39,6 +47,7 @@ import time
 import uuid
 from functools import reduce
 from pathlib import Path
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -76,6 +85,21 @@ def _range_may_match(stats: dict | None, lo, hi) -> bool:
     return True
 
 
+def _fold_stats(per_file: list[dict | None]) -> dict:
+    """Partition-grain {min, max} of one column from its per-file
+    stats; None marks a file without usable footer stats, which makes
+    both bounds unknown (None)."""
+    if any(s is None for s in per_file):
+        return {"min": None, "max": None}
+    mins = [s["min"] for s in per_file if s["min"] is not None]
+    maxs = [s["max"] for s in per_file if s["max"] is not None]
+    return {"min": min(mins, default=None), "max": max(maxs, default=None)}
+
+
+def _entry_bytes(entry: dict) -> int:
+    return sum(f["bytes"] for f in entry["files"])
+
+
 class IcebergLiteTable:
     def __init__(self, root: str | Path):
         self.root = Path(root)
@@ -94,13 +118,6 @@ class IcebergLiteTable:
         if not m:
             return set()
         return {p["partition"] for p in m["partitions"]}
-
-    def committed_snapshot_dirs(self) -> list[Path]:
-        m = self.current_manifest()
-        if not m:
-            return []
-        dirs = sorted({p["snap_dir"] for p in m["partitions"]})
-        return [self.data_dir / d for d in dirs]
 
     def _manifest_files(self) -> list[Path]:
         if not self.manifest_dir.exists():
@@ -134,6 +151,24 @@ class IcebergLiteTable:
 
     def _chain_ids(self) -> set[str]:
         return {s["snapshot_id"] for s in self.snapshots()}
+
+    def _require_manifest(self, snapshot_id: str | None = None) -> dict:
+        """The manifest of `snapshot_id` (CURRENT when None); raises
+        FileNotFoundError when there is none or it holds no partition."""
+        m = (
+            self.manifest_by_id(snapshot_id)
+            if snapshot_id is not None
+            else self.current_manifest()
+        )
+        if not m or not m["partitions"]:
+            raise FileNotFoundError(f"no committed snapshots under {self.root}")
+        return m
+
+    def _flip_current(self, snapshot_id: str) -> None:
+        """The commit: atomically point CURRENT at a written manifest."""
+        tmp = self.manifest_dir / "CURRENT.tmp"
+        tmp.write_text(f"manifest-{snapshot_id}.json")
+        tmp.replace(self.manifest_dir / "CURRENT")
 
     # -- registries (atomically-replaced JSON side files) -------------
     def _read_registry(self, name: str) -> dict:
@@ -176,9 +211,7 @@ class IcebergLiteTable:
                 f"is now {cur_id!r} — a commit landed in between; abort "
                 "and re-stage against the new table state"
             )
-        tmp = self.manifest_dir / "CURRENT.tmp"
-        tmp.write_text(f"manifest-{snapshot_id}.json")
-        tmp.replace(self.manifest_dir / "CURRENT")
+        self._flip_current(snapshot_id)
         del staged[snapshot_id]
         self._write_registry("STAGED.json", staged)
         return self.current_manifest()
@@ -253,13 +286,13 @@ class IcebergLiteTable:
             chain.append(
                 {
                     "snapshot_id": m["snapshot_id"],
-                    "parent_id": m.get("parent_id"),
-                    "committed_at_unix": m.get("committed_at_unix"),
-                    "total_rows": m.get("total_rows"),
-                    "meta": m.get("meta", {}),
+                    "parent_id": m["parent_id"],
+                    "committed_at_unix": m["committed_at_unix"],
+                    "total_rows": m["total_rows"],
+                    "meta": m["meta"],
                 }
             )
-            pid = m.get("parent_id")
+            pid = m["parent_id"]
             f = self.manifest_dir / f"manifest-{pid}.json" if pid else None
             m = json.loads(f.read_text()) if f and f.exists() else None
         return chain
@@ -270,6 +303,9 @@ class IcebergLiteTable:
     # keeps gc safe to run next to an in-flight commit from another
     # process. Older orphans are deleted together with their data.
     _GC_ORPHAN_GRACE_S = 3600
+
+    def _in_grace(self, manifest_file: Path) -> bool:
+        return manifest_file.stat().st_mtime >= time.time() - self._GC_ORPHAN_GRACE_S
 
     def gc_uncommitted(self) -> list[str]:
         """Delete orphan snapshot directories (data written by a run
@@ -292,11 +328,10 @@ class IcebergLiteTable:
             | set(self.tags().values())
             | set(self.staged())
         )
-        cutoff = time.time() - self._GC_ORPHAN_GRACE_S
         live: set[str] = set()
         for f in self._manifest_files():
             m = json.loads(f.read_text())
-            if m["snapshot_id"] in chain or f.stat().st_mtime >= cutoff:
+            if m["snapshot_id"] in chain or self._in_grace(f):
                 live.update(p["snap_dir"] for p in m["partitions"])
             else:
                 f.unlink()  # aged-out orphan manifest
@@ -326,14 +361,13 @@ class IcebergLiteTable:
         chain_ids = {s["snapshot_id"] for s in chain}
         keep_ids = {s["snapshot_id"] for s in chain[:keep_last]}
         keep_ids |= set(self.tags().values()) | set(self.staged())
-        cutoff = time.time() - self._GC_ORPHAN_GRACE_S
         removed_manifests = []
         for f in self._manifest_files():
             m = json.loads(f.read_text())
             sid = m["snapshot_id"]
             if sid in keep_ids:
                 continue
-            if sid not in chain_ids and f.stat().st_mtime >= cutoff:
+            if sid not in chain_ids and self._in_grace(f):
                 continue  # possibly an in-flight commit — leave for gc
             f.unlink()
             removed_manifests.append(sid)
@@ -349,38 +383,40 @@ class IcebergLiteTable:
         partitions: list[dict],
         meta: dict,
         snapshot_id: str,
+        *,
         partition_col: str | None = None,
-        drop_partitions: set[str] | None = None,
+        drop_partitions: set[str] | frozenset[str] = frozenset(),
         schema: dict | None = None,
         column_defaults: dict | None = None,
         stage_only: bool = False,
     ) -> dict:
+        """Write a manifest that applies `partitions` (and drops
+        `drop_partitions`) on top of CURRENT; fields left None carry
+        over from CURRENT. Flips CURRENT unless `stage_only`."""
         self.manifest_dir.mkdir(parents=True, exist_ok=True)
-        prev = self.current_manifest()
-        merged: dict[str, dict] = {}
-        if prev:
-            merged.update({p["partition"]: p for p in prev["partitions"]})
-        for k in drop_partitions or ():
-            merged.pop(k, None)
+        prev = self.current_manifest() or {"partitions": [], "column_defaults": {}}
+        merged = {
+            p["partition"]: p
+            for p in prev["partitions"]
+            if p["partition"] not in drop_partitions
+        }
         merged.update({p["partition"]: p for p in partitions})
         manifest = {
             "snapshot_id": snapshot_id,
-            "parent_id": prev["snapshot_id"] if prev else None,
+            "parent_id": prev.get("snapshot_id"),
             "committed_at_unix": time.time(),
             "meta": meta,
-            "partition_col": partition_col
-            or (prev.get("partition_col") if prev else None),
-            "schema": schema
-            if schema is not None
-            else (prev.get("schema") if prev else None),
-            "column_defaults": column_defaults
-            if column_defaults is not None
-            else ((prev.get("column_defaults") if prev else None) or {}),
+            "partition_col": partition_col or prev["partition_col"],
+            "schema": schema or prev["schema"],
+            "column_defaults": prev["column_defaults"]
+            if column_defaults is None
+            else column_defaults,
             "partitions": sorted(merged.values(), key=lambda p: p["partition"]),
             "total_rows": sum(p["rows"] for p in merged.values()),
         }
-        name = f"manifest-{snapshot_id}.json"
-        (self.manifest_dir / name).write_text(json.dumps(manifest, indent=1))
+        (self.manifest_dir / f"manifest-{snapshot_id}.json").write_text(
+            json.dumps(manifest, indent=1)
+        )
         if stage_only:
             # write-audit-publish: manifest on disk + staged registry,
             # NO pointer flip — invisible to readers until publish()
@@ -392,10 +428,7 @@ class IcebergLiteTable:
             self._write_registry("STAGED.json", staged)
             manifest["staged"] = True
             return manifest
-        # the pointer flip IS the commit (atomic rename)
-        tmp = self.manifest_dir / "CURRENT.tmp"
-        tmp.write_text(name)
-        tmp.replace(self.manifest_dir / "CURRENT")
+        self._flip_current(snapshot_id)
         return manifest
 
     # -- write with lineage + resume ----------------------------------
@@ -421,12 +454,15 @@ class IcebergLiteTable:
         it live or abort_staged() discards it. The data-quality gate
         pattern for production table feeds.
 
-        `stat_cols` opts columns into Iceberg-style manifest stats: the
-        lineage agg also collects per-partition min/max for each named
-        column, stored on the partition entry — `read(prune=...)` then
-        skips (directory, partition) pairs whose range cannot match, at
-        manifest-planning time, before any file listing. The extra agg
-        columns ride the SAME groupBy job the row counts already pay.
+        `stat_cols` opts columns into Iceberg-style manifest stats: each
+        partition entry records the min/max of every named column,
+        folded from the parquet footer stats of the files the write
+        produced (no pass over the data besides the write itself) —
+        `read(prune=...)` then skips (directory, partition) pairs whose
+        range cannot match, at manifest-planning time, before any file
+        listing. A column whose footers carry no min/max (Spark writes
+        timestamps as INT96, which has none) records null stats, which
+        the pruner keeps.
 
         `skipped_resume` lists EVERY previously-committed partition
         (the filter applied to the input), not input∩committed —
@@ -438,14 +474,12 @@ class IcebergLiteTable:
         if done:
             df = df.filter(~F.col(partition_col).isin(sorted(done)))
         snapshot_id = uuid.uuid4().hex[:16]
-        # per-partition row counts + optional min/max stats (lineage) —
-        # one extra small agg job regardless of how many stat cols ride
         parts = self._rewrite_entries(
             df, partition_col, f"snap-{snapshot_id}", stat_cols or [],
             time.time(),
         )
         manifest = self._commit(
-            parts, meta or {}, snapshot_id, partition_col,
+            parts, meta or {}, snapshot_id, partition_col=partition_col,
             schema=self._merged_schema_json(df.schema),
             stage_only=stage_only,
         )
@@ -488,11 +522,7 @@ class IcebergLiteTable:
         done = self.committed_partitions() if resume else set()
         if materialize:
             df = df.localCheckpoint()
-        vals = sorted(
-            str(r[0])
-            for r in df.select(partition_col).distinct().collect()
-            if r[0] is not None
-        )
+        vals = self._partition_values(df, partition_col)
         todo = [v for v in vals if v not in done]
         skipped = sorted(set(vals) & done)
         written: list[str] = []
@@ -533,18 +563,12 @@ class IcebergLiteTable:
         them (they collapse into the one new directory, bounding the
         post-compact read set to `max_dirs`); (b) small-file
         fragmentation — a partition holding >= `min_files` files
-        averaging under half `target_file_bytes`. Legacy entries
-        without file records are always marked (layout unknown).
-        Returns {"rewrite": [...], "kept_dirs": [...], "dirs_before":
+        averaging under half `target_file_bytes`. Returns {"rewrite": [...], "kept_dirs": [...], "dirs_before":
         n} for compact(partitions=plan["rewrite"])."""
-        m = self.current_manifest()
-        if not m or not m["partitions"]:
-            raise FileNotFoundError(f"no committed snapshots under {self.root}")
+        m = self._require_manifest()
         by_dir: dict[str, int] = {}
         for p in m["partitions"]:
-            by_dir[p["snap_dir"]] = by_dir.get(p["snap_dir"], 0) + sum(
-                f.get("bytes", 0) for f in p.get("files") or []
-            )
+            by_dir[p["snap_dir"]] = by_dir.get(p["snap_dir"], 0) + _entry_bytes(p)
         if len(by_dir) <= max_dirs:
             # already within the read-amplification target: the dir
             # criterion is a fixpoint (only small-file checks apply)
@@ -557,18 +581,11 @@ class IcebergLiteTable:
             )
         rewrite = []
         for p in m["partitions"]:
-            files = p.get("files")
-            if files is None:
+            n = len(p["files"])
+            if p["snap_dir"] not in kept_dirs or (
+                n >= min_files and _entry_bytes(p) / n < target_file_bytes / 2
+            ):
                 rewrite.append(p["partition"])
-                continue
-            if p["snap_dir"] not in kept_dirs:
-                rewrite.append(p["partition"])
-                continue
-            n = len(files)
-            if n >= min_files:
-                avg = sum(f.get("bytes", 0) for f in files) / n
-                if avg < target_file_bytes / 2:
-                    rewrite.append(p["partition"])
         return {
             "rewrite": sorted(rewrite),
             "kept_dirs": sorted(kept_dirs),
@@ -601,32 +618,26 @@ class IcebergLiteTable:
         a manifest whose every partition points at the new directory,
         superseding the old file set WITHOUT touching it: time travel
         to any pre-compaction snapshot id keeps reading the old
-        directories until expire_snapshots retires them. Row counts
-        carry over from the current manifest (compaction moves bytes,
-        never rows), so lineage stays intact.
+        directories until expire_snapshots retires them. The new
+        entries are built from the new files' footers like every
+        write's; compaction moves bytes, never rows, so row counts and
+        partition-grain min/max come out as before.
 
         `sort_cols` is Iceberg's rewrite-with-sort-order: rows are
         sorted by those columns WITHIN each partition's write tasks, so
         rolled files and their parquet row groups cover tight,
         near-disjoint value ranges — the layout under which engine-side
-        footer-stats pruning (and any future file-grain manifest stats)
-        actually skips data. Partition-grain manifest min/max are
-        unchanged by construction (same rows per partition).
+        footer-stats pruning and the manifest's file-grain stats
+        actually skip data. The rewritten entries record stats for the
+        union of their stat columns and `sort_cols`.
 
         `partitions` restricts the rewrite to those partition values
         (Iceberg's filtered rewrite_data_files; pair with
         plan_compaction): at 100 TB a maintenance pass rewrites the
         fragmented 1% — every other entry carries over untouched, and
         the audit stats below cover only the rewritten subset."""
-        m = self.current_manifest()
-        if not m or not m["partitions"]:
-            raise FileNotFoundError(f"no committed snapshots under {self.root}")
-        col = m.get("partition_col")
-        if col is None:
-            raise ValueError(
-                "compact() needs a partition_col-recorded manifest "
-                "(legacy whole-dir manifests have no partition map)"
-            )
+        m = self._require_manifest()
+        col = m["partition_col"]
         if partitions is None:
             sel = m["partitions"]
         else:
@@ -637,18 +648,12 @@ class IcebergLiteTable:
             if not partitions:
                 return dict(m)
             sel = [by_part[v] for v in sorted(set(partitions))]
-        dirs_before = {p["snap_dir"] for p in sel}
-        # audit covers exactly the rewritten subset: count files from
-        # the selected entries (a shared dir's untouched partitions and
-        # stale superseded copies would inflate an rglob count); legacy
-        # entries without file records fall back to the dir walk
-        files_before = sum(
-            len(p.get("files") or []) for p in sel
-        ) or self._data_file_count(dirs_before)
         snapshot_id = uuid.uuid4().hex[:16]
         snap_dir = f"snap-{snapshot_id}"
         t0 = time.time()
-        src = self._read_entries(spark, sel, col, m).repartition(col)
+        # the rewrite read is schema-reconciled, so compaction also
+        # physically migrates pre-evolution files to the current schema
+        src = self._read_entries(spark, sel, m).repartition(col)
         if sort_cols:
             src = src.sortWithinPartitions(col, *sort_cols)
         (
@@ -657,74 +662,40 @@ class IcebergLiteTable:
             .partitionBy(col)
             .parquet(str(self.data_dir / snap_dir))
         )
-        dt = time.time() - t0
-        # per-file records re-collect from the NEW directory's footers;
         # sort_cols join the stat set so sorted/z-ordered files carry
         # the tight per-file ranges that make file-grain pruning bite
-        fcols = sorted(set(self._entry_stat_cols(sel))
-                       | set(sort_cols or []))
-        parts = [
-            {
-                "partition": p["partition"],
-                "rows": p["rows"],
-                "seconds": round(dt, 3),
-                "written_at_unix": time.time(),
-                "snap_dir": snap_dir,
-                "files": self._file_entries(
-                    snap_dir, col, p["partition"], fcols
-                ),
-                # compaction moves bytes, never rows — min/max stats
-                # carry over with the row counts
-                **({"stats": p["stats"]} if p.get("stats") else {}),
-            }
-            for p in sel
-        ]
-        files_after = self._data_file_count({snap_dir})
-        bytes_before = sum(
-            f.get("bytes", 0)
-            for p in sel
-            for f in p.get("files") or []
+        parts = self._written_entries(
+            snap_dir, col,
+            sorted(set(self._entry_stat_cols(sel)) | set(sort_cols or [])), t0,
         )
-        bytes_after = sum(
-            f.get("bytes", 0) for p in parts for f in p.get("files") or []
-        )
+        # the audit covers exactly the rewritten subset
         stats = {
             "op": "compact",
-            "dirs_before": len(dirs_before),
+            "dirs_before": len({p["snap_dir"] for p in sel}),
             "dirs_after": 1,
-            "files_before": files_before,
-            "files_after": files_after,
-            "bytes_before": bytes_before,
-            "bytes_after": bytes_after,
+            "files_before": sum(len(p["files"]) for p in sel),
+            "files_after": sum(len(p["files"]) for p in parts),
+            "bytes_before": sum(map(_entry_bytes, sel)),
+            "bytes_after": sum(map(_entry_bytes, parts)),
             "target_file_rows": target_file_rows,
             "sort_cols": list(sort_cols or []),
             "partitions_rewritten": len(sel),
             "partitions_untouched": len(m["partitions"]) - len(sel),
         }
-        manifest = self._commit(
-            parts, {**(meta or {}), **stats}, snapshot_id, col,
-            # backfills the recorded schema for legacy (pre-schema)
-            # tables; a no-op merge otherwise — and since the rewrite
-            # read is schema-reconciled, compaction also physically
-            # migrates pre-evolution files to the current schema
-            schema=self._merged_schema_json(src.schema),
-        )
+        manifest = self._commit(parts, {**(meta or {}), **stats}, snapshot_id)
         manifest.update(stats)
         return manifest
 
     # -- schema evolution ---------------------------------------------
     def schema(self, snapshot_id: str | None = None) -> StructType | None:
         """The table schema as of a snapshot (CURRENT by default), or
-        None for legacy manifests written before schemas were recorded
-        (compact() backfills those)."""
+        None before the first commit."""
         m = (
             self.manifest_by_id(snapshot_id)
             if snapshot_id is not None
             else self.current_manifest()
         )
-        if not m or not m.get("schema"):
-            return None
-        return StructType.fromJson(m["schema"])
+        return StructType.fromJson(m["schema"]) if m else None
 
     def _merged_schema_json(self, written: StructType) -> dict:
         """Evolve the recorded schema with a write's schema: existing
@@ -758,15 +729,8 @@ class IcebergLiteTable:
         ("double", "array<float>" — DDL parsing needs an active
         SparkSession). Time travel to a pre-add snapshot reads the old
         schema."""
-        m = self.current_manifest()
-        if not m or not m["partitions"]:
-            raise FileNotFoundError(f"no committed snapshots under {self.root}")
-        cur = self.schema()
-        if cur is None:
-            raise ValueError(
-                "table has no recorded schema (written by an older build) "
-                "— run compact() once to backfill it"
-            )
+        m = self._require_manifest()
+        cur = StructType.fromJson(m["schema"])
         names = {f.name for f in cur.fields}
         fields = list(cur.fields)
         for name, t in cols.items():
@@ -774,7 +738,7 @@ class IcebergLiteTable:
                 raise ValueError(f"column {name!r} already exists")
             dt = DataType.fromDDL(t) if isinstance(t, str) else t
             fields.append(StructField(name, dt, nullable=True))
-        new_defaults = dict(m.get("column_defaults") or {})
+        new_defaults = dict(m["column_defaults"])
         for name, v in (defaults or {}).items():
             if name not in cols:
                 raise ValueError(f"default for unknown new column {name!r}")
@@ -795,25 +759,18 @@ class IcebergLiteTable:
         files keep the bytes until partitions rewrite (delete/merge/
         compact), and time travel to a pre-drop snapshot still shows
         them. The partition column cannot be dropped."""
-        m = self.current_manifest()
-        if not m or not m["partitions"]:
-            raise FileNotFoundError(f"no committed snapshots under {self.root}")
-        cur = self.schema()
-        if cur is None:
-            raise ValueError(
-                "table has no recorded schema (written by an older build) "
-                "— run compact() once to backfill it"
-            )
+        m = self._require_manifest()
+        cur = StructType.fromJson(m["schema"])
         have = {f.name for f in cur.fields}
         missing = [n for n in names if n not in have]
         if missing:
             raise ValueError(f"cannot drop unknown columns {missing}")
-        if m.get("partition_col") in names:
+        if m["partition_col"] in names:
             raise ValueError("cannot drop the partition column")
         fields = [f for f in cur.fields if f.name not in set(names)]
         new_defaults = {
             k: v
-            for k, v in (m.get("column_defaults") or {}).items()
+            for k, v in m["column_defaults"].items()
             if k not in set(names)
         }
         snapshot_id = uuid.uuid4().hex[:16]
@@ -826,86 +783,54 @@ class IcebergLiteTable:
         manifest.update(stats)
         return manifest
 
-    @staticmethod
-    def _reconcile_frames(
-        frames: list[DataFrame],
-        target: StructType | None,
-        defaults: dict | None,
-    ) -> list[DataFrame]:
-        """Project every physical frame onto the target schema
-        (Iceberg's read-time schema resolution): columns a frame lacks
-        (written before an add_columns) materialize as the recorded
-        default or NULL; columns dropped from the schema project away;
-        everything casts to the declared type (also normalizing
-        hive-path partition-value type inference) in schema order. No
-        target (legacy manifest): frames pass through for the plain
-        unionByName read."""
-        if target is None:
-            return frames
-        d = defaults or {}
-        out = []
-        for f in frames:
+    def _read_entries(
+        self, spark: SparkSession, entries: list[dict], m: dict
+    ) -> DataFrame:
+        """Read exactly the files `entries` list, one DataFrame per
+        snapshot directory: the read is fully manifest-driven — Spark
+        is handed the exact file paths, no directory listing against
+        the store, and plan_scan's file-grain pruning has already
+        dropped provably-irrelevant files. Every frame is projected
+        onto manifest `m`'s schema (Iceberg's read-time schema
+        resolution): columns a frame lacks (written before an
+        add_columns) materialize as the recorded default or NULL;
+        columns dropped from the schema project away; everything casts
+        to the declared type (also normalizing hive-path partition-value
+        type inference) in schema order."""
+        paths: dict[str, list[str]] = {}
+        for p in sorted(entries, key=lambda p: (p["snap_dir"], p["partition"])):
+            base = self.data_dir / p["snap_dir"]
+            paths.setdefault(str(base), []).extend(
+                str(base / f["path"]) for f in p["files"]
+            )
+        target = StructType.fromJson(m["schema"])
+        frames = []
+        for base, ps in paths.items():
+            f = spark.read.option("basePath", base).parquet(*ps)
             have = set(f.columns)
-            out.append(
+            frames.append(
                 f.select(
                     *(
                         (F.col(fld.name) if fld.name in have
-                         else F.lit(d.get(fld.name)))
+                         else F.lit(m["column_defaults"].get(fld.name)))
                         .cast(fld.dataType)
                         .alias(fld.name)
                         for fld in target.fields
                     )
                 )
             )
-        return out
-
-    def _frames_for_entries(
-        self, spark: SparkSession, entries: list[dict], col: str | None
-    ) -> list[DataFrame]:
-        """One DataFrame per referenced snapshot directory, restricted to
-        exactly the files (or, for pre-file-manifest entries, the
-        (directory, partition) pairs) in `entries` — entries with
-        per-file records make the read fully manifest-driven: Spark is
-        handed the exact file paths, no directory listing against the
-        store, and plan_scan's file-grain pruning has already dropped
-        provably-irrelevant files."""
-        by_dir: dict[str, list[dict]] = {}
-        for p in entries:
-            by_dir.setdefault(p["snap_dir"], []).append(p)
-        frames = []
-        for snap_dir, ps in sorted(by_dir.items()):
-            base = self.data_dir / snap_dir
-            if col is None:
-                # legacy manifests (no partition_col recorded): whole-dir
-                # union — correct for the append-only resume model
-                frames.append(spark.read.parquet(str(base)))
-            else:
-                paths = []
-                for p in sorted(ps, key=lambda p: p["partition"]):
-                    if p.get("files"):
-                        paths += [str(base / f["path"]) for f in p["files"]]
-                    else:
-                        paths.append(str(base / f"{col}={p['partition']}"))
-                frames.append(
-                    spark.read.option("basePath", str(base)).parquet(*paths)
-                )
-        return frames
-
-    def _read_entries(
-        self,
-        spark: SparkSession,
-        entries: list[dict],
-        col: str,
-        manifest: dict | None = None,
-    ) -> DataFrame:
-        frames = self._frames_for_entries(spark, entries, col)
-        if manifest and manifest.get("schema"):
-            frames = self._reconcile_frames(
-                frames,
-                StructType.fromJson(manifest["schema"]),
-                manifest.get("column_defaults"),
-            )
         return reduce(lambda a, b: a.unionByName(b), frames)
+
+    @staticmethod
+    def _partition_values(df: DataFrame, col: str) -> list[str]:
+        """Sorted distinct non-NULL values of `col` in Spark's string
+        form: the form partitionBy writes as directory names and the
+        manifest keys entries by."""
+        return sorted(
+            r[0]
+            for r in df.select(F.col(col).cast("string")).distinct().collect()
+            if r[0] is not None
+        )
 
     @staticmethod
     def _entry_stat_cols(entries: list[dict]) -> list[str]:
@@ -925,8 +850,10 @@ class IcebergLiteTable:
         executor-side write-task file reports; footers are KB-sized
         metadata reads. String footer stats may be writer-truncated,
         but parquet truncation widens the range (min down, max up), so
-        pruning on them stays conservative; files whose footers lack
-        usable stats for a column are kept by the pruner."""
+        pruning on them stays conservative. All-NULL row groups add
+        nothing (a file with no non-NULL value records min/max None);
+        a column any other row group lacks min/max for is left out of
+        the file's stats, and the pruner keeps the file."""
         import pyarrow.parquet as pq
 
         base = self.data_dir / snap_dir / f"{col}={partition}"
@@ -950,16 +877,17 @@ class IcebergLiteTable:
                     continue
                 mins, maxs = [], []
                 for g in range(md.num_row_groups):
-                    s = md.row_group(g).column(j).statistics
-                    if s is None or not s.has_min_max:
-                        mins = []
+                    chunk = md.row_group(g).column(j)
+                    s = chunk.statistics
+                    if s is not None and s.has_min_max:
+                        mins.append(s.min)
+                        maxs.append(s.max)
+                    elif s is None or s.null_count != chunk.num_values:
                         break
-                    mins.append(s.min)
-                    maxs.append(s.max)
-                if mins:
+                else:
                     stats[c] = {
-                        "min": _json_scalar(min(mins)),
-                        "max": _json_scalar(max(maxs)),
+                        "min": _json_scalar(min(mins)) if mins else None,
+                        "max": _json_scalar(max(maxs)) if maxs else None,
                     }
             out.append(
                 {
@@ -971,6 +899,61 @@ class IcebergLiteTable:
             )
         return out
 
+    def _written_entries(
+        self, snap_dir: str, col: str, stat_cols: list[str], t0: float
+    ) -> list[dict]:
+        """Manifest entries for the `col=<value>` directories a write
+        left in `snap_dir` (the one entry builder of every write): the
+        directory name is the partition value in Spark's string form,
+        `files` are its footer records, `rows` their sum, and each stat
+        in `stat_cols` the fold of the per-file min/max — null when any
+        file lacks footer stats for it. A write that produced no
+        partition leaves no directory behind. Raises before any commit
+        (the orphan snapshot dir is invisible and gc'd) for a NULL
+        partition value, which lands in __HIVE_DEFAULT_PARTITION__ and
+        would vanish from reads, and for a value Spark hive-escapes in
+        the path (':' -> %3A, '%' -> %25, ...)."""
+        dt = time.time() - t0
+        base = self.data_dir / snap_dir
+        prefix = f"{col}="
+        values = sorted(
+            d.name[len(prefix):]
+            for d in base.iterdir()
+            if d.is_dir() and d.name.startswith(prefix)
+        )
+        if "__HIVE_DEFAULT_PARTITION__" in values:
+            raise ValueError(
+                f"NULL values in partition column {col!r} are unsupported "
+                "— filter or fill them before writing"
+            )
+        escaped = [unquote(v) for v in values if "%" in v]
+        if escaped:
+            raise ValueError(
+                f"partition values {escaped!r} contain characters "
+                "Spark escapes in hive paths — unsupported; sanitize "
+                "the partition column before writing"
+            )
+        if not values:
+            shutil.rmtree(base)
+        entries = []
+        for v in values:
+            files = self._file_entries(snap_dir, col, v, stat_cols)
+            entry = {
+                "partition": v,
+                "rows": sum(f["rows"] for f in files),
+                "seconds": round(dt, 3),
+                "written_at_unix": time.time(),
+                "snap_dir": snap_dir,
+                "files": files,
+            }
+            if stat_cols:
+                entry["stats"] = {
+                    c: _fold_stats([f.get("stats", {}).get(c) for f in files])
+                    for c in stat_cols
+                }
+            entries.append(entry)
+        return entries
+
     def _rewrite_entries(
         self,
         df: DataFrame,
@@ -979,72 +962,16 @@ class IcebergLiteTable:
         stat_cols: list[str],
         t0: float,
     ) -> list[dict]:
-        """Write `df` partitionBy(col) into `snap_dir` and build manifest
-        entries (rows + optional min/max stats + per-file records) for
-        the partitions that actually contain rows. Shared tail of the
-        copy-on-write ops."""
-        aggs = [F.count(F.lit(1)).alias("n")]
-        for c in stat_cols:
-            aggs += [F.min(c).alias(f"_min_{c}"), F.max(c).alias(f"_max_{c}")]
-        lineage = {r[0]: r for r in df.groupBy(col).agg(*aggs).collect()}
-        if any(k is None for k in lineage):
-            # caught BEFORE the write: NULL partition rows would land
-            # in __HIVE_DEFAULT_PARTITION__, which no manifest path
-            # matches, and silently vanish from reads
-            raise ValueError(
-                f"NULL values in partition column {col!r} are unsupported "
-                "— filter or fill them before writing"
-            )
-        if lineage:
-            (
-                df.repartition(col)
-                .write.mode("error")
-                .partitionBy(col)
-                .parquet(str(self.data_dir / snap_dir))
-            )
-        dt = time.time() - t0
-        entries = [
-            {
-                "partition": str(k),
-                "rows": int(r["n"]),
-                "seconds": round(dt, 3),
-                "written_at_unix": time.time(),
-                "snap_dir": snap_dir,
-                "files": self._file_entries(snap_dir, col, str(k), stat_cols),
-                **(
-                    {
-                        "stats": {
-                            c: {
-                                "min": _json_scalar(r[f"_min_{c}"]),
-                                "max": _json_scalar(r[f"_max_{c}"]),
-                            }
-                            for c in stat_cols
-                        }
-                    }
-                    if stat_cols
-                    else {}
-                ),
-            }
-            for k, r in sorted(lineage.items())
-        ]
-        unwritable = [
-            p["partition"]
-            for p in entries
-            if p["rows"] > 0 and not p["files"]
-        ]
-        if unwritable:
-            # Spark hive-escapes some characters in partition paths
-            # (':' -> %3A, '%' -> %25, ...); the manifest stores raw
-            # values, so an escaped directory would commit entries no
-            # read path matches. Fail loudly pre-commit (the orphan
-            # snapshot dir is invisible and gc'd) instead of
-            # committing a table whose reads break.
-            raise ValueError(
-                f"partition values {unwritable!r} contain characters "
-                "Spark escapes in hive paths — unsupported; sanitize "
-                "the partition column before writing"
-            )
-        return entries
+        """Write `df` partitionBy(col) into `snap_dir` and return the
+        manifest entries of what it wrote. Shared tail of the
+        copy-on-write ops; the write is its only Spark action."""
+        (
+            df.repartition(col)
+            .write.mode("error")
+            .partitionBy(col)
+            .parquet(str(self.data_dir / snap_dir))
+        )
+        return self._written_entries(snap_dir, col, stat_cols, t0)
 
     def delete_where(
         self,
@@ -1085,26 +1012,23 @@ class IcebergLiteTable:
         # uncounted, making the outcome depend on which rows happen to
         # share a partition with a real match)
         match = F.coalesce(cond.cast("boolean"), F.lit(False))
-        m = self.current_manifest()
-        if not m or not m["partitions"]:
-            raise FileNotFoundError(f"no committed snapshots under {self.root}")
-        col = m.get("partition_col")
-        if col is None:
-            raise ValueError("delete_where() needs a partition_col manifest")
+        m = self._require_manifest()
+        col = m["partition_col"]
         kept, pruned = self.plan_scan(prune=prune)
         by_part = {p["partition"]: p for p in m["partitions"]}
-        # phase 2: count matches per partition over the kept set only
+        # phase 2: count matches per partition over the kept set only,
+        # keyed by the partition's string form (the manifest's key)
         matches = {
             r[0]: int(r[1])
             for r in (
-                self._read_entries(spark, kept, col, m)
+                self._read_entries(spark, kept, m)
                 .filter(match)
-                .groupBy(col)
+                .groupBy(F.col(col).cast("string"))
                 .agg(F.count(F.lit(1)))
                 .collect()
             )
-        }
-        affected = sorted(str(k) for k, n in matches.items() if n > 0)
+        } if kept else {}
+        affected = sorted(matches)
         if not affected:
             out = dict(m)
             out.update(
@@ -1123,9 +1047,7 @@ class IcebergLiteTable:
         snapshot_id = uuid.uuid4().hex[:16]
         t0 = time.time()
         aff_entries = [by_part[v] for v in affected]
-        remainder = self._read_entries(spark, aff_entries, col, m).filter(
-            ~match
-        )
+        remainder = self._read_entries(spark, aff_entries, m).filter(~match)
         parts = self._rewrite_entries(
             remainder,
             col,
@@ -1138,12 +1060,12 @@ class IcebergLiteTable:
             "op": "delete_where",
             "rewritten": [p["partition"] for p in parts],
             "dropped": dropped,
-            "deleted_rows": sum(int(matches[k]) for k in matches),
+            "deleted_rows": sum(matches.values()),
             "pruned_untouched": sorted(p["partition"] for p in pruned),
             "committed": True,
         }
         manifest = self._commit(
-            parts, {**(meta or {}), **stats}, snapshot_id, col,
+            parts, {**(meta or {}), **stats}, snapshot_id,
             drop_partitions=set(affected),
         )
         manifest.update(stats)
@@ -1175,19 +1097,18 @@ class IcebergLiteTable:
         SQL MERGE). Stats for rewritten/new partitions are recomputed
         over `stat_cols` (default: the columns the touched entries
         already carry stats for — falling back to the table-wide stat
-        set for brand-new partitions)."""
-        m = self.current_manifest()
-        if not m or not m["partitions"]:
-            raise FileNotFoundError(f"no committed snapshots under {self.root}")
-        col = m.get("partition_col")
-        if col is None:
-            raise ValueError("merge_upsert() needs a partition_col manifest")
+        set for brand-new partitions).
+
+        Only the partitions the SOURCE touches are read and rewritten,
+        so the key match is per partition: a source row whose key
+        already lives in a different partition (its partition column
+        value changed) is inserted into its new partition, and the old
+        row stays behind in the old one. Delete it with delete_where
+        first when keys can move between partitions."""
+        m = self._require_manifest()
+        col = m["partition_col"]
         by_part = {p["partition"]: p for p in m["partitions"]}
-        touched = sorted(
-            str(r[0])
-            for r in source.select(col).distinct().collect()
-            if r[0] is not None
-        )
+        touched = self._partition_values(source, col)
         existing = [v for v in touched if v in by_part]
         aff_entries = [by_part[v] for v in existing]
         scols = stat_cols or self._entry_stat_cols(
@@ -1196,7 +1117,7 @@ class IcebergLiteTable:
         snapshot_id = uuid.uuid4().hex[:16]
         t0 = time.time()
         if existing:
-            old = self._read_entries(spark, aff_entries, col, m)
+            old = self._read_entries(spark, aff_entries, m)
             source = source.select(*old.columns)  # align column order
             new_df = old.join(source, on=key_cols, how="left_anti").unionByName(
                 source
@@ -1213,7 +1134,7 @@ class IcebergLiteTable:
             "untouched": len(by_part) - len(existing),
         }
         manifest = self._commit(
-            parts, {**(meta or {}), **stats}, snapshot_id, col,
+            parts, {**(meta or {}), **stats}, snapshot_id,
             drop_partitions=set(existing),
         )
         manifest.update(stats)
@@ -1265,7 +1186,7 @@ class IcebergLiteTable:
         removed: set[str] = set()
         neutral_skipped = 0
         for parent, child in zip(seq, seq[1:]):
-            if (child.get("meta") or {}).get("op") in self._DATA_NEUTRAL_OPS:
+            if child["meta"].get("op") in self._DATA_NEUTRAL_OPS:
                 neutral_skipped += 1
                 continue
             pm = {p["partition"]: p["snap_dir"] for p in parent["partitions"]}
@@ -1326,15 +1247,7 @@ class IcebergLiteTable:
         entries = [p for p in m["partitions"] if p["partition"] in want]
         if not entries:
             return self.read(spark, snapshot_id=ch["to"]).where(F.lit(False))
-        return self._read_entries(spark, entries, m.get("partition_col"), m)
-
-    def _data_file_count(self, snap_dirs: set[str]) -> int:
-        return sum(
-            1
-            for d in snap_dirs
-            for f in (self.data_dir / d).rglob("part-*")
-            if f.is_file()
-        )
+        return self._read_entries(spark, entries, m)
 
     def plan_scan(
         self,
@@ -1350,13 +1263,7 @@ class IcebergLiteTable:
         column are conservatively kept. Pure metadata — no Spark, no
         file listing: this is the decision a 1000-executor driver makes
         before touching the object store."""
-        m = (
-            self.manifest_by_id(snapshot_id)
-            if snapshot_id is not None
-            else self.current_manifest()
-        )
-        if not m or not m["partitions"]:
-            raise FileNotFoundError(f"no committed snapshots under {self.root}")
+        m = self._require_manifest(snapshot_id)
         kept, skipped = [], []
         for p in m["partitions"]:
             stats = p.get("stats") or {}
@@ -1374,8 +1281,8 @@ class IcebergLiteTable:
             # of its rolled files, not all of them. Entries are copied,
             # never mutated; a partition whose every file is pruned
             # skips entirely.
-            files = p.get("files")
-            if prune and files:
+            files = p["files"]
+            if prune:
                 fk = [
                     f
                     for f in files
@@ -1424,35 +1331,10 @@ class IcebergLiteTable:
             if tag not in refs:
                 raise KeyError(f"unknown tag {tag!r}")
             snapshot_id = refs[tag]
-        m = (
-            self.manifest_by_id(snapshot_id)
-            if snapshot_id is not None
-            else self.current_manifest()
-        )
-        if not m or not m["partitions"]:
-            raise FileNotFoundError(f"no committed snapshots under {self.root}")
-        col = m.get("partition_col")
+        m = self._require_manifest(snapshot_id)
         entries, _ = self.plan_scan(snapshot_id, prune)
-        frames = self._frames_for_entries(spark, entries, col)
-        if not frames:
-            # everything pruned: empty frame with the table's schema
-            # (one footer read of the first referenced partition path)
-            p0 = m["partitions"][0]
-            base = self.data_dir / p0["snap_dir"]
-            path = (
-                str(base)
-                if col is None
-                else str(base / f"{col}={p0['partition']}")
-            )
-            frames = [
-                spark.read.option("basePath", str(base))
-                .parquet(path)
-                .where(F.lit(False))
-            ]
-        if m.get("schema"):
-            frames = self._reconcile_frames(
-                frames,
-                StructType.fromJson(m["schema"]),
-                m.get("column_defaults"),
-            )
-        return reduce(lambda a, b: a.unionByName(b), frames)
+        if entries:
+            return self._read_entries(spark, entries, m)
+        # everything pruned: empty frame with the table's schema (one
+        # footer read of the first entry's files)
+        return self._read_entries(spark, m["partitions"][:1], m).where(F.lit(False))

@@ -484,6 +484,11 @@ def resample_to_equi7_tiles(
 
     Input schema: image_id, bytes, fmt, dtype, w, h, crs,
     x_min, y_min, x_max, y_max, nodata.
+
+    `out_fmt` "png" and "q8" store the tile as 8-bit pixels clipped to
+    0..255. A row whose nodata is not an integer in 0..255 gets null
+    `bytes` in those formats: the clip would turn its nodata pixels into
+    valid values. "raw" keeps the source dtype for every row.
     """
     grid = grid or GridConfig()
     ts = float(TILING_ID_TO_SIZE[tiling_id])
@@ -562,11 +567,14 @@ def resample_to_equi7_tiles(
                     resampling,
                     (row["win_r0"], row["win_r1"], row["win_c0"], row["win_c1"]),
                 )
-                n_valid = int((warped != row["nodata"]).sum())
+                nodata = float(row["nodata"])
+                n_valid = int((warped != nodata).sum())
                 if out_fmt == "raw":
                     blob = warped.tobytes()
-                else:
+                elif nodata.is_integer() and 0 <= nodata <= 255:
                     blob = encode(np.clip(warped, 0, 255).astype(np.uint8), out_fmt)
+                else:
+                    blob = None
                 out_rows.append(
                     {
                         "image_id": row["image_id"],
@@ -578,7 +586,7 @@ def resample_to_equi7_tiles(
                         "h": n_px,
                         "fmt": out_fmt,
                         "dtype": str(warped.dtype),
-                        "nodata": float(row["nodata"]),
+                        "nodata": nodata,
                         "ll_x": row["ll_x"],
                         "ll_y": row["ll_y"],
                         "sampling": s,

@@ -113,10 +113,10 @@ def main() -> None:
 
         kept_f, _ = t.plan_scan(prune={"v": (sub_lo, sub_hi)})
         files_total = sum(
-            len(p.get("files") or [])
+            len(p["files"])
             for p in t.current_manifest()["partitions"]
         )
-        files_kept = sum(len(p.get("files") or []) for p in kept_f)
+        files_kept = sum(len(p["files"]) for p in kept_f)
         timed_sub(None)  # warm
         sub_full_a, ns1 = timed_sub(None)
         sub_full_b, _ = timed_sub(None)

@@ -289,7 +289,7 @@ def dump(sf_dir: str, tmp: str) -> list[tuple[str, str, str]]:
     table.compact(spark, target_file_rows=200, sort_cols=["n"])
     m_fg = table.current_manifest()
     all_files = [
-        f for p in m_fg["partitions"] for f in p.get("files") or []
+        f for p in m_fg["partitions"] for f in p["files"]
     ]
     hi = max(
         f["stats"]["n"]["max"]
@@ -298,7 +298,7 @@ def dump(sf_dir: str, tmp: str) -> list[tuple[str, str, str]]:
     )
     kept, _ = table.plan_scan(prune={"n": (hi, None)})
     fg = table.read(spark, prune={"n": (hi, None)})
-    n_files = sum(len(p.get("files") or []) for p in kept)
+    n_files = sum(len(p["files"]) for p in kept)
     n_files_total = len(all_files)
     sections.append((
         "File-grain manifest-pruned read after a sort-order compact",

@@ -391,7 +391,7 @@ def test_compact_sort_order_clusters_files(spark, tmp_path):
 
 def test_flagship_sink_records_geo_stats(spark, tmp_path):
     """The flagship job's iceberg-lite sink records ll_x/ll_y manifest
-    stats (same lineage agg), so a projected-bbox reader can prune
+    stats, so a projected-bbox reader can prune
     (snapshot, subgrid) pairs from metadata. Pruned read == plain
     read+filter (pruning is planning only), an out-of-domain bbox
     prunes everything to an empty frame with the sink schema."""
@@ -876,8 +876,8 @@ def test_partial_compaction_with_planner(spark, tmp_path):
 def test_delete_where_null_semantics_and_write_validation(spark, tmp_path):
     """Hardening from review: (a) SQL DELETE semantics — rows whose
     condition evaluates to NULL survive the rewrite and are never
-    counted; (b) NULL partition values fail loudly BEFORE any data
-    lands; (c) partition values Spark hive-escapes (':', '%') fail
+    counted; (b) NULL partition values fail loudly before any
+    commit; (c) partition values Spark hive-escapes (':', '%') fail
     loudly instead of committing entries no read path matches;
     (d) staged ids cannot be tagged (a later abort would leave the
     tag dangling and pin retention forever)."""
@@ -956,3 +956,125 @@ def test_expire_respects_inflight_commit_grace(spark, tmp_path):
     out = t.expire_snapshots(keep_last=1)
     assert "inflight1" in out["removed_manifests"]
     assert not inflight.exists() and not inflight_dir.exists()
+
+
+def test_manifest_entries_equal_their_files(spark, tmp_path):
+    """Every commit kind builds its entries from the files it wrote:
+    after each op, every chain manifest records partition_col, schema
+    and column_defaults; every entry lists >= 1 file; its rows equal
+    the sum of its file rows and the rows read back for its partition;
+    its stats equal the min/max of the rows read back (int, double,
+    string, date; NULLs ignored, an all-NULL column gives None). A
+    timestamp stat column (INT96: no footer min/max) records null
+    stats, and a pruned read on it equals the unpruned read."""
+    import datetime
+
+    schema = (
+        "part string, id int, i int, d double, s string, dt date,"
+        " ts timestamp, extra int"
+    )
+    stat_cols = ["i", "d", "s", "dt", "ts"]
+    day = datetime.date(2024, 1, 1)
+
+    def rows(part, ids, null_i=False):
+        return [
+            (part, k, None if null_i or k % 7 == 3 else (k * 37) % 101 - 50,
+             k * 0.5 + 0.25, f"s{(k * 13) % 97:02d}",
+             day + datetime.timedelta(days=k % 40),
+             datetime.datetime(2024, 1, 1) + datetime.timedelta(hours=k), k)
+            for k in ids
+        ]
+
+    mk = lambda r: spark.createDataFrame(r, schema).repartition(3)
+    t = IcebergLiteTable(tmp_path / "tbl")
+
+    def check():
+        for snap in t.snapshots():
+            m = t.manifest_by_id(snap["snapshot_id"])
+            assert m["partition_col"] == "part"
+            assert m["schema"] and isinstance(m["column_defaults"], dict)
+            df = t.read(spark, snapshot_id=snap["snapshot_id"])
+            cols = [c for c in stat_cols if c in df.columns]
+            aggs = [F.count(F.lit(1)).alias("n")]
+            for c in cols:
+                aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
+            back = {r["part"]: r for r in df.groupBy("part").agg(*aggs).collect()}
+            assert set(back) == {p["partition"] for p in m["partitions"]}
+            for p in m["partitions"]:
+                r = back[p["partition"]]
+                assert p["files"]
+                assert p["rows"] == sum(f["rows"] for f in p["files"]) == r["n"]
+                for c, st in p["stats"].items():
+                    if c == "ts":
+                        assert st == {"min": None, "max": None}
+                        continue
+                    want = [r[f"min_{c}"], r[f"max_{c}"]]
+                    if c == "dt":
+                        want = [v.isoformat() for v in want]
+                    assert [st["min"], st["max"]] == want, (p["partition"], c)
+
+    t.write_partitioned(
+        mk(rows("P0", range(0, 40)) + rows("P1", range(40, 70))
+           + rows("P2", range(70, 80), null_i=True)),
+        "part", stat_cols=stat_cols,
+    )
+    check()
+    t.write_partitioned_incremental(
+        mk(rows("P3", range(80, 110)) + rows("P4", range(110, 120))),
+        "part", group_size=1, stat_cols=stat_cols,
+    )
+    check()
+    t.merge_upsert(
+        spark, mk(rows("P0", [1, 2, 500]) + rows("P5", [600, 601])), ["id"]
+    )
+    check()
+    t.delete_where(spark, "id % 3 = 0")
+    check()
+    # a prune that rules out every partition deletes nothing
+    assert t.delete_where(spark, "d > 1e6", prune={"d": (1e6, None)})[
+        "committed"] is False
+    t.compact(spark, target_file_rows=7, sort_cols=["i"])
+    check()
+    t.add_columns({"q": "double"}, defaults={"q": 1.5})
+    check()
+    t.drop_columns(["extra"])
+    check()
+
+    lo, hi = datetime.datetime(2024, 1, 2), datetime.datetime(2024, 1, 4)
+    pred = (F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi))
+    got = sorted(map(tuple, t.read(spark, prune={"ts": (lo, hi)}).where(pred).collect()))
+    ref = sorted(map(tuple, t.read(spark).where(pred).collect()))
+    assert got == ref and got
+
+
+def test_merge_upsert_job_floor(spark, tmp_path):
+    """merge_upsert's Spark jobs on a fixed fixture stay at the floor
+    measured when its entries came to be built from the written files
+    (the write is the only pass over the merged data): a change that
+    adds another pass over the input fails here."""
+    import uuid
+
+    sc = spark.sparkContext
+    t = IcebergLiteTable(tmp_path / "tbl")
+    t.write_partitioned(
+        spark.createDataFrame(
+            [(f"P{i % 3}", i, i * 10) for i in range(30)],
+            "part string, id int, v int",
+        ),
+        "part", stat_cols=["v"],
+    )
+    src = spark.createDataFrame(
+        [("P0", 0, -1), ("P0", 100, -3), ("P9", 200, -4)],
+        "part string, id int, v int",
+    )
+    group = f"merge-upsert-floor-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "merge_upsert job floor")
+    try:
+        t.merge_upsert(spark, src, ["id"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    # 8 on the test session (local[8], 8 shuffle partitions); the
+    # pre-write groupBy/agg/collect of the lineage stats made it 13
+    assert 0 < n_jobs <= 8, n_jobs

@@ -508,3 +508,24 @@ def test_windowed_warp_equals_full_tile_warp():
     for window in ((0, 0, 0, 0), (0, 60, 0, 60)):
         out = warp_image_to_tile(*args, window=window)
         assert out.shape == (60, 60) and (out == nodata).all()
+
+
+def test_png_q8_null_bytes_when_nodata_outside_8_bits(spark):
+    """png and q8 tiles hold 8-bit pixels clipped to 0..255: an int16
+    raster with nodata -9999 gets null bytes in those formats instead
+    of a tile whose nodata pixels read as valid; raw keeps its tiles."""
+    from equi7grid_spark.warp.codecs import decode
+
+    arr, extent, nodata, crs = lonlat_img_continuous()
+    df = to_df(spark, arr, extent, nodata, crs, "int16_nodata")
+    raw = {r.tilename: r for r in resample_to_equi7_tiles(df, "T6", 5000.0).collect()}
+    assert raw
+    for r in raw.values():
+        a = decode(bytes(r.bytes), r.fmt, r.w, r.h, r.dtype)
+        assert r.n_valid == int((a != r.nodata).sum()) > 0
+    for fmt in ("png", "q8"):
+        rows = resample_to_equi7_tiles(df, "T6", 5000.0, out_fmt=fmt).collect()
+        assert sorted(r.tilename for r in rows) == sorted(raw)
+        for r in rows:
+            assert r.fmt == fmt and r.bytes is None
+            assert (r.nodata, r.n_valid) == (raw[r.tilename].nodata, raw[r.tilename].n_valid)
