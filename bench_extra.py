@@ -1,9 +1,16 @@
 """Optimization harness (NOT the driver's frozen bench.py).
 
-Three jobs:
+Four jobs:
   --plans q1,q2,...  dump .explain("formatted") for each query to
                      plans/r08/<query>_<tag>.txt   (guide §7.2)
-  --time q1,q2,...   per-query noop-sink wall times, min-of-N
+  --executed q1,...  run each query once to a noop sink and write the
+                     AQE-final plan of every SQL execution it started
+                     (eager checkpoints included), in order, to
+                     plans/r08/<query>_executed_<tag>.txt
+  --time q1,q2,...   per-query noop-sink wall times, min-of-N, and
+                     the Spark jobs one run takes (each rep runs
+                     under its own job group); prints
+                     {query: {"s": wall, "jobs": n}}
                      (guide §1.4: noop computes every column, no sink
                      cost, no count()-style column pruning)
   --ab q1,q2,...     ORDER-BALANCED same-session A/B of the runtime SQL
@@ -82,24 +89,58 @@ def main() -> None:
             )
             (outdir / f"{name}_{TAG}.txt").write_text(plan)
             print(f"# wrote {name}_{TAG}.txt ({len(plan)} bytes)")
+    elif mode == "--executed":
+        # the AQE-final plan of every SQL execution one noop run of the
+        # query starts: a query's eager checkpoints (connected-components
+        # rounds, say) run as executions of their own before the sink's
+        sc = spark.sparkContext
+        store = spark._jsparkSession.sharedState().statusStore()
+
+        def executions() -> dict:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            it = store.executionsList().iterator()
+            out = {}
+            while it.hasNext():
+                e = it.next()
+                out[e.executionId()] = e
+            return out
+
+        outdir = Path(__file__).resolve().parent / "plans" / "r08"
+        outdir.mkdir(parents=True, exist_ok=True)
+        for name in names:
+            seen = set(executions())
+            qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            new = sorted((i, e) for i, e in executions().items() if i not in seen)
+            text = "\n".join(
+                f"== execution {k} of {len(new)}: {e.description()} ==\n"
+                f"{e.physicalPlanDescription()}"
+                for k, (_, e) in enumerate(new, 1)
+            ).replace(SF_DIR, "<sf_dir>").replace(str(outdir.parents[1]), "<repo>")
+            (outdir / f"{name}_executed_{TAG}.txt").write_text(text)
+            print(f"# wrote {name}_executed_{TAG}.txt ({len(new)} executions)")
     elif mode == "--time":
         # warm both engines (mirrors bench.py's warmup)
         qs["tile_counts_t6"](spark, SF_DIR).count()
         qs["image_decode_stats"](spark, SF_DIR).count()
+        sc = spark.sparkContext
         out = {}
         for name in names:
             fn = qs[name]
             best = None
-            for _ in range(REPS):
-                spark.sparkContext.setJobDescription(f"time:{name}")
+            for rep in range(REPS):
+                group = f"time:{name}:{rep}"
+                sc.setJobGroup(group, f"time:{name}")
                 t0 = time.time()
                 fn(spark, SF_DIR).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 dt = time.time() - t0
+                # every rep plans and runs the same jobs: keep the last count
+                jobs = len(sc.statusTracker().getJobIdsForGroup(group))
                 best = dt if best is None else min(best, dt)
-            out[name] = round(best, 3)
-            print(f"# {name}: {best:.3f}s", file=sys.stderr)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            out[name] = {"s": round(best, 3), "jobs": jobs}
+            print(f"# {name}: {best:.3f}s {jobs} jobs", file=sys.stderr)
         print(json.dumps(out))
     elif mode == "--ab":
         conf = os.environ.get("AB_CONF", "")

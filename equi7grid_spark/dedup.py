@@ -17,7 +17,7 @@ candidate verification joins are restricted to same-bucket pairs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from equi7grid_spark.operators.partitioning import spread_small_input
@@ -241,6 +241,40 @@ def duplicate_clusters(
     )
 
 
+def _sized_checkpoint(df: DataFrame, *aggs: Column) -> tuple[DataFrame, list]:
+    """Eager localCheckpoint of `df` and its row count, plus the values
+    of any further aggregates `aggs` over it: (frame, [rows, *aggs]).
+
+    The values are read in the checkpoint's own job through a
+    pyspark.sql.Observation, so sizing costs no extra job. They exist
+    for the size gate (_fits_broadcast): a checkpoint keeps the size
+    estimate of the plan that built it, and estimates explode through
+    joins (a 4.4 MB image corpus plans at 12.8 TB after its phash join
+    and about 10^73 B at its pair list), so every join over a
+    checkpoint would otherwise plan as a sort-merge join whose two
+    shuffle-map stages run as jobs before AQE demotes it to a
+    broadcast."""
+    obs = Observation()
+    cp = df.observe(
+        obs, F.count(F.lit(1)).alias("_rows"),
+        *[c.alias(f"_a{i}") for i, c in enumerate(aggs)],
+    ).localCheckpoint()
+    got = obs.get
+    return cp, [got["_rows"], *(got[f"_a{i}"] for i in range(len(aggs)))]
+
+
+def _fits_broadcast(df: DataFrame, rows: int, row_bytes: int = 0) -> bool:
+    """The size gate: whether `rows` rows of `df` fit the session's
+    spark.sql.autoBroadcastJoinThreshold, sizing a row as Spark's
+    default size of the schema (its per-type defaults; an array counts
+    one element) plus its 8-byte row overhead plus `row_bytes`. Never
+    at a negative threshold; and at 10^12-row scale nothing fits, so
+    callers that broadcast only when this holds keep their shuffle
+    plans there."""
+    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return 0 <= rows * (8 + df._jdf.schema().defaultSize() + row_bytes) <= limit
+
+
 def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components over an undirected edge list: the first two
     columns of `pairs` are the endpoints (any orderable id type).
@@ -257,27 +291,42 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     label-sized join per round. Each round localCheckpoints the label
     frame, truncating the lineage/plan growth that kills iterative
     DataFrame jobs at scale. No driver-side graph state — the driver
-    sees only the per-round changed-row count. Labels start as own
-    ids and only ever decrease to ids inside the same component, so
-    changed == 0 is exactly the propagation fixed point (labels
-    constant along every edge ⇒ equal to the component minimum).
+    sees only the edge count and the per-round changed-row count. Labels
+    start as own ids and only ever decrease to ids inside the same
+    component, so changed == 0 is exactly the propagation fixed point
+    (labels constant along every edge ⇒ equal to the component minimum).
+
+    Size gate: the symmetric edge list is checkpointed once with its
+    row count (_sized_checkpoint). When it fits the session's
+    spark.sql.autoBroadcastJoinThreshold, the label side of every
+    round's joins is broadcast (a label frame has at most as many rows
+    as the edge list, of the same row width), so a round plans its
+    joins as broadcast hash joins from the start instead of running
+    sort-merge shuffle stages that AQE then demotes. Otherwise, and
+    always at a negative threshold, the joins plan as before.
     """
-    a_col, b_col = pairs.columns[:2]
-    # EAGERLY materialize the DIRECTED pair list first: the symmetric
-    # union reads it twice (one per branch) within a single job, where
-    # a lazy .cache() races its own population — without this the
-    # upstream pair enumeration (e.g. the banded hamming join) runs
-    # twice just to build the edges. The pair list is true-pair-sized
-    # (tiny next to the corpus), so the checkpoint write is cheap.
-    p = pairs.select(
-        F.col(a_col).alias("a"), F.col(b_col).alias("b")
-    ).localCheckpoint()
-    # symmetric edge list, cached: reused every round
-    edges = p.unionAll(
-        p.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).cache()
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
+    a_col, b_col = pairs.columns[:2]
+    a, b = F.col(a_col), F.col(b_col)
+    # the symmetric edge list in one pass over the pairs (each pair
+    # emits both orientations), checkpointed once: every round reads
+    # it, and the upstream pair enumeration runs exactly once
+    edges, (n_edges,) = _sized_checkpoint(
+        pairs.select(
+            F.inline(
+                F.array(
+                    F.struct(a.alias("a"), b.alias("b")),
+                    F.struct(b.alias("a"), a.alias("b")),
+                )
+            )
+        )
+    )
+    small = _fits_broadcast(edges, n_edges)
+
+    def side(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if small else df
+
     labels = None
     changed = -1
     # max_iter propagation rounds + 1 confirming zero-change round, so
@@ -287,11 +336,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             # round 1 fused: the seed labels are the identity (lab =
             # id) over the distinct edge endpoints, so the first hook
             # is simply min(id, min neighbor) — one groupBy over the
-            # cached edges replaces the former separate seed frame
-            # (its eager checkpoint job AND its double evaluation as
-            # both join inputs of the round; the symmetric union
-            # guarantees every node appears as `a`, so coverage is
-            # identical to distinct-endpoints + left join)
+            # edges (the symmetric list holds every node as `a`)
             hooked = edges.groupBy("a").agg(F.min("b").alias("nlab")).select(
                 F.col("a").alias("id"),
                 F.col("a").alias("old_lab"),
@@ -299,12 +344,12 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             )
         else:
             nmin = (
-                edges.join(labels.withColumnRenamed("id", "b"), "b")
+                edges.join(side(labels.withColumnRenamed("id", "b")), "b")
                 .groupBy("a")
                 .agg(F.min("lab").alias("nlab"))
                 .withColumnRenamed("a", "id")
             )
-            hooked = labels.join(nmin, "id", "left").select(
+            hooked = labels.join(side(nmin), "id", "left").select(
                 "id",
                 F.col("lab").alias("old_lab"),
                 F.least(F.col("lab"), F.coalesce("nlab", "lab")).alias("lab"),
@@ -317,24 +362,28 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         parents = hooked.select(
             F.col("id").alias("p_id"), F.col("lab").alias("p_lab")
         )
-        # old_lab rides along so the convergence check is a plain agg
-        # over this frame — no extra labels-vs-new_labels join job.
-        # LAZY checkpoint + count: the count action populates the
-        # checkpoint while computing `changed`, ONE job per round where
-        # the former eager-checkpoint-then-count shape ran two (the
-        # single count action can't race the population the way a
-        # twice-scanned lazy cache does — r5 lesson applies to frames
-        # two sibling branches read within one job, not to this).
-        stepped = (
-            hooked.join(parents, hooked.lab == parents.p_id, "left")
-            .select("id", "old_lab", F.coalesce("p_lab", "lab").alias("lab"))
-            .localCheckpoint(eager=False)
+        stepped = hooked.join(
+            side(parents), hooked.lab == parents.p_id, "left"
+        ).select("id", "old_lab", F.coalesce("p_lab", "lab").alias("lab"))
+        if labels is None:
+            # round 1 is not counted: a graph with any edge between two
+            # nodes changes a label there, and a graph without one (self
+            # loops only, or no edges) costs one cheap confirming round
+            labels = stepped.select("id", "lab").localCheckpoint()
+            continue
+        # old_lab rides along so the convergence check is an observed
+        # aggregate of the checkpoint's own job: no extra count job
+        obs = Observation()
+        labels = (
+            stepped.observe(
+                obs, F.count_if(F.col("lab") != F.col("old_lab")).alias("changed")
+            )
+            .select("id", "lab")
+            .localCheckpoint()
         )
-        changed = stepped.filter(F.col("lab") != F.col("old_lab")).count()
-        labels = stepped.select("id", "lab")
+        changed = obs.get["changed"]
         if changed == 0:
             break
-    edges.unpersist()
     if changed != 0:
         # a component with diameter > max_iter would otherwise return
         # silently-partial labels (and diverge from the oracle's exact
@@ -780,7 +829,19 @@ def multimodal_near_dup(
     fails the queries built on the result. Its embedding buckets and
     cosines are compiled kernel calls (_emb_buckets_udf, cosine_seq),
     so the pass adds no Python worker of its own, and it raises when
-    the session cannot load the kernel jar."""
+    the session cannot load the kernel jar.
+
+    Size gate (three-signal form): the pair flags are checkpointed with
+    their row count and their embedding-candidate count, and the input
+    checkpoint measures the widest vector (_sized_checkpoint, no extra
+    job). When the candidates with one vector each fit the session's
+    spark.sql.autoBroadcastJoinThreshold (_fits_broadcast), the verify
+    broadcasts the candidates into the first vector join and that
+    join's output into the second, so both vector sides stream through
+    broadcast hash joins instead of sort-merge shuffle stages that AQE
+    then demotes; the final merge broadcasts the cosine pairs when that
+    many candidates fit. Otherwise, and always at a negative threshold,
+    these joins carry no hint."""
     key_t = "array<struct<sig:int,k1:int,k2l:bigint,k2s:string>>"
     empty = F.expr(f"CAST(array() AS {key_t})")
 
@@ -832,10 +893,12 @@ def multimodal_near_dup(
     if embedding_col is not None:
         # the key scan and both sides of the vector verify join read
         # src: project it to their columns and checkpoint it once, or
-        # the caller's plan (a phash decode, say) runs three times
-        src = src.select(
-            id_col, phash_col, caption_col, embedding_col
-        ).localCheckpoint()
+        # the caller's plan (a phash decode, say) runs three times; the
+        # same job measures the widest vector for the verify's size gate
+        src, (_, dim) = _sized_checkpoint(
+            src.select(id_col, phash_col, caption_col, embedding_col),
+            F.max(F.size(embedding_col)),
+        )
     keyed = src.select(
         F.col(id_col).alias("id"), p.alias("ph"),
         F.explode(F.concat(*arrs)).alias("k"),
@@ -866,17 +929,24 @@ def multimodal_near_dup(
         )
         return flags.select("id_a", "id_b", signal.alias("signal"), "hamming")
     # flags feeds both the embedding verify and the final merge: eager
-    # pair-sized checkpoint, or the whole enumeration plans twice
-    flags = flags.localCheckpoint()
+    # pair-sized checkpoint, or the whole enumeration plans twice; the
+    # same job counts the embedding candidates among them
+    flags, (_, n_emb) = _sized_checkpoint(flags, F.count_if(F.col("_embcand")))
     vecs = src.select(
         F.col(id_col).alias("id"),
         F.col(embedding_col).cast("array<double>").alias("v"),
     ).filter(F.col("v").isNotNull())
     ea = vecs.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
     eb = vecs.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
-    j = flags.filter(F.col("_embcand")).select("id_a", "id_b").join(
-        ea, "id_a"
-    ).join(eb, "id_b")
+    cands = flags.filter(F.col("_embcand")).select("id_a", "id_b")
+    # size gate: when the candidates with one widest vector each fit,
+    # the candidates, and then the candidates with their first vector,
+    # are broadcast, so both vector sides stream through broadcast hash
+    # joins with no shuffle
+    if _fits_broadcast(cands, n_emb, 8 * max(dim or 0, 0)):
+        j = eb.join(F.broadcast(ea.join(F.broadcast(cands), "id_a")), "id_b")
+    else:
+        j = cands.join(ea, "id_a").join(eb, "id_b")
     # compiled sequential-order cosine (bit-identical to the HOF
     # chain — cosine_seq); the Generate barrier keeps the >= threshold
     # filter from duplicating the evaluation (guide §4.4 —
@@ -889,12 +959,13 @@ def multimodal_near_dup(
         .filter(F.col("_cos") >= cos_threshold)
         .select("id_a", "id_b", F.round("_cos", 9).alias("cosine"))
     )
-    # emb is true-cosine-pair-sized (orders of magnitude under the
-    # candidate flags): broadcast it so the final provenance merge is a
+    # emb is true-cosine-pair-sized (at most the n_emb candidates):
+    # when those fit, broadcast it so the final provenance merge is a
     # BroadcastHashJoin instead of a SortMergeJoin that exchanges+sorts
-    # the full candidate-pair frame twice (guide §3.1; same pattern as
-    # the phash_dup_clusters label re-attach)
-    merged = flags.join(F.broadcast(emb), ["id_a", "id_b"], "left").filter(
+    # the full candidate-pair frame twice (guide §3.1)
+    if _fits_broadcast(emb, n_emb):
+        emb = F.broadcast(emb)
+    merged = flags.join(emb, ["id_a", "id_b"], "left").filter(
         F.col("hamming").isNotNull() | F.col("_cap") | F.col("cosine").isNotNull()
     )
     signal = F.concat_ws(

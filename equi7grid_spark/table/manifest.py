@@ -795,8 +795,12 @@ class IcebergLiteTable:
         resolution): columns a frame lacks (written before an
         add_columns) materialize as the recorded default or NULL;
         columns dropped from the schema project away; everything casts
-        to the declared type (also normalizing hive-path partition-value
-        type inference) in schema order."""
+        to the declared type in schema order. The partition column is
+        parsed from the paths as its recorded type: Spark infers a type
+        from just the path values it reads, so a string partition `01`
+        read alone would come back as the int 1 and cast to '1'; when
+        the inferred type differs, the frame is read again with the
+        recorded one."""
         paths: dict[str, list[str]] = {}
         for p in sorted(entries, key=lambda p: (p["snap_dir"], p["partition"])):
             base = self.data_dir / p["snap_dir"]
@@ -804,9 +808,16 @@ class IcebergLiteTable:
                 str(base / f["path"]) for f in p["files"]
             )
         target = StructType.fromJson(m["schema"])
+        col = m["partition_col"]
+        part_type = target[col].dataType
         frames = []
         for base, ps in paths.items():
             f = spark.read.option("basePath", base).parquet(*ps)
+            if f.schema[col].dataType != part_type:
+                f = spark.read.schema(StructType([
+                    StructField(col, part_type) if fld.name == col else fld
+                    for fld in f.schema.fields
+                ])).option("basePath", base).parquet(*ps)
             have = set(f.columns)
             frames.append(
                 f.select(

@@ -527,6 +527,38 @@ def test_merge_upsert_copy_on_write(spark, tmp_path):
     assert old.filter("id = 0").select("v").collect()[0][0] == 0
 
 
+def test_string_partition_keeps_its_form_when_read_alone(spark, tmp_path):
+    """A string partition whose value looks like a number (`01`) keeps
+    its form in every read path: merge_upsert and delete_where read the
+    touched entry alone, where Spark would infer the int 1 from the
+    path, and must write it back as `01`, not as a new partition `1`."""
+    t = IcebergLiteTable(tmp_path / "tbl")
+    t.write_partitioned(
+        spark.createDataFrame(
+            [("01", 1, 10), ("01", 2, 20), ("A", 3, 30)],
+            "part string, id int, v int",
+        ),
+        "part", stat_cols=["v"],
+    )
+    m = t.merge_upsert(
+        spark,
+        spark.createDataFrame([("01", 1, -1)], "part string, id int, v int"),
+        ["id"],
+    )
+    assert m["rewritten"] == ["01"] and m["new_partitions"] == []
+    assert sorted(p["partition"] for p in t.current_manifest()["partitions"]) == ["01", "A"]
+    got = sorted(map(tuple, t.read(spark).select("part", "id", "v").collect()))
+    assert got == [("01", 1, -1), ("01", 2, 20), ("A", 3, 30)]
+    # a read whose pruning keeps the `01` entry alone
+    alone = t.read(spark, prune={"v": (-5, 0)}).select("part", "id").collect()
+    assert sorted(map(tuple, alone)) == [("01", 1), ("01", 2)]
+    d = t.delete_where(spark, "id = 2")
+    assert d["rewritten"] == ["01"]
+    assert sorted(p["partition"] for p in t.current_manifest()["partitions"]) == ["01", "A"]
+    got = sorted(map(tuple, t.read(spark).select("part", "id", "v").collect()))
+    assert got == [("01", 1, -1), ("A", 3, 30)]
+
+
 def test_schema_evolution_add_drop_columns(spark, tmp_path):
     """Metadata-only ADD/DROP COLUMN: add_columns commits a schema-only
     snapshot (no data dir); pre-add rows read the recorded default,

@@ -263,13 +263,9 @@ def test_phash_near_dup_null_rows_dropped(spark):
     got = phash_near_dup(df).collect()
     assert [(r.id_a, r.id_b, r.hamming) for r in got] == [("a", "b", 0)]
 
-def test_multimodal_three_signal(spark):
+def _three_signal_df(spark):
     """Hand-built corpus covering every single signal and the full
-    combination in the 3-signal form (embedding_col given): provenance
-    strings are '+'-joined in fixed phash/caption/embed order; hamming
-    NULL unless phash fired, cosine NULL unless embed fired."""
-    from equi7grid_spark.dedup import multimodal_near_dup
-
+    combination of multimodal_near_dup's three-signal form."""
     base = 0x1234_5678_9ABC_DEF0
     v1 = [float(d + 1) for d in range(8)]          # shared by a, e2, f
     v2 = [float((d * 7) % 5 - 2) for d in range(8)]
@@ -281,9 +277,19 @@ def test_multimodal_three_signal(spark):
         ("e2", base ^ (0xF0F0 | (0xF0F0 << 16)), "another one", v1),  # embed-only
         ("f", base ^ 0b10, "cat on a mat", v1),           # all three
     ]
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "image_id string, phash long, caption string, embedding array<double>"
     )
+
+
+def test_multimodal_three_signal(spark):
+    """Every single signal and the full combination in the 3-signal
+    form (embedding_col given): provenance strings are '+'-joined in
+    fixed phash/caption/embed order; hamming NULL unless phash fired,
+    cosine NULL unless embed fired."""
+    from equi7grid_spark.dedup import multimodal_near_dup
+
+    df = _three_signal_df(spark)
     got = {
         (r.id_a, r.id_b): (r.signal, r.hamming, r.cosine)
         for r in multimodal_near_dup(df, embedding_col="embedding").collect()
@@ -298,6 +304,35 @@ def test_multimodal_three_signal(spark):
         (r.id_a, r.id_b): r.signal for r in multimodal_near_dup(df).collect()
     }
     assert got2[("a", "f")] == "both"
+
+
+def test_multimodal_three_signal_size_gate(spark):
+    """The verify and merge joins' broadcast hints change plans, never
+    answers: pairs, signals, hamming and cosines are identical at the
+    session's default spark.sql.autoBroadcastJoinThreshold (the
+    candidates fit) and at -1, where no plan holds a BroadcastExchange."""
+    from equi7grid_spark.dedup import multimodal_near_dup
+
+    def run():
+        df = _three_signal_df(spark)
+        before = _sql_executions(spark)
+        got = sorted(
+            map(tuple, multimodal_near_dup(df, embedding_col="embedding").collect())
+        )
+        plans = [p for i, p in _sql_executions(spark).items() if i not in before]
+        return got, sum("BroadcastExchange" in p for p in plans)
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    on, n_bcast_on = run()
+    spark.conf.set(key, "-1")
+    try:
+        off, n_bcast_off = run()
+    finally:
+        spark.conf.set(key, prev)
+    assert on == off
+    assert ("a", "f", "phash+caption+embed", 1, 1.0) in on
+    assert n_bcast_on > 0 and n_bcast_off == 0
 
 
 def test_multimodal_three_signal_degenerate_embedding_keeps_other_signals(spark):
