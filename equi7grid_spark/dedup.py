@@ -133,20 +133,6 @@ def minhash_wide(docs: DataFrame, n_perms: int = N_PERMS) -> DataFrame:
     )
 
 
-def minhash_signatures(docs: DataFrame, n_perms: int = N_PERMS) -> DataFrame:
-    """(doc_id, perm, minhash) — long view over minhash_wide."""
-    wide = minhash_wide(docs, n_perms)
-    pm = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(p).alias("perm"), F.col(f"m{p}").alias("minhash"))
-                for p in range(n_perms)
-            ]
-        )
-    ).alias("pm")
-    return wide.select("doc_id", pm).select("doc_id", "pm.perm", "pm.minhash")
-
-
 def lsh_buckets(docs: DataFrame, n_perms: int = N_PERMS, band_size: int = BAND_SIZE) -> DataFrame:
     """(band, band_sig, doc_id): LSH banding of the MinHash signature —
     docs sharing a (band, band_sig) bucket are near-duplicate candidates."""
@@ -453,8 +439,58 @@ def simhash_near_dups(docs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# image near-dup: perceptual-hash (phash) hamming dedup
+# image near-dup: one key space for every signal
 # ---------------------------------------------------------------------------
+
+def _md5_bits(text: Column, half: int) -> Column:
+    """bigint: the first (half=0) or last (half=1) 64 bits of md5(text)
+    as a signed value; null for a null text."""
+    return F.conv(F.substring(F.md5(text), 16 * half + 1, 16), 16, -10).cast("long")
+
+
+def caption_verify(caption: Column) -> Column:
+    """The caption's verify column: the last 64 md5 bits, whose first 64
+    are its key (near_dup_keys), so a caption pair agrees on all 128."""
+    return _md5_bits(caption, 1)
+
+
+def near_dup_keys(
+    phash: Column,
+    n_bands: int,
+    max_hamming: int = 0,
+    caption: Column | None = None,
+    buckets: list[Column] | None = None,
+) -> Column:
+    """Every near-dup key of an image row, batch and streaming: a bigint
+    array whose position names the signal.
+
+    - positions 0 .. n_bands-1: the phash's 64/n_bands-bit bands,
+      lowest bits first;
+    - position n_bands (with a caption): the caption's first 64 md5
+      bits; its last 64 ride along as caption_verify;
+    - the positions after that: the embedding's per-band LSH buckets.
+
+    posexplode gives (k1, k2); rows sharing (k1, k2) are candidates of
+    signal k1. A null element is no key: a null phash, caption or
+    bucket array leaves its positions null.
+
+    The bands find every pair within `max_hamming` only while
+    max_hamming <= n_bands - 1 (pigeonhole: such a pair agrees on a
+    whole band), so a wider bound raises ValueError here, before any
+    job or query starts."""
+    if max_hamming > n_bands - 1:
+        raise ValueError(
+            f"max_hamming={max_hamming} needs > {n_bands - 1} bands for "
+            "exact recall (pigeonhole)"
+        )
+    width = 64 // n_bands
+    bands = [
+        F.shiftrightunsigned(phash, i * width).bitwiseAND(F.lit((1 << width) - 1))
+        for i in range(n_bands)
+    ]
+    cap = [] if caption is None else [_md5_bits(caption, 0)]
+    return F.array(*bands, *cap, *[b.cast("long") for b in buckets or []])
+
 
 def phash_band_occupancy(
     imgs: DataFrame,
@@ -468,29 +504,15 @@ def phash_band_occupancy(
     one band value can hold millions of rows). Run it before a large
     dedup to size `chunk_size`; the candidate-pair work in a bucket of
     m rows is ~m^2/2 no matter how it is partitioned."""
-    e = _phash_bands(imgs, id_col, phash_col, n_bands)
+    keys = near_dup_keys(F.col(phash_col), n_bands)
     return (
-        e.groupBy("band_idx", "band_val")
+        imgs.filter(F.col(id_col).isNotNull())
+        .select(F.posexplode(keys).alias("band_idx", "band_val"))
+        .filter(F.col("band_val").isNotNull())
+        .groupBy("band_idx", "band_val")
         .agg(F.count(F.lit(1)).alias("n_rows"))
         .orderBy(F.col("n_rows").desc(), "band_idx", "band_val")
     )
-
-
-def _phash_bands(
-    imgs: DataFrame, id_col: str, phash_col: str, n_bands: int
-) -> DataFrame:
-    """(id, ph, band_idx, band_val) — one row per (input row, band).
-    NULL ids/hashes can't participate in pairing — drop them explicitly
-    rather than letting the join silently eat them."""
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    p = F.col(phash_col)
-    bands = F.array(
-        *[F.shiftrightunsigned(p, i * width).bitwiseAND(F.lit(mask)) for i in range(n_bands)]
-    )
-    return imgs.filter(p.isNotNull() & F.col(id_col).isNotNull()).select(
-        F.col(id_col).alias("id"), p.alias("ph"), F.posexplode(bands)
-    ).select("id", "ph", F.col("pos").alias("band_idx"), F.col("col").alias("band_val"))
 
 
 def _chunked_pair_join(
@@ -553,6 +575,36 @@ def _chunked_pair_join(
     return a.join(b, [*key_cols, "ci", "cj"]).filter(F.col("id_a") < F.col("id_b"))
 
 
+def _near_dup_pairs(
+    rows: DataFrame, keys: Column, n_bands: int, max_hamming: int, chunk_size: int
+) -> DataFrame:
+    """Every candidate pair of every signal, not deduplicated:
+    (id_a, id_b, k1, hamming), id_a < id_b, one row per shared key.
+    `rows` holds (id, ph) and, with a caption key, its caption_verify
+    column cv; `keys` is near_dup_keys over them. Rows with a null id
+    have no keys. The pair join is _chunked_pair_join on (k1, k2); it
+    keeps phash pairs within max_hamming (verified on the candidate
+    rows, before any pair shuffle: random band collisions vastly
+    outnumber true pairs), caption pairs whose cv agrees, and every
+    embedding candidate. hamming is null when either phash is."""
+    payload = [c for c in ("ph", "cv") if c in rows.columns]
+    keyed = (
+        rows.filter(F.col("id").isNotNull())
+        .select("id", *payload, F.posexplode(keys).alias("k1", "k2"))
+        .filter(F.col("k2").isNotNull())
+    )
+    cand = _chunked_pair_join(keyed, ["k1", "k2"], payload, chunk_size)
+    keep = F.when(F.col("k1") < n_bands, F.col("hamming") <= max_hamming)
+    if "cv" in payload:
+        keep = keep.when(F.col("k1") == n_bands, F.col("cv_a") == F.col("cv_b"))
+    ham = F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))).cast("int")
+    return (
+        cand.withColumn("hamming", ham)
+        .filter(keep.otherwise(True))
+        .select("id_a", "id_b", "k1", "hamming")
+    )
+
+
 def phash_near_dup(
     imgs: DataFrame,
     id_col: str = "image_id",
@@ -560,66 +612,43 @@ def phash_near_dup(
     max_hamming: int = 3,
     n_bands: int = 4,
     chunk_size: int = 2048,
-    dedup_pairs: bool = True,
 ) -> DataFrame:
     """EXACT near-duplicate image pairs by perceptual-hash hamming
     distance: (id_a, id_b, hamming) with id_a < id_b and
     hamming <= max_hamming.
 
     Banded multi-index (the standard web-scale image-dedup shape): the
-    64-bit phash splits into `n_bands` 16-bit bands; by pigeonhole any
-    pair within hamming <= n_bands-1 agrees on at least one whole band,
-    so a self-join on (band_idx, band_val) finds EVERY qualifying pair
-    — this is exact recall, not approximate LSH. Scale: the only
-    shuffle is on 16-bit band values (uniform for real phashes;
-    ~n^2/2^17 candidate pairs per band), never an all-pairs product;
-    the hamming verify (one xor + popcount) runs only on candidates.
+    64-bit phash splits into `n_bands` 16-bit bands (near_dup_keys);
+    by pigeonhole any pair within hamming <= n_bands-1 agrees on at
+    least one whole band, so a self-join on the (k1, k2) band keys
+    finds EVERY qualifying pair — this is exact recall, not
+    approximate LSH. Scale: the only shuffle is on 16-bit band values
+    (uniform for real phashes; ~n^2/2^17 candidate pairs per band),
+    never an all-pairs product; the hamming verify (one xor +
+    popcount) runs only on candidates, before the distinct (a pair
+    agreeing on several bands appears once per band).
 
     Hot-bucket hardening (round 4): real corpora are degenerate-heavy —
     one 16-bit band value can hold millions of rows, and a plain
-    self-join enumerates that bucket's ~m^2/2 pairs in ONE task. Every
-    bucket is therefore split into id-range chunks of <= `chunk_size`
-    rows (row_number over the bucket, ordered by id), and each row
-    fans out to its chunk-pair duties: a row in chunk c joins as the
-    LEFT side of chunk pairs (c, j>=c) and the RIGHT side of (i<=c, c).
-    The pair join runs on (band_idx, band_val, i, j), bounding every
-    task to <= chunk_size^2 candidate pairs while preserving exact
-    recall: id-range chunks are monotone in id, so the qualifying
-    orientation id_a < id_b is always generated (for a pair in chunks
-    ca < cb only the (ca, cb) key exists and it has the smaller id on
-    the left; for ca == cb both orientations appear and the filter
-    keeps one). Uniform buckets have one chunk — duties degenerate to
-    the plain (0, 0) self-join with no extra fan-out. The total pair
-    work in a hot bucket is inherent (~m^2/2 for exactness); chunking
-    spreads it over k(k+1)/2 tasks instead of one straggler. AQE
-    skew-join (session.py) remains the backstop for residual imbalance.
+    self-join enumerates that bucket's ~m^2/2 pairs in ONE task. The
+    pair join therefore splits every bucket into id-range chunks of
+    <= `chunk_size` rows (_chunked_pair_join: exact coverage, every
+    task bounded to chunk_size^2 candidate pairs, one chunk and no
+    extra fan-out for uniform buckets). The total pair work in a hot
+    bucket is inherent (~m^2/2 for exactness); chunking spreads it
+    over k(k+1)/2 tasks instead of one straggler. AQE skew-join
+    (session.py) remains the backstop for residual imbalance.
 
-    Requires max_hamming <= n_bands - 1 for the pigeonhole guarantee.
+    Requires max_hamming <= n_bands - 1 for the pigeonhole guarantee
+    (ValueError otherwise, before any job).
     """
-    if max_hamming > n_bands - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs > {n_bands - 1} bands for "
-            "exact recall (pigeonhole)"
-        )
-    e = _phash_bands(imgs, id_col, phash_col, n_bands)
-    cand = _chunked_pair_join(e, ["band_idx", "band_val"], ["ph"], chunk_size)
-    ham = F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
-    out = (
-        # hamming-verify BEFORE the dedup shuffle: most band collisions
-        # are random 16-bit matches far above the threshold, so the
-        # distinct only shuffles true pairs (a pair agreeing on several
-        # bands appears once per band — hamming is deterministic per
-        # pair, so filter-then-distinct equals distinct-then-filter)
-        cand.withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
+    keys = near_dup_keys(F.col("ph"), n_bands, max_hamming)
+    rows = imgs.select(F.col(id_col).alias("id"), F.col(phash_col).alias("ph"))
+    return (
+        _near_dup_pairs(rows, keys, n_bands, max_hamming, chunk_size)
         .select("id_a", "id_b", "hamming")
+        .distinct()
     )
-    # dedup_pairs=False skips the exchange+aggregate when the consumer
-    # is duplicate-tolerant (connected components: a pair re-found on a
-    # second band is the same edge and min-label propagation is
-    # idempotent over it) — one fewer shuffle stage inside the eager
-    # pair-list checkpoint of phash_dup_clusters (guide §2.4)
-    return out.distinct() if dedup_pairs else out
 
 
 def phash_dup_clusters(
@@ -656,40 +685,49 @@ def phash_dup_clusters(
     representative per distinct phash first (a uniform map-side-
     partial groupBy on the 64-bit value — no hot window partition),
     runs the banded multi-index join over representatives only
-    (phash_near_dup: exact recall, hot-bucket chunking still applies
+    (phash_near_dup's enumeration, hot-bucket chunking still applying
     to collisions among DISTINCT values), closes components over the
     rep graph, and expands members at label time: rep_id is the
     minimum id of its value group, so min-reachable-rep_id IS the
     component's minimum image id. Intermediates are O(m + distinct
     pairs), never O(m^2). The PAIR-level view (phash_near_dup itself)
     keeps m^2 semantics by definition — that is the operator contract,
-    not a plan artifact.
+    not a plan artifact. The rep pair list is not deduplicated: a pair
+    found on several bands is the same edge to connected_components.
+
+    Size gate: the label frame has at most one row per distinct phash,
+    so it is broadcast into the member re-attach only when that many
+    rows fit the session's spark.sql.autoBroadcastJoinThreshold
+    (_fits_broadcast); otherwise, and always at a negative threshold,
+    the join carries no hint.
     """
+    n_bands = 4  # phash_near_dup's default
+    keys = near_dup_keys(F.col("ph"), n_bands, max_hamming)
     m = imgs.filter(
         F.col(phash_col).isNotNull() & F.col(id_col).isNotNull()
     ).select(F.col(id_col).alias("id"), F.col(phash_col).alias("ph"))
     # eager checkpoint: groups feeds the banded join (both chunked
     # sides) AND the member re-attach — three consumers would re-run
     # the corpus groupBy each; the frame is distinct-phash-sized
-    # (24 B/row), so one local write beats three aggregations
-    groups = m.groupBy("ph").agg(
-        F.min("id").alias("rep_id"), F.count(F.lit(1)).alias("n_members")
-    ).localCheckpoint()
-    reps = groups.select(F.col("rep_id").alias("rid"), "ph")
-    # dedup_pairs=False: CC is duplicate-edge-tolerant, so the pair
-    # list skips its distinct shuffle (the pairs are checkpointed
-    # inside connected_components anyway)
-    rep_pairs = phash_near_dup(
-        reps, "rid", "ph", max_hamming, chunk_size=chunk_size,
-        dedup_pairs=False,
-    ).select("id_a", "id_b")
-    labels = connected_components(rep_pairs, max_iter).withColumnRenamed(
-        "id", "rep_id"
+    # (24 B/row), so one local write beats three aggregations. Its
+    # row count, read in the same job, sizes the label broadcast
+    groups, (n_groups,) = _sized_checkpoint(
+        m.groupBy("ph").agg(
+            F.min("id").alias("rep_id"), F.count(F.lit(1)).alias("n_members")
+        )
     )
+    reps = groups.select(F.col("rep_id").alias("id"), "ph")
+    rep_pairs = _near_dup_pairs(reps, keys, n_bands, max_hamming, chunk_size)
+    labels = connected_components(
+        rep_pairs.select("id_a", "id_b"), max_iter
+    ).withColumnRenamed("id", "rep_id")
     # labels is rep-graph-sized (orders of magnitude under the corpus):
-    # broadcast it so the member re-attach never shuffles `m` by rep_id
-    # (plan: SortMergeJoin + 2 Exchanges → BroadcastHashJoin; guide §3.1)
-    joined = m.join(groups, "ph").join(F.broadcast(labels), "rep_id", "left")
+    # when it fits, broadcast it so the member re-attach never shuffles
+    # `m` by rep_id (plan: SortMergeJoin + 2 Exchanges →
+    # BroadcastHashJoin; guide §3.1)
+    if _fits_broadcast(labels, n_groups):
+        labels = F.broadcast(labels)
+    joined = m.join(groups, "ph").join(labels, "rep_id", "left")
     return joined.filter(
         (F.col("n_members") >= 2) | F.col("lab").isNotNull()
     ).select(
@@ -803,20 +841,24 @@ def multimodal_near_dup(
     fired, cosine NULL unless the embedding signal fired.
 
     Scale shape (one-pass signal keying, round 6): ONE scan of the
-    corpus emits every signal key — phash bands, a caption-md5
-    sentinel, embedding LSH buckets — tagged by signal into a single
-    (sig, k1, k2l, k2s) key space, so the skew-chunked pair
-    enumeration runs ONCE (one chunk-assigning window over the union
-    of keys instead of one per signal, one candidate join instead of
-    three). Per-signal verification happens in one pair-keyed
-    aggregation: hamming (computed columnar on the candidate rows)
-    must clear max_hamming for the phash signal; caption pairs are
-    exactly-once by bucket construction; embedding candidates get the
-    exact cosine verify on a TRUE-CANDIDATE-sized vector join only.
-    Intermediates stay pair-sized — never an all-pairs product — and
-    the r5 plan's three fixture scans + two extra windows + two
-    full-outer merge shuffles collapse into one scan, one window, one
-    pair aggregation and one small verify join.
+    corpus emits every signal key into the one bigint key space of
+    near_dup_keys — phash bands, the caption's first 64 md5 bits,
+    embedding LSH buckets, each at its own array position k1 — so the
+    skew-chunked pair enumeration runs ONCE (one chunk-assigning
+    window over the union of keys instead of one per signal, one
+    candidate join instead of three). The enumeration
+    (_near_dup_pairs) verifies phash candidates by hamming and caption
+    candidates by their last 64 md5 bits on the candidate rows; one
+    pair-keyed aggregation then flags each pair's signals by k1.
+    Embedding candidates get the exact cosine verify on a
+    TRUE-CANDIDATE-sized vector join only. Intermediates stay
+    pair-sized — never an all-pairs product — and the r5 plan's three
+    fixture scans + two extra windows + two full-outer merge shuffles
+    collapse into one scan, one window, one pair aggregation and one
+    small verify join.
+
+    Requires max_hamming <= n_bands - 1 (ValueError otherwise, before
+    any job).
 
     The three-signal form reads its input once: the key scan and both
     sides of the verify join consume one localCheckpoint of the input
@@ -842,55 +884,24 @@ def multimodal_near_dup(
     then demotes; the final merge broadcasts the cosine pairs when that
     many candidates fit. Otherwise, and always at a negative threshold,
     these joins carry no hint."""
-    key_t = "array<struct<sig:int,k1:int,k2l:bigint,k2s:string>>"
-    empty = F.expr(f"CAST(array() AS {key_t})")
-
-    def _key(sig: int, k1, k2l, k2s) -> Column:
-        return F.struct(
-            F.lit(sig).alias("sig"),
-            k1.cast("int").alias("k1"),
-            k2l.cast("long").alias("k2l"),
-            k2s.alias("k2s"),
-        )
-
-    p = F.col(phash_col)
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    ph_arr = F.when(
-        p.isNotNull(),
-        F.array(
-            *[
-                _key(
-                    0,
-                    F.lit(i),
-                    F.shiftrightunsigned(p, i * width).bitwiseAND(F.lit(mask)),
-                    F.lit(""),
-                )
-                for i in range(n_bands)
-            ]
-        ),
-    ).otherwise(empty)
-    cap_arr = F.when(
-        F.col(caption_col).isNotNull(),
-        F.array(_key(1, F.lit(0), F.lit(0), F.md5(caption_col))),
-    ).otherwise(empty)
-    arrs = [ph_arr, cap_arr]
-    if embedding_col is not None:
-        v = F.col(embedding_col).cast("array<double>")
-        # transform's 2-arg lambda binds the ARRAY INDEX as arg 2 —
-        # exactly the band id here. A null bucket array (null vector)
-        # adds no keys, but must not null the concat and so drop the
-        # row's phash and caption keys with it.
-        emb_arr = F.coalesce(
-            F.transform(
-                _emb_buckets_udf(imgs.sparkSession, v, emb_n_bands, emb_n_planes),
-                lambda b, i: _key(2, i, b, F.lit("")),
-            ),
-            empty,
-        )
-        arrs.append(emb_arr)
+    # the key is built, and the pigeonhole bound checked, before any job
+    n_buckets = 0 if embedding_col is None else emb_n_bands
+    keys = near_dup_keys(
+        F.col("ph"), n_bands, max_hamming, F.col("cap"),
+        [F.col("buckets")[b] for b in range(n_buckets)],
+    )
     src = imgs.filter(F.col(id_col).isNotNull())
+    buckets = []
     if embedding_col is not None:
+        # a session without the kernel jar fails here, before any job
+        buckets = [
+            _emb_buckets_udf(
+                imgs.sparkSession,
+                F.col(embedding_col).cast("array<double>"),
+                emb_n_bands,
+                emb_n_planes,
+            ).alias("buckets")
+        ]
         # the key scan and both sides of the vector verify join read
         # src: project it to their columns and checkpoint it once, or
         # the caller's plan (a phash decode, say) runs three times; the
@@ -899,27 +910,24 @@ def multimodal_near_dup(
             src.select(id_col, phash_col, caption_col, embedding_col),
             F.max(F.size(embedding_col)),
         )
-    keyed = src.select(
-        F.col(id_col).alias("id"), p.alias("ph"),
-        F.explode(F.concat(*arrs)).alias("k"),
-    ).select("id", "ph", "k.sig", "k.k1", "k.k2l", "k.k2s")
-    cand = _chunked_pair_join(
-        keyed, ["sig", "k1", "k2l", "k2s"], ["ph"], chunk_size
+    # the bucket array is a column of this projection, so the key
+    # explode reads it instead of calling the kernel once per band
+    rows = src.select(
+        F.col(id_col).alias("id"),
+        F.col(phash_col).alias("ph"),
+        F.col(caption_col).alias("cap"),
+        caption_verify(F.col(caption_col)).alias("cv"),
+        *buckets,
     )
-    ham = F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))).cast("int")
-    # hamming-verify phash candidates BEFORE the pair shuffle (random
-    # band collisions vastly outnumber true pairs), then ONE pair-keyed
-    # aggregation replaces the per-signal distincts and the full-outer
-    # merges — hamming is deterministic per pair, so max() == the value
-    flags = (
-        cand.withColumn("hamming", ham)
-        .filter((F.col("sig") != 0) | (F.col("hamming") <= max_hamming))
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.max(F.when(F.col("sig") == 0, F.col("hamming"))).alias("hamming"),
-            F.max(F.col("sig") == 1).alias("_cap"),
-            F.max(F.col("sig") == 2).alias("_embcand"),
-        )
+    pairs = _near_dup_pairs(rows, keys, n_bands, max_hamming, chunk_size)
+    # ONE pair-keyed aggregation replaces the per-signal distincts and
+    # the full-outer merges — hamming is deterministic per pair, so
+    # max() == the value
+    k1 = F.col("k1")
+    flags = pairs.groupBy("id_a", "id_b").agg(
+        F.max(F.when(k1 < n_bands, F.col("hamming"))).alias("hamming"),
+        F.max(k1 == n_bands).alias("_cap"),
+        F.max(k1 > n_bands).alias("_embcand"),
     )
     if embedding_col is None:
         signal = (

@@ -51,47 +51,49 @@ def run(
     # two-stage job with a fixed, known shuffle layout; disable locally.
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    images = spark.read.parquet(input_path)
-    counts = tile_counts_jvm(images, tiling_id=tiling_id)
-    joined = join_tile_catalog(counts, spark, tiling_id, how="left")
+    try:
+        images = spark.read.parquet(input_path)
+        counts = tile_counts_jvm(images, tiling_id=tiling_id)
+        joined = join_tile_catalog(counts, spark, tiling_id, how="left")
 
-    if output_root:
-        table = IcebergLiteTable(output_root)
-        meta = {"input": input_path, "tiling_id": tiling_id, "job": "assign_and_join"}
-        # manifest stats on the tile lower-left coords: a reader with a
-        # projected-bbox predicate prunes whole (snapshot, subgrid)
-        # pairs from metadata (read(prune={"ll_x": ..., "ll_y": ...}))
-        # before any file listing — folded from the written files'
-        # parquet footers, so they cost no pass over the data
-        stat_cols = ["ll_x", "ll_y"]
-        if incremental_commit:
-            # one manifest flip per subgrid: a kill mid-job resumes
-            # with the committed continents skipped (scripts/
-            # resume_kill_run.py is the at-scale evidence run)
-            manifest = table.write_partitioned_incremental(
-                joined, "subgrid", meta=meta, resume=resume,
-                stat_cols=stat_cols,
-            )
+        if output_root:
+            table = IcebergLiteTable(output_root)
+            meta = {"input": input_path, "tiling_id": tiling_id, "job": "assign_and_join"}
+            # manifest stats on the tile lower-left coords: a reader with a
+            # projected-bbox predicate prunes whole (snapshot, subgrid)
+            # pairs from metadata (read(prune={"ll_x": ..., "ll_y": ...}))
+            # before any file listing — folded from the written files'
+            # parquet footers, so they cost no pass over the data
+            stat_cols = ["ll_x", "ll_y"]
+            if incremental_commit:
+                # one manifest flip per subgrid: a kill mid-job resumes
+                # with the committed continents skipped (scripts/
+                # resume_kill_run.py is the at-scale evidence run)
+                manifest = table.write_partitioned_incremental(
+                    joined, "subgrid", meta=meta, resume=resume,
+                    stat_cols=stat_cols,
+                )
+            else:
+                manifest = table.write_partitioned(
+                    joined, "subgrid", meta=meta, resume=resume,
+                    stat_cols=stat_cols,
+                )
+            total = manifest["total_rows"]
+            stats = {
+                "tiles": int(total),
+                "snapshot_id": manifest["snapshot_id"],
+                "skipped_resume": manifest["skipped_resume"],
+            }
         else:
-            manifest = table.write_partitioned(
-                joined, "subgrid", meta=meta, resume=resume,
-                stat_cols=stat_cols,
-            )
-        total = manifest["total_rows"]
-        stats = {
-            "tiles": int(total),
-            "snapshot_id": manifest["snapshot_id"],
-            "skipped_resume": manifest["skipped_resume"],
-        }
-    else:
-        row = joined.agg(
-            F.count(F.lit(1)).alias("tiles"), F.sum("n").alias("images")
-        ).collect()[0]
-        stats = {"tiles": int(row.tiles), "images": int(row.images)}
-    stats["seconds"] = round(time.time() - t0, 3)
-    if "images" in stats:
-        stats["images_per_sec"] = round(stats["images"] / stats["seconds"], 1)
-    spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+            row = joined.agg(
+                F.count(F.lit(1)).alias("tiles"), F.sum("n").alias("images")
+            ).collect()[0]
+            stats = {"tiles": int(row.tiles), "images": int(row.images)}
+        stats["seconds"] = round(time.time() - t0, 3)
+        if "images" in stats:
+            stats["images_per_sec"] = round(stats["images"] / stats["seconds"], 1)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return stats
 
 

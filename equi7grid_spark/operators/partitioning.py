@@ -89,45 +89,42 @@ def mosaic_tiles(
         "dtype string, nodata double, n_images long"
     )
 
-    def stage(keys_have_salt: bool):
-        def go(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("image_id" if "image_id" in pdf else "n_images")
-            pdf = pdf.reset_index(drop=True)
-            arrays = decode_batch(pdf)
-            ok = [i for i, a in enumerate(arrays) if a is not None]
-            if not ok:
-                return pd.DataFrame(columns=[f.split()[0] for f in schema.split(", ")])
-            # the tile's metadata comes from a decoded row: an undecodable
-            # one may hold a null dtype, w or h
-            first = pdf.iloc[ok[0]]
-            nodata = float(first["nodata"])
-            out = _composite([arrays[i] for i in ok], nodata, reducer)
-            dtype = np.dtype(first["dtype"])
-            n_img = int(pdf["n_images"].iloc[ok].sum()) if "n_images" in pdf else len(ok)
-            return pd.DataFrame([
-                {
-                    "subgrid": first["subgrid"],
-                    "tilename": first["tilename"],
-                    "bytes": out.astype(dtype).tobytes(),
-                    "fmt": "raw",
-                    "w": int(first["w"]),
-                    "h": int(first["h"]),
-                    "dtype": str(dtype),
-                    "nodata": nodata,
-                    "n_images": n_img,
-                }
-            ])
-
-        return go
+    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("image_id" if "image_id" in pdf else "n_images")
+        pdf = pdf.reset_index(drop=True)
+        arrays = decode_batch(pdf)
+        ok = [i for i, a in enumerate(arrays) if a is not None]
+        if not ok:
+            return pd.DataFrame(columns=[f.split()[0] for f in schema.split(", ")])
+        # the tile's metadata comes from a decoded row: an undecodable
+        # one may hold a null dtype, w or h
+        first = pdf.iloc[ok[0]]
+        nodata = float(first["nodata"])
+        out = _composite([arrays[i] for i in ok], nodata, reducer)
+        dtype = np.dtype(first["dtype"])
+        n_img = int(pdf["n_images"].iloc[ok].sum()) if "n_images" in pdf else len(ok)
+        return pd.DataFrame([
+            {
+                "subgrid": first["subgrid"],
+                "tilename": first["tilename"],
+                "bytes": out.astype(dtype).tobytes(),
+                "fmt": "raw",
+                "w": int(first["w"]),
+                "h": int(first["h"]),
+                "dtype": str(dtype),
+                "nodata": nodata,
+                "n_images": n_img,
+            }
+        ])
 
     if "fmt" not in warped.columns:
         warped = warped.withColumn("fmt", F.lit("raw"))
     if reducer in ("first", "last"):
         return warped.groupBy("subgrid", "tilename").applyInPandas(
-            stage(False), schema=schema
+            merge, schema=schema
         )
     salted = with_salt(warped, "image_id", n_salt)
     partial = salted.groupBy("subgrid", "tilename", "salt").applyInPandas(
-        stage(True), schema=schema
+        merge, schema=schema
     )
-    return partial.groupBy("subgrid", "tilename").applyInPandas(stage(False), schema=schema)
+    return partial.groupBy("subgrid", "tilename").applyInPandas(merge, schema=schema)

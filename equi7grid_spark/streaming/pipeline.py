@@ -14,6 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from equi7grid_spark.dedup import (
+    caption_verify,
+    connected_components,
+    near_dup_keys,
+)
 from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm
 
 
@@ -278,13 +283,14 @@ def streaming_phash_near_dup(
     bucket-state implementation serves both operators.
 
     Shape: the 64-bit phash explodes JVM-side into n_bands 16-bit band
-    keys; state lives PER (band_idx, band_val) bucket
+    keys (dedup.near_dup_keys); state lives PER (k1, k2) band bucket
     (applyInPandasWithState) and holds the bucket's hashes seen within
     the watermark horizon — so state is bounded by horizon x bucket
     occupancy, never the full history, and the shuffle keys on 16-bit
     band values exactly like the batch operator. Every arriving hash
     compares only against its own bucket (the pigeonhole property
-    makes that exact for hamming <= n_bands-1 within the horizon).
+    makes that exact for hamming <= n_bands-1 within the horizon; a
+    wider max_hamming raises ValueError before the query starts).
     See streaming_multimodal_pairs for the state/prune/cap semantics."""
     return streaming_multimodal_pairs(
         spark,
@@ -350,7 +356,6 @@ def streaming_phash_dup_clusters(
     inside the sink after every N commits, bounding history to the
     newest `keep_last` snapshots while the stream runs; expiry is
     idempotent under micro-batch replay like the commits themselves."""
-    from equi7grid_spark.dedup import connected_components
     from equi7grid_spark.table.manifest import IcebergLiteTable
 
     pairs = streaming_phash_near_dup(
@@ -429,13 +434,14 @@ def streaming_multimodal_pairs(
     stateful operator for a pure relabeling.
 
     The caption signal rides the SAME bucket-state machinery as the
-    phash bands: caption rows land on a sentinel band index
-    (band_idx = n_bands) whose bucket key is the first 60 md5 bits of
-    the caption and whose stored "hash" is the second 60 bits — an
-    arriving caption pairs with every in-horizon bucket entry whose
-    second half also matches (120 md5 bits total, the streaming
-    equivalent of the batch md5-equality contract). Exactly-once per
-    caption pair is automatic (a caption lives in exactly one bucket).
+    phash bands, on the batch operator's keys (dedup.near_dup_keys):
+    state lives per (k1, k2) key, caption rows land on k1 = n_bands
+    with the caption's first 64 md5 bits as k2, and their stored "hash"
+    is the last 64 (dedup.caption_verify) — an arriving caption pairs
+    with every in-horizon bucket entry whose stored half also matches,
+    so a caption pair agrees on all 128 md5 bits, as in batch.
+    Exactly-once per caption pair is automatic (a caption lives in
+    exactly one bucket).
 
     Exactly-once PHASH pair emission WITHOUT cross-group coordination:
     a pair agreeing on several bands would be emitted by several
@@ -466,13 +472,18 @@ def streaming_multimodal_pairs(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    # built first: a max_hamming the bands cannot cover raises here
+    keys = near_dup_keys(
+        F.col("phash"), n_bands, max_hamming,
+        F.col("caption") if include_caption else None,
+    )
     width = 64 // n_bands
     mask_band = (1 << width) - 1
     horizon_us = _duration_us(watermark)
 
     def fn(key, pdfs, state):
         band_idx = int(key[0])
-        is_cap = band_idx >= n_bands  # the caption sentinel band
+        is_cap = band_idx >= n_bands  # the caption key, k1 == n_bands
         out_a, out_b, out_s, out_h = [], [], [], []
 
         def pair_against(ids, phs, tss, rid, rph, lo):
@@ -595,44 +606,22 @@ def streaming_multimodal_pairs(
     for k, v in (reader_options or {}).items():
         reader = reader.option(k, v)
     stream = reader.parquet(input_dir)
-    p = F.col("phash")
-    bands = F.array(
-        *[
-            F.shiftrightunsigned(p, i * width).bitwiseAND(F.lit(mask_band))
-            for i in range(n_bands)
-        ]
-    )
-    exploded = stream.filter(
-        p.isNotNull() & F.col("image_id").isNotNull()
-    ).select(
-        "image_id", "ts", "phash", F.posexplode(bands)
-    ).select(
-        "image_id", "ts", "phash",
-        F.col("pos").alias("band_idx"), F.col("col").alias("band_val"),
-    )
+    # a caption row keeps its last 64 md5 bits where a phash row keeps
+    # its hash: the state compares them whole
+    stored = F.col("phash")
     if include_caption:
-        # 128-bit md5 split into a 60-bit bucket key (hex chars 1-15)
-        # and a 60-bit stored verify half (chars 17-31) — both
-        # engine-independent and collision-equivalent to the batch
-        # md5-equality contract
-        md5 = F.md5("caption")
-
-        def _fold(start: int):
-            return F.conv(F.substring(md5, start, 15), 16, 10).cast("long")
-
-        cap_rows = stream.filter(
-            F.col("caption").isNotNull() & F.col("image_id").isNotNull()
-        ).select(
-            "image_id",
-            "ts",
-            _fold(17).alias("phash"),
-            F.lit(n_bands).alias("band_idx"),
-            _fold(1).alias("band_val"),
+        stored = F.when(F.col("k1") < n_bands, stored).otherwise(
+            caption_verify(F.col("caption"))
         )
-        exploded = exploded.unionByName(cap_rows)
+    exploded = (
+        stream.filter(F.col("image_id").isNotNull())
+        .select("*", F.posexplode(keys).alias("k1", "k2"))
+        .filter(F.col("k2").isNotNull())
+        .select("image_id", "ts", "k1", "k2", stored.alias("phash"))
+    )
     return (
         exploded.withWatermark("ts", watermark)
-        .groupBy("band_idx", "band_val")
+        .groupBy("k1", "k2")
         .applyInPandasWithState(
             fn,
             _MM_OUT_SCHEMA,

@@ -122,15 +122,16 @@ def dump(sf_dir: str, tmp: str) -> list[tuple[str, str, str]]:
     ph = queries()["image_phash_near_dup"](spark, sf_dir)
     sections.append((
         "Image phash near-dup (banded hamming multi-index, chunked r4)",
-        "4x16-bit bands posexplode to (band_idx, band_val) keys; a "
-        "per-bucket row_number window assigns id-range chunks and the "
-        "candidate join keys on (band_idx, band_val, ci, cj) — every "
+        "The 4x16-bit bands are positions 0-3 of the one bigint "
+        "near-dup key array (dedup.near_dup_keys); posexplode gives "
+        "(k1, k2) keys, a per-bucket row_number window assigns id-range "
+        "chunks and the candidate join keys on (k1, k2, ci, cj) — every "
         "task bounded by chunk_size^2 pairs even when a degenerate "
         "corpus collapses millions of rows onto one band value (at "
         "this toy input AQE builds a broadcast; at scale it is a "
-        "shuffle join), then xor+popcount verifies candidates. Exact "
-        "recall for hamming<=3 by pigeonhole; no all-pairs product at "
-        "any scale.",
+        "shuffle join), then xor+popcount verifies candidates (a CASE "
+        "on k1: phash keys only here). Exact recall for hamming<=3 by "
+        "pigeonhole; no all-pairs product at any scale.",
         plan_of(ph),
     ))
 
@@ -150,7 +151,9 @@ def dump(sf_dir: str, tmp: str) -> list[tuple[str, str, str]]:
         "corpus (millions of rows over a handful of phash values) "
         "costs O(m + distinct pairs), not O(m^2). The plan below reads "
         "the converged label frame from its localCheckpoint (lineage "
-        "truncated) and joins it back to the member list.",
+        "truncated) and joins it back to the member list, broadcast "
+        "only when the distinct-phash count read in the groups "
+        "checkpoint's own job fits the session's broadcast threshold.",
         plan_of(cl),
     ))
 
@@ -171,12 +174,14 @@ def dump(sf_dir: str, tmp: str) -> list[tuple[str, str, str]]:
     mm = queries()["image_multimodal_near_dup"](spark, sf_dir)
     sections.append((
         "Cross-signal multimodal dedup (one-pass signal keying, r6)",
-        "ONE scan emits every signal key (phash bands + caption-md5 "
-        "sentinel) tagged into a unified (sig, k1, k2l, k2s) space, so "
+        "ONE scan emits every signal key into one bigint key array "
+        "(dedup.near_dup_keys: phash bands at positions 0-3, the "
+        "caption's first 64 md5 bits at 4), posexploded to (k1, k2), so "
         "the skew-chunked enumeration and its chunk window run once; "
-        "ONE pair-keyed aggregation replaces the per-signal distincts "
-        "and the full-outer merge, with provenance derived from the "
-        "per-signal flags. No cartesian, no Python.",
+        "caption candidates verify on their last 64 md5 bits (cv) in "
+        "the same CASE on k1 that verifies phash hamming, and ONE "
+        "pair-keyed aggregation flags each pair's signals by k1. No "
+        "cartesian, no Python.",
         plan_of(mm),
     ))
 
@@ -219,15 +224,16 @@ def dump(sf_dir: str, tmp: str) -> list[tuple[str, str, str]]:
     mme = queries()["image_multimodal_embed_near_dup"](spark, sf_dir)
     sections.append((
         "Three-signal multimodal dedup (phash OR caption OR embedding, r5)",
-        "The embedding signal adds hyperplane-LSH (band, bucket) keys "
-        "from one compiled equi7_emb_buckets call per row to the one "
-        "keyed pair enumeration of the phash and caption signals; "
+        "The embedding signal adds its hyperplane-LSH buckets as the "
+        "key array's positions 5-12, read from one compiled "
+        "equi7_emb_buckets call per row, to the one keyed pair "
+        "enumeration of the phash and caption signals; "
         "candidates flagged by the embedding signal get an exact "
         "cosine verify (one compiled equi7_cosine_seq call per pair). "
         "The plan below is that verify and the broadcast provenance "
         "merge, over localCheckpoints of the input and of the pair "
         "aggregation. Still no cartesian: every "
-        "shuffle keys on band values, caption md5s, or LSH buckets.",
+        "shuffle keys on (k1, k2) bigint keys.",
         plan_of(mme),
     ))
 

@@ -58,3 +58,18 @@ def test_buffered_assign_recipe(points):
         x, y = aeqd_forward(r.subgrid, 51.12, 61.71)
         assert (r.x, r.y) == pytest.approx((float(x), float(y)), abs=1e-6)
         assert r.tilename.startswith(r.subgrid + "_") and r.tilename.endswith("T6")
+
+
+def test_assign_and_join_restores_aqe_on_failure(spark, tmp_path):
+    """run() turns AQE off for its own job; a run that fails (here: an
+    input path that does not exist) leaves the caller's setting as it
+    was."""
+    from pyspark.errors import AnalysisException
+
+    from equi7grid_spark.jobs.assign_and_join import run
+
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    with pytest.raises(AnalysisException):
+        run(spark, str(tmp_path / "missing"))
+    assert spark.conf.get(key) == prev

@@ -560,3 +560,138 @@ def test_phash_dup_clusters_degenerate_collapse(spark):
     assert sample["img0000006"] == "img0000000"   # exact dup of v0
     assert sample["img0000010"] == "img0000004"   # exact clique member
     assert sample["img0000011"] == "img0000005"
+
+
+def test_near_dup_keys_layout(spark):
+    """The one near-dup key: phash bands at positions 0..n_bands-1
+    (lowest bits first), the caption's first 64 md5 bits at n_bands,
+    then the embedding buckets; the caption's last 64 md5 bits are its
+    verify column. A null phash, caption or bucket array is no key."""
+    import hashlib
+
+    from equi7grid_spark.dedup import caption_verify, near_dup_keys
+
+    def md5_half(text, half):
+        v = int(hashlib.md5(text.encode()).hexdigest()[16 * half : 16 * half + 16], 16)
+        return v - (1 << 64) if v >= 1 << 63 else v
+
+    rows = [
+        ("p", 0x0123_4567_89AB_CDEF, "cat on a mat", [5, 9]),
+        ("n", -1, "", [0, 65535]),
+        ("z", None, None, None),
+    ]
+    df = spark.createDataFrame(
+        rows, "image_id string, phash long, caption string, b array<int>"
+    )
+    keys = near_dup_keys(
+        F.col("phash"), 4, 3, F.col("caption"), [F.col("b")[0], F.col("b")[1]]
+    )
+    got = {
+        r.image_id: (r.k, r.cv)
+        for r in df.select(
+            "image_id", keys.alias("k"), caption_verify(F.col("caption")).alias("cv")
+        ).collect()
+    }
+    assert got["p"] == (
+        [0xCDEF, 0x89AB, 0x4567, 0x0123, md5_half("cat on a mat", 0), 5, 9],
+        md5_half("cat on a mat", 1),
+    )
+    assert got["n"] == (
+        [0xFFFF] * 4 + [md5_half("", 0), 0, 65535], md5_half("", 1)
+    )
+    assert got["z"] == ([None] * 7, None)
+    assert df.select(near_dup_keys(F.col("phash"), 8).alias("k")).schema[
+        "k"
+    ].dataType.simpleString() == "array<bigint>"
+    phash_only = df.filter("image_id = 'p'").select(
+        near_dup_keys(F.col("phash"), 8).alias("k")
+    )
+    assert phash_only.first().k == [0xEF, 0xCD, 0xAB, 0x89, 0x67, 0x45, 0x23, 0x01]
+
+
+def test_pigeonhole_guard_runs_no_job(spark):
+    """max_hamming above n_bands - 1 loses pairs, so every near-dup
+    operator raises ValueError before it runs any Spark job — the
+    three-signal form too, whose input checkpoint is eager."""
+    from equi7grid_spark.dedup import multimodal_near_dup, phash_dup_clusters
+
+    df = _three_signal_df(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("pigeonhole_guard", "pigeonhole_guard")
+    try:
+        for call in (
+            lambda: phash_near_dup(df, max_hamming=4, n_bands=4),
+            lambda: phash_dup_clusters(df, max_hamming=4),
+            lambda: multimodal_near_dup(df, max_hamming=4, n_bands=4),
+            lambda: multimodal_near_dup(
+                df, max_hamming=4, n_bands=4, embedding_col="embedding"
+            ),
+        ):
+            with pytest.raises(ValueError, match="pigeonhole"):
+                call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("pigeonhole_guard")) == []
+
+
+def test_multimodal_caption_pairs_equal_bruteforce(spark):
+    """The caption signal of multimodal_near_dup (128 md5 bits: the key
+    and the verify column) equals brute-force caption equality on
+    random captions with nulls and repeats, across multi-chunk
+    buckets."""
+    import random
+
+    from equi7grid_spark.dedup import multimodal_near_dup
+
+    rnd = random.Random(7)
+    pool = [f"a photo of item {k}" for k in range(25)] + [""]
+    rows = [
+        (f"c{i:03d}", None if rnd.random() < 0.17 else rnd.choice(pool))
+        for i in range(120)
+    ]
+    expected = {
+        (a, b)
+        for a, ca in rows
+        for b, cb in rows
+        if a < b and ca is not None and ca == cb
+    }
+    df = spark.createDataFrame(
+        [(i, None, c) for i, c in rows], "image_id string, phash long, caption string"
+    )
+    out = multimodal_near_dup(df, chunk_size=8).collect()
+    assert {r.signal for r in out} <= {"caption"}
+    assert {(r.id_a, r.id_b) for r in out} == expected
+
+
+def test_phash_dup_clusters_label_size_gate(spark):
+    """The label broadcast of phash_dup_clusters is size-gated: the
+    clusters are the same at the session's default
+    spark.sql.autoBroadcastJoinThreshold and at -1, where no execution
+    holds a BroadcastExchange."""
+    from equi7grid_spark.dedup import phash_dup_clusters
+
+    rows = _phash_path_graph(12) + [
+        ("x", 0x0F0F_0F0F_0F0F_0F0F),
+        ("y", 0x0F0F_0F0F_0F0F_0F0E),
+        ("y2", 0x0F0F_0F0F_0F0F_0F0E),  # exact dup of y
+        ("z", 0x7A7A_0000_FFFF_1111),   # singleton
+    ]
+    df = spark.createDataFrame(rows, "image_id string, phash long")
+
+    def run():
+        before = _sql_executions(spark)
+        got = sorted(map(tuple, phash_dup_clusters(df, max_hamming=3).collect()))
+        plans = [p for i, p in _sql_executions(spark).items() if i not in before]
+        return got, sum("BroadcastExchange" in p for p in plans)
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    on, n_bcast_on = run()
+    spark.conf.set(key, "-1")
+    try:
+        off, n_bcast_off = run()
+    finally:
+        spark.conf.set(key, prev)
+    assert on == off
+    assert ("n11", "n00") in on and ("y2", "x") in on
+    assert n_bcast_on > 0 and n_bcast_off == 0

@@ -616,3 +616,71 @@ def test_streaming_phash_dup_clusters_in_stream_retention(spark, tmp_path):
         if d.is_dir() and d.name.startswith("snap-")
     ]
     assert len(snap_dirs) == 1  # superseded full copies reclaimed
+
+
+def test_streaming_pigeonhole_guard_starts_nothing(spark, tmp_path):
+    """max_hamming above n_bands - 1 raises ValueError before the
+    stream is even read: no Spark job and no streaming query starts."""
+    from equi7grid_spark.streaming.pipeline import (
+        streaming_multimodal_pairs,
+        streaming_phash_near_dup,
+    )
+
+    src = str(tmp_path / "never_written")
+    sc = spark.sparkContext
+    sc.setJobGroup("stream_pigeonhole_guard", "stream_pigeonhole_guard")
+    try:
+        with pytest.raises(ValueError, match="pigeonhole"):
+            streaming_phash_near_dup(spark, src, max_hamming=4, n_bands=4)
+        with pytest.raises(ValueError, match="pigeonhole"):
+            streaming_multimodal_pairs(spark, src, max_hamming=4, n_bands=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("stream_pigeonhole_guard")) == []
+    assert spark.streams.active == []
+
+
+def test_streaming_caption_pairs_equal_bruteforce(spark, tmp_path):
+    """Streaming caption pairs match on all 128 md5 bits: on random
+    captions with nulls and repeats, all arriving within the horizon,
+    the 'caption' events are exactly the brute-force equal-caption
+    pairs — and the batch operator's."""
+    import random
+
+    from equi7grid_spark.dedup import multimodal_near_dup
+    from equi7grid_spark.streaming.pipeline import (
+        run_available_now,
+        streaming_multimodal_pairs,
+    )
+
+    rnd = random.Random(11)
+    pool = [f"a photo of item {k}" for k in range(25)] + [""]
+    rows = [
+        (
+            f"s{i:03d}",
+            f"2026-01-01 10:{i // 60:02d}:{i % 60:02d}",
+            rnd.getrandbits(63) if rnd.random() < 0.5 else None,
+            None if rnd.random() < 0.17 else rnd.choice(pool),
+        )
+        for i in range(120)
+    ]
+    expected = {
+        (a, b)
+        for a, _, _, ca in rows
+        for b, _, _, cb in rows
+        if a < b and ca is not None and ca == cb
+    }
+    src = str(tmp_path / "cap_stream")
+    df = spark.createDataFrame(
+        rows, "image_id string, ts_s string, phash long, caption string"
+    ).selectExpr("image_id", "CAST(ts_s AS TIMESTAMP) AS ts", "phash", "caption")
+    df.write.parquet(src)
+    out = streaming_multimodal_pairs(spark, src, watermark="1 hour")
+    run_available_now(out, str(tmp_path / "ck_cap"), "stream_cap_pairs")
+    got = spark.sql("select * from stream_cap_pairs where signal = 'caption'").collect()
+    assert len(got) == len({(r.id_a, r.id_b) for r in got})
+    assert {(r.id_a, r.id_b) for r in got} == expected
+    batch = multimodal_near_dup(df.drop("ts"))
+    assert {
+        (r.id_a, r.id_b) for r in batch.collect() if r.signal in ("caption", "both")
+    } == expected
