@@ -17,8 +17,11 @@ candidate verification joins are restricted to same-bucket pairs.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from equi7grid_spark.operators.partitioning import spread_small_input
 
@@ -265,41 +268,52 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components over an undirected edge list: the first two
     columns of `pairs` are the endpoints (any orderable id type).
     Returns (id, lab) with lab = min id reachable, one row per id that
-    appears in at least one edge.
+    appears in at least one edge. A pair with a null endpoint is no
+    edge: it is dropped before anything else, so a null never gets a
+    row and never joins or splits a component.
 
     Scale shape: min-label propagation with pointer jumping — each
     round hooks label(v) ← min(label(v), min over neighbors), then
-    compresses label(v) ← label(label(v)) with a self-join on the
-    label frame. Hooking alone needs O(component diameter) rounds; the
-    jump makes the hop distance to the component minimum roughly halve
-    per round, so long chains (re-encode sequences, quote chains)
-    converge in O(log diameter) rounds at the cost of one extra
-    label-sized join per round. Each round localCheckpoints the label
-    frame, truncating the lineage/plan growth that kills iterative
-    DataFrame jobs at scale. No driver-side graph state — the driver
-    sees only the edge count and the per-round changed-row count. Labels
-    start as own ids and only ever decrease to ids inside the same
-    component, so changed == 0 is exactly the propagation fixed point
-    (labels constant along every edge ⇒ equal to the component minimum).
+    compresses label(v) ← label(label(v)). Hooking alone needs
+    O(component diameter) rounds; the jump makes the hop distance to
+    the component minimum roughly halve per round, so long chains
+    (re-encode sequences, quote chains) converge in O(log diameter)
+    rounds. Round 1 is not counted; the rounds stop at the first later
+    round that changes no label, after at most max_iter + 1 rounds
+    (a component whose diameter equals max_iter still converges), and
+    a graph still changing then raises RuntimeError. Labels start as
+    own ids and only ever decrease to ids inside the same component,
+    so changed == 0 is exactly the propagation fixed point (labels
+    constant along every edge ⇒ equal to the component minimum). No
+    driver-side graph state — the driver sees only the edge count and
+    the changed count.
 
     Size gate: the symmetric edge list is checkpointed once with its
-    row count (_sized_checkpoint). When it fits the session's
-    spark.sql.autoBroadcastJoinThreshold, the label side of every
-    round's joins is broadcast (a label frame has at most as many rows
-    as the edge list, of the same row width), so a round plans its
-    joins as broadcast hash joins from the start instead of running
-    sort-merge shuffle stages that AQE then demotes. Otherwise, and
-    always at a negative threshold, the joins plan as before.
+    row count (_sized_checkpoint). It picks the executor of the
+    rounds, which are defined once and run the same either way:
+    - when the list fits the session's
+      spark.sql.autoBroadcastJoinThreshold (_fits_broadcast) and the
+      ids are integers or binary-collated strings (whose pandas order
+      is Spark's), every round runs in ONE NumPy task over the
+      coalesced list (_cc_rounds), in one job, and the last round's
+      changed count is read in the label checkpoint's own job. A
+      Spark round costs several jobs of fixed driver work however
+      few its rows;
+    - otherwise, and always at a negative threshold, each round is a
+      Spark hook join + groupBy and a pointer-jump self-join, and
+      localCheckpoints the label frame (truncating the lineage growth
+      that kills iterative DataFrame jobs at scale), with its changed
+      count observed in that checkpoint's job (_spark_rounds).
     """
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
     a_col, b_col = pairs.columns[:2]
     a, b = F.col(a_col), F.col(b_col)
     # the symmetric edge list in one pass over the pairs (each pair
-    # emits both orientations), checkpointed once: every round reads
-    # it, and the upstream pair enumeration runs exactly once
+    # emits both orientations), checkpointed once: the rounds read it,
+    # and the upstream pair enumeration runs exactly once
     edges, (n_edges,) = _sized_checkpoint(
-        pairs.select(
+        pairs.filter(a.isNotNull() & b.isNotNull()).select(
             F.inline(
                 F.array(
                     F.struct(a.alias("a"), b.alias("b")),
@@ -308,15 +322,79 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             )
         )
     )
-    small = _fits_broadcast(edges, n_edges)
+    id_type = edges.schema["a"].dataType
+    if (
+        isinstance(id_type, T.IntegralType) or id_type == T.StringType()
+    ) and _fits_broadcast(edges, n_edges):
+        t = id_type.simpleString()
+        out, (_, changed) = _sized_checkpoint(
+            edges.coalesce(1).mapInPandas(
+                partial(_cc_rounds, max_iter=max_iter),
+                f"id {t}, lab {t}, _changed bigint",
+            ),
+            F.max("_changed"),
+        )
+        # no edge: no row, and a max over nothing is null
+        labels, changed = out.select("id", "lab"), changed or 0
+    else:
+        labels, changed = _spark_rounds(edges, max_iter)
+    if changed != 0:
+        # a component with diameter > max_iter would otherwise return
+        # silently-partial labels (and diverge from the oracle's exact
+        # transitive closure) — fail loudly instead
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds "
+            f"({changed} labels still changing); raise max_iter for "
+            "long-chain components"
+        )
+    return labels
 
-    def side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
 
+def _cc_rounds(batches, max_iter: int):
+    """The one-task executor of connected_components: the same rounds
+    as the Spark path, in NumPy over the whole symmetric edge list
+    (one mapInPandas task over the coalesced checkpoint).
+
+    Ids become pd.factorize codes with sort=True, so code order is id
+    order and a min over codes is the min over ids. A round hooks
+    new(v) = min(lab(v), min lab(w) over neighbours w) with
+    np.minimum.at, then jumps new(v) = new(new(v)). Round 1 is not
+    counted; the rounds stop at the first later round that changes no
+    label, after at most max_iter + 1 rounds. Every row carries the
+    changed count of the last round run in `_changed`, nonzero only
+    when the labels did not converge."""
+    import numpy as np
+    import pandas as pd
+
+    e = [pdf for pdf in batches if len(pdf)]
+    if not e:
+        return
+    e = pd.concat(e, ignore_index=True)
+    n = len(e)
+    codes, ids = pd.factorize(
+        np.concatenate([e["a"].to_numpy(), e["b"].to_numpy()]), sort=True
+    )
+    a, b = codes[:n], codes[n:]
+    lab = np.arange(len(ids))
+    changed = 0
+    for r in range(max_iter + 1):
+        new = lab.copy()
+        np.minimum.at(new, a, lab[b])
+        new = new[new]
+        if r:
+            changed = int(np.count_nonzero(new != lab))
+        lab = new
+        if r and not changed:
+            break
+    yield pd.DataFrame({"id": ids, "lab": ids[lab], "_changed": changed})
+
+
+def _spark_rounds(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
+    """connected_components' rounds as Spark joins over the symmetric
+    edge list (a, b): (label frame, changed count of the last round
+    run). Each round localCheckpoints the label frame."""
     labels = None
     changed = -1
-    # max_iter propagation rounds + 1 confirming zero-change round, so
-    # a component whose diameter equals max_iter still converges
     for _ in range(max_iter + 1):
         if labels is None:
             # round 1 fused: the seed labels are the identity (lab =
@@ -330,12 +408,12 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             )
         else:
             nmin = (
-                edges.join(side(labels.withColumnRenamed("id", "b")), "b")
+                edges.join(labels.withColumnRenamed("id", "b"), "b")
                 .groupBy("a")
                 .agg(F.min("lab").alias("nlab"))
                 .withColumnRenamed("a", "id")
             )
-            hooked = labels.join(side(nmin), "id", "left").select(
+            hooked = labels.join(nmin, "id", "left").select(
                 "id",
                 F.col("lab").alias("old_lab"),
                 F.least(F.col("lab"), F.coalesce("nlab", "lab")).alias("lab"),
@@ -349,7 +427,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             F.col("id").alias("p_id"), F.col("lab").alias("p_lab")
         )
         stepped = hooked.join(
-            side(parents), hooked.lab == parents.p_id, "left"
+            parents, hooked.lab == parents.p_id, "left"
         ).select("id", "old_lab", F.coalesce("p_lab", "lab").alias("lab"))
         if labels is None:
             # round 1 is not counted: a graph with any edge between two
@@ -370,16 +448,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         changed = obs.get["changed"]
         if changed == 0:
             break
-    if changed != 0:
-        # a component with diameter > max_iter would otherwise return
-        # silently-partial labels (and diverge from the oracle's exact
-        # transitive closure) — fail loudly instead
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); raise max_iter for "
-            "long-chain components"
-        )
-    return labels
+    return labels, changed
 
 
 _HEX = "0123456789abcdef"
@@ -670,8 +739,10 @@ def phash_dup_clusters(
     hamming(A,C) > threshold — so canonical-image selection needs the
     transitive closure, not the raw pair list. Components are closed
     by min-label propagation with pointer jumping
-    (connected_components: O(log diameter) rounds, labels
-    localCheckpointed between rounds). Scale: re-encode clusters are
+    (connected_components: O(log diameter) rounds of one definition,
+    run in one NumPy task when the rep edge list fits the broadcast
+    threshold and as Spark joins with labels localCheckpointed between
+    rounds when it does not). Scale: re-encode clusters are
     star-shaped (variants of one source), so round count stays small
     even when clusters are huge; long re-encode CHAINS are what the
     pointer jump is for.

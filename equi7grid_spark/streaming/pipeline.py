@@ -336,7 +336,12 @@ def streaming_phash_dup_clusters(
     and connected components of (old edge set ∪ batch) equal the
     components of (stars(old labels) ∪ batch) — so each batch closes
     only label-sized star edges plus the batch's new pairs, never the
-    accumulated raw pair log. A batch whose pairs bridge two existing
+    accumulated raw pair log. The closure is dedup.connected_components,
+    whose size gate runs its rounds in one NumPy task while a batch's
+    star + pair edge list fits the broadcast threshold, and as Spark
+    join rounds (the same round definition) once it does not, so a
+    label table that outgrows the threshold keeps closing the same
+    components. A batch whose pairs bridge two existing
     clusters relabels BOTH to the joint minimum through the star
     edges (covered by the merge test). Labels are hash-partitioned on
     image_id (`n_label_parts`) so the per-batch overwrite commits in

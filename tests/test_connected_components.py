@@ -103,32 +103,58 @@ def _gate_cases(spark) -> dict:
     out["self_loops"] = {r.id: r.lab for r in connected_components(loops, max_iter=1).collect()}
     empty = spark.createDataFrame([], "a long, b long")
     out["empty"] = connected_components(empty, max_iter=1).collect()
+    # string ids: their order ("10" < "9") is not the numeric one
+    for seed, n_nodes, n_edges in GRAPHS[:2]:
+        edges = [(str(x), str(y)) for x, y in _random_graph(seed, n_nodes, n_edges)]
+        got = connected_components(spark.createDataFrame(edges, "a string, b string")).collect()
+        out[f"strings_{seed}"] = ({r.id: r.lab for r in got}, _union_find(n_nodes, edges))
+    # non-ASCII: Spark orders strings by UTF-8 bytes, Python by code
+    # point, and the two orders agree
+    def labels(rows, schema):
+        got = connected_components(spark.createDataFrame(rows, schema)).collect()
+        return {r.id: r.lab for r in got}
+
+    out["unicode"] = labels([("日本", "é"), ("é", "z"), ("z", "Ω"), ("b", "a")], "a string, b string")
+    # a pair with a null endpoint is no edge: x is in no other pair, so
+    # it has no row, and the null joins nothing to a
+    out["null_strings"] = labels(
+        [("x", None), (None, "a"), ("c", "a"), ("b", "c")], "a string, b string"
+    )
+    out["null_longs"] = labels([(7, None), (None, 2), (9, 2), (None, None), (4, 9)], "a long, b long")
+    # float ids keep the Spark rounds (pandas would code NaN as
+    # missing); Spark orders NaN above every other double
+    doubles = [(2.5, 1.5), (float("nan"), 2.5)]
+    out["doubles"] = sorted(
+        (str(r.id), r.lab)
+        for r in connected_components(spark.createDataFrame(doubles, "a double, b double")).collect()
+    )
     return out
 
 
-def _broadcast_plans(spark, fn) -> tuple:
-    """(fn(), how many SQL executions fn ran hold a BroadcastExchange)."""
+def _executed_plans(spark, fn) -> tuple:
+    """(fn(), the physical plans of the SQL executions fn ran)."""
     from test_phash_dedup import _sql_executions
 
     before = _sql_executions(spark)
     out = fn()
     new = [p for i, p in _sql_executions(spark).items() if i not in before]
     assert new
-    return out, sum("BroadcastExchange" in p for p in new)
+    return out, new
 
 
 def test_connected_components_size_gate(spark):
-    """The size gate changes plans, never answers: every graph shape
-    gives the same labels with the broadcast hints on (the session's
-    default threshold; these edge lists fit) and with
-    spark.sql.autoBroadcastJoinThreshold=-1, where the hints add no
-    BroadcastExchange to any plan."""
+    """The size gate picks the executor, never the answer: every graph
+    shape gives the same labels at the session's default threshold
+    (these edge lists fit, so the rounds run in one MapInPandas task)
+    and at spark.sql.autoBroadcastJoinThreshold=-1, where they run as
+    Spark joins with no MapInPandas and no BroadcastExchange in any
+    plan."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
-    on, n_bcast_on = _broadcast_plans(spark, lambda: _gate_cases(spark))
+    on, plans_on = _executed_plans(spark, lambda: _gate_cases(spark))
     spark.conf.set(key, "-1")
     try:
-        off, n_bcast_off = _broadcast_plans(spark, lambda: _gate_cases(spark))
+        off, plans_off = _executed_plans(spark, lambda: _gate_cases(spark))
     finally:
         spark.conf.set(key, prev)
     assert on == off
@@ -140,19 +166,28 @@ def test_connected_components_size_gate(spark):
     assert on["path32_6"] == {i: 0 for i in range(32)}
     assert on["self_loops"] == {3: 3, 5: 5}
     assert on["empty"] == []
-    assert n_bcast_on > 0 and n_bcast_off == 0
+    for seed in (1, 2):
+        got, expect = on[f"strings_{seed}"]
+        assert got == expect
+    assert on["unicode"] == {"b": "a", "a": "a", **{k: "z" for k in ("日本", "é", "z", "Ω")}}
+    assert on["null_strings"] == {"a": "a", "b": "a", "c": "a"}
+    assert on["null_longs"] == {2: 2, 9: 2, 4: 2}
+    assert on["doubles"] == [("1.5", 1.5), ("2.5", 1.5), ("nan", 1.5)]
+    assert any("MapInPandas" in p for p in plans_on)
+    assert not [p for p in plans_off if "MapInPandas" in p or "BroadcastExchange" in p]
 
 
 def test_connected_components_job_floor(spark):
     """connected_components' Spark jobs on a fixed graph stay at the
-    floor measured when its joins came to be planned from the edge
-    list's counted size: one job for the counted edge checkpoint, no
-    count() job per round, and broadcast joins from the start."""
+    floor of its one-task executor: one job for the counted edge
+    checkpoint and one for the label task's checkpoint, whose observed
+    changed count needs no job of its own."""
     edges = _random_graph(2, 200, 260)
     pairs = spark.createDataFrame(edges, "a long, b long")
     labels, n_jobs = _jobs_in_group(spark, lambda: connected_components(pairs))
     assert {r.id: r.lab for r in labels.collect()} == _union_find(200, edges)
-    # 40 on the test session (local[8], 8 shuffle partitions): 8 rounds;
-    # with a lazy pair checkpoint, a count() per round and sort-merge
-    # joins demoted by AQE after their shuffle stages ran it was 85
-    assert 0 < n_jobs <= 40, n_jobs
+    # 2 on the test session (local[8], 8 shuffle partitions). Its 8
+    # rounds as Spark joins with broadcast hints took 40 jobs; with a
+    # lazy pair checkpoint, a count() per round and sort-merge joins
+    # demoted by AQE after their shuffle stages ran it was 85
+    assert 0 < n_jobs <= 3, n_jobs

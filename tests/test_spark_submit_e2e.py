@@ -6,7 +6,9 @@ in-process tests can't see (jar/resource paths, data-artifact
 extraction, import layout). This launches the packaged artifact on a
 plain local[2] spark-submit from a NEUTRAL cwd (so the repo dir can't
 shadow the zip import) and asserts the flagship runs end-to-end, on
-the compiled-kernel path, with the expected sf0.001 output.
+the compiled-kernel path, with the expected sf0.001 output, and that
+an engine Python stage pickled by reference (connected components'
+one-task rounds) runs in workers that import it from the zip.
 """
 
 import os
@@ -57,6 +59,13 @@ rep = spark.range(4, numPartitions=4).mapInPandas(
     zip_reads, "pid long, zip_reads long").collect()
 print("LAZY_ZIP", len(rep), all(r.zip_reads == 0 for r in rep))
 
+# connected components of a small graph close in one Python task,
+# whose function the workers import from the zip
+from equi7grid_spark.dedup import connected_components
+cc = connected_components(
+    spark.createDataFrame([(1, 2), (3, 2), (8, 7)], "a long, b long"))
+print("CC_RESULT", sorted((r.id, r.lab) for r in cc.collect()))
+
 imgs = synthetic_images(spark, 5000, with_bytes=False)
 out = tile_counts_jvm(imgs, tiling_id="T6")
 rows = out.count()
@@ -102,6 +111,7 @@ def test_spark_submit_packaged_flagship(tmp_path):
     assert proc.returncode == 0, f"spark-submit failed:\n{tail}"
     assert "KERNEL_LOADED" in proc.stdout, tail
     assert "LAZY_ZIP 4 True" in proc.stdout, tail
+    assert "CC_RESULT [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]" in proc.stdout, tail
     result = [ln for ln in proc.stdout.splitlines() if ln.startswith("E2E_RESULT")]
     assert result, tail
     _, rows, total = result[0].split()
