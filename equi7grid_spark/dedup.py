@@ -552,13 +552,60 @@ def near_dup_keys(
             f"max_hamming={max_hamming} needs > {n_bands - 1} bands for "
             "exact recall (pigeonhole)"
         )
+    cap = [] if caption is None else [_md5_bits(caption, 0)]
+    return F.array(
+        *_bands(phash, n_bands), *cap, *[b.cast("long") for b in buckets or []]
+    )
+
+
+def _bands(h: Column, n_bands: int) -> list[Column]:
+    """The 64/n_bands-bit bands of a 64-bit value, lowest bits first."""
     width = 64 // n_bands
-    bands = [
-        F.shiftrightunsigned(phash, i * width).bitwiseAND(F.lit((1 << width) - 1))
+    return [
+        F.shiftrightunsigned(h, i * width).bitwiseAND(F.lit((1 << width) - 1))
         for i in range(n_bands)
     ]
-    cap = [] if caption is None else [_md5_bits(caption, 0)]
-    return F.array(*bands, *cap, *[b.cast("long") for b in buckets or []])
+
+
+def key_hash(
+    k1: Column, n_bands: int, phash: Column, cv: Column | None = None
+) -> Column:
+    """The one 64-bit value an exploded key row of signal k1 stores for
+    pair_verify: the phash on a band key, the caption_verify column `cv`
+    on the caption key, null on an embedding key."""
+    h = F.when(k1 < n_bands, phash)
+    return h if cv is None else h.when(k1 == n_bands, cv)
+
+
+def pair_verify(
+    k1: Column, h_a: Column, h_b: Column, n_bands: int, max_hamming: int
+) -> tuple[Column, Column]:
+    """The one near-dup verify of a candidate pair, batch and streaming:
+    (keep, hamming) over the pair's shared key position k1 and the two
+    stored values (key_hash).
+
+    - A band candidate (k1 < n_bands) is kept when its hamming is within
+      max_hamming and k1 is the LOWEST band on which h_a ^ h_b is zero,
+      so a pair agreeing on several bands is kept once (the prefix
+      filter: a pair is generated only under the first key it shares).
+    - A caption candidate is kept when the stored halves agree, so the
+      pair agrees on all 128 md5 bits.
+    - An embedding candidate stores no value and is always kept (its
+      cosine is verified downstream).
+
+    hamming is null except on band keys. XOR and popcount are
+    symmetric, so the side a value comes from does not matter."""
+    x = h_a.bitwiseXOR(h_b)
+    bands = _bands(x, n_bands)
+    low = F.when(bands[0] == 0, 0)  # one CASE: the lowest agreeing band
+    for i, band in enumerate(bands[1:], 1):
+        low = low.when(band == 0, i)
+    ham = F.when(k1 < n_bands, F.bit_count(x).cast("int"))
+    # past the bands: kept when the stored values agree or none is stored
+    keep = F.when(k1 < n_bands, (ham <= max_hamming) & (k1 == low)).otherwise(
+        F.coalesce(x == 0, F.lit(True))
+    )
+    return keep, ham
 
 
 def phash_band_occupancy(
@@ -647,31 +694,28 @@ def _chunked_pair_join(
 def _near_dup_pairs(
     rows: DataFrame, keys: Column, n_bands: int, max_hamming: int, chunk_size: int
 ) -> DataFrame:
-    """Every candidate pair of every signal, not deduplicated:
-    (id_a, id_b, k1, hamming), id_a < id_b, one row per shared key.
-    `rows` holds (id, ph) and, with a caption key, its caption_verify
-    column cv; `keys` is near_dup_keys over them. Rows with a null id
-    have no keys. The pair join is _chunked_pair_join on (k1, k2); it
-    keeps phash pairs within max_hamming (verified on the candidate
-    rows, before any pair shuffle: random band collisions vastly
-    outnumber true pairs), caption pairs whose cv agrees, and every
-    embedding candidate. hamming is null when either phash is."""
+    """Every verified pair of every signal: (id_a, id_b, k1, hamming),
+    id_a < id_b. A phash pair appears once, at its lowest agreeing band;
+    a caption pair once, as a caption lives under one key; an embedding
+    candidate once per shared bucket. `rows` holds (id, ph) and, with a
+    caption key, its caption_verify column cv; `keys` is near_dup_keys
+    over them. Rows with a null id have no keys. Each key row carries
+    one stored value h (key_hash); the pair join is _chunked_pair_join
+    on (k1, k2), and pair_verify filters its candidate rows before any
+    pair shuffle (random band collisions vastly outnumber true pairs).
+    hamming is null except on band keys."""
+    k1 = F.col("k1")
     payload = [c for c in ("ph", "cv") if c in rows.columns]
+    cv = F.col("cv") if "cv" in payload else None
     keyed = (
         rows.filter(F.col("id").isNotNull())
         .select("id", *payload, F.posexplode(keys).alias("k1", "k2"))
         .filter(F.col("k2").isNotNull())
+        .select("id", key_hash(k1, n_bands, F.col("ph"), cv).alias("h"), "k1", "k2")
     )
-    cand = _chunked_pair_join(keyed, ["k1", "k2"], payload, chunk_size)
-    keep = F.when(F.col("k1") < n_bands, F.col("hamming") <= max_hamming)
-    if "cv" in payload:
-        keep = keep.when(F.col("k1") == n_bands, F.col("cv_a") == F.col("cv_b"))
-    ham = F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))).cast("int")
-    return (
-        cand.withColumn("hamming", ham)
-        .filter(keep.otherwise(True))
-        .select("id_a", "id_b", "k1", "hamming")
-    )
+    cand = _chunked_pair_join(keyed, ["k1", "k2"], ["h"], chunk_size)
+    keep, ham = pair_verify(k1, F.col("h_a"), F.col("h_b"), n_bands, max_hamming)
+    return cand.filter(keep).select("id_a", "id_b", "k1", ham.alias("hamming"))
 
 
 def phash_near_dup(
@@ -693,9 +737,11 @@ def phash_near_dup(
     finds EVERY qualifying pair — this is exact recall, not
     approximate LSH. Scale: the only shuffle is on 16-bit band values
     (uniform for real phashes; ~n^2/2^17 candidate pairs per band),
-    never an all-pairs product; the hamming verify (one xor +
-    popcount) runs only on candidates, before the distinct (a pair
-    agreeing on several bands appears once per band).
+    never an all-pairs product; the verify (pair_verify: one xor,
+    popcount and lowest-agreeing-band CASE) runs only on candidates and
+    keeps a pair agreeing on several bands once, at its lowest agreeing
+    band, so no distinct follows. Each pair of input rows gives one
+    row, so ids are expected unique (an id on two rows pairs twice).
 
     Hot-bucket hardening (round 4): real corpora are degenerate-heavy —
     one 16-bit band value can hold millions of rows, and a plain
@@ -713,10 +759,8 @@ def phash_near_dup(
     """
     keys = near_dup_keys(F.col("ph"), n_bands, max_hamming)
     rows = imgs.select(F.col(id_col).alias("id"), F.col(phash_col).alias("ph"))
-    return (
-        _near_dup_pairs(rows, keys, n_bands, max_hamming, chunk_size)
-        .select("id_a", "id_b", "hamming")
-        .distinct()
+    return _near_dup_pairs(rows, keys, n_bands, max_hamming, chunk_size).select(
+        "id_a", "id_b", "hamming"
     )
 
 
@@ -763,8 +807,9 @@ def phash_dup_clusters(
     component's minimum image id. Intermediates are O(m + distinct
     pairs), never O(m^2). The PAIR-level view (phash_near_dup itself)
     keeps m^2 semantics by definition — that is the operator contract,
-    not a plan artifact. The rep pair list is not deduplicated: a pair
-    found on several bands is the same edge to connected_components.
+    not a plan artifact. The rep pair list holds each pair once (at
+    its lowest agreeing band), so connected_components gets one edge
+    per pair.
 
     Size gate: the label frame has at most one row per distinct phash,
     so it is broadcast into the member re-attach only when that many
@@ -918,9 +963,12 @@ def multimodal_near_dup(
     skew-chunked pair enumeration runs ONCE (one chunk-assigning
     window over the union of keys instead of one per signal, one
     candidate join instead of three). The enumeration
-    (_near_dup_pairs) verifies phash candidates by hamming and caption
-    candidates by their last 64 md5 bits on the candidate rows; one
-    pair-keyed aggregation then flags each pair's signals by k1.
+    (_near_dup_pairs) verifies every candidate row with pair_verify: a
+    phash pair is kept once, at its lowest agreeing band, within
+    max_hamming, a caption pair when its last 64 md5 bits agree too,
+    and an embedding candidate once per shared bucket. One pair-keyed
+    aggregation then flags each pair's signals by k1 and takes the
+    hamming of its one phash row.
     Embedding candidates get the exact cosine verify on a
     TRUE-CANDIDATE-sized vector join only. Intermediates stay
     pair-sized — never an all-pairs product — and the r5 plan's three
@@ -992,11 +1040,11 @@ def multimodal_near_dup(
     )
     pairs = _near_dup_pairs(rows, keys, n_bands, max_hamming, chunk_size)
     # ONE pair-keyed aggregation replaces the per-signal distincts and
-    # the full-outer merges — hamming is deterministic per pair, so
-    # max() == the value
+    # the full-outer merges — a pair has at most one phash row, and
+    # hamming is null on every other row
     k1 = F.col("k1")
     flags = pairs.groupBy("id_a", "id_b").agg(
-        F.max(F.when(k1 < n_bands, F.col("hamming"))).alias("hamming"),
+        F.max("hamming").alias("hamming"),
         F.max(k1 == n_bands).alias("_cap"),
         F.max(k1 > n_bands).alias("_embcand"),
     )

@@ -17,7 +17,9 @@ from pyspark.sql import functions as F
 from equi7grid_spark.dedup import (
     caption_verify,
     connected_components,
+    key_hash,
     near_dup_keys,
+    pair_verify,
 )
 from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm
 
@@ -247,22 +249,8 @@ def run_available_now(stream_df: DataFrame, checkpoint: str, query_name: str):
     return q
 
 
-_PHASH_OUT_SCHEMA = "id_a string, id_b string, hamming int"
-_MM_OUT_SCHEMA = "id_a string, id_b string, signal string, hamming int"
+_MATES_SCHEMA = "rid string, id string, k1 int, h_rid long, h_id long"
 _PHASH_STATE_SCHEMA = "ids array<string>, phs array<long>, tss array<long>"
-
-
-def _popcount64(x):
-    """Vectorized 64-bit popcount (SWAR) for uint64 arrays — NumPy
-    1.x has no bitwise_count."""
-    import numpy as np
-
-    x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
-    x = (x & np.uint64(0x3333333333333333)) + (
-        (x >> np.uint64(2)) & np.uint64(0x3333333333333333)
-    )
-    x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-    return (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
 
 
 def streaming_phash_near_dup(
@@ -441,33 +429,37 @@ def streaming_multimodal_pairs(
     The caption signal rides the SAME bucket-state machinery as the
     phash bands, on the batch operator's keys (dedup.near_dup_keys):
     state lives per (k1, k2) key, caption rows land on k1 = n_bands
-    with the caption's first 64 md5 bits as k2, and their stored "hash"
-    is the last 64 (dedup.caption_verify) — an arriving caption pairs
-    with every in-horizon bucket entry whose stored half also matches,
-    so a caption pair agrees on all 128 md5 bits, as in batch.
-    Exactly-once per caption pair is automatic (a caption lives in
-    exactly one bucket).
+    with the caption's first 64 md5 bits as k2, and every key row
+    stores the batch operator's one value (dedup.key_hash): the phash
+    on a band key, the caption's last 64 md5 bits
+    (dedup.caption_verify) on the caption key.
 
-    Exactly-once PHASH pair emission WITHOUT cross-group coordination:
-    a pair agreeing on several bands would be emitted by several
-    groups, so each group emits only if ITS band index is the LOWEST
-    band on which the two hashes agree (both full hashes are in hand;
-    the check is pure arithmetic).
+    One verify with batch: the state does only the bucket work, and for
+    every arrival emits each in-horizon bucket entry as a mate
+    (rid, id, k1, h_rid, h_id), as whole arrays. A stateless step after
+    the state applies dedup.pair_verify, the batch operator's verify:
+    a phash pair is kept within max_hamming and only by the group whose
+    band is the LOWEST band on which the two hashes agree, so a pair
+    agreeing on several bands is emitted once without cross-group
+    coordination; a caption pair is kept when its stored halves agree,
+    so it agrees on all 128 md5 bits (a caption lives in exactly one
+    bucket). The pair is ordered with least/greatest, as batch orders
+    ids. The state emits as many mates as the batch join enumerates
+    candidates.
 
     Matches older->newer within the horizon; pairs whose members arrive
     farther apart than the watermark are not emitted (documented
     horizon semantics, same contract as streaming_dedup).
 
-    Round-4 hardening:
-    - the state compare is one vectorized NumPy pass per arrival
-      (broadcast XOR + SWAR popcount + per-band agreement masks over
-      the bucket's columnar state) instead of a per-entry Python loop;
+    The bucket work:
     - duplicate arrivals of an image_id already live in the bucket
       refresh that entry's timestamp and do NOT re-pair (the batch
-      operator's distinct emits each pair once; re-pairing emitted
-      duplicates). Corollary: a pair becomes visible through a
-      duplicate arrival only via the refreshed horizon, so image_ids
-      are expected unique within the horizon for exact batch parity;
+      operator emits each pair once; re-pairing emitted duplicates).
+      Corollary: a pair becomes visible through a duplicate arrival
+      only via the refreshed horizon, so image_ids are expected unique
+      within the horizon for exact batch parity;
+    - entries older than twice the horizon behind the bucket's newest
+      are pruned;
     - a bucket whose retained state would exceed `max_bucket_rows`
       fails loudly with sizing advice instead of growing an unbounded
       in-memory list on a degenerate hot bucket (same skew class the
@@ -482,48 +474,12 @@ def streaming_multimodal_pairs(
         F.col("phash"), n_bands, max_hamming,
         F.col("caption") if include_caption else None,
     )
-    width = 64 // n_bands
-    mask_band = (1 << width) - 1
     horizon_us = _duration_us(watermark)
 
     def fn(key, pdfs, state):
         band_idx = int(key[0])
-        is_cap = band_idx >= n_bands  # the caption key, k1 == n_bands
-        out_a, out_b, out_s, out_h = [], [], [], []
-
-        def pair_against(ids, phs, tss, rid, rph, lo):
-            """Vectorized: emit (rid, ids[k]) for every in-horizon
-            entry that matches under this band's rule — caption band:
-            stored md5-half equals the arrival's (the bucket key
-            already matched the other half); phash bands: hamming
-            within max_hamming AND this is the LOWEST agreeing band
-            (the exactly-once rule)."""
-            if not len(phs):
-                return
-            x = phs ^ rph
-            if is_cap:
-                for k in np.nonzero((x == 0) & (tss >= lo))[0]:
-                    a, b = sorted((rid, ids[k]))
-                    out_a.append(a)
-                    out_b.append(b)
-                    out_s.append("caption")
-                    out_h.append(None)
-                return
-            d = _popcount64(x)
-            ok = (d <= max_hamming) & (tss >= lo)
-            if not ok.any():
-                return
-            low = np.full(x.shape, -1, dtype=np.int64)
-            for i in range(n_bands - 1, -1, -1):
-                agree = ((x >> np.uint64(i * width)) & np.uint64(mask_band)) == 0
-                low[agree] = i
-            for k in np.nonzero(ok & (low == band_idx))[0]:
-                a, b = sorted((rid, ids[k]))
-                out_a.append(a)
-                out_b.append(b)
-                out_s.append("phash")
-                out_h.append(int(d[k]))
-
+        rid = mate = np.empty(0, dtype=object)
+        h_rid = h_mate = np.empty(0, dtype=np.int64)
         if state.hasTimedOut:
             state.remove()
         else:
@@ -531,46 +487,39 @@ def streaming_multimodal_pairs(
             rows = pd.concat(chunks) if chunks else pd.DataFrame()
             if len(rows):
                 rows = rows.sort_values(["ts", "image_id"])
-                s_ids = list(state.get[0]) if state.exists else []
-                s_ph = np.asarray(
-                    list(state.get[1]) if state.exists else [], dtype=np.int64
-                ).astype(np.uint64)
-                s_ts = np.asarray(
-                    list(state.get[2]) if state.exists else [], dtype=np.int64
-                )
-                pos = {v: k for k, v in enumerate(s_ids)}
-                b_ids = rows["image_id"].tolist()
-                b_ph = rows["phash"].to_numpy(dtype=np.int64).astype(np.uint64)
+                s_ids, s_h, s_ts = state.get if state.exists else ([], [], [])
+                b_ids = rows["image_id"].to_numpy(dtype=object)
+                b_h = rows["h"].to_numpy(dtype=np.int64)
                 b_ts = (rows["ts"].astype("int64") // 1000).to_numpy()
-                keep: list[int] = []  # non-duplicate batch arrival indexes
-                bpos: dict[str, int] = {}
-                for j, rid in enumerate(b_ids):
-                    rts = int(b_ts[j])
-                    hit = pos.get(rid)
+                # the bucket's entries: the state's, then each arrival
+                # that is not a duplicate, written at position n
+                ids = np.concatenate([np.asarray(s_ids, dtype=object), b_ids])
+                hs = np.concatenate([np.asarray(s_h, dtype=np.int64), b_h])
+                tss = np.concatenate([np.asarray(s_ts, dtype=np.int64), b_ts])
+                n = len(s_ids)
+                pos = {v: k for k, v in enumerate(s_ids)}
+                mates, arrivals = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+                for j, (r, t) in enumerate(zip(b_ids.tolist(), b_ts.tolist())):
+                    hit = pos.get(r)
                     if hit is not None:
                         # refresh horizon, no re-pair; max() so a LATE
                         # duplicate (within watermark but older than the
                         # live entry) can't move the entry backward and
                         # shrink its pairing horizon/retention
-                        s_ts[hit] = max(int(s_ts[hit]), rts)
+                        tss[hit] = max(int(tss[hit]), t)
                         continue
-                    hit = bpos.get(rid)
-                    if hit is not None:
-                        b_ts[hit] = max(int(b_ts[hit]), rts)
-                        continue
-                    lo = rts - horizon_us
-                    pair_against(s_ids, s_ph, s_ts, rid, b_ph[j], lo)
-                    if keep:
-                        ki = np.asarray(keep)
-                        pair_against(
-                            [b_ids[k] for k in keep], b_ph[ki], b_ts[ki],
-                            rid, b_ph[j], lo,
-                        )
-                    bpos[rid] = j
-                    keep.append(j)
-                ids = s_ids + [b_ids[k] for k in keep]
-                phs = np.concatenate([s_ph, b_ph[keep]])
-                tss = np.concatenate([s_ts, b_ts[keep]])
+                    # every in-horizon entry is a mate; pair_verify
+                    # decides after the state
+                    m = np.flatnonzero(tss[:n] >= t - horizon_us)
+                    mates.append(m)
+                    arrivals.append(np.full(m.size, j))
+                    ids[n], hs[n], tss[n], pos[r] = r, b_h[j], t, n
+                    n += 1
+                # entries below n are never rewritten (only their
+                # timestamps are), so the mates are gathered once
+                mi, ji = np.concatenate(mates), np.concatenate(arrivals)
+                rid, mate, h_rid, h_mate = b_ids[ji], ids[mi], b_h[ji], hs[mi]
+                ids, hs, tss = ids[:n], hs[:n], tss[:n]
                 # Prune at TWICE the horizon behind the group-local
                 # newest: a future non-late arrival D has
                 # D.ts >= watermark = global_max - horizon, so D can
@@ -587,53 +536,53 @@ def streaming_multimodal_pairs(
                         f"val {int(key[1])}) holds {int(live.sum())} rows within "
                         f"2x the '{watermark}' horizon (cap {max_bucket_rows}). "
                         "The corpus is collapsing onto few "
-                        f"{'caption' if is_cap else 'phash'} values; "
+                        f"{'caption' if band_idx >= n_bands else 'phash'} values; "
                         "shorten the watermark, raise max_bucket_rows, or "
                         "dedup this stream in batch (the batch operators "
                         "chunk hot buckets)."
                     )
-                state.update((
-                    [i for i, m in zip(ids, live.tolist()) if m],
-                    phs[live].astype(np.int64).tolist(),
-                    tss[live].tolist(),
-                ))
+                state.update(
+                    (ids[live].tolist(), hs[live].tolist(), tss[live].tolist())
+                )
                 # cleared only when every retained entry is dead for
                 # any non-late arrival (watermark >= newest + 2h)
                 state.setTimeoutTimestamp(newest // 1000 + 2 * (horizon_us // 1000))
         yield pd.DataFrame({
-            "id_a": out_a,
-            "id_b": out_b,
-            "signal": out_s,
-            "hamming": pd.array(out_h, dtype="Int32"),
+            "rid": rid, "id": mate, "k1": band_idx, "h_rid": h_rid, "h_id": h_mate,
         })
 
     reader = spark.readStream.schema(schema)
     for k, v in (reader_options or {}).items():
         reader = reader.option(k, v)
     stream = reader.parquet(input_dir)
-    # a caption row keeps its last 64 md5 bits where a phash row keeps
-    # its hash: the state compares them whole
-    stored = F.col("phash")
-    if include_caption:
-        stored = F.when(F.col("k1") < n_bands, stored).otherwise(
-            caption_verify(F.col("caption"))
-        )
+    k1 = F.col("k1")
+    cv = caption_verify(F.col("caption")) if include_caption else None
     exploded = (
         stream.filter(F.col("image_id").isNotNull())
         .select("*", F.posexplode(keys).alias("k1", "k2"))
         .filter(F.col("k2").isNotNull())
-        .select("image_id", "ts", "k1", "k2", stored.alias("phash"))
+        .select("image_id", "ts", "k1", "k2",
+                key_hash(k1, n_bands, F.col("phash"), cv).alias("h"))
     )
-    return (
+    mates = (
         exploded.withWatermark("ts", watermark)
         .groupBy("k1", "k2")
         .applyInPandasWithState(
             fn,
-            _MM_OUT_SCHEMA,
+            _MATES_SCHEMA,
             _PHASH_STATE_SCHEMA,
             "append",
             GroupStateTimeout.EventTimeTimeout,
         )
+    )
+    # the batch verify, as a stateless step after the state; the pair
+    # is ordered as the batch join orders it
+    keep, ham = pair_verify(k1, F.col("h_rid"), F.col("h_id"), n_bands, max_hamming)
+    return mates.filter(keep).select(
+        F.least("rid", "id").alias("id_a"),
+        F.greatest("rid", "id").alias("id_b"),
+        F.when(k1 < n_bands, "phash").otherwise("caption").alias("signal"),
+        ham.alias("hamming"),
     )
 
 

@@ -17,7 +17,9 @@ mirroring the driver's harness), then runs every
 ``__spark_entry__.queries()`` entry at sf0.001 and asserts each returns
 without raising and yields >= 0 rows with a non-empty schema. It also
 runs compute_phash and image_stats over 100 images with one truncated
-payload, which must come out as one null row.
+payload, which must come out as one null row, and drains one
+streaming_phash_near_dup query (availableNow), whose pairs must equal
+batch phash_near_dup's on the same rows.
 
 Run it in a FRESH process (the builder's configured session must not
 already own the JVM): ``python scripts/check_plain_session.py [sf_dir]``.
@@ -52,6 +54,44 @@ def _corrupt_row_outputs(spark):
     ph = {r.image_id: r.phash for r in compute_phash(imgs).collect()}
     st = {r.image_id: r.px_min for r in image_stats(imgs).collect()}
     return ph, st
+
+
+def _streaming_phash_pairs(spark):
+    """streaming_phash_near_dup drained availableNow into a memory sink,
+    and batch phash_near_dup, over the same 64 rows (random hashes,
+    planted variants at hamming 0-3, all inside one horizon): (stream
+    pairs, batch pairs), each sorted."""
+    import random
+    import tempfile
+
+    from equi7grid_spark.dedup import phash_near_dup
+    from equi7grid_spark.streaming.pipeline import (
+        run_available_now,
+        streaming_phash_near_dup,
+    )
+
+    def signed(v):
+        return v - (1 << 64) if v >= 1 << 63 else v
+
+    rnd = random.Random(3)
+    hashes = [rnd.getrandbits(64) for _ in range(48)]
+    rows = [(f"s{i:02d}", signed(h)) for i, h in enumerate(hashes)]
+    for i in range(0, 48, 3):
+        mask = sum(1 << rnd.randrange(64) for _ in range(i % 4))
+        rows.append((f"s{i:02d}v", signed(hashes[i] ^ mask)))
+    df = spark.createDataFrame(
+        [(r[0], f"2026-01-01 10:{k // 60:02d}:{k % 60:02d}", r[1])
+         for k, r in enumerate(rows)],
+        "image_id string, ts_s string, phash long",
+    ).selectExpr("image_id", "CAST(ts_s AS TIMESTAMP) AS ts", "phash")
+    with tempfile.TemporaryDirectory() as d:
+        df.write.parquet(f"{d}/src")
+        run_available_now(
+            streaming_phash_near_dup(spark, f"{d}/src"), f"{d}/ck", "plain_phash_pairs"
+        )
+        got = spark.sql("select id_a, id_b, hamming from plain_phash_pairs").collect()
+    want = phash_near_dup(df.select("image_id", "phash")).collect()
+    return sorted(map(tuple, got)), sorted(map(tuple, want))
 
 
 def main() -> int:
@@ -120,6 +160,17 @@ def main() -> int:
     except Exception:
         failed.append("corrupt_image_rows")
         print(f"{'corrupt image rows (phash, stats)':40s} FAIL")
+        traceback.print_exc()
+
+    # The streaming twin's bucket state and its verify step run on the
+    # plain session too, and give the batch operator's pairs.
+    try:
+        got, want = _streaming_phash_pairs(spark)
+        assert got == want and len(want) >= 12, (got, want)
+        print(f"{'streaming phash near-dup == batch':40s} OK    pairs={len(got)}")
+    except Exception:
+        failed.append("streaming_phash_near_dup")
+        print(f"{'streaming phash near-dup == batch':40s} FAIL")
         traceback.print_exc()
 
     # Smoke the driver's entry() too.

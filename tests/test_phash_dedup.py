@@ -695,3 +695,117 @@ def test_phash_dup_clusters_label_size_gate(spark):
     assert on == off
     assert ("n11", "n00") in on and ("y2", "x") in on
     assert n_bcast_on > 0 and n_bcast_off == 0
+
+
+def _signed64(v: int) -> int:
+    v &= (1 << 64) - 1
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
+def test_near_dup_pairs_one_row_per_pair(spark):
+    """_near_dup_pairs gives each phash pair one row (at its lowest
+    agreeing band) and each caption pair one row: on random hashes,
+    planted variants at hamming 0-3 (hamming 0 agrees on all four
+    bands), an identical-hash clique and repeated captions, with
+    chunk_size=4 (multi-chunk buckets), the rows of each signal are
+    unique pairs equal to the brute-force pairs."""
+    import random
+
+    from equi7grid_spark.dedup import _near_dup_pairs, caption_verify, near_dup_keys
+
+    rnd = random.Random(17)
+    pool = [f"caption {k}" for k in range(6)]
+    rows = []
+    for i in range(60):
+        h = rnd.getrandbits(64)
+        cap = rnd.choice(pool) if rnd.random() < 0.5 else f"own {i}"
+        rows.append((f"p{i:03d}", _signed64(h), cap))
+        if i % 3 == 0:
+            mask = 0
+            while bin(mask).count("1") < (i // 3) % 4:
+                mask |= 1 << rnd.randrange(64)
+            rows.append((f"p{i:03d}v", _signed64(h ^ mask), rnd.choice(pool)))
+    rows += [(f"q{k}", rows[0][1], None) for k in range(6)]
+    df = spark.createDataFrame(rows, "id string, ph long, cap string")
+    keys = near_dup_keys(F.col("ph"), 4, 3, F.col("cap"))
+    got = _near_dup_pairs(
+        df.select("id", "ph", "cap", caption_verify(F.col("cap")).alias("cv")),
+        keys, 4, 3, 4,
+    ).collect()
+
+    def ham(a, b):
+        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
+
+    pairs = [(a, b) for a in rows for b in rows if a[0] < b[0]]
+    brute_ph = {(a[0], b[0]): ham(a[1], b[1]) for a, b in pairs if ham(a[1], b[1]) <= 3}
+    brute_cap = {(a[0], b[0]) for a, b in pairs if a[2] is not None and a[2] == b[2]}
+    ph = [((r.id_a, r.id_b), r.hamming) for r in got if r.k1 < 4]
+    cap = [(r.id_a, r.id_b) for r in got if r.k1 == 4]
+    assert len(ph) == len({p for p, _ in ph})
+    assert dict(ph) == brute_ph
+    assert len(cap) == len(set(cap))
+    assert set(cap) == brute_cap
+    assert {r.hamming for r in got if r.k1 == 4} == {None}
+    assert 0 in brute_ph.values() and 3 in brute_ph.values()
+    assert len(brute_cap) > 30
+
+
+def test_pair_verify_lowest_band(spark):
+    """pair_verify keeps a band candidate only at the lowest band on
+    which h_a ^ h_b is zero: on planted XOR patterns (zero, the lowest
+    zero band at every position, no zero band), for 4 and 8 bands, the
+    kept band keys equal a plain-Python reference. hamming is the xor's
+    popcount on band keys and null past them, where a caption candidate
+    is kept when its values agree and an embedding one (no stored
+    value) always."""
+    import random
+
+    from equi7grid_spark.dedup import pair_verify
+
+    rnd = random.Random(5)
+    for n_bands in (4, 8):
+        w = 64 // n_bands
+        full = (1 << w) - 1
+        xs = [0, sum(rnd.randrange(1, full + 1) << (i * w) for i in range(n_bands))]
+        for low in range(n_bands):
+            for _ in range(3):
+                x = 0
+                for i in range(n_bands):
+                    if i < low:
+                        band = rnd.randrange(1, full + 1)
+                    elif i == low:
+                        band = 0
+                    else:
+                        band = rnd.choice([0, rnd.randrange(full + 1)])
+                    x |= band << (i * w)
+                xs.append(x)
+        rows = []
+        for c, x in enumerate(xs):
+            h = rnd.getrandbits(64)
+            for k1 in range(n_bands):
+                rows.append((c, k1, _signed64(h), _signed64(h ^ x)))
+            rows.append((c, n_bands, _signed64(h), _signed64(h ^ (c % 2))))
+            rows.append((c, n_bands + 1, None, None))
+        df = spark.createDataFrame(rows, "c int, k1 int, h_a long, h_b long")
+        keep, ham = pair_verify(F.col("k1"), F.col("h_a"), F.col("h_b"), n_bands, 64)
+        got = df.select("c", "k1", keep.alias("keep"), ham.alias("ham")).collect()
+        for c, x in enumerate(xs):
+            ref = [i for i in range(n_bands) if (x >> (i * w)) & full == 0][:1]
+            mine = [r for r in got if r.c == c]
+            assert [r.k1 for r in mine if r.k1 < n_bands and r.keep] == ref, (n_bands, hex(x))
+            assert {r.ham for r in mine if r.k1 < n_bands} == {bin(x).count("1")}
+            past = {r.k1: (r.keep, r.ham) for r in mine if r.k1 >= n_bands}
+            assert past == {n_bands: (c % 2 == 0, None), n_bands + 1: (True, None)}
+
+
+def test_phash_near_dup_plan_has_no_aggregate(spark):
+    """phash_near_dup keeps each pair once in the pair join itself, so
+    no distinct follows: its executed plans hold no HashAggregate."""
+    base = 0x1234_5678_9ABC_DEF0
+    rows = [("a", base), ("b", base), ("c", base ^ 0b101), ("d", 0x0F0F_0F0F_0F0F_0F0F)]
+    df = spark.createDataFrame(rows, "image_id string, phash long")
+    before = _sql_executions(spark)
+    got = sorted(map(tuple, phash_near_dup(df).collect()))
+    plans = [p for i, p in _sql_executions(spark).items() if i not in before]
+    assert got == [("a", "b", 0), ("a", "c", 2), ("b", "c", 2)]
+    assert plans and not any("HashAggregate" in p for p in plans)

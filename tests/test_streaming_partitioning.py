@@ -277,7 +277,7 @@ def test_streaming_roi_select_matches_batch(spark, tmp_path):
 
 def test_streaming_phash_duplicate_arrivals_no_duplicate_pairs(spark, tmp_path):
     """An image_id arriving twice must not re-emit its pairs (the batch
-    operator's distinct emits each pair once; round-3 emitted dups)."""
+    operator emits each pair once; round-3 emitted dups)."""
     from equi7grid_spark.streaming.pipeline import (
         run_available_now,
         streaming_phash_near_dup,
